@@ -49,11 +49,10 @@ object PlanHygiene {
     * suite — or any long-lived session — slows under the pile-up.
     * Call between independent units of work, AFTER the previous unit's
     * frames are fully materialized/dumped: a swept checkpoint cannot be
-    * recomputed. That includes a LIVE GraftFileSystem mount's FsState
-    * compaction snapshots — a long-lived mount must not share a session
-    * with sweeping harness code (the fs_mount_read channel closes its
-    * mount per rep for exactly this reason; a production mount owns its
-    * session and never needs the sweep).
+    * recomputed. That includes a LIVE GraftShell's FsState compaction
+    * snapshots — a long-lived shell must not share a session with
+    * sweeping harness code. (The scheme mount checkpoints nothing: its
+    * payload lives in memory and in parquet segment files.)
     */
   def sweepPersisted(spark: org.apache.spark.sql.SparkSession,
                      blocking: Boolean = false): Int = {

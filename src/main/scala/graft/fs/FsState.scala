@@ -1,14 +1,10 @@
 package graft.fs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Alias
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-
 import graft.PlanHygiene
 
-/** Mutation-counting (catalog, chunks) holder shared by the facade and
-  * the shell — the Spark analog of the reference's per-op Cassandra
-  * mutations for LONG-LIVED sessions.
+/** Mutation-counting (catalog, chunks) holder of the shell — the Spark
+  * analog of the reference's per-op Cassandra mutations for LONG-LIVED
+  * sessions.
   *
   * Every FS verb returns a new `GraftFs` whose plan wraps the previous
   * one (an anti-join, a union, a prefix rewrite), so a session's plan
@@ -26,8 +22,7 @@ import graft.PlanHygiene
   * compaction (capped), so a session pays O(log N) full snapshots
   * instead of O(N/64) while plan depth stays bounded by the cap.
   *
-  * Snapshots escape through `pinCurrent` (the facade's `graftFs`, the
-  * shell's `fs`): a pinned generation's checkpoint is excluded from
+  * Snapshots escape through `pinCurrent` (the shell's `fs`): a pinned generation's checkpoint is excluded from
   * release, so externally-held state keeps working after later
   * compactions. Pins are the CALLER's storage to manage: `unpin` the
   * snapshot (or `releasePins()` at teardown) when done with it, and
@@ -42,7 +37,7 @@ import graft.PlanHygiene
   *
   * A persistent deployment with a large resident plane checkpoints to
   * parquet instead (`FsCatalog.save`/`load`); this is the in-session
-  * middle ground, sized for the facade/shell compatibility surface.
+  * middle ground, sized for the shell's compatibility surface.
   */
 final class FsState(initial: GraftFs, compactEvery: Int = FsState.CompactEvery) {
   require(compactEvery > 0, "compactEvery must be positive")
@@ -51,17 +46,6 @@ final class FsState(initial: GraftFs, compactEvery: Int = FsState.CompactEvery) 
   private var sinceCompact = 0
   private var interval = compactEvery
   private var lastCheckpointed: Option[GraftFs] = None
-  // monotone mutation counter + its value at the last prepared
-  // snapshot: a REBASING swap keeps the intervening deltas stacked on
-  // the new base, so sinceCompact restarts at their count, not 0
-  private var seq = 0L
-  @volatile private var preparedSeq = 0L
-  // swap-outcome accounting (specs + ops visibility): clean installs,
-  // rebased installs, aborted swaps
-  @volatile private var swapsClean = 0
-  @volatile private var swapsRebased = 0
-  @volatile private var swapsAborted = 0
-  def swapStats: (Int, Int, Int) = (swapsClean, swapsRebased, swapsAborted)
   // escaped snapshot → the checkpoint generation backing it, REF
   // COUNTED: two callers escaping the same generation share one entry
   // (pinCurrent hands both the same object), so the first unpin must
@@ -112,136 +96,11 @@ final class FsState(initial: GraftFs, compactEvery: Int = FsState.CompactEvery) 
     */
   def pinCount: Int = synchronized(pinned.size)
 
-  def set(next: GraftFs): Unit = set(next, allowCompact = true)
-
-  /** `allowCompact = false` records the mutation but DEFERS a due
-    * compaction: compaction runs an eager localCheckpoint (a Spark
-    * action), and the mounted facade's task-side write path must never
-    * run an action while every local core is held by write tasks — the
-    * core-starvation deadlock (PLANS.md r10). Deferred compactions run
-    * on the facade's compactor thread via [[prepareCompaction]] /
-    * [[trySwap]]. Plan depth in the deferral window is bounded by the
-    * fold cadence (one union per FoldBytes), not unbounded.
-    */
-  def set(next: GraftFs, allowCompact: Boolean): Unit =
-    synchronized {
-      current = next
-      sinceCompact += 1
-      seq += 1
-      if (allowCompact && sinceCompact >= interval) compactNow()
-    }
-
-  /** Phase 1 of opportunistic compaction: snapshot under the monitor
-    * (instant), checkpoint OUTSIDE it so mutators proceed freely while
-    * the Spark action runs. Returns (snapshot, compacted) for
-    * [[trySwap]], or None when no compaction is due. Why neither
-    * simpler shape works under a stock committer job: (a) inline
-    * compaction inside a verb runs a Spark action on whatever thread
-    * called the verb, and the committer calls verbs from AQE
-    * stage-execution threads, where a nested action wedges the stage's
-    * own event loop (observed r11, spec JVM hung); (b) a synchronized
-    * background compaction holds this monitor for the action's
-    * duration, so write tasks block on setState while holding every
-    * local core and the checkpoint job starves.
-    */
-  def prepareCompaction(): Option[(GraftFs, GraftFs)] = {
-    val snapshot = synchronized {
-      if (sinceCompact < interval) return None
-      preparedSeq = seq
-      current
-    }
-    Some((snapshot, snapshot.compact())) // Spark action — NO lock held
+  def set(next: GraftFs): Unit = synchronized {
+    current = next
+    sinceCompact += 1
+    if (sinceCompact >= interval) compactNow()
   }
-
-  /** Phase 2: install `compacted`. When no mutation intervened since
-    * the snapshot, the checkpoint replaces `current` outright. When
-    * verbs DID intervene, the swap REBASES instead of aborting: the
-    * intervening verbs built their plans ON TOP of the snapshot's plan
-    * objects (one union/filter per verb), so substituting the
-    * snapshot's plan subtree with the checkpoint's single LogicalRDD —
-    * inside the current plan, by node identity / sameResult — yields
-    * the same results over a flattened base (the LSM shape: compaction
-    * rewrites the base while the memtable keeps accepting writes).
-    * Without the rebase, sustained write load outruns the
-    * snapshot-and-retry loop — every swap aborts, plan depth grows
-    * unboundedly, and EAGER analysis goes superlinear (measured r13:
-    * a 4-writer payload storm degraded verbs to 47 s p99 within
-    * seconds; with the rebase the same storm holds ms-level p99). A
-    * rebase that cannot prove itself (plane neither matches the
-    * snapshot nor is checkpoint-free) falls back to the old
-    * release-and-report-false path.
-    *
-    * CALLER CONTRACT: hold the same lock that serializes your verbs'
-    * read-modify-write transitions while calling this. The `current eq
-    * snapshot` check alone cannot see a verb that has READ the
-    * snapshot but not yet SET its successor — a swap in that window
-    * would retire (and sweep) the checkpoint generation the verb's
-    * about-to-install plan is still rooted in, and the verb's set
-    * would then discard the compaction and resurrect a plan whose
-    * backing blocks were just freed. The facade calls this under its
-    * mutation lock; [[compactOpportunistic]] composes both phases for
-    * single-mutator callers (specs).
-    */
-  def trySwap(snapshot: GraftFs, compacted: GraftFs): Boolean =
-    synchronized {
-      val clean = current eq snapshot
-      val next: Option[(GraftFs, Int)] =
-        if (clean) Some((compacted, 0))
-        else {
-          val deltas = (seq - preparedSeq).toInt
-          for {
-            cat <- FsState.rebasePlane(current.catalog.inodes.toDF(),
-              snapshot.catalog.inodes.toDF(), compacted.catalog.inodes.toDF())
-            ch <- FsState.rebasePlane(current.chunks, snapshot.chunks,
-              compacted.chunks)
-          } yield (GraftFs(
-            graft.catalog.FsCatalog(
-              cat.as(graft.catalog.FsCatalog.inodeEncoder)),
-            // aliases are driver metadata that advanced WITH the verbs;
-            // the rebased frames stay in birth space, so the current
-            // map stays authoritative
-            ch, current.aliases), deltas)
-        }
-      next match {
-        case Some((installed, deltas)) =>
-          if (clean) swapsClean += 1 else swapsRebased += 1
-          lastCheckpointed.foreach(prev => retired ::= prev)
-          lastCheckpointed = Some(compacted)
-          current = installed
-          sinceCompact = deltas
-          interval = math.min(interval * 2, FsState.MaxCompactEvery)
-          sweepRetired()
-          true
-        case None =>
-          swapsAborted += 1
-          releasePrepared(compacted)
-          false
-      }
-    }
-
-  /** Free a prepared-but-never-installed compaction (trySwap threw or
-    * was never reached — e.g. the caller's lock timed out).
-    */
-  def releasePrepared(compacted: GraftFs): Unit = {
-    PlanHygiene.releaseCheckpoint(compacted.catalog.inodes)
-    PlanHygiene.releaseCheckpoint(compacted.chunks)
-  }
-
-  /** Both phases composed — valid ONLY for single-mutator callers
-    * (specs, single-threaded tools) where no verb can be mid-
-    * read-modify-write during the swap; see [[trySwap]]'s contract.
-    */
-  def compactOpportunistic(): Boolean =
-    prepareCompaction() match {
-      case None => false
-      case Some((snapshot, compacted)) => trySwap(snapshot, compacted)
-    }
-
-  /** True when enough mutations accumulated that a compaction is due
-    * (the facade's compactor thread polls this before paying the
-    * snapshot dance).
-    */
-  def compactionDue: Boolean = synchronized(sinceCompact >= interval)
 
   /** Force a compaction boundary (also runs automatically). */
   def compactNow(): Unit = synchronized {
@@ -281,116 +140,4 @@ object FsState {
     * cost) even in the longest sessions.
     */
   val MaxCompactEvery: Int = 1024
-
-
-  /** One plane of the rebasing swap (trySwap scaladoc). Outcomes:
-    *
-    *  - `cur eq snap`: the plane saw no verbs — install the checkpoint.
-    *  - the snapshot's plan appears INSIDE `cur`'s plan (by node
-    *    identity, or sameResult for analyzer-copied subtrees): return
-    *    `cur` with every such subtree substituted by the checkpoint's
-    *    plan — same results, flattened base. sameResult matches get a
-    *    re-aliasing Project so downstream attribute references stay
-    *    bound.
-    *  - zero matches AND `cur` contains no checkpoint leaf (LogicalRDD)
-    *    at all: the plane is self-contained (the facade's catalog
-    *    derives depth-1 from the inode cache each verb) — keep `cur`;
-    *    it cannot be invalidated by retiring any checkpoint.
-    *  - anything else (or any analysis failure): None — the caller
-    *    falls back to abort-and-retry, the pre-rebase behavior.
-    */
-  private[fs] def rebasePlane(cur: DataFrame, snap: DataFrame,
-                              comp: DataFrame): Option[DataFrame] =
-    try {
-      if (cur eq snap) return Some(comp)
-      val snapPlan = snap.queryExecution.analyzed
-      // composition embeds Dataset.logicalPlan = commandExecuted, which
-      // can be a different OBJECT from `analyzed` — target both
-      val snapCmd = snap.queryExecution.commandExecuted
-      val compPlan = comp.queryExecution.analyzed
-      val curPlan = cur.queryExecution.analyzed
-      if ((curPlan eq snapPlan) || (curPlan eq snapCmd)) return Some(comp)
-      // the checkpoint's output re-bound to `p`'s attribute ids when an
-      // analyzer copy gave the matched subtree fresh exprIds
-      def aligned(p: LogicalPlan): LogicalPlan =
-        if (p.output.map(_.exprId) == compPlan.output.map(_.exprId))
-          compPlan
-        else
-          Project(p.output.zip(compPlan.output).map { case (to, from) =>
-            Alias(from, to.name)(exprId = to.exprId)
-          }, compPlan)
-      // UNION-PREFIX matching: the analyzer FLATTENS nested unions, so
-      // a snapshot whose root is Union(c1..ck) never survives as a
-      // subtree once folds append children — it survives as the
-      // identical (eq) PREFIX of a wider Union(c1..ck, d1..dm). The
-      // rebase then re-roots that union as Union(checkpoint, d1..dm).
-      // Union output attrs derive from the first child, which the
-      // checkpoint preserves (localCheckpoint keeps output exprIds), so
-      // parents stay bound. A filter barrier resets flattening and the
-      // plain identity match covers filter-rooted snapshots.
-      val snapChildren: Seq[LogicalPlan] = snapPlan match {
-        case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
-          u.children
-        case _ => Nil
-      }
-      def prefixReplace(
-          u: org.apache.spark.sql.catalyst.plans.logical.Union)
-          : Option[LogicalPlan] =
-        if (snapChildren.nonEmpty &&
-            snapChildren.length < u.children.length &&
-            snapChildren.zip(u.children).forall { case (a, b) => a eq b })
-          Some(u.copy(children = compPlan +: u.children.drop(snapChildren.length)))
-        else None
-      def substitute(loose: Boolean): (LogicalPlan, Int) = {
-        var hits = 0
-        val p2 = curPlan.transformUp {
-          case p if (p eq snapPlan) || (p eq snapCmd) =>
-            hits += 1; aligned(p)
-          case u: org.apache.spark.sql.catalyst.plans.logical.Union
-              if prefixReplace(u).isDefined =>
-            hits += 1; prefixReplace(u).get
-          case p if loose && (p.schema == snapPlan.schema) &&
-              p.sameResult(snapPlan) =>
-            hits += 1; aligned(p)
-        }
-        (p2, hits)
-      }
-      // Identity + union-prefix pass first: the verb shapes embed
-      // parent plans by object, so this is the hot path and costs one
-      // cheap tree walk. sameResult is the FALLBACK only — its
-      // canonicalization compares LocalRelation payload bytes
-      // node-by-node, measured as a ~900 ms p99 tail when it ran
-      // unconditionally under the verb lock in the r13 storm spec.
-      val (eqPlan, eqHits) = substitute(loose = false)
-      val (rebasedPlan, hits) =
-        if (eqHits > 0) (eqPlan, eqHits) else substitute(loose = true)
-      def isRdd(n: LogicalPlan): Boolean =
-        n.getClass.getSimpleName == "LogicalRDD"
-      if (hits > 0) {
-        // hits > 0 is NOT proof of completeness: an analyzer-copied
-        // subtree that matched neither identity, union-prefix, nor the
-        // schema+sameResult fallback would survive the substitution
-        // still pointing at the OLD checkpoint's RDD — which trySwap
-        // retires and unpersists the moment this returns. Verify the
-        // rebased plan holds no LogicalRDD leaf other than the new
-        // checkpoint's own; any stale leaf falls back to
-        // abort-and-retry (r13 ADVICE).
-        val fresh = compPlan.collect { case n if isRdd(n) => n }
-        val stale = rebasedPlan.exists(n =>
-          isRdd(n) && !fresh.exists(_ eq n))
-        if (stale) None else Some(ofRows(cur.sparkSession, rebasedPlan))
-      }
-      else if (!curPlan.exists(isRdd))
-        Some(cur) // self-contained plane — no checkpoint dependency
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** `Dataset.ofRows` is private[sql]; the bytecode is public. */
-  private def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    val cls = Class.forName("org.apache.spark.sql.classic.Dataset$")
-    val mod = cls.getField("MODULE$").get(null)
-    val m = cls.getMethods.find(m =>
-      m.getName == "ofRows" && m.getParameterCount == 2).get
-    m.invoke(mod, spark, plan).asInstanceOf[DataFrame]
-  }
 }

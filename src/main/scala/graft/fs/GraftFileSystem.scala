@@ -4,11 +4,13 @@ import java.io.{FileNotFoundException, IOException, OutputStream}
 import java.net.URI
 import java.sql.Timestamp
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{BlockLocation, FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -17,11 +19,14 @@ import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps}
 /** The reference's entire public API *is* `org.apache.hadoop.fs
   * .FileSystem` (SnackFS.scala:51-153; mounted via core-site.xml:29-32) —
   * this facade closes that last fidelity gap: a stock Hadoop/Spark job
-  * can mount the engine unchanged. Every verb delegates to the existing
-  * distributed machinery (`FsCatalog` metadata transitions, `DataPlane`
-  * chunking, `GraftFs` cross-plane cascades); the facade itself only
-  * holds the current (catalog, chunks) snapshot — the same single-driver
-  * narrowing documented for FileLocks (SURVEY.md §1.3).
+  * can mount the engine unchanged. Metadata answers from a driver-JVM
+  * inode cache; payload lives in memory (pending subblocks) or in
+  * immutable parquet files (the saved state, wal deltas, and the
+  * mount's own folded segments), all read by one session-free reader
+  * ([[SavedState.readBlock]]) — like the reference, where every client
+  * reads blocks straight from the store with no coordinator in the
+  * path. No verb runs a Spark job; only the [[graftFs]] snapshot builds
+  * (lazy) frames.
   *
   * Both byte paths stream with the reference's own cadence: writes
   * buffer one subblock at a time with per-block inode commits
@@ -33,78 +38,25 @@ import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps}
 class GraftFileSystem extends FileSystem {
 
   private var ctx: FsContext = _
-  private var cell: FsState = _
   private var subBlockSize: Int = _
   private var blockSize: Int = _
 
-  private def state: GraftFs = cell.get
-  // every mutation routes through the compacting state cell, so a
-  // long-lived mount never accumulates an unbounded lazy plan — but a
-  // due compaction (an eager localCheckpoint = a Spark ACTION) must
-  // NEVER run inline in a verb: verbs arrive on write-task threads
-  // (core starvation if all slots are held — PLANS.md r10) AND on AQE
-  // stage-execution threads (the committer's job commit/abort runs
-  // there; a nested action wedges the stage's own event loop —
-  // observed r11, thread-dump in PLANS.md). All facade compactions
-  // run on the dedicated [[compactor]] thread via the non-blocking
-  // snapshot-compact-swap (FsState.compactOpportunistic).
-  private def setState(next: GraftFs): Unit =
-    cell.set(next, allowCompact = false)
-
-  /** Dedicated compaction thread — the only place a facade-owned
-    * Spark action may originate (see setState). Polls cheaply; the
-    * opportunistic swap never blocks verbs.
-    */
-  private var compactor: Thread = _
-
-  private def startCompactor(): Unit = {
-    compactor = new Thread(() => {
-      try {
-        while (!Thread.currentThread().isInterrupted) {
-          if (cell.compactionDue) {
-            // two-phase: the checkpoint action runs lock-free, but the
-            // SWAP takes mutLock — FsState's `current eq snapshot`
-            // check alone cannot see a verb between its state read and
-            // its setState, and swapping in that window would sweep
-            // the checkpoint generation the verb's successor plan is
-            // rooted in (trySwap scaladoc). Verb lock holds are pure
-            // memory now, so the compactor waits microseconds.
-            try {
-              cell.prepareCompaction().foreach { case (snap, compacted) =>
-                try { withMutLock(cell.trySwap(snap, compacted)); () }
-                catch {
-                  case scala.util.control.NonFatal(_) =>
-                    cell.releasePrepared(compacted)
-                }
-              }
-            } catch { case scala.util.control.NonFatal(_) => () }
-          }
-          Thread.sleep(250)
-        }
-      } catch { case _: InterruptedException => () }
-    }, "graftfs-compactor")
-    compactor.setDaemon(true)
-    compactor.start()
-  }
-
   /** Driver-JVM mirror of the catalog plane — ONE entry per inode,
-    * kept exactly in step with the catalog frames under [[mutLock]].
+    * kept exactly in step with the payload index under [[mutLock]].
     * This is what makes the mount's whole METADATA surface (existence
     * checks, status, listings, the committer's mkdirs/rename dance)
     * action-free: a write task consults and updates this map in pure
-    * memory while the DataFrame planes accumulate the SAME transitions
-    * lazily, so no Spark job ever has to schedule inside a task slot —
+    * memory, so no Spark job ever has to schedule inside a task slot —
     * the NameNode shape (metadata answers from memory, data scans run
     * distributed), and the fix that lets a stock committer job write
     * at FULL parallelism on local[N] instead of deadlocking on core
-    * starvation. Consistency is pinned by spec: after any verb mix,
-    * the cache equals the collected catalog row for row. The catalog
-    * frames stay authoritative for analytics (DSv2, shell, du/count)
-    * and for persistence; a mount starts empty (root only) at
-    * initialize and the cache is seeded the same way — the facade's
+    * starvation. The catalog frame of a [[graftFs]] snapshot derives
+    * from it (consistency pinned by spec: after any verb mix, the cache
+    * equals the collected catalog row for row); a mount starts empty
+    * (root only) or from a saved state at initialize — the facade's
     * lifecycle is mount-scoped, like the reference's in-memory client
-    * view (persistence across mounts is the CLI/FsCatalog.save
-    * surface, not the facade's).
+    * view (persistence across mounts is the CLI/FsCatalog.save and
+    * write-through surface).
     */
   private val inodeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Inode]()
@@ -204,88 +156,156 @@ class GraftFileSystem extends FileSystem {
       b.result()
     }
 
-  /** Chunk rows written since the last fold, kept OUT of the plan.
-    *
-    * The first action-free write path threaded one filter+union plan
-    * node per persisted subblock plus one store per inode commit; a
-    * stock 8-task committer job accumulated a plan whose EAGER Dataset
-    * analysis went superlinear (thread-dump: 61 s inside
-    * ResolveReferences on a write task, 79 s of BooleanSimplification
-    * over the chained NOT-conjunctions in the compactor) and the job
-    * wedged on the 120 s lock timeout. So mutations no longer grow
-    * the plan at all on the hot path: appended rows buffer here and
-    * fold into the base plan as ONE union per [[FoldBytes]] (or at a
-    * read/pin boundary), and the CATALOG plane is not threaded through
-    * mutations anywhere — it derives from [[inodeCache]] on demand
-    * (see refreshedState), a depth-1 createDataset. Structural chunk
-    * ops (overwrite, delete, rename) rewrite this buffer in memory
-    * and add one filter to the base — committer-frequency, not
-    * per-subblock. Memory contract: ≤ [[FoldBytes]] of pending
-    * payload plus one subblock per open stream.
+  /** One file incarnation's payload: an IMMUTABLE row key plus the
+    * parquet sources holding its folded rows, oldest first. Saved and
+    * wal-overlay files keep their stored path as key (source: the saved
+    * chunks dir or the wal delta file); a `create` mints a fresh key
+    * that can never be a Hadoop path (NUL never appears in one), so a
+    * re-created path never aliases a renamed file's rows. `live` turns
+    * false when delete/overwrite drops the entry: rows still in flight
+    * to a segment then publish nowhere.
     */
-  private val pendingChunks = scala.collection.mutable.ArrayBuffer.empty[Row]
+  private final class Payload(val key: String, var sources: List[String]) {
+    var live = true
+  }
+
+  /** One subblock row held in memory, tagged with its owning payload.
+    * `partial` marks a flush()-persisted subblock its stream may still
+    * extend — it never folds, so no segment cell is ever superseded.
+    */
+  private final class MemRow(val owner: Payload,
+                             val row: SavedStateWriter.ChunkRow,
+                             val partial: Boolean)
+
+  /** THE payload index: current path → payload, SORTED so subtree
+    * renames/deletes are one range walk. Rename re-keys entries, delete
+    * and overwrite drop them; no row is ever rewritten. Guarded by
+    * [[mutLock]].
+    */
+  private val payloads = new java.util.TreeMap[String, Payload]()
+  private var keySeq = 0L
+
+  /** Subblock rows written since the last fold. Memory contract:
+    * ≤ [[FoldBytes]] of complete rows (counted in `pendingBytes`) plus
+    * one partial subblock per open stream.
+    */
+  private val pending = ArrayBuffer.empty[MemRow]
   private var pendingBytes = 0L
-  // conf-overridable (graft.mount.fold.bytes) so specs can force the
-  // fold machinery — base-plan reads, post-fold rename/delete/
-  // overwrite — at test-sized payloads; production default 64 MB
+
+  /** Batches a fold has taken out of `pending` whose segment file is
+    * still being written: readers keep serving them from memory until
+    * the fold publishes the file.
+    */
+  private var sealedBatches: List[Vector[MemRow]] = Nil
+
+  // conf-overridable (graft.mount.fold.bytes) so specs can force folds
+  // at test-sized payloads; production default 64 MB
   private var FoldBytes = 64L << 20
 
-  /** Files whose rows have been FOLDED into the base plan, mapped
-    * CURRENT path → BIRTH name. Rows fold under an IMMUTABLE birth
-    * name (usually the path at first fold) and never change identity
-    * again: rename is pure map re-keying — ZERO plan nodes — where the
-    * old design's per-rename filter∪rewrite DOUBLED the plan tree and
-    * went exponential the moment a committer renamed a fold's worth of
-    * files (measured r13 storm: 13-44 s verbs; at production geometry
-    * a 32-core committer stacks 32 doublings per fold — 2^32). Reads
-    * and structural filters translate current → birth at the boundary
-    * (one map lookup under [[mutLock]]). A birth name that would
-    * collide with a LIVE file's birth (re-created path after a rename
-    * moved the original away) gets a NUL-suffixed alias — NUL never
-    * appears in a real Hadoop path, so aliases cannot shadow data.
-    *
-    * SORTED maps, not hash sets: [[baseHasSubtree]] runs on the block-
-    * miss READ path (blockAt) and per structural op; prefix membership
-    * is one floor lookup, subtree enumeration one range walk, and the
-    * delete path range-scans [[birthIndex]] for foreign births under
-    * the prefix. All access under [[mutLock]].
-    */
-  private val baseFiles = new java.util.TreeMap[String, String]()
+  /** Mount-private dir of immutable segment files (created at the first
+    * fold, deleted by close()). */
+  private var segmentDir: java.nio.file.Path = _
+  private var segmentSeq = 0L
 
-  /** Birth name → CURRENT path (live folded files only). */
-  private val birthIndex = new java.util.TreeMap[String, String]()
+  /** Drop `p`'s payload entry (delete, wal tombstone). Caller holds
+    * [[mutLock]]; memory rows of dead entries go at the next
+    * [[dropDeadRows]]. */
+  private def dropPayload(p: String): Unit = {
+    val prior = payloads.remove(p)
+    if (prior != null) prior.live = false
+  }
 
-  /** Birth names whose payload still lives UNCHANGED in the mounted
-    * saved state's `chunks/` parquet — the set [[BlockCachedStream]]
-    * may serve with a SESSION-FREE pruned parquet read (SavedState
-    * .readBlock: no driver job, callable from any executor thread).
-    * Saved files seed here (and into baseFiles/birthIndex as
-    * path→path, so every structural op targets the right rows);
-    * overwrite and delete PRUNE the birth (its parquet rows are now
-    * stale), while rename is a no-op (births are immutable — the
-    * saved rows stay valid under the old name). Guarded by [[mutLock]].
-    */
-  private val savedBirths = new java.util.HashSet[String]()
+  private def dropDeadRows(): Unit = {
+    var i = 0
+    while (i < pending.length) {
+      val m = pending(i)
+      if (!m.owner.live) {
+        if (!m.partial) pendingBytes -= m.row.data.length
+        pending.remove(i)
+      } else i += 1
+    }
+  }
 
-  /** The mounted saved state's chunks dir (null when the mount started
-    * empty). Versioned save dirs are immutable by construction (saveFs
-    * writes a fresh version dir and flips `CURRENT`), so direct reads
-    * serve a consistent generation for the mount's lifetime.
+  /** Payload entries at `p` and under it, via one sorted-range walk. */
+  private def payloadSubtree(p: String): Seq[(String, Payload)] = {
+    val out = Seq.newBuilder[(String, Payload)]
+    val self = payloads.get(p)
+    if (self != null) out += (p -> self)
+    val pre = subtreePrefix(p)
+    val it = payloads.tailMap(pre).entrySet().iterator()
+    var go = true
+    while (go && it.hasNext) {
+      val e = it.next()
+      if (e.getKey.startsWith(pre)) out += (e.getKey -> e.getValue)
+      else go = false
+    }
+    out.result()
+  }
+
+  /** `owner`'s in-memory (sub_id, bytes) rows of block `blockId` —
+    * pending and sealed alike. Caller holds [[mutLock]]. */
+  private def memRows(owner: Payload, blockId: Int): Seq[(Int, Array[Byte])] =
+    (pending.iterator ++ sealedBatches.iterator.flatten)
+      .filter(m => (m.owner eq owner) && m.row.blockId == blockId)
+      .map(m => (m.row.subId, m.row.data)).toSeq
+
+  /** Fold: SEAL the complete pending rows under [[mutLock]] (readers
+    * keep serving them from memory), WRITE them as one immutable
+    * segment file with the lock released, then PUBLISH the file to the
+    * entries still live. Every lock hold stays pure memory; the parquet
+    * write runs on the verb thread that crossed [[FoldBytes]]. A failed
+    * write returns the rows to pending and surfaces as the verb's
+    * IOException.
     */
-  private var savedChunksDir: String = _
+  private def fold(): Unit = {
+    val sealedBatch = withMutLock {
+      val (done, open) = pending.partition(!_.partial)
+      if (done.isEmpty) None
+      else {
+        pending.clear(); pending ++= open
+        pendingBytes = 0L
+        val batch = done.toVector
+        sealedBatches ::= batch
+        if (segmentDir == null)
+          segmentDir = java.nio.file.Files.createTempDirectory("graftfs-segments")
+        segmentSeq += 1
+        Some((batch, segmentDir.resolve(f"seg-$segmentSeq%08d.parquet").toString))
+      }
+    }
+    sealedBatch.foreach { case (batch, file) =>
+      def unseal(): Unit = sealedBatches = sealedBatches.filterNot(_ eq batch)
+      try SavedStateWriter.writeChunksFile(file,
+        batch.map(_.row).sortBy(r => (r.path, r.blockId, r.subId)))
+      catch {
+        case e: Throwable =>
+          withMutLock {
+            unseal()
+            val back = batch.filter(_.owner.live)
+            pending.prependAll(back)
+            pendingBytes += back.iterator.map(_.row.data.length.toLong).sum
+          }
+          throw e
+      }
+      withMutLock {
+        batch.iterator.map(_.owner).distinct.filter(_.live)
+          .foreach(o => o.sources = o.sources :+ file)
+        unseal()
+      }
+    }
+  }
 
   // ── WRITE-THROUGH of post-mount writes (r17, the §8 facade notch):
   //    a state-dir mount used to serve executors only the bytes saved
   //    BEFORE the mount; anything a driver wrote after it lived solely
-  //    in driver frames. Now a closed create stream (and the rename/
+  //    in driver memory. Now a closed create stream (and the rename/
   //    delete mirrors that keep committer flows coherent) also commits
   //    the payload as a SharedStateStore wal delta in the mounted state
   //    dir — cross-process-locked, atomically-renamed, session-free —
   //    so ANY mount of the same state (executor-mode JVMs live via
   //    per-access refresh; fresh mounts via init-time overlay
   //    application) serves the post-mount bytes with zero driver
-  //    involvement. Residue, loud and documented: a file whose pending
-  //    rows folded (> FoldBytes) before close skips write-through. ────
+  //    involvement. Residue, loud and documented: a file whose rows
+  //    folded (> FoldBytes) before close skips write-through. ──────────
   private var mountParent: String = _
   private var writeThroughEnabled = true
   private var mountStoreCache: SharedStateStore = _
@@ -296,38 +316,33 @@ class GraftFileSystem extends FileSystem {
     mountStoreCache
   }
 
-  /** CURRENT path → wal delta chunks file for overlay-served payloads
-    * (post-mount writes visible through the persisted state). Guarded
-    * by [[mutLock]].
-    */
-  private val overlayBirths = new java.util.HashMap[String, String]()
-
-  /** Base-chunk paths the frame plane must EXCLUDE (superseded or
-    * tombstoned by wal deltas) — fixed at initialize.
-    */
-  private var overlayExcluded: Seq[String] = Nil
-
-  /** Apply one wal-overlay inode entry to the metadata cache (missing
-    * ancestors synthesized — mkdirs is driver-local and not mirrored).
+  /** Apply the wal overlay to the metadata cache (missing ancestors
+    * synthesized — mkdirs is driver-local and not mirrored) and to the
+    * payload index: an overlay payload's source is its wal delta file.
     * Caller holds [[mutLock]] or is single-threaded initialize.
     */
-  private def applyOverlayInode(p: String, entry: Option[Inode]): Unit =
-    entry match {
-      case Some(n) =>
+  private def applyOverlay(
+      inodes: Map[String, Option[Inode]],
+      files: Map[String, Option[java.nio.file.Path]]): Unit = {
+    inodes.toSeq.sortBy(_._1).foreach {
+      case (_, Some(n)) =>
         PathOps.ancestors(Option(n.parentPath).getOrElse("/"))
           .reverse.foreach { a =>
             if (inodeCache.get(a) == null)
               cachePut(FsCatalog.dirInode(a, "graft"))
           }
         cachePut(n)
-        if (n.isFile) { baseFiles.put(p, p); birthIndex.put(p, p); () }
-      case None =>
+      case (p, None) =>
         cacheDrop(p)
-        savedBirths.remove(p)
-        baseFiles.remove(p)
-        birthIndex.remove(p)
-        ()
+        dropPayload(p)
     }
+    files.toSeq.sortBy(_._1).foreach {
+      case (p, Some(f)) =>
+        dropPayload(p)
+        payloads.put(p, new Payload(p, List(f.toString)))
+      case (p, None) => dropPayload(p)
+    }
+  }
 
   /** Executor-mode freshness: before a stat/open/listing answers, fold
     * the CURRENT wal overlay into the cache — this is what lets a
@@ -336,27 +351,13 @@ class GraftFileSystem extends FileSystem {
     * overlay applies (bounded by the wal tail, OP parses cached), not
     * just one path, so listings of directories that gained children
     * post-mount stay consistent with stats. Driver mounts skip it
-    * (their own pending/frame planes are authoritative).
+    * (their own cache and payload index are authoritative).
     */
   private def executorRefresh(): Unit =
     if (executorMode && mountParent != null)
       try {
-        val (inodes, payloads) = mountStore.overlaySnapshot()
-        withMutLock {
-          inodes.toSeq.sortBy(_._1).foreach { case (p, e) =>
-            applyOverlayInode(p, e)
-          }
-          payloads.foreach {
-            case (p, Some(f)) =>
-              savedBirths.remove(p)
-              overlayBirths.put(p, f.toString)
-              ()
-            case (p, None) =>
-              savedBirths.remove(p)
-              overlayBirths.remove(p)
-              ()
-          }
-        }
+        val (inodes, files) = mountStore.overlaySnapshot()
+        withMutLock(applyOverlay(inodes, files))
       } catch {
         case e: Throwable =>
           System.err.println(s"[graftfs] wal overlay refresh " +
@@ -364,23 +365,25 @@ class GraftFileSystem extends FileSystem {
       }
 
   /** Driver-side write-through of a freshly-closed create stream: the
-    * file's pending rows (all still in memory for ≤ FoldBytes files)
-    * commit as one storeFileData wal delta so executor mounts serve
-    * them session-free. Runs OUTSIDE [[mutLock]] (cross-process lock +
+    * file's rows (all still in memory for ≤ FoldBytes files) commit as
+    * one storeFileData wal delta so executor mounts serve them
+    * session-free. Runs OUTSIDE [[mutLock]] (cross-process lock +
     * parquet I/O must not block verb threads).
     */
-  private def writeThroughOnClose(p: String, written: Long): Unit =
+  private def writeThroughOnClose(p: String, owner: Payload,
+                                  written: Long): Unit =
     if (!executorMode && mountParent != null && writeThroughEnabled) {
       val bytes = withMutLock {
-        val rows = pendingChunks.filter(_.getString(0) == p)
-          .sortBy(r => (r.getInt(1), r.getInt(2)))
-        val total = rows.iterator.map(_.getLong(6)).sum
-        if (total == written) {
+        val rows = (pending.iterator ++ sealedBatches.iterator.flatten)
+          .filter(_.owner eq owner).map(_.row).toSeq
+          .sortBy(r => (r.blockId, r.subId))
+        val total = rows.iterator.map(_.data.length.toLong).sum
+        if (total == written && owner.sources.isEmpty) {
           val out = new Array[Byte](total.toInt)
           var at = 0
           rows.foreach { r =>
-            val d = r.getAs[Array[Byte]](5)
-            System.arraycopy(d, 0, out, at, d.length); at += d.length
+            System.arraycopy(r.data, 0, out, at, r.data.length)
+            at += r.data.length
           }
           Some(out)
         } else None
@@ -402,7 +405,7 @@ class GraftFileSystem extends FileSystem {
     }
 
   /** Mirror a successful rename into the wal for every OVERLAY entry
-    * under `src` (post-mount writes only — saved base births are
+    * under `src` (post-mount writes only — saved base rows are
     * immutable, the documented §8 residue): payloads re-commit under
     * the destination, sources tombstone, all under ONE namespace lock.
     * The committer's temp-dir rename is the designed-for case — after
@@ -461,11 +464,10 @@ class GraftFileSystem extends FileSystem {
 
   /** READ-ONLY executor mode: no SparkSession in this JVM (or forced
     * via `graft.mount.executor.mode`) — metadata answers from the
-    * saved catalog, payload reads go through [[SavedState]], and every
-    * mutation fails loudly. This closes the SURVEY §8 narrowing one
-    * notch: a REMOTE executor can now open() and read saved payloads
-    * with zero driver involvement; only bytes written after the save
-    * (driver pending/folded state) still require the driver path.
+    * saved catalog plus the live wal overlay, payload reads go through
+    * [[SavedState]], and every mutation fails loudly. A REMOTE executor
+    * can open() and read saved and written-through payloads with zero
+    * driver involvement.
     */
   private var executorMode = false
 
@@ -474,50 +476,6 @@ class GraftFileSystem extends FileSystem {
     * only the implicit no-session-at-initialize case does.
     */
   private var executorForced = false
-
-  private var birthGen = 0L
-
-  private def baseHasSubtree(p: String): Boolean = {
-    if (baseFiles.containsKey(p)) return true
-    val c = baseFiles.ceilingKey(subtreePrefix(p))
-    c != null && c.startsWith(subtreePrefix(p))
-  }
-
-  /** All folded (currentPath, birthName) under `p` (inclusive), via one
-    * sorted-range walk. */
-  private def baseSubtree(p: String): Seq[(String, String)] = {
-    val out = Seq.newBuilder[(String, String)]
-    val self = baseFiles.get(p)
-    if (self != null) out += (p -> self)
-    val pre = subtreePrefix(p)
-    val it = baseFiles.tailMap(pre).entrySet().iterator()
-    var go = true
-    while (go && it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(pre)) out += (e.getKey -> e.getValue)
-      else go = false
-    }
-    out.result()
-  }
-
-  /** Birth name for `p`'s next folded rows: the existing assignment if
-    * p folded before (mid-stream folds reuse it), else p itself unless
-    * some LIVE file elsewhere already owns that birth name (p was
-    * re-created after a rename moved the original away) — then a fresh
-    * NUL-suffixed alias. Caller holds [[mutLock]].
-    */
-  private def birthFor(p: String): String = {
-    val existing = baseFiles.get(p)
-    if (existing != null) existing
-    else {
-      val b =
-        if (birthIndex.containsKey(p)) { birthGen += 1; p + "\u0000" + birthGen }
-        else p
-      baseFiles.put(p, b)
-      birthIndex.put(b, p)
-      b
-    }
-  }
 
   private val chunkRowSchema = StructType(Seq(
     StructField("path", StringType),
@@ -528,38 +486,8 @@ class GraftFileSystem extends FileSystem {
     StructField("data", BinaryType),
     StructField("length", LongType)))
 
-  /** Fold pending rows into the base plan (caller holds [[mutLock]]).
-    * Lazy — one createDataFrame + one union, never an action.
-    */
-  private def foldPending(): Unit =
-    if (pendingChunks.nonEmpty) {
-      val rows = new java.util.ArrayList[Row](pendingChunks.size)
-      pendingChunks.foreach { r =>
-        val birth = birthFor(r.getString(0))
-        rows.add(
-          if (birth == r.getString(0)) r
-          else Row(birth, r.getInt(1), r.getInt(2), r.getLong(3),
-            r.getLong(4), r.get(5), r.getLong(6)))
-      }
-      val df = spark.createDataFrame(rows, chunkRowSchema)
-      setState(GraftFs(state.catalog, state.chunks.unionByName(df)))
-      pendingChunks.clear()
-      pendingBytes = 0L
-    }
-
-  /** Drop pending rows matching `pred`, keeping the byte count true. */
-  private def dropPending(pred: Row => Boolean): Unit = {
-    var i = 0
-    while (i < pendingChunks.length) {
-      if (pred(pendingChunks(i))) {
-        pendingBytes -= pendingChunks(i).getLong(6)
-        pendingChunks.remove(i)
-      } else i += 1
-    }
-  }
-
-  private def rowInSubtree(r: Row, path: String): Boolean =
-    r.getString(0) == path || r.getString(0).startsWith(subtreePrefix(path))
+  private val keyMapSchema = StructType(Seq(
+    StructField("key", StringType), StructField("cur", StringType)))
 
   // children / emptiness / subtree ops answer from [[childIndex]] —
   // O(children) / O(1) / O(subtree), never a full-cache scan
@@ -600,11 +528,11 @@ class GraftFileSystem extends FileSystem {
     * instance — under a drop-in mount (`fs.graftfs.impl` +
     * `spark.read`/`df.write` on a `graftfs://` URI), local-mode write
     * tasks and the output committer call create/mkdirs/rename
-    * concurrently, and two interleaved state.get → transform →
-    * setState sequences would silently lose one task's update.
-    * FsState synchronizes the individual get/set calls; this lock
-    * makes the whole transition atomic. Cross-JVM coordination stays
-    * the documented single-driver narrowing (SURVEY §1.3).
+    * concurrently, and two interleaved read → transform → write
+    * sequences would silently lose one task's update. Every hold is
+    * pure memory (parquet I/O always runs with the lock released).
+    * Cross-JVM coordination stays the documented single-driver
+    * narrowing (SURVEY §1.3).
     */
   private val mutLock = new java.util.concurrent.locks.ReentrantLock()
 
@@ -615,13 +543,9 @@ class GraftFileSystem extends FileSystem {
       .getOrElse(120000L)
 
   /** Acquire the mutation lock with a TIMEOUT instead of blocking
-    * forever: the mount's one true failure mode in local mode is core
-    * starvation — N outer tasks fill every slot, one holds this lock
-    * while its nested engine job waits for a core the lock-blocked
-    * tasks can never free (thread-dump-verified, PLANS.md r10). A
-    * metadata verb that cannot take the lock inside the timeout is in
-    * that deadlock (or something equally pathological), and a LOUD
-    * IOException naming the fix beats an infinite hang.
+    * forever: lock holds are pure memory, so a verb that cannot take
+    * the lock inside the timeout is facing a wedged holder, and a LOUD
+    * IOException beats an infinite hang.
     */
   private def withMutLock[T](f: => T): T = {
     // an interrupt while waiting (Spark killing a task mid-verb) must
@@ -640,50 +564,17 @@ class GraftFileSystem extends FileSystem {
     if (!acquired)
       throw new IOException(
         s"graftfs mount: mutation lock not acquired within ${lockTimeoutMs} ms" +
-          " — likely core starvation (every local core held by a task" +
-          " blocked on this lock while the holder's nested engine job" +
-          " waits for a slot). Lower the job's parallelism below the" +
-          " core count, or use the DSv2 connector for analytics.")
+          " — another verb holding it is wedged")
     try f finally mutLock.unlock()
   }
 
-  private def spark: SparkSession = {
-    val s = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(throw new IllegalStateException(
-        "GraftFileSystem needs an active SparkSession"))
-    // Under a drop-in mount every verb can arrive on an executor pool
-    // thread (a local-mode task reading `graftfs://` calls open/
-    // getFileStatus from inside the task). Spark 4 captures the
-    // THREAD-LOCAL active session when it plans an action
-    // (SparkPlan.session) and worker pool threads don't inherit it, so
-    // an engine action from such a thread NPEs unless the session is
-    // seated first. Idempotent on driver threads.
-    if (SparkSession.getActiveSession.isEmpty)
-      SparkSession.setActiveSession(s)
-    s
-  }
-
-  /** Bracket for any verb that executes engine actions from a
-    * possibly-foreign thread. Two thread-local obstacles stand between
-    * a local-mode task and a nested engine action: (1) worker pool
-    * threads don't inherit the active-session thread-local ([[spark]]
-    * seats it), and (2) Spark HIDES the seated session while a
-    * TaskContext is set — `getActiveSession` answers None inside a
-    * running task by design, so a nested plan would capture a null
-    * session and NPE at `SparkPlan.sparkContext`. The bracket unsets
-    * the TaskContext for the duration of the engine op and restores it
-    * in a finally, making the drop-in mount's byte paths runnable from
-    * read/write tasks (see SchemeMountSpec; nested jobs need a free
-    * core — the documented local-mode caveat).
-    */
-  private def engineOp[T](f: => T): T =
-    GraftFileSystem.withoutTaskContext { spark; f }
+  private def session: Option[SparkSession] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
 
   /** SnackFS.initialize:51-72 — derive scheme://authority, seat cwd at
-    * /user/<user>, bootstrap the keyspace (here: an empty catalog with a
-    * root inode + an empty chunk table), read the block geometry from
-    * the Configuration (SnackFSConfiguration.scala:41-42 analog).
+    * /user/<user>, bootstrap the namespace (root inode, or a saved
+    * state plus its wal overlay), read the block geometry from the
+    * Configuration (SnackFSConfiguration.scala:41-42 analog).
     */
   override def initialize(uri: URI, conf: Configuration): Unit = {
     super.initialize(uri, conf)
@@ -691,10 +582,12 @@ class GraftFileSystem extends FileSystem {
     ctx = FsContext.initialize(uri.toString,
       Option(System.getProperty("user.name")).getOrElse("graft"))
     // precedence: explicit Hadoop conf key (the core-site.xml analog) →
-    // session-level spark.graft.* key (GraftConfig) → built-in default
-    val (sparkSub, sparkBlock) = GraftConfig.geometry(spark)
-    subBlockSize = conf.getInt("graft.subblock.size", sparkSub)
-    blockSize = conf.getInt("graft.block.size", sparkBlock)
+    // session-level spark.graft.* key (GraftConfig), when this JVM has
+    // a session → built-in default
+    val (dfltSub, dfltBlock) = session.map(GraftConfig.geometry)
+      .getOrElse((DataPlane.DefaultSubBlock, DataPlane.DefaultBlock))
+    subBlockSize = conf.getInt("graft.subblock.size", dfltSub)
+    blockSize = conf.getInt("graft.block.size", dfltBlock)
     require(subBlockSize > 0 && blockSize % subBlockSize == 0,
       "graft.block.size must be a positive multiple of graft.subblock.size")
     FoldBytes = conf.getLong("graft.mount.fold.bytes", 64L << 20)
@@ -702,12 +595,10 @@ class GraftFileSystem extends FileSystem {
     maxInodes = conf.getLong("graft.mount.max.inodes", 10_000_000L)
     require(maxInodes > 0, "graft.mount.max.inodes must be positive")
     // executor mode: forced by conf (tests, explicit read-only
-    // consumers) or implied by a JVM with no session to plan with —
-    // the remote-executor situation the §8 narrowing documents
+    // consumers) or implied by a JVM with no session — the
+    // remote-executor situation the §8 narrowing documents
     executorForced = conf.getBoolean("graft.mount.executor.mode", false)
-    executorMode = executorForced ||
-      (SparkSession.getActiveSession.isEmpty &&
-        SparkSession.getDefaultSession.isEmpty)
+    executorMode = executorForced || session.isEmpty
     val stateDir = Option(conf.get("graft.mount.state.dir"))
       .flatMap(GraftShellMain.currentStateDir)
     if (executorMode && stateDir.isEmpty)
@@ -717,126 +608,49 @@ class GraftFileSystem extends FileSystem {
           "mount has nothing an executor could read without the driver")
     inodeCache.clear()
     childIndex.clear()
-    savedChunksDir = null
+    payloads.clear()
     // saved-state bootstrap is SESSION-FREE (plain parquet readers):
-    // metadata seeds the cache, file births seed the direct-read set,
-    // executor JVMs stop here (read-only — no frames, no compactor)
+    // metadata seeds the cache, every saved file's payload source is
+    // the saved chunks dir
     stateDir.foreach { root =>
-      savedChunksDir = s"$root/chunks"
+      val chunksDir = s"$root/chunks"
       SavedState.readCatalog(s"$root/catalog").foreach { n =>
         cachePut(n)
-        if (n.isFile) {
-          savedBirths.add(n.path)
-          baseFiles.put(n.path, n.path)
-          birthIndex.put(n.path, n.path)
-        }
+        if (n.isFile) payloads.put(n.path, new Payload(n.path, List(chunksDir)))
       }
     }
     // wal-overlay application (write-through scaladoc): post-mount
     // writes committed by ANY driver of this state — earlier sessions,
-    // concurrent drivers — fold into the metadata snapshot, the
-    // direct-read routing, and (below) the frame plane, so a fresh
-    // mount sees the complete namespace, not only the last compaction
+    // concurrent drivers — fold into the metadata snapshot and the
+    // payload index, so a fresh mount sees the complete namespace, not
+    // only the last compaction
     mountParent = Option(conf.get("graft.mount.state.dir"))
       .filter(_ => stateDir.isDefined).orNull
     writeThroughEnabled = conf.getBoolean("graft.mount.write.through", true)
     mountStoreCache = null
-    overlayBirths.clear()
-    overlayExcluded = Nil
     if (mountParent != null) {
-      val (oInodes, oPayloads) = mountStore.overlaySnapshot()
-      oInodes.toSeq.sortBy(_._1).foreach { case (p, e) =>
-        applyOverlayInode(p, e)
-      }
-      oPayloads.toSeq.sortBy(_._1).foreach {
-        case (p, Some(f)) =>
-          savedBirths.remove(p)
-          overlayBirths.put(p, f.toString)
-        case (p, None) =>
-          savedBirths.remove(p)
-      }
-      // stale base rows (superseded or tombstoned paths) must not
-      // reach the frame plane's saved-chunk scan
-      overlayExcluded = (oPayloads.keys ++
-        oInodes.collect { case (p, None) => p }).toSeq.distinct.sorted
+      val (inodes, files) = mountStore.overlaySnapshot()
+      applyOverlay(inodes, files)
     }
-    if (!executorMode) bootDriverPlanes()
-    else if (inodeCache.get("/") == null)
+    if (inodeCache.get("/") == null)
       cachePut(FsCatalog.dirInode("/", ctx.cwd.split("/").last))
-  }
-
-  /** Driver-side plane boot: the frame planes + compactor an executor
-    * mount never builds. Called from initialize on driver mounts, and
-    * LAZILY from [[mutGuard]] when an implicitly-executor mount later
-    * sees a session (the mount-before-session caveat: Hadoop's
-    * FileSystem cache decides the mode once at initialize, so a driver
-    * JVM touching a graftfs:// URI before creating its SparkSession
-    * used to stay permanently read-only — r16 ADVICE).
-    */
-  private def bootDriverPlanes(): Unit = {
-    val s = spark
-    val root = FsCatalog.dirInode("/", ctx.cwd.split("/").last)
-    if (inodeCache.get("/") == null) cachePut(root)
-    val emptyChunks = DataPlane.chunk(
-      s.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(Seq(StructField("path", StringType),
-          StructField("data", BinaryType)))),
-      subBlockSize, blockSize)
-    // the saved chunk rows enter the BASE PLAN too (one parquet scan
-    // leaf), so every frame consumer — snapshots, structural filters,
-    // analytic verbs — sees saved payloads; the direct-read set just
-    // short-circuits byte fetches around it. Wal-overlay rows join the
-    // plan as their own parquet leaves (superseded base paths filtered
-    // out), so the frame plane shows post-mount writes too.
-    val initialChunks = Option(savedChunksDir)
-      .map { dir =>
-        val base = s.read.parquet(dir)
-        val filtered =
-          if (overlayExcluded.isEmpty) base
-          else base.filter(!col("path").isin(overlayExcluded: _*))
-        val overlayFiles = {
-          val b = Seq.newBuilder[String]
-          overlayBirths.values.forEach(b += _)
-          b.result().distinct.sorted
-        }
-        (filtered +: overlayFiles.map(f =>
-          s.read.parquet(f).select(base.columns.map(col).toIndexedSeq: _*)))
-          .reduce(_ unionByName _)
-          .unionByName(emptyChunks)
-      }
-      .getOrElse(emptyChunks)
-    // compactEvery 8, not the default 64: facade sets are RARE now
-    // (one per fold or base-touching structural op, never per
-    // subblock/inode), and the base-touching rename doubles the tree
-    // — 8 sets bounds the worst pre-compaction plan at ~2^8 nodes
-    val values = Seq.newBuilder[Inode]
-    inodeCache.values.forEach(values += _)
-    cell = new FsState(GraftFs(FsCatalog(s.createDataset(values.result())(
-      FsCatalog.inodeEncoder)), initialChunks), compactEvery = 8)
-    startCompactor()
   }
 
   /** Loud single-sided failure for mutations on a read-only
     * executor-mode mount (the supported side is reads — see
     * [[executorMode]]) — unless the mode was IMPLICIT (no session at
     * initialize, not forced by conf) and a session has since appeared:
-    * then the mount upgrades in place (boot the driver planes, clear
-    * the flag) and the mutation proceeds. Callers hold [[mutLock]], so
-    * the one-time boot is race-free; the flag flips only after the
-    * planes exist, so concurrent readers never see a half-built driver
-    * mount.
+    * then the mount upgrades in place (the mount-before-session case:
+    * Hadoop's FileSystem cache decides the mode once at initialize) and
+    * the mutation proceeds. Callers hold [[mutLock]].
     */
   private def mutGuard(): Unit =
     if (executorMode) {
       // forced-at-initialize is the contract (a later conf mutation on
       // the shared Configuration object must not flip a read-only
       // mount); only the IMPLICIT no-session-yet case upgrades
-      val session = SparkSession.getActiveSession
-        .orElse(SparkSession.getDefaultSession)
-      if (!executorForced && session.isDefined) {
-        bootDriverPlanes()
-        executorMode = false
-      } else
+      if (!executorForced && session.isDefined) executorMode = false
+      else
         throw new IOException(
           "graftfs executor-mode mount is READ-ONLY — mutations must run " +
             "on the driver (this JVM has no SparkSession; it serves the " +
@@ -913,23 +727,20 @@ class GraftFileSystem extends FileSystem {
     }
   }
 
-  // ── A5: mkdirs — ancestor AND-fold; exists-as-file → false. The
-  //    existence map comes from the cache; the frame half is the SAME
-  //    fold (FsCatalog.mkdirsWith) minus its collect — action-free. ─────
+  // ── A5: mkdirs — ancestor AND-fold; exists-as-file → false, answered
+  //    against the cache alone — action-free. ───────────────────────────
   override def mkdirs(path: Path, permission: FsPermission): Boolean =
     withMutLock { mutGuard(); cachedMkdirs(abs(path)) }
 
-  /** The mkdirs ancestor AND-fold against the cache alone (the catalog
-    * frame derives from the cache, so there is no frame half to build
-    * here — FsCatalog.mkdirsWith documents the shared semantics:
-    * exists-as-file → false without overwrite, missing → create, no
-    * short-circuit). `createOnFailure = true` is the A5 verb's
-    * reference semantics (missing levels are created even when the
-    * fold answers false — MakeDirectoryCommand.scala:74); create()
-    * passes false so a FAILED create leaves no trace in the cache
-    * (the replaced frame-based code discarded its partial catalog on
-    * throw; a cache that kept the phantom dirs would corrupt state on
-    * a reported failure). Caller holds [[mutLock]].
+  /** The mkdirs ancestor AND-fold against the cache (FsCatalog
+    * .mkdirsWith documents the shared semantics: exists-as-file → false
+    * without overwrite, missing → create, no short-circuit).
+    * `createOnFailure = true` is the A5 verb's reference semantics
+    * (missing levels are created even when the fold answers false —
+    * MakeDirectoryCommand.scala:74); create() passes false so a FAILED
+    * create leaves no trace in the cache (a cache that kept the phantom
+    * dirs would corrupt state on a reported failure). Caller holds
+    * [[mutLock]].
     */
   private def cachedMkdirs(p: String,
                            createOnFailure: Boolean = true): Boolean = {
@@ -948,15 +759,15 @@ class GraftFileSystem extends FileSystem {
   //    an empty inode stored immediately, then each filled subblock
   //    flushes as ONE chunk row (endSubBlock :89-101) and every closed
   //    block re-commits the inode (endBlock :103-120). At most one
-  //    subblock (8 MB default) is ever buffered in the driver — no
+  //    subblock (8 MB default) is ever buffered per stream — no
   //    whole-file ByteArrayOutputStream, no driver-heap ceiling. ────────
   override def create(path: Path, permission: FsPermission,
                       overwrite: Boolean, bufferSize: Int,
                       replication: Short, blkSize: Long,
                       progress: Progressable): FSDataOutputStream = withMutLock {
     mutGuard()
-    // the whole create transition is cache-checked and frame-lazy:
-    // NO Spark action runs on this (possibly task) thread
+    // the whole create transition is cache-checked and in-memory: NO
+    // Spark action runs on this (possibly task) thread
     val p = abs(path)
     val prior = cached(p)
     prior.foreach { existing =>
@@ -969,25 +780,16 @@ class GraftFileSystem extends FileSystem {
     val parent = PathOps.parent(p)
     if (parent != null && !cachedMkdirs(parent, createOnFailure = false))
       throw new IOException(s"Parent path is not a directory: $parent")
-    // store the empty inode NOW (CreateFileCommand.scala:79-83) and drop
-    // any prior payload once — overwrite is settled before the first byte
+    // store the empty inode NOW (CreateFileCommand.scala:79-83); an
+    // overwrite drops the prior incarnation's payload entry, and the
+    // new one gets a fresh key its rows can never share with another
     cachePut(inodeFor(p, parent, 0L))
     noteInodeGrowth()
-    // overwrite drops prior payload: pending rows in memory; one base
-    // filter ONLY if this path ever folded (baseFiles) — targeting the
-    // BIRTH name, and freeing it for the replacement's next fold
-    if (overwrite && prior.isDefined) {
-      dropPending(_.getString(0) == p)
-      val birth = baseFiles.remove(p)
-      if (birth != null) {
-        birthIndex.remove(birth)
-        savedBirths.remove(birth) // saved parquet rows are now stale
-        overlayBirths.remove(birth) // wal rows likewise (close re-commits)
-        setState(GraftFs(state.catalog,
-          state.chunks.filter(col("path") =!= birth)))
-      }
-    }
-    new FSDataOutputStream(new SubBlockStream(p, parent), statistics, 0L)
+    keySeq += 1
+    val owner = new Payload(s"$p\u0000$keySeq", Nil)
+    val replaced = payloads.put(p, owner)
+    if (replaced != null) { replaced.live = false; dropDeadRows() }
+    new FSDataOutputStream(new SubBlockStream(p, parent, owner), statistics, 0L)
   }
 
   private def inodeFor(p: String, parent: String, len: Long): Inode =
@@ -996,23 +798,24 @@ class GraftFileSystem extends FileSystem {
       BlockMeta.forLength(p, len, subBlockSize, blockSize))
 
   /** The write path: buffers at most ONE subblock; a filled (or final
-    * partial) buffer becomes one `(path, block_id, sub_id, …)` row in
-    * the chunk table — the same geometry `DataPlane.chunk` produces, so
-    * catalog folds and reassembly agree byte-for-byte. Mirrors the
-    * reference's write/endSubBlock/endBlock/flush/close state machine,
-    * including write-after-close and double-close behavior
+    * partial) buffer becomes one `(key, block_id, sub_id, …)` row —
+    * the same geometry `DataPlane.chunk` produces, so catalog folds and
+    * reassembly agree byte-for-byte. Mirrors the reference's
+    * write/endSubBlock/endBlock/flush/close state machine, including
+    * write-after-close and double-close behavior
     * (FileSystemOutputStream.scala:55-143: close is isClosed-guarded, a
     * second close is a no-op; writes after close throw "Stream closed").
     */
-  private final class SubBlockStream(p: String, parent: String)
+  private final class SubBlockStream(p: String, parent: String,
+                                     owner: Payload)
     extends OutputStream {
     private val buf = new Array[Byte](subBlockSize)
     private var used = 0
     private var written = 0L
     private var isClosed = false
     // true while a flush()-persisted PARTIAL copy of the current
-    // subblock sits in the chunk table; the next persist of the same
-    // (block_id, sub_id) cell must replace it, not union beside it
+    // subblock sits in pending; the next persist of the same
+    // (block_id, sub_id) cell replaces it
     private var partialFlushed = false
 
     override def write(b: Int): Unit = {
@@ -1037,46 +840,38 @@ class GraftFileSystem extends FileSystem {
     private def ensureOpen(): Unit =
       if (isClosed) throw new IOException("Stream closed")
 
-    // endSubBlock: every flushed subblock before the final one is FULL,
-    // so the running byte count determines the global subblock index and
-    // with it the (block_id, sub_id, offsets) cell — no per-stream
-    // metadata accumulators needed beyond `written`
-    // persist the CURRENT (possibly partial) buffer as one chunk row at
-    // its (block_id, sub_id) cell; a previously flush()-persisted
-    // partial copy of the same cell is filtered out first so the table
-    // never holds two rows for one subblock
-    // the hot path allocates NO plan nodes: the row lands in the
-    // pending buffer (folded as one union per FoldBytes); a
-    // flush()-persisted partial copy of the same cell is replaced in
-    // the buffer — only if a fold landed it in the base first does
-    // one filter enter the plan
-    private def persistSubBlock(): Unit = withMutLock {
+    // persist the CURRENT (possibly partial) buffer as one pending row
+    // at its (block_id, sub_id) cell — every persisted subblock before
+    // the current one is FULL, so the running byte count determines the
+    // cell; a previously flush()-persisted partial copy is replaced (it
+    // never folds, so it is always still pending). Folds once the
+    // complete pending rows reach FoldBytes — outside the lock.
+    private def persistSubBlock(partial: Boolean): Unit = {
       val idx = written / subBlockSize
       val sbPerBlock = blockSize / subBlockSize
       val blockId = (idx / sbPerBlock).toInt
       val subId = (idx % sbPerBlock).toInt
-      if (partialFlushed) {
-        val before = pendingChunks.length
-        dropPending(r => r.getString(0) == p &&
-          r.getInt(1) == blockId && r.getInt(2) == subId)
-        if (pendingChunks.length == before) {
-          // the folded partial copy sits under the BIRTH name
-          val birth = Option(baseFiles.get(p)).getOrElse(p)
-          setState(GraftFs(state.catalog,
-            state.chunks.filter(!(col("path") === birth &&
-              col("block_id") === blockId && col("sub_id") === subId))))
+      val due = withMutLock {
+        if (partialFlushed) {
+          val i = pending.indexWhere(m => (m.owner eq owner) &&
+            m.row.blockId == blockId && m.row.subId == subId)
+          if (i >= 0) pending.remove(i)
         }
+        if (owner.live) {
+          pending += new MemRow(owner, SavedStateWriter.ChunkRow(owner.key,
+            blockId, subId, blockId.toLong * blockSize,
+            subId.toLong * subBlockSize, java.util.Arrays.copyOf(buf, used)),
+            partial)
+          if (!partial) pendingBytes += used
+        }
+        pendingBytes >= FoldBytes
       }
-      pendingChunks += Row(p, blockId, subId,
-        blockId.toLong * blockSize, subId.toLong * subBlockSize,
-        java.util.Arrays.copyOf(buf, used), used.toLong)
-      pendingBytes += used
-      if (pendingBytes >= FoldBytes) foldPending()
+      if (due) fold()
     }
 
     private def endSubBlock(): Unit = {
       if (used == 0) return
-      persistSubBlock()
+      persistSubBlock(partial = false)
       partialFlushed = false
       written += used
       used = 0
@@ -1086,8 +881,7 @@ class GraftFileSystem extends FileSystem {
       if (written % blockSize == 0) commitInode()
     }
 
-    // metadata is the cache (the catalog frame derives from it), so an
-    // inode commit is a pure map write — no plan growth, no action
+    // metadata is the cache, so an inode commit is a pure map write
     private def commitInode(): Unit = withMutLock {
       cachePut(inodeFor(p, parent, written + used))
     }
@@ -1109,7 +903,7 @@ class GraftFileSystem extends FileSystem {
       */
     override def flush(): Unit = {
       if (isClosed || used == 0) return
-      persistSubBlock()
+      persistSubBlock(partial = true)
       partialFlushed = true
       commitInode()
     }
@@ -1121,22 +915,18 @@ class GraftFileSystem extends FileSystem {
       isClosed = true
       // post-mount bytes become executor-servable the moment the
       // stream commits (write-through scaladoc); outside mutLock
-      writeThroughOnClose(p, written)
+      writeThroughOnClose(p, owner, written)
     }
   }
 
   // ── A2: open — error matrix verbatim (OpenFileCommand.scala:27-37 via
   //    SnackFSSpec:82-97). Reads are BLOCK-cached, not whole-file: the
   //    stream fetches only the ≤blockSize block covering the current
-  //    position (pruned at the chunk scan by (path, block_id)) and keeps
-  //    exactly one block resident — the reference's own read shape
+  //    position (pruned at the parquet reader by (key, block_id)) and
+  //    keeps exactly one block resident — the reference's own read shape
   //    (FileSystemInputStream loads one BlockInputStream at a time,
   //    :60-76), so a file larger than driver heap still reads. ─────────
   override def open(path: Path, bufferSize: Int): FSDataInputStream = {
-    // metadata from the cache (action-free, locked against mid-rename
-    // partial states — see getFileStatus); only the PAYLOAD fetches
-    // inside BlockCachedStream still run engine actions — the mount's
-    // remaining local-mode read caveat (see the class scaladoc)
     val p = abs(path)
     executorRefresh() // live wal view for executor mounts
     val node = withMutLock(cached(p))
@@ -1147,20 +937,19 @@ class GraftFileSystem extends FileSystem {
 
   /** Seekable + positioned-readable view that materializes ONE block at
     * a time. Geometry is fixed per filesystem instance, so the block
-    * covering a position is `pos / blockSize` — a (path, block_id)
-    * equality filter the planner prunes before any payload moves.
+    * covering a position is `pos / blockSize`.
     *
-    * The block map (fileLen) snapshots at open; payload fetches read
-    * the LIVE chunk table — the reference's exact split
-    * (FileSystemInputStream loads the INode once at open, then pulls
-    * each block from the store on demand). A file deleted or truncated
-    * under an open stream therefore fails the next block fetch with
-    * IOException, the analog of the reference's store NotFoundException
-    * — never a silent wrong read, an index crash, or a stuck loop.
-    * One documented divergence: block keys here are path-stable (the
-    * reference keys blocks by fresh UUIDs), so an overwrite that keeps
-    * a block at least as long serves the NEW bytes to an already-open
-    * stream instead of failing.
+    * The block map (fileLen) snapshots at open; payload fetches resolve
+    * the path through the LIVE payload index — the reference's exact
+    * split (FileSystemInputStream loads the INode once at open, then
+    * pulls each block from the store on demand). A file deleted or
+    * truncated under an open stream therefore fails the next block
+    * fetch with IOException, the analog of the reference's store
+    * NotFoundException — never a silent wrong read, an index crash, or
+    * a stuck loop. One documented divergence: block lookups are
+    * path-stable (the reference keys blocks by fresh UUIDs), so an
+    * overwrite that keeps a block at least as long serves the NEW bytes
+    * to an already-open stream instead of failing.
     */
   private final class BlockCachedStream(p: String, fileLen: Long)
     extends java.io.InputStream
@@ -1180,80 +969,19 @@ class GraftFileSystem extends FileSystem {
     // contract; concurrent preads serialize (correctness first — a
     // parallel-read client opens multiple streams).
     private def blockAt(id: Long, needUpTo: Long): Array[Byte] = {
-      // engineOp brackets ONLY a BASE-plan block-miss fetch: read()
-      // calls this per byte, and a cache hit must stay a plain field
-      // read — not a reflection round-trip through the TaskContext
-      // bridge. The miss path splits on where the bytes live:
-      //  - path never folded to base → assemble from the pending
-      //    buffer in PURE MEMORY. This is what lets a stock job READ
-      //    BACK what it just wrote at full outer parallelism: parquet
-      //    footer/page reads arrive on scan-task threads (schema
-      //    inference runs footer reads as a distributed job — observed
-      //    r11, 4 footer tasks on local[4] each starving a nested
-      //    collect), and fresh data must not need a nested job.
-      //  - path folded → the payload is in the lazy base plan; fold
-      //    any still-pending rows so the scan sees everything, then
-      //    one pruned engine collect. Reading FOLDED (> FoldBytes)
-      //    data from inside a core-saturating outer job remains the
-      //    mount's documented local-mode caveat.
+      // a block miss snapshots the payload entry's in-memory rows and
+      // source list under the lock, then reads the sources with the
+      // lock released: session-free parquet I/O, no Spark job — so any
+      // thread, including a task of a core-saturating job, can read
       if (id != cachedId) {
-        val (memRows, birth, direct, overlayFile) = withMutLock {
-          val rs = pendingChunks.filter(r =>
-            r.getString(0) == p && r.getInt(1) == id.toInt)
-          val b = baseFiles.get(p)
-          (rs.sortBy(_.getLong(4)).map(_.getAs[Array[Byte]](5)).toArray,
-            b, b != null && savedBirths.contains(b),
-            if (b != null) overlayBirths.get(b) else null)
+        val (mem, key, sources) = withMutLock {
+          val owner = payloads.get(p)
+          if (owner == null) (Nil, null, Nil)
+          else (memRows(owner, id.toInt), owner.key, owner.sources)
         }
-        if (overlayFile != null && memRows.isEmpty) {
-          // post-mount WRITE-THROUGH payload: one session-free read of
-          // the wal delta file (≤ FoldBytes by construction), sliced
-          // to the requested block — the executor-side path for bytes
-          // written AFTER the mount (write-through scaladoc)
-          val whole = SavedStateWriter.readPayload(overlayFile, birth)
-          val from = math.min(whole.length.toLong, id * blockSize).toInt
-          val until = math.min(whole.length.toLong,
-            (id + 1) * blockSize).toInt
-          cached = java.util.Arrays.copyOfRange(whole, from, until)
-          cachedId = id
-        } else if (direct && memRows.isEmpty) {
-          // SAVED payload, untouched since the mount: a session-free
-          // pruned parquet read — no driver job, no nested action, no
-          // lock held across I/O. THE executor-side read path (and the
-          // fastest driver-side one); see savedBirths/SavedState.
-          cached = SavedState.readBlock(savedChunksDir, birth, id)
-          cachedId = id
-        } else if (birth == null) {
-          val total = memRows.iterator.map(_.length).sum
-          val out = new Array[Byte](total)
-          var at = 0
-          memRows.foreach { d =>
-            System.arraycopy(d, 0, out, at, d.length); at += d.length
-          }
-          cached = out
-          cachedId = id
-        } else {
-          // PIN the snapshot for the collect's duration: the plan read
-          // here is rooted in the current checkpoint generation, and
-          // the compactor's trySwap (which runs under mutLock but NOT
-          // for the whole collect) retires-and-sweeps that generation
-          // on success — a swap landing mid-collect would free the
-          // blocks this job is reading (checkpoint-block-not-found).
-          // trySwap's contract covers verb read-modify-write; in-flight
-          // READERS protect themselves with the pin, which sweepRetired
-          // honors.
-          val snap = withMutLock { foldPending(); cell.pinCurrent() }
-          try engineOp {
-            // base rows live under the file's BIRTH name (renames never
-            // rewrite the plan — baseFiles scaladoc)
-            val rows = DataPlane.reassembleBlocks(
-                snap.chunks.filter(col("path") === birth && col("block_id") === id))
-              .select(col("data")).collect()
-            cached = if (rows.isEmpty) Array.emptyByteArray
-              else rows(0).getAs[Array[Byte]](0)
-            cachedId = id
-          } finally cell.unpin(snap)
-        }
+        cached = SavedState.assemble(
+          mem ++ sources.flatMap(SavedState.blockRows(_, key, id)))
+        cachedId = id
       }
       if (cached.length < needUpTo)
         throw new IOException(
@@ -1324,11 +1052,10 @@ class GraftFileSystem extends FileSystem {
       readFully(position, buffer, 0, buffer.length)
   }
 
-  // ── A7: delete — cascades to the data plane; the error matrix is
-  //    settled against the cache, the cascade applies the SAME frame
-  //    predicates (GraftFs.delete*Frames) lazily — action-free. The
-  //    wal mirror (outside the lock) keeps executor views of
-  //    write-through'd files coherent. ──────────────────────────────────
+  // ── A7: delete — cascades to the payload index; the error matrix is
+  //    settled against the cache — action-free. The wal mirror (outside
+  //    the lock) keeps executor views of write-through'd files
+  //    coherent. ──────────────────────────────────────────────────────────
   override def delete(path: Path, recursive: Boolean): Boolean = {
     val ok = deleteLocked(path, recursive)
     if (ok) mirrorDelete(abs(path))
@@ -1339,71 +1066,36 @@ class GraftFileSystem extends FileSystem {
     withMutLock {
       mutGuard()
       val p = abs(path)
-      def dropChunksOf(): Unit = {
-        dropPending(rowInSubtree(_, p))
-        if (baseHasSubtree(p)) {
-          val pre = subtreePrefix(p)
-          val members = baseSubtree(p) // (currentPath, birthName)
-          members.foreach { case (c, b) =>
-            baseFiles.remove(c); birthIndex.remove(b)
-            savedBirths.remove(b)
-          }
-          // rows live under BIRTH names. The bulk of a subtree's rows
-          // sit under the current prefix (never renamed), covered by
-          // ONE prefix predicate; the exceptions stay O(renamed files):
-          //  - foreign births: members renamed IN from elsewhere —
-          //    their rows need explicit deletion (isin);
-          //  - alive births under the prefix: files renamed AWAY whose
-          //    rows the prefix predicate must NOT catch (anti-isin).
-          //    (birthIndex entries under pre are live files by
-          //    construction — this subtree's members were removed
-          //    above, so what remains is exactly the renamed-away set.)
-          val strayIn = members.collect {
-            case (_, b) if b != p && !b.startsWith(pre) => b
-          }
-          val aliveUnder = Seq.newBuilder[String]
-          val it = birthIndex.tailMap(pre).keySet().iterator()
-          var go = true
-          while (go && it.hasNext) {
-            val k = it.next()
-            if (k.startsWith(pre)) aliveUnder += k else go = false
-          }
-          if (birthIndex.containsKey(p)) aliveUnder += p
-          val alive = aliveUnder.result()
-          val underPre = col("path") === p || col("path").startsWith(pre)
-          val doomedPre =
-            if (alive.isEmpty) underPre
-            else underPre && !col("path").isin(alive: _*)
-          val doomed =
-            if (strayIn.isEmpty) doomedPre
-            else doomedPre || col("path").isin(strayIn: _*)
-          setState(GraftFs(state.catalog, state.chunks.filter(!doomed)))
-        }
+      def dropSubtree(): Unit = {
+        val doomed = payloadSubtree(p)
+        doomed.foreach { case (c, _) => dropPayload(c) }
+        if (doomed.nonEmpty) dropDeadRows()
       }
       cached(p) match {
         case None => false
         case Some(node) if node.isFile =>
           cacheDrop(p)
-          dropChunksOf()
+          dropSubtree()
           true
         case Some(_) if !cacheHasChildren(p) =>
           cacheDrop(p)
-          dropChunksOf()
+          dropSubtree()
           true
         case Some(_) if !recursive =>
           throw new IOException("Directory is not empty")
         case Some(_) =>
           cacheRemoveSubtree(p)
-          dropChunksOf()
+          dropSubtree()
           true
       }
     }
 
-  // ── A8: rename — one prefix-rewrite pass per plane; preconditions
-  //    from the cache, frames lazy (the committer's commit dance runs
-  //    this from task threads) — action-free. The wal mirror (outside
-  //    the lock) moves write-through'd payloads to their final names,
-  //    so a committer's temp→final dance stays executor-visible. ────────
+  // ── A8: rename — preconditions from the cache, then pure map
+  //    re-keying of the cache and the payload index (the committer's
+  //    commit dance runs this from task threads) — action-free. The wal
+  //    mirror (outside the lock) moves write-through'd payloads to their
+  //    final names, so a committer's temp→final dance stays
+  //    executor-visible. ──────────────────────────────────────────────────
   override def rename(src: Path, dst: Path): Boolean = {
     val ok = renameLocked(src, dst)
     if (ok) mirrorRename(abs(src), abs(dst))
@@ -1429,32 +1121,10 @@ class GraftFileSystem extends FileSystem {
             throw new IOException("A file exists with parent of destination.")
         }
         cacheRename(s, d)
-        // pending rows move in memory — the committer's common case
-        // (it renames files written moments ago); the base pays the
-        // frame rewrite only when folded rows are actually under src
-        val pre = subtreePrefix(s)
-        var i = 0
-        while (i < pendingChunks.length) {
-          val r = pendingChunks(i)
-          if (r.getString(0) == s || r.getString(0).startsWith(pre)) {
-            pendingChunks(i) = Row(d + r.getString(0).substring(s.length),
-              r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4),
-              r.get(5), r.getLong(6))
-          }
-          i += 1
-        }
-        if (baseHasSubtree(s)) {
-          // ZERO plan nodes: rows keep their immutable BIRTH names;
-          // rename is pure map re-keying (baseFiles scaladoc). The old
-          // per-rename filter∪rewrite doubled the plan tree — under a
-          // committer storm that compounded exponentially (2^renames)
-          // faster than any compaction cadence could flatten it.
-          baseSubtree(s).foreach { case (c, b) =>
-            baseFiles.remove(c)
-            val nc = d + c.substring(s.length)
-            baseFiles.put(nc, b)
-            birthIndex.put(b, nc)
-          }
+        // rows carry immutable keys, so the move is entry re-keying only
+        payloadSubtree(s).foreach { case (c, owner) =>
+          payloads.remove(c)
+          payloads.put(d + c.substring(s.length), owner)
         }
         true
       }
@@ -1497,75 +1167,62 @@ class GraftFileSystem extends FileSystem {
       })
   }
 
-  /** Current snapshot, for tests and interop with the query layer —
-    * PINNED (ref counted): the snapshot's backing checkpoint survives
-    * this facade's later compactions, so the returned state stays
-    * queryable. Release with `releaseSnapshot` when done, or let
-    * `close()` drop every pin with the mount.
+  /** Current (catalog, chunks) snapshot, for tests and interop with the
+    * query layer, in CURRENT-path space. The catalog derives from the
+    * inode cache; the chunks are built on demand from the in-memory
+    * rows plus one parquet scan per payload source, joined to the
+    * (key → current path) pairs of the entries it serves — lazy, no
+    * checkpoint, plan depth bounded by the number of sources. The
+    * snapshot reads the mount's segment files, which close() deletes:
+    * it must not outlive its mount.
     */
-  def graftFs: GraftFs = withMutLock {
-    require(cell != null,
-      "an executor-mode mount holds no frame planes (read-only, " +
-        "SavedState-served) — snapshot on the driver mount instead")
-    foldPending()
-    refreshCatalog()
-    cell.pinCurrent()
+  def graftFs: GraftFs = {
+    val s = session.getOrElse(throw new IllegalStateException(
+      "GraftFileSystem.graftFs needs an active SparkSession"))
+    val (inodes, mem, bySource) = withMutLock {
+      val cur = new java.util.IdentityHashMap[Payload, String]()
+      val bySource = scala.collection.mutable.TreeMap.empty[String, ArrayBuffer[Row]]
+      payloads.forEach { (p, owner) =>
+        cur.put(owner, p)
+        owner.sources.foreach(src =>
+          bySource.getOrElseUpdate(src, ArrayBuffer.empty) += Row(owner.key, p))
+      }
+      val mem = new java.util.ArrayList[Row]()
+      (pending.iterator ++ sealedBatches.iterator.flatten).foreach { m =>
+        val p = cur.get(m.owner)
+        if (p != null) {
+          val r = m.row
+          mem.add(Row(p, r.blockId, r.subId, r.blockOffset, r.offset, r.data,
+            r.data.length.toLong))
+        }
+      }
+      val values = Seq.newBuilder[Inode]
+      inodeCache.values.forEach(values += _)
+      (values.result(), mem, bySource.toSeq)
+    }
+    val fromSources = bySource.map { case (src, keys) =>
+      val keyMap = s.createDataFrame(
+        java.util.Arrays.asList(keys.toSeq: _*), keyMapSchema)
+      s.read.schema(chunkRowSchema).parquet(src)
+        .join(keyMap, col("path") === col("key"))
+        .select(col("cur").as("path") +:
+          chunkRowSchema.fieldNames.toSeq.tail.map(col): _*)
+    }
+    val chunks: DataFrame = fromSources.foldLeft(
+      s.createDataFrame(mem, chunkRowSchema))(_ unionByName _)
+    GraftFs(FsCatalog(s.createDataset(inodes)(FsCatalog.inodeEncoder)), chunks)
   }
 
-  /** Rebuild the catalog frame from the authoritative inode cache — a
-    * depth-1 createDataset, the derive-on-demand half of the
-    * cache-is-the-catalog design (see [[pendingChunks]]). Caller holds
-    * [[mutLock]].
-    */
-  private def refreshCatalog(): Unit = {
-    val s = spark
-    import s.implicits._
-    val values = Seq.newBuilder[Inode]
-    inodeCache.values.forEach(values += _)
-    setState(GraftFs(FsCatalog(s.createDataset(values.result())),
-      state.chunks))
-  }
-
-  /** Release one `graftFs` escape (see FsState.unpin). */
-  def releaseSnapshot(snapshot: GraftFs): Unit = cell.unpin(snapshot)
-
-  /** Swap-outcome accounting passthrough (FsState.swapStats). */
-  private[fs] def swapStats: (Int, Int, Int) = cell.swapStats
+  /** Counterpart of [[graftFs]], kept for callers that bracket their
+    * snapshots: a snapshot holds no checkpoint, so there is nothing to
+    * release. */
+  def releaseSnapshot(snapshot: GraftFs): Unit = ()
 
   override def close(): Unit = {
-    if (compactor != null) compactor.interrupt()
-    // the mount's escaped snapshots die with it — free their retained
-    // checkpoints instead of leaking one per compaction generation
-    if (cell != null) cell.releasePins()
+    // segments are mount-private: they go with the mount (snapshots
+    // reading them must not outlive it — graftFs scaladoc)
+    val dir = withMutLock { val d = segmentDir; segmentDir = null; d }
+    if (dir != null) graft.PlanHygiene.deleteRecursively(dir)
     super.close()
   }
-}
-
-object GraftFileSystem {
-
-  // TaskContext.setTaskContext/unset are private[spark]; reflection
-  // keeps the bridge dependency-free. Resolved once per JVM.
-  private val tcModuleClass = Class.forName("org.apache.spark.TaskContext$")
-  private val tcModule = tcModuleClass.getField("MODULE$").get(null)
-  private val tcGet = tcModuleClass.getMethod("get")
-  private val tcUnset = tcModuleClass.getMethod("unset")
-  private val tcSet = tcModuleClass.getMethod("setTaskContext",
-    Class.forName("org.apache.spark.TaskContext"))
-
-  /** Run `f` with no TaskContext on the calling thread, restoring it in
-    * a finally. Spark's `getActiveSession` deliberately answers None
-    * inside a running task, so a mounted verb invoked from a local-mode
-    * task thread could never plan its nested engine action without
-    * this; with the context parked, the seated session becomes visible
-    * and the nested job schedules normally (pinned by SchemeMountSpec).
-    */
-  private[fs] def withoutTaskContext[T](f: => T): T = {
-    val tc = tcGet.invoke(tcModule)
-    if (tc == null) f
-    else {
-      tcUnset.invoke(tcModule)
-      try f finally tcSet.invoke(tcModule, tc)
-    }
-  }
-
 }

@@ -8,20 +8,19 @@ import org.apache.spark.sql.functions._
 import graft.catalog.FsCatalog
 
 /** Driver-held current→birth prefix re-keying for the chunk plane —
-  * the facade's birth-name technique (GraftFileSystem.baseFiles)
-  * generalized to PREFIX entries so the snapshot-style shell state
-  * gets plan-free renames too. Chunk rows are stored under an
-  * IMMUTABLE birth path; an entry `(currentPrefix → birthPrefix)`
-  * says "rows under birthPrefix belong to currentPrefix now". Rename
-  * is pure map re-keying — ZERO plan nodes — where the old
+  * immutable row names under a driver map (the mount's payload keys
+  * do the same per file) generalized to PREFIX entries so the
+  * snapshot-style shell state gets plan-free renames. Chunk rows are
+  * stored under an IMMUTABLE birth path; an entry `(currentPrefix →
+  * birthPrefix)` says "rows under birthPrefix belong to currentPrefix
+  * now". Rename is pure map re-keying — ZERO plan nodes — where the old
   * filter∪rewrite DOUBLED the chunk tree per verb (2^k analysis
-  * growth; the r13 storm measured 13–44 s verbs on the facade's
-  * equivalent shape before its birth maps landed). Entries always map
-  * straight into BIRTH space (resolved at creation), so lookup is one
-  * longest-prefix match, never a chain. The map is bounded by the
-  * session's rename/claimed-creation count (the facade's baseFiles
-  * precedent) and clears at the persistence boundary
-  * ([[GraftFs.normalized]]).
+  * growth; the r13 storm measured 13–44 s verbs on the mount's
+  * equivalent shape before its renames became map re-keying). Entries
+  * always map straight into BIRTH space (resolved at creation), so
+  * lookup is one longest-prefix match, never a chain. The map is
+  * bounded by the session's rename/claimed-creation count and clears
+  * at the persistence boundary ([[GraftFs.normalized]]).
   */
 final case class ChunkAliases(
     entries: scala.collection.immutable.TreeMap[String, String]) {
@@ -52,7 +51,7 @@ final case class ChunkAliases(
   /** Birth name for a NEWLY created file at `p`, plus the alias entry
     * to record if the identity/resolved name is claimed by another
     * entry's birth region (a recreation under a renamed-away path —
-    * the facade's NUL-suffix rule: NUL never appears in a real Hadoop
+    * the NUL-suffix rule: NUL never appears in a real Hadoop
     * path, so aliases cannot shadow data).
     */
   def birthForNew(p: String): (String, Option[(String, String)]) = {
@@ -187,8 +186,8 @@ object ChunkAliases {
   * Chunk rows are stored under BIRTH paths; every read translates
   * current → birth at the boundary ([[rowsForFile]]/[[currentChunks]]).
   * With no aliases every path degenerates to the pre-alias plan shape
-  * exactly (the facade constructs GraftFs alias-free and keeps its own
-  * birth maps).
+  * exactly (the mount's snapshots are alias-free: built in current-path
+  * space).
   */
 final case class GraftFs(catalog: FsCatalog, chunks: DataFrame,
                          aliases: ChunkAliases = ChunkAliases.empty) {
@@ -284,7 +283,7 @@ final case class GraftFs(catalog: FsCatalog, chunks: DataFrame,
     * `path` in their path column). If the identity birth is claimed by
     * an alias entry (the path was renamed away and re-created), the
     * rows store under a fresh NUL-suffixed birth and the map records
-    * it — the facade's birthFor rule.
+    * it (the NUL-suffix rule).
     */
   def withNewRows(newCatalog: FsCatalog, path: String,
                   rows: DataFrame): GraftFs = {
@@ -360,13 +359,13 @@ final case class GraftFs(catalog: FsCatalog, chunks: DataFrame,
   }
 
   /** Flatten both planes' lazy plans into materialized snapshots
-    * (eager localCheckpoints). Long-lived mutable sessions (the facade,
-    * the shell) layer one plan node per mutation — one union per
+    * (eager localCheckpoints). Long-lived mutable sessions (the shell)
+    * layer one plan node per mutation — one union per
     * written subblock — so analysis cost grows with session age;
     * compaction resets both plans to single `LogicalRDD` leaves. Rows
     * stay in BIRTH space and the alias map rides along unchanged, so
-    * FsState's rebasing swap stays row-identical. The caller owns
-    * releasing the PREVIOUS compaction (`FsState` does) — and note an
+    * a compaction stays row-identical. The caller owns releasing the
+    * PREVIOUS compaction (`FsState` does) — and note an
     * externally-held older snapshot cannot be recomputed once its
     * checkpoint is released.
     */

@@ -2,39 +2,36 @@ package graft.fs
 
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
-
-import graft.catalog.{BlockMeta, FileLocks, FsCatalog, Inode, PathOps}
+import graft.catalog.Inode
 
 /** The pluggable store seam — the engine-side analog of the reference's
   * `FileSystemStore` trait (reference FileSystemStore.scala:29-56), the
-  * one north-star surface a Cassandra deployment would re-bind. The
-  * engine's own paths (shell, facade, DSv2) compose FsCatalog/DataPlane
-  * directly — this trait exists so the STORE CONTRACT is a named,
-  * tested interface with exactly one binding today ([[ParquetStore]])
-  * and an obvious slot for a `CassandraStore` when an environment has
+  * one north-star surface a Cassandra deployment would re-bind. Its
+  * binding is [[SharedStateStore]] over the persisted state layout —
+  * the store the scheme mount writes through to and the CLI brackets
+  * its verbs with — and GraftStoreSpec runs the contract against it. A
+  * `CassandraStore` would be a second binding when an environment has
   * one (this sandbox does not — documented narrowing, SURVEY §2.2 B1).
   *
   * Method map (reference → here; the reference returns Thrift-async
-  * `Future`s, re-expressed as synchronous driver calls over LAZY
-  * DataFrames — laziness is where the asynchrony went):
+  * `Future`s, re-expressed as synchronous calls):
   *
-  * | Ref (FileSystemStore.scala) | Here | Engine impl |
+  * | Ref (FileSystemStore.scala) | Here | SharedStateStore impl |
   * |---|---|---|
-  * | `createKeyspace` :31 (ThriftStore.scala:88-170) | createKeyspace() | catalog bootstrap: root inode + empty chunk plane |
-  * | `init` :33 (client pool, ThriftStore.scala:175-207) | init() | no-op BY DESIGN: Spark manages executors/connections (SURVEY §2.2 B2) |
-  * | `storeINode` :35 (ThriftStore.scala:281-327) | storeINode | FsCatalog.store (anti-join + union upsert, FsCatalog.scala:52) |
-  * | `retrieveINode` :37 (ThriftStore.scala:329-350) | retrieveINode | FsCatalog.retrieve (filter-head, FsCatalog.scala:46) |
-  * | `storeSubBlock` :39 (ThriftStore.scala:352-385) | storeFileData | DataPlane.chunk of a (path, data) leaf + BlockMeta.forLength inode commit — C1-C4 in one declarative pass |
-  * | `retrieveSubBlock` :41 (+byteRangeStart; ThriftStore.scala:387-411) | retrieveSubBlock | DataPlane.readRange (subblock-pruned positioned read) |
-  * | `retrieveBlock` :43 (BlockInputStream) | retrieveBlock | DataPlane.cat (ordered reassembly) |
-  * | `deleteINode` :45 (ThriftStore.scala:413-425) | deleteINode | FsCatalog.removePath |
-  * | `deleteBlocks` :47 (ThriftStore.scala:427-464) | deleteBlocks | chunk-plane anti-filter on the path |
-  * | `fetchSubPaths` :49 (deep flag; ThriftStore.scala:490-541) | fetchSubPaths | FsCatalog.listStatus / listStatusRecursive path projection |
-  * | `getBlockLocations` :51 (token ring → replicas, ThriftStore.scala:543-605) | getBlockLocations | FsCatalog.blockLocations (deterministic hash-ring analog, 3 replicas) |
-  * | `acquireFileLock` :53 (time-UUID column race, ThriftStore.scala:607-734) | acquireFileLock | FileLocks.acquire (driver-local analog — the documented B12 single-driver narrowing) |
-  * | `releaseFileLock` :55 | releaseFileLock | FileLocks.release |
-  * | (keyspace drop — B13) | dropKeyspace() | reset to the empty planes |
+  * | `createKeyspace` :31 (ThriftStore.scala:88-170) | createKeyspace() | first version dir (root inode + empty chunks) + `CURRENT` flip |
+  * | `init` :33 (client pool, ThriftStore.scala:175-207) | init() | no-op BY DESIGN: no connection to pool (SURVEY §2.2 B2) |
+  * | `storeINode` :35 (ThriftStore.scala:281-327) | storeINode | one atomically-renamed wal delta |
+  * | `retrieveINode` :37 (ThriftStore.scala:329-350) | retrieveINode | wal replay, else a path-pruned base catalog read |
+  * | `storeSubBlock` :39 (ThriftStore.scala:352-385) | storeFileData | chunk rows + BlockMeta.forLength inode in one wal delta — C1-C4 in one commit |
+  * | `retrieveSubBlock` :41 (+byteRangeStart; ThriftStore.scala:387-411) | retrieveSubBlock | block-pruned reads of the overlapping blocks (SavedState.readBlock) |
+  * | `retrieveBlock` :43 (BlockInputStream) | retrieveBlock | ordered block reads of the whole file |
+  * | `deleteINode` :45 (ThriftStore.scala:413-425) | deleteINode | tombstone delta |
+  * | `deleteBlocks` :47 (ThriftStore.scala:427-464) | deleteBlocks | payload tombstone delta |
+  * | `fetchSubPaths` :49 (deep flag; ThriftStore.scala:490-541) | fetchSubPaths | path-range base read ∪ wal overlay |
+  * | `getBlockLocations` :51 (token ring → replicas, ThriftStore.scala:543-605) | getBlockLocations | FsCatalog.blockLocations' ring formula (deterministic hash-ring analog, 3 replicas) |
+  * | `acquireFileLock` :53 (time-UUID column race, ThriftStore.scala:607-734) | acquireFileLock | SharedFileLocks.acquire (atomic exclusive create on shared storage — multi-driver) |
+  * | `releaseFileLock` :55 | releaseFileLock | SharedFileLocks.release |
+  * | (keyspace drop — B13) | dropKeyspace() | delete `CURRENT`, versions and wal |
   */
 trait GraftStore {
   def createKeyspace(): Unit
@@ -69,261 +66,4 @@ trait GraftStore {
   def acquireFileLock(path: String): Option[UUID]
   def releaseFileLock(path: String, token: UUID): Boolean
   def dropKeyspace(): Unit
-}
-
-/** The Parquet/Spark binding — today's only [[GraftStore]]: both planes
-  * are the engine's ordinary frames (catalog = Inode dataset, data =
-  * subblock rows), mutations swap an immutable snapshot behind one
-  * lock (the single-driver narrowing every store consumer already
-  * documents). A CassandraStore would replace the two frames with
-  * session-bound table scans and the swap with batch mutations; every
-  * signature above already matches that shape.
-  */
-final class ParquetStore(spark: SparkSession,
-                         subBlockSize: Int = 1 << 20,
-                         blockSize: Int = 4 << 20,
-                         lockRoot: Option[String] = None) extends GraftStore {
-  require(subBlockSize > 0 && blockSize % subBlockSize == 0,
-    "blockSize must be a positive multiple of subBlockSize")
-
-  private[this] var state: GraftFs = _
-
-  private def emptyFs(): GraftFs = GraftShellMain.emptyFs(spark)
-
-  override def createKeyspace(): Unit = synchronized {
-    if (state == null) state = emptyFs()
-  }
-
-  /** No-op BY DESIGN (not unimplemented): the reference's init builds a
-    * Thrift client pool; Spark owns executor lifecycles and there is no
-    * connection to pool (SURVEY §2.2 B2).
-    */
-  override def init(): Unit = ()
-
-  private def fs: GraftFs = synchronized {
-    require(state != null, "createKeyspace() first")
-    state
-  }
-
-  override def storeINode(inode: Inode): Unit = synchronized {
-    state = GraftFs(fs.catalog.store(inode), fs.chunks, fs.aliases)
-  }
-
-  override def retrieveINode(path: String): Option[Inode] =
-    fs.catalog.retrieve(path)
-
-  override def storeFileData(path: String, data: Array[Byte],
-                             user: String,
-                             mtime: java.sql.Timestamp): Unit = synchronized {
-    val g = fs
-    import org.apache.spark.sql.{Row, types => T}
-    val leaf = spark.createDataFrame(
-      java.util.Arrays.asList(Row(path, data)),
-      T.StructType(Seq(T.StructField("path", T.StringType),
-        T.StructField("data", T.BinaryType))))
-    val inode = Inode(path, PathOps.parent(path), user, user, 420,
-      isDir = false, mtime,
-      BlockMeta.forLength(path, data.length.toLong, subBlockSize, blockSize))
-    state = GraftFs(
-      g.catalog.store(inode),
-      g.currentChunks.filter(org.apache.spark.sql.functions
-          .col("path") =!= path)
-        .unionByName(DataPlane.chunk(leaf, subBlockSize, blockSize)),
-      graft.fs.ChunkAliases.empty)
-  }
-
-  override def retrieveSubBlock(path: String, byteRangeStart: Long,
-                                len: Long): Array[Byte] =
-    DataPlane.readRange(
-        fs.currentChunks.filter(
-          org.apache.spark.sql.functions.col("path") === path),
-        byteRangeStart, len)
-      .collect().headOption
-      .map(_.getAs[Array[Byte]]("data")).getOrElse(Array.emptyByteArray)
-
-  override def retrieveBlock(path: String): Array[Byte] =
-    DataPlane.cat(fs.currentChunks, path)
-      .collect().headOption
-      .map(_.getAs[Array[Byte]]("data")).getOrElse(Array.emptyByteArray)
-
-  override def deleteINode(path: String): Unit = synchronized {
-    state = GraftFs(fs.catalog.removePath(path), fs.chunks, fs.aliases)
-  }
-
-  override def deleteBlocks(path: String): Unit = synchronized {
-    val g = fs
-    state = GraftFs(g.catalog,
-      g.currentChunks.filter(
-        org.apache.spark.sql.functions.col("path") =!= path),
-      graft.fs.ChunkAliases.empty)
-  }
-
-  override def fetchSubPaths(path: String,
-                             isDeepFetch: Boolean): Seq[String] = {
-    val frame =
-      if (isDeepFetch) fs.catalog.listStatusRecursive(path)
-      else fs.catalog.listStatus(path)
-    frame.select("path").collect().map(_.getString(0)).toSeq.sorted
-  }
-
-  override def getBlockLocations(path: String): Map[String, Seq[String]] =
-    // exact-path (the reference's per-FILE verb, ThriftStore.scala:
-    // 543-605) — FsCatalog.blockLocations is a PREFIX listing, so
-    // without the filter a directory argument would answer its whole
-    // subtree's blocks while InMemoryStore answers empty (B11 parity)
-    fs.catalog.blockLocations(path)
-      .filter(org.apache.spark.sql.functions.col("path") === path)
-      .collect().map { r =>
-        r.getAs[String]("block_id") ->
-          r.getAs[String]("replicas").split(",").toSeq
-      }.toMap
-
-  /** Lock binding selection (B12 both halves): with a `lockRoot` the
-    * store runs the CROSS-PROCESS protocol (SharedFileLocks — atomic
-    * exclusive create on shared storage, multi-driver-safe); without
-    * one it keeps the driver-local table, the documented single-driver
-    * deployment. The contract is identical either way — GraftStoreSpec
-    * runs the same matrix through both.
-    */
-  override def acquireFileLock(path: String): Option[UUID] =
-    lockRoot match {
-      case Some(root) => graft.catalog.SharedFileLocks.acquire(root, path)
-      case None => FileLocks.acquire(path)
-    }
-
-  override def releaseFileLock(path: String, token: UUID): Boolean =
-    lockRoot match {
-      case Some(root) => graft.catalog.SharedFileLocks.release(root, path, token)
-      case None => FileLocks.release(path, token)
-    }
-
-  override def dropKeyspace(): Unit = synchronized { state = null }
-}
-
-/** A SECOND [[GraftStore]] binding — plain JVM maps, no Spark frames —
-  * proving the seam supports a real re-bind: GraftStoreSpec runs the
-  * full 14-method contract over BOTH bindings unchanged, which is
-  * exactly what a `CassandraStore` would have to pass (the reference's
-  * own store is "any key-value backend behind FileSystemStore.scala:
-  * 29-56" — Cassandra happens to be the one it ships). The mapping is
-  * the reference's, one JVM structure per column family: `inodes` ≙ the
-  * `inode` CF (path-keyed metadata, ThriftStore.scala:169-196),
-  * `payloads` ≙ the `sblock` CF (block-keyed bytes, ThriftStore.scala:
-  * 198-211), `locks` ≙ the `createlock` CF (ThriftStore.scala:213-226)
-  * — deliberately NOT the shared FileLocks singleton, so the contract
-  * is shown independent of it. Block/replica geometry derives from the
-  * same `BlockMeta.forLength` and owner-hash formula as the Parquet
-  * binding, so both bindings answer getBlockLocations identically.
-  */
-final class InMemoryStore(subBlockSize: Int = 1 << 20,
-                          blockSize: Int = 4 << 20) extends GraftStore {
-  require(subBlockSize > 0 && blockSize % subBlockSize == 0,
-    "blockSize must be a positive multiple of subBlockSize")
-
-  private[this] var inodes: java.util.TreeMap[String, Inode] = _
-  private[this] var payloads: java.util.HashMap[String, Array[Byte]] = _
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, UUID]()
-
-  override def createKeyspace(): Unit = synchronized {
-    if (inodes == null) {
-      inodes = new java.util.TreeMap[String, Inode]()
-      payloads = new java.util.HashMap[String, Array[Byte]]()
-      inodes.put("/", FsCatalog.dirInode("/", "root"))
-    }
-  }
-
-  /** No-op BY DESIGN — same rationale as [[ParquetStore.init]]. */
-  override def init(): Unit = ()
-
-  private def live(): Unit =
-    require(inodes != null, "createKeyspace() first")
-
-  override def storeINode(inode: Inode): Unit = synchronized {
-    live(); inodes.put(inode.path, inode)
-  }
-
-  override def retrieveINode(path: String): Option[Inode] = synchronized {
-    live(); Option(inodes.get(path))
-  }
-
-  override def storeFileData(path: String, data: Array[Byte],
-                             user: String,
-                             mtime: java.sql.Timestamp): Unit =
-    synchronized {
-      live()
-      inodes.put(path, Inode(path, PathOps.parent(path), user, user, 420,
-        isDir = false, mtime,
-        BlockMeta.forLength(path, data.length.toLong,
-          subBlockSize, blockSize)))
-      payloads.put(path, data.clone())
-    }
-
-  override def retrieveSubBlock(path: String, byteRangeStart: Long,
-                                len: Long): Array[Byte] = synchronized {
-    live()
-    val data = payloads.get(path)
-    if (data == null || byteRangeStart >= data.length || len <= 0)
-      Array.emptyByteArray
-    else {
-      val from = math.max(0L, byteRangeStart).toInt
-      val until = math.min(data.length.toLong, byteRangeStart + len).toInt
-      java.util.Arrays.copyOfRange(data, from, until)
-    }
-  }
-
-  override def retrieveBlock(path: String): Array[Byte] = synchronized {
-    live()
-    Option(payloads.get(path)).map(_.clone()).getOrElse(Array.emptyByteArray)
-  }
-
-  override def deleteINode(path: String): Unit = synchronized {
-    live(); inodes.remove(path); ()
-  }
-
-  override def deleteBlocks(path: String): Unit = synchronized {
-    live(); payloads.remove(path); ()
-  }
-
-  override def fetchSubPaths(path: String,
-                             isDeepFetch: Boolean): Seq[String] =
-    synchronized {
-      live()
-      val prefix = if (path == "/") "/" else path + "/"
-      import scala.jdk.CollectionConverters._
-      inodes.keySet().asScala.iterator
-        .filter(p => p != path && p.startsWith(prefix))
-        .filter(p => isDeepFetch || !p.stripPrefix(prefix).contains('/'))
-        .toSeq.sorted
-    }
-
-  override def getBlockLocations(path: String): Map[String, Seq[String]] =
-    synchronized {
-      live()
-      // same deterministic RF=3 owner hash as FsCatalog.blockLocations
-      // (ascii of the block id's first char mod 3), so the two bindings
-      // agree replica-for-replica. Directories carry blocks = null
-      // (Model.scala) — flatMap(Option(_)) folds them to the same empty
-      // map ParquetStore answers, contract parity the B11 matrix pins.
-      retrieveINode(path).flatMap(n => Option(n.blocks))
-        .getOrElse(Seq.empty).map { b =>
-        val owner = b.id.charAt(0).toInt % 3
-        b.id -> (0 until 3).map(i => s"node-${(owner + i) % 3}")
-      }.toMap
-    }
-
-  override def acquireFileLock(path: String): Option[UUID] = {
-    val token = UUID.randomUUID()
-    Option(locks.putIfAbsent(path, token)) match {
-      case None => Some(token)
-      case Some(_) => None
-    }
-  }
-
-  override def releaseFileLock(path: String, token: UUID): Boolean =
-    locks.remove(path, token)
-
-  override def dropKeyspace(): Unit = synchronized {
-    inodes = null; payloads = null
-  }
 }

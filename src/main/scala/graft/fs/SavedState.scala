@@ -27,9 +27,9 @@ import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
   * parquet: an executor (or any session-less JVM) can read an inode
   * table and fetch one file's block rows with the stock parquet-hadoop
   * reader — no SparkSession, no driver job, no nested action. The
-  * facade's `blockAt` routes block misses of SAVED payloads here
-  * (mount-table narrowing, SURVEY §8); only bytes written AFTER the
-  * mount (pending/folded driver state) still need the driver path.
+  * facade's `blockAt` routes every block miss here: saved payloads,
+  * wal deltas and the mount's own folded segments are all this one
+  * layout, so no payload read needs the driver's engine.
   *
   * Pruning shape: [[readBlock]] pushes `path = X AND block_id = N`
   * into the parquet reader (row-group statistics + dictionary +
@@ -42,8 +42,12 @@ import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
   */
 object SavedState {
 
+  /** The parquet files of a chunks/catalog source: a dir's part files,
+    * or the source itself when it is one file (a wal delta's
+    * `chunks.parquet`, a mount segment). */
   private def parquetFiles(dir: String): Seq[String] = {
     val p = Paths.get(dir)
+    if (Files.isRegularFile(p)) return Seq(dir)
     if (!Files.isDirectory(p)) return Seq.empty
     val l = Files.list(p)
     try l.iterator().asScala
@@ -181,21 +185,28 @@ object SavedState {
       blocks)
   }
 
-  /** One file's ONE block, reassembled in subblock order, fetched with
+  /** One file's ONE block, reassembled in subblock order, from a
+    * chunks source (a dir or a single file), fetched with
     * `path = savedPath AND block_id = blockId` pushed into the reader —
     * row groups whose (path, block_id) statistics exclude the key are
     * skipped without decoding (the save layout sorts on exactly these
     * columns). Returns empty when the block has no rows.
     */
-  def readBlock(chunksDir: String, savedPath: String,
-                blockId: Long): Array[Byte] = {
+  def readBlock(source: String, savedPath: String,
+                blockId: Long): Array[Byte] =
+    assemble(blockRows(source, savedPath, blockId))
+
+  /** [[readBlock]]'s unassembled form: the block's (sub_id, bytes) rows
+    * in one source, for callers merging several sources. */
+  def blockRows(source: String, savedPath: String,
+                blockId: Long): Seq[(Int, Array[Byte])] = {
     val pred = FilterApi.and(
       FilterApi.eq(FilterApi.binaryColumn("path"),
         Binary.fromString(savedPath)),
       FilterApi.eq(FilterApi.intColumn("block_id"),
         java.lang.Integer.valueOf(blockId.toInt)))
     val rows = Seq.newBuilder[(Int, Array[Byte])]
-    parquetFiles(chunksDir).foreach { f =>
+    parquetFiles(source).foreach { f =>
       val reader = ParquetReader
         .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
         .withConf(hconf())
@@ -210,9 +221,13 @@ object SavedState {
         }
       } finally reader.close()
     }
-    val ordered = rows.result().sortBy(_._1)
-    val total = ordered.iterator.map(_._2.length).sum
-    val out = new Array[Byte](total)
+    rows.result()
+  }
+
+  /** Concatenate (sub_id, bytes) rows in subblock order. */
+  def assemble(rows: Seq[(Int, Array[Byte])]): Array[Byte] = {
+    val ordered = rows.sortBy(_._1)
+    val out = new Array[Byte](ordered.iterator.map(_._2.length).sum)
     var at = 0
     ordered.foreach { case (_, d) =>
       System.arraycopy(d, 0, out, at, d.length); at += d.length

@@ -1,7 +1,5 @@
 package graft.fs
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -173,53 +171,5 @@ object SavedStateWriter {
       g.add("length", r.data.length.toLong)
       w.write(g)
     } finally w.close()
-  }
-
-  /** Read every chunk row of one path from a chunks-layout file/dir —
-    * the delta-side payload read (deltas are single small files; the
-    * BASE plane keeps using [[SavedState.readBlock]]'s block-pruned
-    * point reads).
-    */
-  def readPayload(chunksDir: String, path: String): Array[Byte] = {
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val pred = FilterApi.eq(FilterApi.binaryColumn("path"),
-      org.apache.parquet.io.api.Binary.fromString(path))
-    val rows = Seq.newBuilder[(Long, Array[Byte])]
-    val files = {
-      val p = java.nio.file.Paths.get(chunksDir)
-      if (java.nio.file.Files.isDirectory(p)) {
-        val l = java.nio.file.Files.list(p)
-        try l.iterator().asScala.map(_.toString)
-          .filter(f => f.endsWith(".parquet")).toSeq.sorted
-        finally l.close()
-      } else if (java.nio.file.Files.exists(p)) Seq(chunksDir)
-      else Seq.empty
-    }
-    files.foreach { file =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(file))
-        .withConf(new Configuration(false))
-        .withFilter(FilterCompat.get(pred))
-        .build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          rows += ((g.getLong("block_offset", 0) + g.getLong("offset", 0),
-            g.getBinary("data", 0).getBytes))
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    val ordered = rows.result().sortBy(_._1)
-    val out = new Array[Byte](ordered.iterator.map(_._2.length).sum)
-    var at = 0
-    ordered.foreach { case (_, d) =>
-      System.arraycopy(d, 0, out, at, d.length); at += d.length
-    }
-    out
   }
 }

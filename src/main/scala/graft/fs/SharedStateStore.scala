@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps, SharedFileLocks}
 
-/** The THIRD [[GraftStore]] binding — LIVE MULTI-DRIVER SHARED STATE,
+/** The [[GraftStore]] binding — LIVE MULTI-DRIVER SHARED STATE,
   * the reference's core deployment shape: every client mounts and
   * MUTATES the same keyspace concurrently (reference README.md:7 "any
   * number of clients", lock protocol ThriftStore.scala:607-734).
@@ -213,7 +213,10 @@ final class SharedStateStore(stateDir: String,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** No-op BY DESIGN — same rationale as [[ParquetStore.init]]. */
+  /** No-op BY DESIGN (not unimplemented): the reference's init builds a
+    * Thrift client pool; this binding opens files per verb and there is
+    * no connection to pool (SURVEY §2.2 B2).
+    */
   override def init(): Unit = ()
 
   override def storeINode(inode: Inode): Unit = withNamespace {
@@ -246,37 +249,28 @@ final class SharedStateStore(stateDir: String,
           subBlockSize, blockSize)))
     }
 
-  /** Payload source for a path: Right(delta chunks file), Left(true)
-    * = deleted, Left(false) = base plane.
+  /** The chunks source holding a path's payload — its latest wal delta
+    * file, or the base version's chunks dir — or None once deleted.
+    * Both are read by the same block-pruned [[SavedState.readBlock]].
     */
-  private def payloadSource(path: String): Either[Boolean, Path] = {
+  private def payloadSource(path: String): Option[String] = {
     val (_, payloads) = replay()
     payloads.get(path) match {
-      case Some(Some(f)) => Right(f)
-      case Some(None) => Left(true)
-      case None => Left(false)
+      case Some(delta) => delta.map(_.toString)
+      case None => Some(s"$baseDir/chunks")
     }
   }
+
+  private def blocksOf(path: String): Seq[BlockMeta] =
+    retrieveINode(path).flatMap(n => Option(n.blocks)).getOrElse(Seq.empty)
 
   override def retrieveBlock(path: String): Array[Byte] = {
     live()
     payloadSource(path) match {
-      case Right(f) => SavedStateWriter.readPayload(f.toString, path)
-      case Left(true) => Array.emptyByteArray
-      case Left(false) =>
-        retrieveINode(path).flatMap(n => Option(n.blocks)) match {
-          case None | Some(Seq()) => Array.emptyByteArray
-          case Some(blocks) =>
-            // block-pruned point reads against the sorted base layout
-            val parts = blocks.indices.map(b =>
-              SavedState.readBlock(s"$baseDir/chunks", path, b.toLong))
-            val out = new Array[Byte](parts.iterator.map(_.length).sum)
-            var at = 0
-            parts.foreach { p =>
-              System.arraycopy(p, 0, out, at, p.length); at += p.length
-            }
-            out
-        }
+      case None => Array.emptyByteArray
+      case Some(src) =>
+        blocksOf(path).indices.toArray
+          .flatMap(b => SavedState.readBlock(src, path, b.toLong))
     }
   }
 
@@ -285,33 +279,21 @@ final class SharedStateStore(stateDir: String,
     live()
     if (len <= 0 || byteRangeStart < 0) return Array.emptyByteArray
     payloadSource(path) match {
-      case Right(f) =>
-        val data = SavedStateWriter.readPayload(f.toString, path)
-        if (byteRangeStart >= data.length) Array.emptyByteArray
-        else java.util.Arrays.copyOfRange(data, byteRangeStart.toInt,
-          math.min(data.length.toLong, byteRangeStart + len).toInt)
-      case Left(true) => Array.emptyByteArray
-      case Left(false) =>
-        retrieveINode(path).flatMap(n => Option(n.blocks)) match {
-          case None | Some(Seq()) => Array.emptyByteArray
-          case Some(blocks) =>
-            val end = byteRangeStart + len
-            // only the blocks OVERLAPPING the range are fetched — the
-            // base read stays pruned at row-group level per block
-            val hit = blocks.zipWithIndex.filter { case (b, _) =>
-              b.offset < end && b.offset + b.length > byteRangeStart
-            }
-            val buf = new java.io.ByteArrayOutputStream()
-            hit.foreach { case (b, i) =>
-              val data = SavedState.readBlock(s"$baseDir/chunks", path,
-                i.toLong)
-              val from = math.max(0L, byteRangeStart - b.offset).toInt
-              val until = math.min(b.length, end - b.offset).toInt
-              if (until > from)
-                buf.write(data, from, until - from)
-            }
-            buf.toByteArray
+      case None => Array.emptyByteArray
+      case Some(src) =>
+        val end = byteRangeStart + len
+        // only the blocks OVERLAPPING the range are fetched, each one a
+        // row-group-pruned read
+        val buf = new java.io.ByteArrayOutputStream()
+        blocksOf(path).zipWithIndex.foreach { case (b, i) =>
+          if (b.offset < end && b.offset + b.length > byteRangeStart) {
+            val data = SavedState.readBlock(src, path, i.toLong)
+            val from = math.max(0L, byteRangeStart - b.offset).toInt
+            val until = math.min(data.length.toLong, end - b.offset).toInt
+            if (until > from) buf.write(data, from, until - from)
+          }
         }
+        buf.toByteArray
     }
   }
 
@@ -345,7 +327,7 @@ final class SharedStateStore(stateDir: String,
 
   override def getBlockLocations(path: String): Map[String, Seq[String]] = {
     live()
-    // identical ring formula to the other two bindings (B11 parity)
+    // the ring formula of FsCatalog.blockLocations (B11 parity)
     retrieveINode(path).flatMap(n => Option(n.blocks))
       .getOrElse(Seq.empty).map { b =>
         val owner = b.id.charAt(0).toInt % 3
@@ -410,14 +392,13 @@ final class SharedStateStore(stateDir: String,
     // one sorted file (delta payloads win; deleted payloads drop)
     val rows = Seq.newBuilder[SavedStateWriter.ChunkRow]
     folded.values.toSeq.sortBy(_.path).filter(_.isFile).foreach { n =>
-      val data = payloads.get(n.path) match {
-        case Some(Some(f)) => SavedStateWriter.readPayload(f.toString, n.path)
-        case Some(None) => Array.emptyByteArray
-        case None =>
-          Option(n.blocks).getOrElse(Seq.empty).indices.toArray
-            .flatMap(b => SavedState.readBlock(s"$oldBase/chunks",
-              n.path, b.toLong))
+      val src = payloads.get(n.path) match {
+        case Some(delta) => delta.map(_.toString)
+        case None => Some(s"$oldBase/chunks")
       }
+      val data = src.toArray.flatMap(f =>
+        Option(n.blocks).getOrElse(Seq.empty).indices.toArray
+          .flatMap(b => SavedState.readBlock(f, n.path, b.toLong)))
       rows ++= SavedStateWriter.chunkRows(n.path, data,
         subBlockSize, blockSize)
     }

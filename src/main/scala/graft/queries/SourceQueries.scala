@@ -107,8 +107,8 @@ object SourceQueries {
     //    FileSystem cache, qualified-path listing, and the record
     //    reader's open all on the query's hot path. The driver-side
     //    collect is the 25-row nation dim (bounded fixture prep, not
-    //    the measured scan); the read side nests one engine job per
-    //    block fetch, far below the core count ─────────────────────────
+    //    the measured scan); the read side's block fetches are
+    //    session-free memory/parquet reads, no nested engine job ───────
     QueryDef(
       "fs_mount_read",
       (s, d) => {
@@ -142,9 +142,7 @@ object SourceQueries {
         } finally {
           // close() evicts the instance from Hadoop's FileSystem cache,
           // so each rep gets a fresh empty mount — the bench-rep analog
-          // of fs_save_load's materialize-then-cleanup lifecycle, and
-          // the reason the harness's sweepPersisted can never collide
-          // with a mount compaction checkpoint (PlanHygiene scaladoc)
+          // of fs_save_load's materialize-then-cleanup lifecycle
           fs.close()
         }
       },
@@ -156,13 +154,13 @@ object SourceQueries {
     // ── full-parallelism committer write, as a correctness row: a stock
     //    df.write.parquet at 2× the core count THROUGH the mounted
     //    facade (every task create/rename/getFileStatus answered by the
-    //    driver-JVM inode cache, frame transitions lazy — the r11
-    //    action-free write path), then a stock spark.read.parquet over
-    //    the same graftfs:// URI answers the aggregate. The read-back
-    //    of never-folded data is also action-free (served from the
-    //    pending buffer), so neither side can core-starve — the claim
-    //    this row pins is exactly the one the r10 mount could not make:
-    //    outer parallelism ≥ cores, no repartition(1) escape hatch ─────
+    //    driver-JVM inode cache — the r11 action-free write path), then
+    //    a stock spark.read.parquet over the same graftfs:// URI answers
+    //    the aggregate. The read-back is also action-free (memory and
+    //    session-free parquet reads), so neither side can core-starve
+    //    — the claim this row pins is exactly the one the r10 mount
+    //    could not make: outer parallelism ≥ cores, no repartition(1)
+    //    escape hatch ──────────────────────────────────────────────────
     QueryDef(
       "fs_mount_parallel",
       (s, d) => {

@@ -59,74 +59,16 @@ class FsStateSpec extends AnyFlatSpec with Matchers {
 
   behavior of "FsState.trySwap rebasing (the LSM swap — r13)"
 
-  it must "REBASE onto the checkpoint when verbs raced the prepare, keeping every delta" in {
-    val cell = new FsState(emptyFs(), compactEvery = 2)
-    (1 to 2).foreach { i =>
-      val fs = cell.get
-      cell.set(GraftFs(fs.catalog.touchz(s"/a$i"),
-        fs.chunks.unionByName(oneFile(s"/a$i", s"a-$i"))), allowCompact = false)
-    }
-    val Some((snap, compacted)) = cell.prepareCompaction()
-    // verbs intervene AFTER the snapshot: a fold-shaped union AND a
-    // rename (driver-map re-keying rides the same chunks plan)
-    val fs1 = cell.get
-    cell.set(GraftFs(fs1.catalog.touchz("/b1"),
-      fs1.chunks.unionByName(oneFile("/b1", "b-1")), fs1.aliases),
-      allowCompact = false)
-    cell.set(cell.get.rename("/a1", "/m1")._1, allowCompact = false)
-    // the swap must land as a REBASE (not abort), with the checkpoint
-    // replacing the snapshot subtree under the intervening deltas
-    cell.trySwap(snap, compacted) must be(true)
-    cell.swapStats._2 must be(1) // rebased
-    val leaves = cell.get.chunks.queryExecution.analyzed.collectLeaves()
-    leaves.count(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) must be >= 1
-    // every pre- and post-snapshot write reads back; the rename applied
-    new String(DataPlane.cat(cell.get.rowsForFile("/m1"), "/m1").collect()(0)
-      .getAs[Array[Byte]]("data")) must be("a-1")
-    new String(DataPlane.cat(cell.get.rowsForFile("/a2"), "/a2").collect()(0)
-      .getAs[Array[Byte]]("data")) must be("a-2")
-    new String(DataPlane.cat(cell.get.rowsForFile("/b1"), "/b1").collect()(0)
-      .getAs[Array[Byte]]("data")) must be("b-1")
-    DataPlane.cat(cell.get.rowsForFile("/a1"), "/a1").collect() must be(empty)
-    // and a follow-up CLEAN compaction still works on the rebased plan
-    cell.compactNow()
-    new String(DataPlane.cat(cell.get.rowsForFile("/m1"), "/m1").collect()(0)
-      .getAs[Array[Byte]]("data")) must be("a-1")
-  }
-
-  it must "keep the intervening-delta count so compaction pressure is not reset by a rebase" in {
-    val cell = new FsState(emptyFs(), compactEvery = 2)
-    (1 to 2).foreach { i =>
-      val fs = cell.get
-      cell.set(GraftFs(fs.catalog.touchz(s"/c$i"),
-        fs.chunks.unionByName(oneFile(s"/c$i", s"c-$i"))), allowCompact = false)
-    }
-    val Some((snap, compacted)) = cell.prepareCompaction()
-    // four deltas race in — MORE than the (pre-doubling) interval
-    (3 to 6).foreach { i =>
-      val fs = cell.get
-      cell.set(GraftFs(fs.catalog.touchz(s"/c$i"),
-        fs.chunks.unionByName(oneFile(s"/c$i", s"c-$i"))), allowCompact = false)
-    }
-    cell.trySwap(snap, compacted) must be(true)
-    // sinceCompact restarted at the DELTA count (4), which meets the
-    // doubled interval (4) — the cell is immediately due again instead
-    // of silently carrying 4 unflattened deltas toward the next window
-    cell.compactionDue must be(true)
-  }
-
   it must "re-key renames with ZERO plan growth (the retired doubling shape's replacement)" in {
     val cell = new FsState(emptyFs(), compactEvery = 1000)
     val fs0 = cell.get
     cell.set(GraftFs(fs0.catalog.touchz("/h0"),
-      fs0.chunks.unionByName(oneFile("/h0", "h")), fs0.aliases),
-      allowCompact = false)
+      fs0.chunks.unionByName(oneFile("/h0", "h")), fs0.aliases))
     val planBefore = cell.get.chunks.queryExecution.analyzed
     // 64 chained renames — the shape that used to stack 2^64 growth
     (1 to 64).foreach { i =>
       cell.set(cell.get.rename(
-        if (i == 1) "/h0" else s"/h${i - 1}", s"/h$i")._1,
-        allowCompact = false)
+        if (i == 1) "/h0" else s"/h${i - 1}", s"/h$i")._1)
     }
     // the chunk PLAN is the same object — rename never touched it
     (cell.get.chunks.queryExecution.analyzed eq planBefore) must be(true)
@@ -240,163 +182,5 @@ class FsStateSpec extends AnyFlatSpec with Matchers {
     // the live cell is untouched by the sweep
     new String(DataPlane.cat(cell.get.chunks, "/u7").collect()(0)
       .getAs[Array[Byte]]("data")) must be("unpin-7")
-  }
-
-  it must "defer compaction under allowCompact=false and run it opportunistically" in {
-    val cell = new FsState(emptyFs(), compactEvery = 3)
-    // the mounted facade's write path: mutations record but never
-    // compact inline (a verb thread must not run a Spark action)
-    (1 to 5).foreach { i =>
-      val fs = cell.get
-      cell.set(GraftFs(
-        fs.catalog.touchz(s"/d$i"),
-        fs.chunks.unionByName(oneFile(s"/d$i", s"defer-$i"))),
-        allowCompact = false)
-    }
-    // past the interval with no compaction: due, plan still deep
-    cell.compactionDue must be(true)
-    cell.get.chunks.queryExecution.analyzed.collectLeaves()
-      .count(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) must be(0)
-    // the compactor thread's shape: snapshot-compact-swap succeeds when
-    // no mutation intervened, flattens the plan, resets the debt
-    cell.compactOpportunistic() must be(true)
-    cell.compactionDue must be(false)
-    cell.get.chunks.queryExecution.analyzed.collectLeaves()
-      .count(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) must be(1)
-    // content identical through the swap
-    (1 to 5).foreach { i =>
-      new String(DataPlane.cat(cell.get.chunks, s"/d$i").collect()(0)
-        .getAs[Array[Byte]]("data")) must be(s"defer-$i")
-    }
-    // not due → no-op, no checkpoint spent
-    cell.compactOpportunistic() must be(false)
-  }
-
-  it must "survive 100 seeded rounds of locked verbs racing two-phase compactions and pinned readers" taggedAs graft.SlowTest in {
-    // The swap-vs-verb race class (PLANS.md r11 review; fix 8c7c765)
-    // regression-proofed by hammering, not reasoning: each round spins
-    // up writer threads running facade-shaped LOCKED read-modify-write
-    // transitions, a compactor thread running the two-phase protocol
-    // (prepareCompaction's checkpoint action lock-free, trySwap under
-    // the SAME lock the verbs hold), and a pinned reader collecting
-    // concurrently. Rewire the compactor to the unlocked composed form
-    // (compactOpportunistic — the pre-8c7c765 shape) and rounds fail
-    // with checkpoint-block-not-found/lost-update; the seeded jitter
-    // varies the interleaving across rounds so the swap lands at
-    // different points of the verb window.
-    val rounds = 100
-    // activity gates (vacuity proof): at least this many swaps must
-    // have landed while the writer was mid-loop, and this many swaps
-    // must have RACED an intervening verb — which since the r13
-    // rebasing trySwap land as REBASES (the pre-rebase abort path now
-    // fires only when plan-shape matching fails, so an abort count
-    // would be permanently vacuous). Both depend on checkpoint-vs-
-    // pause timing, so under a loaded box the storm runs EXTRA seeded
-    // rounds (up to maxRounds) until the gates are met rather than
-    // failing on scheduler weather — the per-round correctness
-    // assertions stay unconditional either way.
-    val (minLive, minRaced, maxRounds) = (10, 10, 300)
-    var liveSwaps = 0    // swaps landed while the writer was still active
-    var racedSwaps = 0   // prepare raced a verb: rebased or aborted
-    var totalSwaps = 0
-    var round = -1
-    while ({ round += 1
-      round < rounds ||
-        (round < maxRounds &&
-          (liveSwaps < minLive || racedSwaps < minRaced)) }) {
-      val rnd = new scala.util.Random(round * 2654435761L)
-      val cell = new FsState(emptyFs(), compactEvery = 1)
-      val lock = new java.util.concurrent.locks.ReentrantLock()
-      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val swaps = new java.util.concurrent.atomic.AtomicInteger
-      val live = new java.util.concurrent.atomic.AtomicInteger
-      val aborted = new java.util.concurrent.atomic.AtomicInteger
-      @volatile var writersDone = false
-      val nWrites = 6 + rnd.nextInt(5)
-      // seeded pauses: mostly tight (the prepare-overlaps-verb abort
-      // path), two per round LONGER than a checkpoint so a LIVE swap
-      // lands between two verbs of an active writer — the pre-fix
-      // kill window (an aborted prepare re-prepares instantly, so the
-      // fresh snapshot has the whole pause to checkpoint in)
-      val longAt = Set(rnd.nextInt(nWrites - 1), nWrites - 2)
-      val pauses = Array.tabulate(nWrites)(i =>
-        if (longAt(i)) 80 + rnd.nextInt(60) else rnd.nextInt(2))
-      val writer = new Thread(() => {
-        try {
-          var i = 0
-          while (i < nWrites) {
-            lock.lock()
-            try {
-              val fs = cell.get
-              cell.set(GraftFs(fs.catalog.touchz(s"/r$round-w$i"),
-                fs.chunks.unionByName(oneFile(s"/r$round-w$i", s"d$i"))),
-                allowCompact = false)
-            } finally lock.unlock()
-            if (pauses(i) > 0) Thread.sleep(pauses(i))
-            i += 1
-          }
-        } catch { case t: Throwable => errors.add(t) }
-      }, s"race-writer-$round")
-      val compactor = new Thread(() => {
-        try {
-          while (!writersDone || cell.compactionDue) {
-            cell.prepareCompaction() match {
-              case Some((snap, c)) =>
-                val wasLive = !writersDone
-                lock.lock()
-                try {
-                  if (cell.trySwap(snap, c)) {
-                    swaps.incrementAndGet()
-                    if (wasLive) live.incrementAndGet()
-                  } else aborted.incrementAndGet()
-                } finally lock.unlock()
-              case None => Thread.sleep(1)
-            }
-          }
-        } catch { case t: Throwable => errors.add(t) }
-      }, s"race-compactor-$round")
-      val reader = new Thread(() => {
-        try {
-          while (!writersDone) {
-            // the facade's blockAt shape: pin under the verb lock, run
-            // the engine read OUTSIDE it, unpin — a swap sweeping this
-            // generation mid-collect is the exact pre-pin failure
-            val snap = { lock.lock(); try cell.pinCurrent() finally lock.unlock() }
-            try { snap.chunks.count(); () } finally cell.unpin(snap)
-            Thread.sleep(3)
-          }
-        } catch { case t: Throwable => errors.add(t) }
-      }, s"race-reader-$round")
-      writer.start(); compactor.start(); reader.start()
-      writer.join(60000); writersDone = true
-      compactor.join(60000); reader.join(60000)
-      (writer.isAlive || compactor.isAlive || reader.isAlive) must be(false)
-      errors.forEach(t => fail(s"round $round: $t", t))
-      // no lost update, no resurrected stale plan: every write visible
-      cell.get.catalog.inodes.count() must be(1L + nWrites)
-      val probe = rnd.nextInt(nWrites)
-      new String(DataPlane.cat(cell.get.chunks, s"/r$round-w$probe")
-        .collect()(0).getAs[Array[Byte]]("data")) must be(s"d$probe")
-      totalSwaps += swaps.get
-      liveSwaps += live.get
-      // raced = prepare overlapped a verb: landed as a REBASE (r13) or,
-      // if plan matching failed, as an abort — both prove the contested
-      // window was exercised this round
-      val (_, rebased, abortedN) = cell.swapStats
-      racedSwaps += rebased + abortedN + aborted.get
-      cell.releasePins()
-    }
-    // the storm must actually have raced — on BOTH contested paths:
-    // swaps that landed while the writer was mid-loop (the pre-fix
-    // kill window) and swaps whose prepare a verb raced (rebased or
-    // aborted). Failing here after maxRounds seeded attempts means the
-    // interleaving genuinely collapsed and the spec went vacuous — not
-    // scheduler weather.
-    withClue(s"rounds=$round total=$totalSwaps live=$liveSwaps " +
-        s"raced=$racedSwaps: ") {
-      totalSwaps must be >= rounds
-      liveSwaps must be >= minLive
-      racedSwaps must be >= minRaced
-    }
   }
 }

@@ -31,10 +31,8 @@ class GraftFileSystemSpec extends AnyFlatSpec with Matchers {
   behavior of "GraftFileSystem (SnackFS.scala:51-153 facade)"
 
   it must "fail loudly instead of hanging when the mutation lock starves" in {
-    // the mount's one true local-mode failure is core starvation (a
-    // lock-holder's nested engine job waiting for a slot the blocked
-    // verbs hold — PLANS.md r10); the lock timeout converts that
-    // infinite hang into a bounded IOException naming the fix
+    // a wedged lock holder must not hang every other verb: the lock
+    // timeout converts that infinite wait into a bounded IOException
     TestSpark.spark
     val fs = new GraftFileSystem
     val conf = new Configuration(false)
@@ -408,26 +406,22 @@ class GraftFileSystemSpec extends AnyFlatSpec with Matchers {
   }
 
   it must "sustain verb throughput with bounded p99 under a payload-write + compaction storm" in {
-    // The load-adaptive activity gates (FsStateSpec's seeded storm)
-    // prove CORRECTNESS under compaction races; this pins THROUGHPUT:
-    // 4 writer threads drive real facade verbs (create+write+close,
-    // rename, getFileStatus, delete) over payload files sized to
-    // trigger folds, while the facade's own compactor thread
-    // checkpoints and swaps underneath. Verbs are pure-memory
-    // O(children) transitions, so the gates are deliberately loose —
-    // an order of magnitude below healthy numbers — and a regression
-    // that puts an engine action back on the verb path (the pre-r11
-    // shape: ~100 ms+ per verb) fails both by miles. Measured numbers
-    // go to PLANS.md via info().
+    // Pins THROUGHPUT: 4 writer threads drive real facade verbs
+    // (create+write+close, rename, getFileStatus, delete) over payload
+    // files sized to trigger folds, each fold writing a segment file
+    // with the mutation lock released. Verb lock holds are pure
+    // memory, so the gates are deliberately loose — an order of
+    // magnitude below healthy numbers — and a regression that puts an
+    // engine action back on the verb path (the pre-r11 shape: ~100 ms+
+    // per verb) fails both by miles. Measured numbers go to PLANS.md
+    // via info().
     //
     // Fold geometry is deliberately ADVERSARIAL (every write folds, so
-    // every rename hits base-resident data): under the pre-r13 design
-    // this exact configuration measured 57 verbs/s with 47 s p99 —
-    // always-aborting swaps let the plan grow unboundedly, and each
-    // base rename DOUBLED the tree (2^renames). The r13 rework
-    // (REBASING trySwap + plan-free birth-name renames, FsState /
-    // baseFiles scaladocs) makes even this worst case run at
-    // thousands of verbs/s with ms-level p99.
+    // every rename hits folded data): under the pre-r13 design this
+    // exact configuration measured 57 verbs/s with 47 s p99 — the
+    // folded plan grew unboundedly and each rename DOUBLED it
+    // (2^renames). Renames are now payload-index re-keying, so even
+    // this worst case runs at hundreds of verbs/s with ms-level p99.
     TestSpark.spark
     val fs = new GraftFileSystem
     val conf = new Configuration(false)
@@ -506,8 +500,6 @@ class GraftFileSystemSpec extends AnyFlatSpec with Matchers {
       .foreach(s => info(s"  $s"))
     slow.asScala.toSeq.filterNot(_.startsWith("STUCK"))
       .sortBy(identity).takeRight(12).foreach(s => info(s"  slow: $s"))
-    val (cl, rb, ab) = fs.swapStats
-    info(s"swaps: clean=$cl rebased=$rb aborted=$ab")
     withClue(f"throughput $verbsPerSec%.0f verbs/s, p99 $p99Ms%.1f ms: ") {
       // measured at HEAD under this worst-case geometry: ~460 verbs/s,
       // p50 0.06 ms, p99 ~70 ms (committer-realistic 64 KiB folds run

@@ -6,29 +6,21 @@ import org.scalatest.matchers.must.Matchers
 import graft.TestSpark
 import graft.catalog.FsCatalog
 
-/** The [[GraftStore]] seam driven END TO END through the trait type —
-  * and through BOTH bindings with the SAME assertions, proving the
-  * contract (reference FileSystemStore.scala:29-56) is a real re-bind
-  * surface rather than a decorative interface: [[ParquetStore]] (the
-  * engine's frames) and [[InMemoryStore]] (plain JVM maps, the shape a
-  * `CassandraStore` would take — one structure per column family) pass
-  * identically, method for method.
+/** The [[GraftStore]] seam driven END TO END through the trait type,
+  * against the binding the scheme mount really writes through to:
+  * [[SharedStateStore]] over a fresh persisted state dir. The contract
+  * (reference FileSystemStore.scala:29-56) is what a `CassandraStore`
+  * would have to pass, method for method.
   */
 class GraftStoreSpec extends AnyFlatSpec with Matchers {
   private lazy val spark = TestSpark.spark
 
+  private def newStore(): SharedStateStore = new SharedStateStore(
+    java.nio.file.Files.createTempDirectory("graft-shared-store").toString,
+    subBlockSize = 8, blockSize = 32)
+
   private def bindings(): Seq[(String, () => GraftStore)] = Seq(
-    "ParquetStore" ->
-      (() => new ParquetStore(spark, subBlockSize = 8, blockSize = 32)),
-    "InMemoryStore" ->
-      (() => new InMemoryStore(subBlockSize = 8, blockSize = 32)),
-    // THIRD binding (r17): live multi-driver shared state over the
-    // persisted layout — same matrix, zero assertions changed
-    "SharedStateStore" ->
-      (() => new SharedStateStore(
-        java.nio.file.Files.createTempDirectory("graft-shared-store")
-          .toString,
-        subBlockSize = 8, blockSize = 32)))
+    "SharedStateStore" -> (() => newStore()))
 
   for ((label, mk) <- bindings()) {
 
@@ -120,16 +112,14 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
   }
 
   it must "enforce CROSS-INSTANCE exclusion when stores share a lock root" in {
-    // two ParquetStore instances with the same lockRoot model two
-    // DRIVERS over one shared store: the second contender must lose
-    // through the store contract itself (the multi-process half is
-    // proven by SharedFileLocksSpec's forked-JVM case; this pins the
-    // seam routing). Without a lockRoot the driver-local table keeps
-    // the old single-driver behavior.
-    val root = java.nio.file.Files
+    // two SharedStateStore instances on one state dir model two DRIVERS
+    // over one shared store: the second contender must lose through the
+    // store contract itself (the multi-process half is proven by
+    // SharedFileLocksSpec's forked-JVM case; this pins the seam routing)
+    val dir = java.nio.file.Files
       .createTempDirectory("graft-store-locks").toString
-    val a: GraftStore = new ParquetStore(spark, 8, 32, Some(root))
-    val b: GraftStore = new ParquetStore(spark, 8, 32, Some(root))
+    val a: GraftStore = new SharedStateStore(dir, 8, 32)
+    val b: GraftStore = new SharedStateStore(dir, 8, 32)
     a.createKeyspace(); b.createKeyspace()
     val tok = a.acquireFileLock("/shared/f")
     tok.isDefined must be(true)
@@ -142,15 +132,19 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
 
   it must "answer getBlockLocations identically across bindings" in {
     // the ring formula is part of the contract (owner = ascii of the
-    // block id's first char mod 3, RF=3 successor walk): a binding
-    // inventing its own placement would break locality-aware consumers
-    val a: GraftStore = new ParquetStore(spark, 8, 32)
-    val b: GraftStore = new InMemoryStore(8, 32)
-    Seq(a, b).foreach { s =>
-      s.createKeyspace()
-      s.storeFileData("/ring/f", ("x" * 70).getBytes, "u")
-    }
-    a.getBlockLocations("/ring/f") must be(b.getBlockLocations("/ring/f"))
-    a.getBlockLocations("/ring/f").size must be(3)
+    // block id's first char mod 3, RF=3 successor walk): the store must
+    // place blocks exactly as the catalog op the DSv2 connector and the
+    // fs_block_locations channel use, or locality-aware consumers break
+    val store: GraftStore = newStore()
+    store.createKeyspace()
+    store.storeFileData("/ring/f", ("x" * 70).getBytes, "u")
+    val catalog = FsCatalog(spark.createDataset(
+      Seq(store.retrieveINode("/ring/f").get))(FsCatalog.inodeEncoder))
+    val fromCatalog = catalog.blockLocations("/ring/f").collect().map { r =>
+      r.getAs[String]("block_id") ->
+        r.getAs[String]("replicas").split(",").toSeq
+    }.toMap
+    store.getBlockLocations("/ring/f") must be(fromCatalog)
+    fromCatalog.size must be(3)
   }
 }

@@ -22,13 +22,11 @@ import graft.TestSpark
   * and the record readers' open/seek all resolve to the engine on
   * their own.
   *
-  * Local-mode caveat (documented, not hidden): the facade's byte paths
-  * execute Spark jobs, so a task reading through the mount submits a
-  * NESTED job from an executor thread. That works in local mode while
-  * the outer job leaves at least one core free (the specs below keep
-  * outer parallelism below the master's core count); cluster-scale
-  * analytics belongs on the DSv2 connector (`graft.sources`), which
-  * plans one ordinary scan instead.
+  * The facade's byte paths never execute Spark jobs: payload comes
+  * from memory or from session-free parquet reads, so tasks reading
+  * through the mount need no free core (the zero-jobs cases below pin
+  * it); cluster-scale analytics still belongs on the DSv2 connector
+  * (`graft.sources`), which plans one ordinary scan.
   */
 class SchemeMountSpec extends AnyFlatSpec with Matchers {
 
@@ -71,8 +69,7 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     import spark.implicits._
     // two partitions → two concurrent write tasks sharing the one
     // cached FileSystem instance: exercises the facade's atomic verb
-    // transitions (create + the committer's mkdirs/rename), kept below
-    // local[4]'s core count so nested byte-path jobs can schedule
+    // transitions (create + the committer's mkdirs/rename)
     val df = (0L until 20L).map(i => (i, s"row_$i")).toDF("id", "tag")
       .repartition(2)
     df.write.mode("overwrite").parquet("graftfs://mountspec/out")
@@ -101,12 +98,9 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     // could never schedule one — thread-dump-verified deadlock, spec
     // pinned at repartition(1-2). The r11 fix makes the ENTIRE write
     // path action-free: metadata answers from the facade's
-    // driver-JVM inode cache, frame transitions stay lazy, and due
-    // compactions defer to driver threads — so a stock committer job
-    // at 2× the core count must now complete. (Reads still fetch
-    // payload blocks via nested jobs; read-back below relies on
-    // Spark's small-file coalescing planning fewer scan tasks than
-    // cores — the documented remaining read-side caveat.)
+    // driver-JVM inode cache and payload rows stay in memory or fold
+    // to segment files — so a stock committer job at 2× the core count
+    // must now complete.
     val df = (0L until 64L).map(i => (i, s"tag_$i")).toDF("id", "tag")
       .repartition(8)
     df.write.mode("overwrite").parquet("graftfs://mountspec/wide")
@@ -199,16 +193,9 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
   }
 
   it must "serve FOLDED payload reads to task threads while a core stays free (the documented boundary)" in {
-    // The mount's one non-action-free path (r12 verdict "What's wrong
-    // #3"): a block-miss read of FOLDED payload submits a nested
-    // engine job (engineOp unsets the TaskContext first). This pins
-    // the SUPPORTED side of the boundary — local-mode task threads
-    // with the outer job below core count — by reading a folded file
-    // from INSIDE Spark tasks. The unsupported side is documented in
-    // SURVEY §8's narrowing row: a core-saturating outer job converts
-    // to the lock-timeout IOException (spec above), and a REMOTE
-    // executor cannot submit driver jobs at all — cluster-scale reads
-    // belong on the DSv2 connector.
+    // Reads a folded file from INSIDE Spark tasks: block misses are
+    // session-free reads of the mount's segment files (the
+    // core-saturating side is pinned by the zero-jobs cases below).
     mountConf()
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.setInt("graft.subblock.size", 512)
@@ -228,8 +215,7 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     val expected = { val c = new java.util.zip.CRC32C(); c.update(bytes)
       c.getValue }
     // 2 tasks on local[4]: each resolves the SAME cached fs instance
-    // (scheme+authority keyed) and pulls the folded blocks through the
-    // nested-job read path, with two cores left for those jobs
+    // (scheme+authority keyed) and pulls the folded blocks
     val crcs = spark.sparkContext.parallelize(1 to 2, 2).map { _ =>
       val c = new org.apache.hadoop.conf.Configuration(false)
       c.set("fs.graftfs.impl", "graft.fs.GraftFileSystem")
@@ -246,13 +232,12 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
   }
 
   it must "serve a re-created path whose BIRTH name a live renamed file still owns" in {
-    // The birth-name collision branch (GraftFileSystem.birthFor): rows
-    // fold under immutable birth names, so after rename /a → /b the
-    // storage rows for /b are still NAMED /a. A brand-new /a folding
-    // under the name /a would alias the old payload — birthFor must
-    // mint a fresh NUL-suffixed birth for it. Reads of BOTH files, the
-    // rename-away delete, and the overwrite must all resolve through
-    // the maps to the right bytes.
+    // Rows fold under immutable keys, so after rename /a → /b the
+    // folded rows of /b still carry the key the file was created with.
+    // A brand-new /a must get a fresh key, or it would alias the old
+    // payload. Reads of BOTH files, the rename-away delete, and the
+    // overwrite must all resolve through the payload index to the
+    // right bytes.
     mountConf()
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.setInt("graft.subblock.size", 512)
@@ -326,6 +311,28 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     (dir, a, b)
   }
 
+  /** A fresh mount (1 KB fold) holding one 3 KB file whose rows folded
+    * into segment files; returns (mount, file path, bytes). */
+  private def foldedFile(authority: String): (GraftFileSystem, String, Array[Byte]) = {
+    mountConf()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.setInt("graft.subblock.size", 512)
+    hconf.setInt("graft.block.size", 1024)
+    hconf.setLong("graft.mount.fold.bytes", 1024)
+    val fs =
+      try FileSystem.get(new URI(s"graftfs://$authority/"), hconf)
+        .asInstanceOf[GraftFileSystem]
+      finally {
+        hconf.unset("graft.subblock.size"); hconf.unset("graft.block.size")
+        hconf.unset("graft.mount.fold.bytes")
+      }
+    val bytes = Array.tabulate[Byte](3072)(i => ((i * 17 + 3) & 0xFF).toByte)
+    val p = s"graftfs://$authority/folded/f.bin"
+    val out = fs.create(new Path(p))
+    out.write(bytes); out.close()
+    (fs, p, bytes)
+  }
+
   private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     override def onJobStart(
@@ -340,6 +347,7 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     // job-count listener is the proof: every byte below is read while
     // the counter stays flat.
     val (dir, a, b) = buildSavedState("savedsrc")
+    val (foldFs, foldPath, folded) = foldedFile("savedfold")
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.setInt("graft.subblock.size", 512)
     hconf.setInt("graft.block.size", 1024)
@@ -366,7 +374,7 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
       }
       readFile("graftfs://savedread/docs/a.bin", 3072) must be(a)
       readFile("graftfs://savedread/docs/sub/b.bin", 700) must be(b)
-      // rename keeps the direct path (births are immutable)
+      // rename keeps the direct path (saved rows are immutable)
       fs.rename(new Path("graftfs://savedread/docs/a.bin"),
         new Path("graftfs://savedread/docs/a2.bin")) must be(true)
       readFile("graftfs://savedread/docs/a2.bin", 3072) must be(a)
@@ -377,11 +385,17 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
         true)
       out.write(fresh); out.close()
       readFile("graftfs://savedread/docs/sub/b.bin", 600) must be(fresh)
+      // FOLDED payload of a fresh mount: segment files, same reader
+      val in = foldFs.open(new Path(foldPath))
+      val buf = new Array[Byte](folded.length)
+      try in.readFully(0L, buf) finally in.close()
+      buf must be(folded)
       Thread.sleep(300) // let the listener bus drain
       counter.n.get() must be(0)
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       fs.close()
+      foldFs.close()
     }
   }
 
@@ -392,6 +406,7 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
     // I/O: full saturation, no nested job — exactly one job total (the
     // outer parallelize itself).
     val (dir, a, _) = buildSavedState("xsrc")
+    val (foldFs, foldPath, folded) = foldedFile("xfold")
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.setInt("graft.subblock.size", 512)
     hconf.setInt("graft.block.size", 1024)
@@ -403,28 +418,49 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
         hconf.unset("graft.subblock.size"); hconf.unset("graft.block.size")
         hconf.unset("graft.mount.state.dir")
       }
-    val expected = { val c = new java.util.zip.CRC32C(); c.update(a)
-      c.getValue }
+    def crcOf(b: Array[Byte]): Long = {
+      val c = new java.util.zip.CRC32C(); c.update(b); c.getValue
+    }
+    val expected = (crcOf(a), crcOf(folded))
     val counter = new JobCounter
     spark.sparkContext.addSparkListener(counter)
     try {
-      val crcs = spark.sparkContext.parallelize(1 to 4, 4).map { _ =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        c.set("fs.graftfs.impl", "graft.fs.GraftFileSystem")
-        val tfs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI("graftfs://xtask/"), c)
-        val in = tfs.open(new org.apache.hadoop.fs.Path(
-          "graftfs://xtask/docs/a.bin"))
-        val buf = new Array[Byte](3072)
-        try in.readFully(0L, buf) finally in.close()
-        val crc = new java.util.zip.CRC32C(); crc.update(buf); crc.getValue
-      }.collect()
+      // each task reads the saved file AND the folded file of the
+      // fresh 1 KB-fold mount
+      val job = spark.sparkContext.parallelize(1 to 4, 4).map { _ =>
+        def taskRead(uri: String, path: String, n: Int): Long = {
+          val c = new org.apache.hadoop.conf.Configuration(false)
+          c.set("fs.graftfs.impl", "graft.fs.GraftFileSystem")
+          val tfs = org.apache.hadoop.fs.FileSystem.get(
+            new java.net.URI(uri), c)
+          val in = tfs.open(new org.apache.hadoop.fs.Path(path))
+          val buf = new Array[Byte](n)
+          try in.readFully(0L, buf) finally in.close()
+          val crc = new java.util.zip.CRC32C(); crc.update(buf); crc.getValue
+        }
+        (taskRead("graftfs://xtask/", "graftfs://xtask/docs/a.bin", 3072),
+          taskRead("graftfs://xfold/", foldPath, 3072))
+      }
+      // a deadline, so a read that needs a core the outer job holds
+      // fails the case instead of hanging the suite
+      val crcs = {
+        import scala.concurrent.{Await, Future, TimeoutException}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        import scala.concurrent.duration._
+        try Await.result(Future(job.collect()), 120.seconds)
+        catch {
+          case _: TimeoutException =>
+            spark.sparkContext.cancelAllJobs()
+            fail("task-side reads did not finish within 120 s")
+        }
+      }
       crcs.toSeq must be(Seq.fill(4)(expected))
       Thread.sleep(300) // let the listener bus drain
       counter.n.get() must be(1) // the outer job, nothing nested
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       fs.close()
+      foldFs.close()
     }
   }
 
@@ -472,6 +508,27 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
         fs.mkdirs(new Path("graftfs://xmode/d2"))
       }
     } finally fs.close()
+  }
+
+  it must "mount a saved state in a JVM with NO SparkSession: reads served, mutations read-only" in {
+    // The implicit executor mode — a remote executor's JVM, which never
+    // creates a session: block geometry comes from the Hadoop conf, the
+    // mount serves saved payload session-free, and mutations name the
+    // read-only contract. Forked, because this JVM has a session.
+    val (dir, a, _) = buildSavedState("nosessionsrc")
+    val javaBin = System.getProperty("java.home") + "/bin/java"
+    val proc = new ProcessBuilder(javaBin, "-cp",
+        System.getProperty("java.class.path"),
+        "graft.fs.SessionlessMountProbe", dir, "/docs/a.bin")
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes, "UTF-8")
+    proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS) must be(true)
+    val crc = { val c = new java.util.zip.CRC32C(); c.update(a); c.getValue }
+    withClue(s"probe output: $out: ") {
+      proc.exitValue must be(0)
+      out must include(s"CRC $crc")
+      out must include("REFUSED graftfs executor-mode mount is READ-ONLY")
+    }
   }
 
   it must "serve POST-MOUNT writes to executor-mode mounts via write-through" in {
@@ -611,5 +668,32 @@ class SchemeMountSpec extends AnyFlatSpec with Matchers {
         .groupBy(_.parentPath).view.mapValues(_.map(_.path).toSet).toMap
       fs.childIndexSnapshot must be(expected)
     } finally fs.releaseSnapshot(snap)
+  }
+}
+
+/** Forkable probe for SchemeMountSpec's no-session case: argv =
+  * (stateDir, file). Mounts the saved state (512 B / 1 KB geometry) in
+  * a JVM that never creates a SparkSession, prints `CRC <crc32c>` of
+  * the file's bytes, then `REFUSED <message>` when a create fails with
+  * an IOException (or `MUTATED` when it does not).
+  */
+object SessionlessMountProbe {
+  def main(args: Array[String]): Unit = {
+    val Array(stateDir, file) = args
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set("fs.graftfs.impl", classOf[GraftFileSystem].getName)
+    conf.set("graft.mount.state.dir", stateDir)
+    conf.setInt("graft.subblock.size", 512)
+    conf.setInt("graft.block.size", 1024)
+    val fs = FileSystem.get(new URI("graftfs://nosession/"), conf)
+    val p = new Path(file)
+    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(0L, buf) finally in.close()
+    val crc = new java.util.zip.CRC32C(); crc.update(buf)
+    println(s"CRC ${crc.getValue}")
+    try { fs.create(new Path("/new.bin")).close(); println("MUTATED") }
+    catch { case e: java.io.IOException => println(s"REFUSED ${e.getMessage}") }
+    System.exit(0)
   }
 }
