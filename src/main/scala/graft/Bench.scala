@@ -379,6 +379,11 @@ object Bench {
     ()
   }
 
+  /** Default location of a bench record file: `name` in the working
+    * directory (the repo root under `sbt run`). */
+  private def inWorkingDir(name: String): String =
+    java.nio.file.Paths.get(sys.props("user.dir"), name).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -538,7 +543,7 @@ object Bench {
     // overwrites it. Queries new this round have no baseline and are
     // skipped; baseline_n on the summary line says how many compared.
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
-      "/root/repo/BENCH_DETAIL.json")
+      inWorkingDir("BENCH_DETAIL.json"))
     val baseline = readBaselineMins(baselinePath, sfDir)
     val ratios: Map[String, Double] = results.flatMap { case (n, ts) =>
       baseline.get(n).filter(_ > 0).collect {
@@ -558,7 +563,7 @@ object Bench {
     // would keep hiding it; the record carries the flag so the protocol
     // (mandatory quiet-box re-baseline) cannot be skipped silently
     val prevWeather = readBaselineWeather(sys.env.getOrElse(
-      "SPARK_GRAFT_BASELINE", "/root/repo/BENCH_DETAIL.json"))
+      "SPARK_GRAFT_BASELINE", inWorkingDir("BENCH_DETAIL.json")))
     val streak = weatherStreak(prevWeather, weather)
     if (streak)
       System.err.println(f"[bench][WARN] WEATHER STREAK: factor " +
@@ -740,7 +745,7 @@ object Bench {
     // only when SPARK_GRAFT_DETAIL names an explicit destination
     val detailDest =
       if (only.isEmpty) Some(sys.env.getOrElse("SPARK_GRAFT_DETAIL",
-        "/root/repo/BENCH_DETAIL.json"))
+        inWorkingDir("BENCH_DETAIL.json")))
       else sys.env.get("SPARK_GRAFT_DETAIL")
     detailDest.foreach { dest =>
       try java.nio.file.Files.write(
@@ -763,7 +768,7 @@ object Bench {
     val fullLine = line(fullQs, "")
     val lineDest =
       if (only.isEmpty) Some(sys.env.getOrElse("SPARK_GRAFT_LINE",
-        "/root/repo/BENCH_LINE.json"))
+        inWorkingDir("BENCH_LINE.json")))
       else sys.env.get("SPARK_GRAFT_LINE")
     lineDest.foreach { dest =>
       try java.nio.file.Files.write(

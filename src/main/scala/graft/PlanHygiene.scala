@@ -49,10 +49,8 @@ object PlanHygiene {
     * suite — or any long-lived session — slows under the pile-up.
     * Call between independent units of work, AFTER the previous unit's
     * frames are fully materialized/dumped: a swept checkpoint cannot be
-    * recomputed. That includes a LIVE GraftShell's FsState compaction
-    * snapshots — a long-lived shell must not share a session with
-    * sweeping harness code. (The scheme mount checkpoints nothing: its
-    * payload lives in memory and in parquet segment files.)
+    * recomputed. (The scheme mount and the shell on it checkpoint
+    * nothing: payload lives in memory and in parquet files.)
     */
   def sweepPersisted(spark: org.apache.spark.sql.SparkSession,
                      blocking: Boolean = false): Int = {

@@ -135,40 +135,6 @@ object DataPlane {
         expr(s"substring(joined, CAST($start - first_off + 1 AS INT), ${len.toInt})")
           .as("data"))
 
-  /** D9: -put / -copyFromLocal — local file → chunked subblock rows.
-    * Reading the local payload is inherently driver-side (the reference
-    * shell reads local disk too); chunking/storage is distributed.
-    */
-  def put(spark: org.apache.spark.sql.SparkSession,
-          localPath: String, fsPath: String,
-          subBlockSize: Int = DefaultSubBlock,
-          blockSize: Int = DefaultBlock): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(localPath))
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(fsPath, bytes)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("data",
-          org.apache.spark.sql.types.BinaryType))))
-    chunk(df, subBlockSize, blockSize)
-  }
-
-  /** -moveFromLocal — copyFromLocal then unlink the local source (the
-    * reference shell's moveFromLocal delegates to copyFromLocal and
-    * deletes on success, SnackFSShell.scala). Safe to unlink eagerly:
-    * `put` reads the payload into an in-memory LocalRelation, so the
-    * returned plan never re-reads the local file, even on recompute.
-    */
-  def moveFromLocal(spark: org.apache.spark.sql.SparkSession,
-                    localPath: String, fsPath: String,
-                    subBlockSize: Int = DefaultSubBlock,
-                    blockSize: Int = DefaultBlock): DataFrame = {
-    val chunks = put(spark, localPath, fsPath, subBlockSize, blockSize)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(localPath))
-    chunks
-  }
-
   /** D10: -get / -copyToLocal — stream one path's BLOCKS, in offset
     * order, to a local file. Only one ≤128 MB block is ever resident on
     * the driver (`toLocalIterator` fetches one partition at a time), so

@@ -74,6 +74,9 @@ class GraftFileSystem extends FileSystem {
   private var maxInodes = 10_000_000L
   private val inodeCapShouted = new java.util.concurrent.atomic.AtomicBoolean
 
+  /** True once the cache outgrew the cap (the shout latch). */
+  def inodeCapExceeded: Boolean = inodeCapShouted.get()
+
   private def noteInodeGrowth(): Unit =
     if (inodeCache.size() > maxInodes &&
         inodeCapShouted.compareAndSet(false, true))
@@ -809,7 +812,9 @@ class GraftFileSystem extends FileSystem {
   private final class SubBlockStream(p: String, parent: String,
                                      owner: Payload)
     extends OutputStream {
-    private val buf = new Array[Byte](subBlockSize)
+    // grows on demand up to one subblock, so an empty or small file
+    // (-touchz, a committer marker) never allocates a whole subblock
+    private var buf = new Array[Byte](math.min(subBlockSize, 4096))
     private var used = 0
     private var written = 0L
     private var isClosed = false
@@ -818,8 +823,13 @@ class GraftFileSystem extends FileSystem {
     // (block_id, sub_id) cell replaces it
     private var partialFlushed = false
 
+    private def reserve(n: Int): Unit =
+      if (used + n > buf.length) buf = java.util.Arrays.copyOf(buf,
+        math.min(subBlockSize, math.max(used + n, buf.length * 2)))
+
     override def write(b: Int): Unit = {
       ensureOpen()
+      reserve(1)
       buf(used) = b.toByte
       used += 1
       if (used == subBlockSize) endSubBlock()
@@ -831,6 +841,7 @@ class GraftFileSystem extends FileSystem {
       var rem = len
       while (rem > 0) {
         val n = math.min(rem, subBlockSize - used)
+        reserve(n)
         System.arraycopy(b, o, buf, used, n)
         used += n; o += n; rem -= n
         if (used == subBlockSize) endSubBlock()
@@ -1176,13 +1187,18 @@ class GraftFileSystem extends FileSystem {
     * snapshot reads the mount's segment files, which close() deletes:
     * it must not outlive its mount.
     */
-  def graftFs: GraftFs = {
+  def graftFs: GraftFs = snapshot(withChunks = true)
+
+  /** The catalog half of [[graftFs]] alone: no chunks frame is built. */
+  def graftCatalog: FsCatalog = snapshot(withChunks = false).catalog
+
+  private def snapshot(withChunks: Boolean): GraftFs = {
     val s = session.getOrElse(throw new IllegalStateException(
       "GraftFileSystem.graftFs needs an active SparkSession"))
     val (inodes, mem, bySource) = withMutLock {
       val cur = new java.util.IdentityHashMap[Payload, String]()
       val bySource = scala.collection.mutable.TreeMap.empty[String, ArrayBuffer[Row]]
-      payloads.forEach { (p, owner) =>
+      if (withChunks) payloads.forEach { (p, owner) =>
         cur.put(owner, p)
         owner.sources.foreach(src =>
           bySource.getOrElseUpdate(src, ArrayBuffer.empty) += Row(owner.key, p))
@@ -1200,6 +1216,8 @@ class GraftFileSystem extends FileSystem {
       inodeCache.values.forEach(values += _)
       (values.result(), mem, bySource.toSeq)
     }
+    val catalog = FsCatalog(s.createDataset(inodes)(FsCatalog.inodeEncoder))
+    if (!withChunks) return GraftFs(catalog, null)
     val fromSources = bySource.map { case (src, keys) =>
       val keyMap = s.createDataFrame(
         java.util.Arrays.asList(keys.toSeq: _*), keyMapSchema)
@@ -1210,7 +1228,7 @@ class GraftFileSystem extends FileSystem {
     }
     val chunks: DataFrame = fromSources.foldLeft(
       s.createDataFrame(mem, chunkRowSchema))(_ unionByName _)
-    GraftFs(FsCatalog(s.createDataset(inodes)(FsCatalog.inodeEncoder)), chunks)
+    GraftFs(catalog, chunks)
   }
 
   /** Counterpart of [[graftFs]], kept for callers that bracket their

@@ -2,10 +2,11 @@ package graft.fs
 
 import java.io.{FileNotFoundException, IOException}
 
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.PathOps
+import graft.catalog.{FsCatalog, PathOps}
 
 /** One shell invocation's outcome: exit code + stdout/stderr lines —
   * returned, not printed, so the dispatcher is testable and a `main`
@@ -19,450 +20,161 @@ final case class ShellResult(code: Int, out: Seq[String], err: Seq[String])
   * routes them through `FileSystem.globStatus` (-ls/-lsr/-du/-rm/-rmr/
   * -cat/-text/-mv/-cp/-get; -tail stays literal — the reference's tail
   * calls getFileStatus directly, SnackFSShell.scala:522-525), delegate
-  * to the distributed op, map exceptions to the reference's
-  * `cmd: message` stderr convention. Multi-argument verbs apply the
-  * reference's `doall` loop (SnackFSShell.scala:343-408): each argument
-  * is tried, failures print and processing continues, any failure makes
-  * the exit code -1. Holds the current (catalog, chunks) snapshot like
-  * GraftFileSystem — the single-driver narrowing documented there.
+  * to the filesystem, map exceptions to the reference's `cmd: message`
+  * stderr convention. Multi-argument verbs apply the reference's
+  * `doall` loop (SnackFSShell.scala:343-408): each argument is tried,
+  * failures print and processing continues, any failure makes the exit
+  * code -1.
+  *
+  * Like `SnackFSShell extends FsShell` over SnackFS, the shell is a thin
+  * client of ONE namespace engine, a [[GraftFileSystem]] mount:
+  *  - mutations and uploads (-mkdir, -touchz, -mv, -rm/-rmr, -put and
+  *    its aliases, the write half of -cp) are mount verbs — pure
+  *    memory, no Spark job;
+  *  - catalog verbs (-ls/-lsr/-du/-dus/-count/-stat/-test, glob
+  *    expansion) query a catalog frame of the mount's inode cache,
+  *    rebuilt only after a mutating verb;
+  *  - byte reads (-cat/-text/-tail/-get/-getmerge, the read half of
+  *    -cp) run the data plane over the mount's chunk snapshot — never
+  *    the mount's `open()`, so they read any chunk geometry.
+  *
+  * The primary constructor runs on a caller-owned mount (the CLI's
+  * shape, [[GraftShellMain]]). The [[GraftFs]] constructor seeds a
+  * shell-private mount from a snapshot; [[close]] releases it.
   */
-final class GraftShell(initial: GraftFs, context: FsContext) {
+final class GraftShell(mount: GraftFileSystem, context: FsContext) {
 
-  // the compacting state cell (FsState) keeps a long-lived shell
-  // session's plan depth bounded; external reads PIN their snapshot so
-  // later compactions can't release a checkpoint someone still holds
-  private val cell = new FsState(initial)
-
-  /** Deferred mutation state (see the inode-cache block below): catalog
-    * rebuilds and delete filters batch up between verbs and FLUSH at
-    * the next read boundary, so a metadata-verb storm creates zero
-    * Datasets per verb (eager analysis of a growing plan was the 12 ms
-    * floor that kept the first cut at ~80 verbs/s).
+  /** A shell over a private mount seeded from `initial`: its catalog is
+    * saved into a temp state dir that the mount bootstraps from
+    * (write-through off), and its chunk rows join that state at the
+    * shell's first chunk read; [[close]] deletes the dir.
     */
-  private var catalogDirty = false
-  private var pendingDoom: List[org.apache.spark.sql.Column] = Nil
+  def this(initial: GraftFs, context: FsContext) = {
+    this(GraftShell.seededMount(initial), context)
+    ownsMount = true
+    seedChunks = Some(initial.chunks)
+  }
 
-  private def flushPending(): Unit =
-    if (catalogDirty || pendingDoom.nonEmpty) {
-      var g = cell.get
-      if (pendingDoom.nonEmpty) {
-        // ONE filter for the whole batch: stored-space (birth) doom
-        // predicates stay valid across later renames — birth names are
-        // immutable — so deferred application is order-safe as long as
-        // row-ADDING verbs flush first (put/cp do). BALANCED or-fold:
-        // a left-nested 500-term || chain overflows the Column
-        // converter's recursion
-        def orAll(cs: List[org.apache.spark.sql.Column])
-            : org.apache.spark.sql.Column = cs match {
-          case single :: Nil => single
-          case _ =>
-            val (a, b) = cs.splitAt(cs.length / 2)
-            orAll(a) || orAll(b)
-        }
-        g = GraftFs(g.catalog,
-          g.chunks.filter(!orAll(pendingDoom)), g.aliases)
-        pendingDoom = Nil
-      }
-      if (catalogDirty) {
-        noteMirrorGrowth()
-        g = GraftFs(cacheCatalog(), g.chunks, g.aliases)
-        catalogDirty = false
-      }
-      // alias-map growth bound: past the cap, fold the translation into
-      // the plan and empty the map — safe EXACTLY here because pending
-      // deletes were just flushed (their predicates are birth-space;
-      // folding re-keys rows to current paths, so an unflushed doom
-      // would miss its rows and resurrect deleted data). Lazy — no
-      // checkpoint; the branch plan flattens at the cell's next
-      // tracked compaction.
-      if (g.aliases.entries.size > GraftShell.AliasFoldCap)
-        g = g.aliasesApplied()
-      cell.set(g)
-    }
-
-  def fs: GraftFs = { flushPending(); cell.pinCurrent() }
-  private def cur: GraftFs = { flushPending(); cell.get }
-  private def setFs(next: GraftFs): Unit = cell.set(next)
+  private var ownsMount = false
   var ctx: FsContext = context
 
-  /** Release one `fs` escape (pins are ref counted — see FsState). */
-  def releaseSnapshot(snapshot: GraftFs): Unit = cell.unpin(snapshot)
+  /** A seeded shell's chunk rows not yet written into its seed state —
+    * deferred so a session of metadata verbs never pays the write. */
+  private var seedChunks: Option[DataFrame] = None
 
-  /** End-of-session cleanup: drop every pinned snapshot so retained
-    * checkpoints free (mirrors GraftFileSystem.close), then sweep the
-    * spill tier — the live generation AND the deferred-deletion backlog
-    * (no caller can hold a plan over them past close).
-    */
-  def close(): Unit = {
-    cell.releasePins()
-    (Option(spillDir).toSeq ++ staleSpillGens).foreach { d =>
-      graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(d))
+  private def seedDir: String = mount.getConf.get("graft.mount.state.dir")
+
+  /** The mount's current (catalog, chunks) snapshot; a seeded shell
+    * writes its deferred chunk rows first. */
+  def fs: GraftFs = {
+    seedChunks.foreach { c =>
+      GraftShellMain.writeChunks(c,
+        s"${GraftShellMain.currentStateDir(seedDir).get}/chunks")
+      seedChunks = None
     }
-    staleSpillGens.clear()
-    spillDir = null
+    mount.graftFs
   }
 
-  // ── Driver-resident mirror of the CATALOG plane — the facade's
-  //    inodeCache technique (GraftFileSystem.scala:90) applied to the
-  //    shell. Preconditions and catalog mutations run against this
-  //    sorted map (microseconds, no Spark action per verb) and the
-  //    catalog FRAME the read verbs query derives from it as a depth-1
-  //    local dataset after each mutation — the facade's refreshedState
-  //    shape. Without it every -mv paid three limit(1).collect() jobs
-  //    for its preconditions alone, capping the shell at tens of
-  //    verbs/s; with it the mutation path is job-free (-cp excepted:
-  //    duplicating payload is inherent data motion). Sorted so a
-  //    subtree is one range walk. Same single-driver narrowing as the
-  //    class scaladoc. ──────────────────────────────────────────────────
-  private val inodeCache = new java.util.TreeMap[String, graft.catalog.Inode]()
-  initial.catalog.inodes.collect().foreach(n => inodeCache.put(n.path, n))
-  private val spark = initial.chunks.sparkSession
+  /** Counterpart of [[fs]] (a mount snapshot holds nothing to release). */
+  def releaseSnapshot(snapshot: GraftFs): Unit = mount.releaseSnapshot(snapshot)
 
-  /** Driver-memory posture of the mirror, made LOUD (the facade's
-    * noteInodeGrowth contract, GraftFileSystem.scala:118-131): an inode
-    * row retains ~550 B of driver heap (ShellScaleSpec measures it by
-    * seeding 1M synthetic inodes — 521 MiB, verbs still at full
-    * speed), so the 10 M default cap ≈ 5.3 GiB — NameNode-scale metadata,
-    * the right class for a single-driver shell session. Past the cap
-    * every verb still works, but ONE stderr shout names the knob
-    * (`spark.graft.shell.max.inodes`) and the DSv2 connector as the
-    * analytics-scale alternative — never a silent OOM march. Checked at
-    * seed time and at every deferred-mutation flush (every growth verb
-    * sets catalogDirty, so growth cannot outrun the check by more than
-    * one verb batch).
-    */
-  private val maxMirrorInodes: Long =
-    try spark.conf.get("spark.graft.shell.max.inodes", "10000000").toLong
-    catch { case _: Throwable => 10000000L }
-  private val mirrorCapShouted = new java.util.concurrent.atomic.AtomicBoolean
+  /** True once the namespace outgrew `graft.mount.max.inodes` (the
+    * mount's one loud shout; verbs keep working). */
+  def inodeCapExceeded: Boolean = mount.inodeCapExceeded
 
-  /** True once the mirror outgrew the cap with its whole WORKING SET
-    * hot (nothing evictable — spec hook + the shout latch; the warning
-    * prints exactly once per shell). A cap overflow with cold entries
-    * present no longer shouts: it SPILLS (see [[spillCold]]).
-    */
-  def mirrorCapExceeded: Boolean = mirrorCapShouted.get()
-
-  // ── SPILLED namespace tier (r15 verdict stretch #9): past the cap,
-  //    cold inodes move to a frame-backed parquet generation instead of
-  //    cap-and-shout. Layout is FsCatalog.save's (path-range-
-  //    partitioned, sorted — stats-prunable), so point/subtree probes
-  //    are SavedState pruned parquet reads and the read-verb catalog
-  //    frame unions the tier in. LSM-lite, one level:
-  //      - memory ∩ spill = ∅ by construction (mutating a spilled path
-  //        tombstones its stale row and writes the fresh inode to
-  //        memory; reads do NOT promote);
-  //      - spillTombstones marks spill rows superseded by memory or
-  //        deletion — absorbed (dropped) at the next generation
-  //        rewrite, so the set is bounded by mutation volume between
-  //        spills, never namespace size;
-  //      - eviction policy is 1-bit CLOCK (approximate LRU):
-  //        touchedSinceSpill marks entries referenced this epoch;
-  //        eviction takes the untouched, then clears the epoch. A
-  //        fully-hot working set over the cap shouts (the old loud
-  //        contract) AND resets the clock so continued growth becomes
-  //        evictable at the next flush. ─────────────────────────────────
-  private var spillDir: String = _
-  private val spillTombstones = new java.util.TreeSet[String]()
-  private val touchedSinceSpill = new java.util.HashSet[String]()
-
-  /** Superseded spill generations awaiting deferred deletion. */
-  private val staleSpillGens = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  /** Fault-injection hook for the spill crash-consistency spec
-    * (ShellScaleSpec): throw at the named point inside [[spillCold]] —
-    * `before-write` (nothing on disk yet) or `after-write` (new
-    * generation written, in-memory swap NOT yet performed). Both
-    * points sit BEFORE the single in-memory commit (the spillDir/
-    * cache/tombstone swap), which is the WRITE-NEW-THEN-FLIP
-    * discipline in-process: a crash anywhere leaves the PREVIOUS
-    * generation live and at worst an orphan directory no pointer
-    * names. Production never sets this.
-    */
-  private[fs] var spillFaultPoint: Option[String] = None
-
-  /** Number of inodes resident in the spilled tier's current
-    * generation minus tombstones is not tracked exactly; this counts
-    * generations spilled (spec hook).
-    */
-  private var spillGenerations = 0
-  def spilledGenerations: Int = spillGenerations
-
-  private def noteMirrorGrowth(): Unit =
-    if (inodeCache.size() > maxMirrorInodes) spillCold()
-  noteMirrorGrowth()
-
-  /** Resident (hot-tier) inode count — spec hook for the spill bound. */
-  def residentInodes: Int = inodeCache.size()
-
-  private def spillCold(): Unit = {
-    import scala.jdk.CollectionConverters._
-    // evict down to HALF the cap (hysteresis: spilling to exactly the
-    // cap would re-trigger on the next growth verb), coldest-first
-    // among the untouched, lexicographic within the epoch
-    val target = math.max(0L, inodeCache.size() - maxMirrorInodes / 2)
-    val evict = inodeCache.keySet().asScala.iterator
-      .filterNot(touchedSinceSpill.contains)
-      .take(if (target > Int.MaxValue) Int.MaxValue else target.toInt)
-      .toVector
-    if (evict.isEmpty ||
-        inodeCache.size() - evict.size > maxMirrorInodes) {
-      if (mirrorCapShouted.compareAndSet(false, true))
-        System.err.println(
-          "graftfs shell: namespace mirror exceeds " +
-            s"spark.graft.shell.max.inodes ($maxMirrorInodes inodes) with " +
-            "the working set hot — cold entries spill to the frame-backed " +
-            "tier as they age; raise the cap or move analytics to the " +
-            "graft.sources DSv2 connector")
-      // new clock epoch: what is hot now can age out by the next flush
-      touchedSinceSpill.clear()
-    }
-    if (evict.nonEmpty) {
-      val enc = graft.catalog.FsCatalog.inodeEncoder
-      val evictedDs = spark.createDataset(
-        evict.map(inodeCache.get))(enc).toDF
-      // next generation = evicted ∪ (previous generation − tombstones):
-      // every tombstone is absorbed by the rewrite, so the set resets
-      val merged =
-        if (spillDir == null) evictedDs
-        else {
-          val ts = spark.createDataset(
-            spillTombstones.asScala.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("path")
-          evictedDs.unionByName(
-            graft.catalog.FsCatalog.load(spark, spillDir).inodes.toDF
-              .join(ts, Seq("path"), "left_anti"))
-        }
-      val parent = try spark.conf.get("spark.graft.shell.spill.dir", null)
-        catch { case _: Throwable => null }
-      val newDir =
-        (if (parent == null)
-          java.nio.file.Files.createTempDirectory("graft-shell-spill")
-        else {
-          val base = java.nio.file.Paths.get(parent)
-          java.nio.file.Files.createDirectories(base)
-          java.nio.file.Files.createTempDirectory(base, "gen")
-        }).toString
-      if (spillFaultPoint.contains("before-write"))
-        sys.error("injected spill fault: before-write")
-      graft.catalog.FsCatalog(merged.as(enc)).save(newDir)
-      if (spillFaultPoint.contains("after-write"))
-        sys.error("injected spill fault: after-write")
-      // ── the in-memory COMMIT: the swap below is pure field/map
-      //    mutation (no I/O until the deferred-deletion sweep, which
-      //    is idempotent garbage pruning AFTER the commit) — the flip
-      //    half of the write-new-then-flip discipline ──────────────────
-      val old = spillDir
-      spillDir = newDir
-      spillGenerations += 1
-      evict.foreach(inodeCache.remove)
-      spillTombstones.clear()
-      touchedSinceSpill.clear()
-      // DEFERRED deletion (r16 ADVICE): a lazy plan captured over the
-      // old generation (a cacheCatalog frame a caller still holds from
-      // an earlier read boundary) would FileNotFound if the files died
-      // now. Superseded generations are staged and swept one full spill
-      // cycle later (any plan over them predates TWO rewrites by then)
-      // with a bounded backlog; close() sweeps the rest.
-      if (old != null) staleSpillGens += old
-      while (staleSpillGens.size > 3) {
-        graft.PlanHygiene.deleteRecursively(
-          java.nio.file.Paths.get(staleSpillGens.remove(0)))
-      }
-    }
+  /** End of session: a seeded shell closes its private mount and
+    * deletes the seed dir; a caller-owned mount stays open. */
+  def close(): Unit = if (ownsMount) {
+    ownsMount = false
+    seedChunks = None
+    mount.close()
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(seedDir))
   }
 
-  /** Memory-tier write/remove, tier-consistently: a write supersedes
-    * any spilled row (tombstone), a remove tombstones it too.
-    */
-  private def cachePutT(p: String, n: graft.catalog.Inode): Unit = {
-    inodeCache.put(p, n)
-    touchedSinceSpill.add(p)
-    if (spillDir != null) spillTombstones.add(p)
-    ()
+  /** Catalog frame of the mount's inode cache, built at the first
+    * catalog verb after a mutation (null = stale). */
+  private var catalogFrame: FsCatalog = _
+
+  private def catalog: FsCatalog = {
+    if (catalogFrame == null) catalogFrame = mount.graftCatalog
+    catalogFrame
   }
 
-  private def cacheRemoveT(p: String): Unit = {
-    inodeCache.remove(p)
-    touchedSinceSpill.remove(p)
-    if (spillDir != null) spillTombstones.add(p)
-    ()
-  }
+  /** Catalog plus chunks, for the byte-reading verbs. */
+  private def snapshot: GraftFs = GraftFs(catalog, fs.chunks)
 
-  private def spillLookup(p: String): Option[graft.catalog.Inode] =
-    if (spillDir == null || spillTombstones.contains(p)) None
-    else SavedState.readInodes(spillDir, Some(SavedState.pathEq(p)))
-      .headOption
+  private def stat(p: String): Option[FileStatus] =
+    try Some(mount.getFileStatus(new Path(p)))
+    catch { case _: FileNotFoundException => None }
 
-  private def cacheCatalog(): graft.catalog.FsCatalog = {
-    import scala.jdk.CollectionConverters._
-    val enc = graft.catalog.FsCatalog.inodeEncoder
-    val mem = spark.createDataset(inodeCache.values.asScala.toSeq)(enc)
-    if (spillDir == null) graft.catalog.FsCatalog(mem)
-    else {
-      // the read-verb catalog is memory ∪ (spill − tombstones): verbs
-      // answer from the spilled tier through the ordinary frame path
-      val ts = spark.createDataset(spillTombstones.asScala.toSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("path")
-      val sp = graft.catalog.FsCatalog.load(spark, spillDir).inodes.toDF
-        .join(ts, Seq("path"), "left_anti")
-      graft.catalog.FsCatalog(mem.toDF.unionByName(sp).as(enc))
-    }
-  }
-
-  private def cached(p: String): Option[graft.catalog.Inode] =
-    Option(inodeCache.get(p)) match {
-      case some @ Some(_) => touchedSinceSpill.add(p); some
-      case None => spillLookup(p)
+  /** `p` and everything under it, parents before children. */
+  private def subtree(p: String): Seq[FileStatus] =
+    stat(p).toSeq.flatMap { st =>
+      st +: (if (st.isDirectory) mount.listStatus(new Path(p)).toSeq
+        .flatMap(c => subtree(c.getPath.toUri.getPath)) else Nil)
     }
 
-  /** (path, inode) of `p` and everything under it — one memory range
-    * walk merged with one pruned spill range read, path-sorted.
-    */
-  private def cacheSubtree(p: String): Seq[(String, graft.catalog.Inode)] = {
-    val out = Seq.newBuilder[(String, graft.catalog.Inode)]
-    cached(p).foreach(n => out += (p -> n))
-    val pre = dirPrefix(p)
-    val it = inodeCache.tailMap(pre).entrySet().iterator()
-    var go = true
-    while (go && it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(pre)) out += (e.getKey -> e.getValue)
-      else go = false
-    }
-    val fromSpill =
-      if (spillDir == null) Nil
-      else SavedState.readInodes(spillDir, Some(SavedState.pathRange(pre)))
-        .filterNot(n => spillTombstones.contains(n.path) ||
-          inodeCache.containsKey(n.path))
-        .map(n => n.path -> n)
-    if (fromSpill.isEmpty) out.result()
-    else (out.result() ++ fromSpill).sortBy(_._1)
-  }
-
-  private def cacheHasChildren(p: String): Boolean = {
-    val pre = dirPrefix(p)
-    val k = inodeCache.ceilingKey(pre)
-    (k != null && k.startsWith(pre)) ||
-      (spillDir != null &&
-        SavedState.readInodes(spillDir, Some(SavedState.pathRange(pre)))
-          .exists(n => !spillTombstones.contains(n.path)))
-  }
-
-  /** FsCatalog.rename's precondition matrix (byte-identical error
-    * strings, RenameCommand.scala:61-107 semantics) + subtree
-    * relocation on the cache, then the chunk plane's zero-plan-node
-    * alias re-key.
-    */
-  private def renameCached(src: String, dst: String): Unit = {
-    if (src == dst) return // no-op success on every surface
-    if (cached(src).isEmpty)
+  /** -mv's and -cp's shared precondition matrix (FsCatalog.rename's
+    * error strings, RenameCommand.scala:61-107 semantics). */
+  private def checkMove(src: String, dst: String): Unit = {
+    if (stat(src).isEmpty)
       throw new IOException(s"No such file or directory.$src")
-    if (cached(dst).isDefined)
+    if (stat(dst).isDefined)
       throw new IOException("Destination already exists")
     val dp = PathOps.parent(dst)
     if (dp != null) {
-      val pn = cached(dp).getOrElse(throw new IOException(
+      val pn = stat(dp).getOrElse(throw new IOException(
         s"Destination $dp directory does not exist."))
-      if (pn.isFile)
+      if (!pn.isDirectory)
         throw new IOException("A file exists with parent of destination.")
     }
-    val moved = cacheSubtree(src)
-    moved.foreach { case (p, _) => cacheRemoveT(p) }
-    moved.foreach { case (p, n) =>
-      val np = dst + p.drop(src.length)
-      cachePutT(np, n.copy(path = np, parentPath = PathOps.parent(np)))
-    }
-    // zero Datasets on this path: the chunks plan object is reused and
-    // the catalog rebuild defers to the next read boundary
-    val g = cell.get
-    setFs(GraftFs(g.catalog, g.chunks, g.aliases.renamed(src, dst)))
-    catalogDirty = true
   }
 
-  /** FsCatalog.copy's precondition matrix + subtree duplication on the
-    * cache; the chunk plane duplicates through the driver
-    * (GraftFs.copyWith — the reference's client-streamed copy).
-    */
-  private def copyCached(src: String, dst: String): Unit = {
+  /** Write `in`'s bytes as the NEW file `dst` through the mount's
+    * streaming create; a failed copy leaves no partial file. */
+  private def upload(in: java.io.InputStream, dst: String): Unit = {
+    val out = mount.create(new Path(dst), false)
+    try { in.transferTo(out); out.close() }
+    catch {
+      case e: IOException => mount.delete(new Path(dst), false); throw e
+    }
+  }
+
+  /** FsCatalog.copy's precondition matrix, then the subtree's bytes
+    * read through the data plane (one job) and re-created through the
+    * mount — the reference's client-streamed copy (FileUtil.copy). */
+  private def copy(src: String, dst: String): Unit = {
     if (src == dst) return
-    if (cached(src).isEmpty)
-      throw new IOException(s"No such file or directory.$src")
-    if (cached(dst).isDefined)
-      throw new IOException("Destination already exists")
-    val dp = PathOps.parent(dst)
-    if (dp != null) {
-      val pn = cached(dp).getOrElse(throw new IOException(
-        s"Destination $dp directory does not exist."))
-      if (pn.isFile)
-        throw new IOException("A file exists with parent of destination.")
-    }
-    cacheSubtree(src).foreach { case (p, n) =>
+    checkMove(src, dst)
+    val under = col("path") === src || col("path").startsWith(dirPrefix(src))
+    val bytes = DataPlane.reassemble(snapshot.chunks.filter(under)).collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    subtree(src).foreach { st =>
+      val p = st.getPath.toUri.getPath
       val np = dst + p.drop(src.length)
-      cachePutT(np, n.copy(path = np, parentPath = PathOps.parent(np)))
+      if (st.isDirectory) mount.mkdirs(new Path(np))
+      else upload(new java.io.ByteArrayInputStream(
+        bytes.getOrElse(p, Array.emptyByteArray)), np)
     }
-    // row-ADDING verb: flush pending deletes first (deferred doom must
-    // never swallow rows born after it), then defer the catalog
-    val g = cur
-    setFs(g.copyWith(g.catalog, src, dst))
-    catalogDirty = true
   }
 
-  /** FsCatalog.delete's error matrix on the cache (DeleteCommand
-    * semantics: missing → false; file or empty dir → remove; non-empty
-    * dir without -rmr → throw).
+  /** FsCatalog.deleteGlob's matrix on the mount's namespace — the SAME
+    * literal prefix + anchored regex + root rule as globPredicate,
+    * evaluated driver-side.
     */
-  private def deleteCached(path: String, recursive: Boolean): Boolean =
-    cached(path) match {
-      case None => false
-      case Some(n) =>
-        if (n.isDir && cacheHasChildren(path)) {
-          if (!recursive) throw new IOException("Directory is not empty")
-          cacheSubtree(path).foreach { case (p, _) => cacheRemoveT(p) }
-        } else cacheRemoveT(path)
-        val g = cell.get
-        // doom computed against the aliases BEFORE the entry cleanup,
-        // deferred to the next read boundary (one filter per batch)
-        pendingDoom ::= g.aliases.doomedColumn(path)
-        setFs(GraftFs(g.catalog, g.chunks, g.aliases.afterDelete(path)))
-        catalogDirty = true
-        true
-    }
-
-  /** FsCatalog.deleteGlob's matrix on the cache — the SAME literal
-    * prefix + anchored regex + root rule as globPredicate, evaluated
-    * driver-side.
-    */
-  private def deleteGlobCached(pattern: String, recursive: Boolean): Boolean = {
+  private def deleteGlob(pattern: String, recursive: Boolean): Boolean = {
     val re = java.util.regex.Pattern.compile(PathOps.globToRegex(pattern))
     val pre = PathOps.globLiteralPrefix(pattern)
-    import scala.jdk.CollectionConverters._
-    // glob roots come from BOTH tiers: the memory walk plus a pruned
-    // spill range read on the pattern's literal prefix (an empty/root
-    // prefix degrades to a full tier scan — the glob asked for it)
-    val spillKeys =
-      if (spillDir == null) Nil
-      else SavedState.readInodes(spillDir,
-          if (pre.length > 1) Some(SavedState.pathRange(pre)) else None)
-        .iterator.map(_.path)
-        .filterNot(spillTombstones.contains).toSeq
-    val roots = (inodeCache.keySet().asScala.iterator ++ spillKeys.iterator)
+    val roots = mount.metadataSnapshot.keys
       .filter(p => p.startsWith(pre) && re.matcher(p).find() &&
         (pattern == "/" || p != "/"))
-      .toSeq.distinct.sorted
+      .toSeq.sorted
     if (roots.isEmpty) return false
-    if (!recursive && roots.exists(r =>
-        cached(r).exists(_.isDir) && cacheHasChildren(r)))
+    if (!recursive && roots.exists(r => stat(r).exists(_.isDirectory) &&
+        mount.listStatus(new Path(r)).nonEmpty))
       throw new IOException(
         s"Non-empty directory matched by $pattern; use -rmr")
-    roots.foreach { r =>
-      cacheSubtree(r).foreach { case (p, _) => cacheRemoveT(p) }
-    }
-    val g = cell.get
-    roots.foreach(r => pendingDoom ::= g.aliases.doomedColumn(r))
-    setFs(GraftFs(g.catalog, g.chunks,
-      roots.foldLeft(g.aliases)((a, r) => a.afterDelete(r))))
-    catalogDirty = true
+    roots.foreach(r => mount.delete(new Path(r), true))
     true
   }
 
@@ -494,6 +206,9 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
         ShellResult(-1, Nil, Seq(s"$cmd: ${e.getMessage}"))
       case e: UnsupportedOperationException =>
         ShellResult(-1, Nil, Seq(s"$cmd: ${e.getMessage}"))
+    } finally {
+      // a mutating verb (even a failed one) may have changed the mount
+      if (GraftShellMain.MutatingVerbs(cmd)) catalogFrame = null
     }
   }
 
@@ -504,7 +219,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
     */
   private def fileArg(arg: String): String = {
     val p = abs(arg)
-    val node = cur.catalog.retrieve(p)
+    val node = catalog.retrieve(p)
       .getOrElse(throw new FileNotFoundException(p))
     if (node.isDir) throw new IOException(s"$p is a directory")
     p
@@ -524,7 +239,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
     val p = abs(arg)
     if (!PathOps.isGlob(arg)) Seq(p)
     else {
-      val matched = cur.catalog.globStatus(p)
+      val matched = catalog.globStatus(p)
         .select("path").collect().map(_.getString(0)).toSeq.sorted
       if (matched.isEmpty)
         throw new FileNotFoundException(
@@ -568,10 +283,10 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       // matched dir happens to be empty — that prints "Found 0 items")
       forEachSrc(cmd, args) { arg =>
         val pat = abs(arg)
-        if (cur.catalog.globStatus(pat).limit(1).count() == 0)
+        if (catalog.globStatus(pat).limit(1).count() == 0)
           throw new FileNotFoundException(
             s"Cannot access $arg: No such file or directory.")
-        val rows = cur.catalog.listGlob(pat, recursive = cmd == "-lsr").collect()
+        val rows = catalog.listGlob(pat, recursive = cmd == "-lsr").collect()
         (if (cmd == "-ls") Seq(s"Found ${rows.length} items") else Nil) ++
           statusLines(rows)
       }
@@ -583,21 +298,21 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       forEachSrc(cmd, args) { arg =>
         val p = abs(arg)
         if (PathOps.isGlob(arg)) {
-          if (cur.catalog.globStatus(p).limit(1).count() == 0)
+          if (catalog.globStatus(p).limit(1).count() == 0)
             throw new FileNotFoundException(
               s"Cannot access $arg: No such file or directory.")
-        } else if (!cur.catalog.exists(p)) throw new FileNotFoundException(p)
+        } else if (!catalog.exists(p)) throw new FileNotFoundException(p)
         val rows =
-          if (PathOps.isGlob(arg)) cur.catalog.duGlob(p).collect()
-          else cur.catalog.du(p).collect()
+          if (PathOps.isGlob(arg)) catalog.duGlob(p).collect()
+          else catalog.du(p).collect()
         rows.map(r => f"${r.getLong(1)}%12d  ${r.getString(0)}").toSeq
       }
 
     case "-dus" =>
       forEachSrc(cmd, args) { arg =>
         val p = abs(arg)
-        if (!cur.catalog.exists(p)) throw new FileNotFoundException(p)
-        val r = cur.catalog.dus(p).collect()(0)
+        if (!catalog.exists(p)) throw new FileNotFoundException(p)
+        val r = catalog.dus(p).collect()(0)
         Seq(f"${r.getLong(1)}%12d  ${r.getString(0)}")
       }
 
@@ -610,49 +325,40 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
         return ShellResult(-1, Nil, ShellHelp.help(cmd).toSeq)
       val pArg = if (qOption) args(1) else args.head
       val p = abs(pArg)
-      if (!cur.catalog.exists(p)) throw new FileNotFoundException(p)
-      val r = cur.catalog.countSummary(p).collect()(0)
+      if (!catalog.exists(p)) throw new FileNotFoundException(p)
+      val r = catalog.countSummary(p).collect()(0)
       val quota = if (qOption) f"${"none"}%12s ${"inf"}%12s ${"none"}%12s ${"inf"}%12s " else ""
       ShellResult(0,
         Seq(f"$quota${r.getLong(1)}%8d ${r.getLong(2)}%8d ${r.getLong(3)}%12d ${r.getString(0)}"), Nil)
 
     case "-mkdir" =>
       forEachSrc(cmd, args) { arg =>
-        // mkdirsWith semantics on the cache: create what it can,
-        // verdict = AND over all levels (file blocks → false)
-        val levels = PathOps.ancestors(abs(arg))
-        val ok = levels.forall(l => cached(l).forall(_.isDir))
-        val missing = levels.filterNot(l => cached(l).isDefined)
-        missing.foreach(l =>
-          cachePutT(l, graft.catalog.FsCatalog.dirInode(l, "graft")))
-        if (missing.nonEmpty) catalogDirty = true
-        if (!ok) throw new IOException(s"cannot create directory $arg")
+        // mkdirs semantics: create what it can, verdict = AND over all
+        // levels (a file on the chain → false)
+        if (!mount.mkdirs(new Path(abs(arg))))
+          throw new IOException(s"cannot create directory $arg")
         Nil
       }
 
     case "-touchz" =>
       forEachSrc(cmd, args) { arg =>
         val p = abs(arg)
-        cached(p) match {
-          case Some(n) if n.isDir =>
+        stat(p) match {
+          case Some(st) if st.isDirectory =>
             throw new IOException(s"$p is a directory")
-          case Some(n) if n.length > 0 =>
+          case Some(st) if st.getLen > 0 =>
             throw new IOException(s"$p must be a zero-length file")
           case Some(_) => () // existing zero-length file: no-op
-          case None =>
-            cachePutT(p, graft.catalog.Inode(p, PathOps.parent(p),
-              "graft", "graft", 420, isDir = false,
-              new java.sql.Timestamp(1704067200000L), Seq.empty))
-            catalogDirty = true
+          case None => mount.create(new Path(p), false).close()
         }
         Nil
       }
 
     case "-test" =>
       val ok = args.head match {
-        case "-e" => cur.catalog.testE(abs(args(1)))
-        case "-z" => cur.catalog.testZ(abs(args(1)))
-        case "-d" => cur.catalog.testD(abs(args(1)))
+        case "-e" => catalog.testE(abs(args(1)))
+        case "-z" => catalog.testZ(abs(args(1)))
+        case "-d" => catalog.testD(abs(args(1)))
         case other => return ShellResult(-1, Nil, Seq(s"-test: unknown flag $other"))
       }
       ShellResult(if (ok) 0 else 1, Nil, Nil)
@@ -660,7 +366,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
     case "-stat" =>
       val (fmt, p) =
         if (args.length >= 2) (args.head, args(1)) else ("%y", args.head)
-      val r = cur.catalog.statFormatted(abs(p), fmt).collect()(0)
+      val r = catalog.statFormatted(abs(p), fmt).collect()(0)
       ShellResult(0, Seq(r.getString(1)), Nil)
 
     case "-mv" | "-cp" =>
@@ -674,7 +380,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       val verb = if (cmd == "-mv") "moving" else "copying"
       val dst = abs(args.last)
       val sources = args.dropRight(1)
-      val dstIsDir = cached(dst).exists(_.isDir)
+      val dstIsDir = stat(dst).exists(_.isDirectory)
       if (sources.length > 1 && !dstIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When $verb multiple files, destination ${args.last} should be a directory."))
@@ -684,12 +390,9 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
           throw new IOException(
             s"When $verb multiple files, destination should be a directory.")
         matched.foreach { src =>
-          // rename is cache re-keying + a driver-map chunk re-key (zero
-          // Spark actions, zero plan nodes); copy duplicates through
-          // the driver (one local-leaf union). The r13 tree-doubling
-          // shapes and their HeavyCompactDebt mitigation are retired.
-          if (cmd == "-mv") renameCached(src, dst)
-          else copyCached(src,
+          // the mount's rename carries the same precondition matrix
+          if (cmd == "-mv") mount.rename(new Path(src), new Path(dst))
+          else copy(src,
             if (dstIsDir) s"${dirPrefix(dst)}${basename(src)}" else dst)
         }
         Nil
@@ -700,8 +403,8 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       forEachSrc(cmd, args) { arg =>
         val target = abs(arg)
         val ok =
-          if (PathOps.isGlob(arg)) deleteGlobCached(target, recursive)
-          else deleteCached(target, recursive)
+          if (PathOps.isGlob(arg)) deleteGlob(target, recursive)
+          else mount.delete(new Path(target), recursive)
         if (!ok)
           throw new FileNotFoundException(s"No such file or directory: $arg")
         Nil
@@ -712,7 +415,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       // reference cats each match and keeps going on failures
       forEachSrc(cmd, args) { arg =>
         expandSrc(arg).map { p =>
-          val bytes = cur.cat(p).collect()
+          val bytes = snapshot.cat(p).collect()
           val payload = if (bytes.isEmpty) Array.emptyByteArray
             else bytes(0).getAs[Array[Byte]]("data")
           new String(payload, java.nio.charset.StandardCharsets.UTF_8)
@@ -723,14 +426,14 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       forEachSrc(cmd, args) { arg =>
         expandSrc(arg).map { m =>
           val p = fileArg(m)
-          val rows = DataPlane.text(cur.rowsForFile(p)).collect()
+          val rows = DataPlane.text(snapshot.rowsForFile(p)).collect()
           rows.map(_.getString(1)).mkString("\n")
         }
       }
 
     case "-tail" =>
       val p = fileArg(args.head)
-      val rows = DataPlane.tail(cur.rowsForFile(p), 1024).collect()
+      val rows = DataPlane.tail(snapshot.rowsForFile(p), 1024).collect()
       val payload = if (rows.isEmpty) Array.emptyByteArray
         else rows(0).getAs[Array[Byte]]("data")
       ShellResult(0, Seq(new String(payload, java.nio.charset.StandardCharsets.UTF_8)), Nil)
@@ -742,45 +445,24 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       // fresh path. Each source runs in the doall loop.
       val rawDst = abs(args.last)
       val sources = args.dropRight(1)
-      val dstIsDir = cached(rawDst).exists(_.isDir)
+      val dstIsDir = stat(rawDst).exists(_.isDirectory)
       if (sources.length > 1 && !dstIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When copying multiple files, destination ${args.last} should be a directory."))
       forEachSrc(cmd, sources) { local =>
         // put INTO an existing directory targets dir/<local basename>;
-        // an existing file at the target errors (no silent duplicate
-        // chunk rows — reassembly would concatenate both payloads)
+        // an existing file at the target errors (no silent overwrite)
         val base = java.nio.file.Paths.get(local).getFileName.toString
         val dst = if (dstIsDir) s"${dirPrefix(rawDst)}$base" else rawDst
-        if (cached(dst).isDefined)
+        if (stat(dst).isDefined)
           throw new IOException(s"Target $dst already exists")
-        // size BEFORE moveFromLocal unlinks the source
-        val len = java.nio.file.Files.size(java.nio.file.Paths.get(local))
-        // block geometry from the session conf (spark.graft.* keys —
-        // the reference shell reads the same knobs from core-site.xml)
-        val (sub, blk) = GraftConfig.geometry(spark)
-        val newChunks =
-          if (cmd == "-moveFromLocal")
-            DataPlane.moveFromLocal(spark, local, dst, sub, blk)
-          else DataPlane.put(spark, local, dst, sub, blk)
-        // parent mkdirs on the cache; failure leaves state untouched
-        // (the frame path threw before any setFs too)
-        val levels = PathOps.ancestors(PathOps.parent(dst))
-        if (!levels.forall(l => cached(l).forall(_.isDir)))
-          throw new IOException(
-            s"Parent path is not a directory: ${PathOps.parent(dst)}")
-        levels.filterNot(l => cached(l).isDefined).foreach(l =>
-          cachePutT(l, graft.catalog.FsCatalog.dirInode(l, "graft")))
-        cachePutT(dst, graft.catalog.Inode(dst, PathOps.parent(dst),
-          "graft", "graft", 420, isDir = false,
-          new java.sql.Timestamp(1704067200000L),
-          graft.catalog.BlockMeta.forLength(dst, len, sub, blk)))
-        // withNewRows re-keys the fresh rows if their identity birth is
-        // claimed (path re-created after a rename moved the original);
-        // row-ADDING verb: cur flushes pending deletes first
-        val g = cur
-        setFs(g.withNewRows(g.catalog, dst, newChunks))
-        catalogDirty = true
+        // streams through the mount's create (parents made, geometry
+        // from the mount's conf); the local source is unlinked only
+        // after the upload committed
+        val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(local))
+        try upload(in, dst) finally in.close()
+        if (cmd == "-moveFromLocal")
+          java.nio.file.Files.delete(java.nio.file.Paths.get(local))
         Nil
       }
 
@@ -801,7 +483,7 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       matched.foreach { m =>
         val p = fileArg(m)
         val target = if (localIsDir) s"$local/${basename(p)}" else local
-        DataPlane.get(cur.rowsForFile(p), p, target)
+        DataPlane.get(snapshot.rowsForFile(p), p, target)
       }
       ShellResult(0, Nil, Nil)
 
@@ -814,9 +496,9 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
       val src = abs(args.head)
       // the reference path errors on a missing source (FileUtil
       // .copyMerge's getFileStatus) — never silently write an empty file
-      if (!cur.catalog.exists(src)) throw new FileNotFoundException(src)
+      if (!catalog.exists(src)) throw new FileNotFoundException(src)
       // dir-scoped prefix: "/data" must not bleed onto "/databak"
-      DataPlane.getmergeTo(cur.currentChunks, dirPrefix(src), args(1), addnl)
+      DataPlane.getmergeTo(snapshot.chunks, dirPrefix(src), args(1), addnl)
       ShellResult(0, Nil, Nil)
 
     case other =>
@@ -825,11 +507,14 @@ final class GraftShell(initial: GraftFs, context: FsContext) {
 }
 
 object GraftShell {
-  /** Alias entries tolerated before a read-boundary flush folds the
-    * translation into the chunk plan and empties the map (see
-    * GraftFs.aliasesApplied): bounds BOTH the driver map and the
-    * per-read translation view at a few hundred branches, while
-    * keeping the fold rare enough that rename stays map-speed.
-    */
-  val AliasFoldCap: Int = 256
+  private def seededMount(initial: GraftFs): GraftFileSystem = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shell-seed")
+    try {
+      GraftShellMain.saveCatalogOnly(
+        initial.catalog.inodes.collect().toSeq, dir.toString)
+      GraftShellMain.stateMount(initial.chunks.sparkSession, Some(dir.toString))
+    } catch {
+      case e: Throwable => graft.PlanHygiene.deleteRecursively(dir); throw e
+    }
+  }
 }

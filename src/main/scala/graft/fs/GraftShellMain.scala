@@ -1,24 +1,26 @@
 package graft.fs
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
-import graft.catalog.FsCatalog
+import graft.catalog.{FsCatalog, Inode}
 
 /** Process-boundary entry point for the shell — the JVM class the
   * `bin/graftfs` wrapper execs, mirroring the reference's executable
   * script layer (`src/main/scripts/snackfs:35` execs
   * `org.apache.hadoop.fs.SnackFSShell "$@"`). One invocation = one
-  * verb: build (or load) the filesystem state, dispatch through
-  * [[GraftShell.run]], print stdout/stderr, exit with the shell's
-  * code (-1 surfaces as 255, the reference's `System.exit(-1)`
-  * behavior).
+  * verb: mount the filesystem state, dispatch through
+  * [[GraftShell.run]] on that mount, print stdout/stderr, exit with
+  * the shell's code (-1 surfaces as 255, the reference's
+  * `System.exit(-1)` behavior).
   *
   * State across invocations: the reference shell is ephemeral per
   * process because Cassandra holds the filesystem; here the persisted
   * catalog + chunk parquet tables play that role. `GRAFT_FS_STATE=dir`
-  * loads `dir/catalog` + `dir/chunks` before the verb and saves both
-  * back after it, so consecutive CLI invocations see each other's
+  * mounts `dir` (saved version plus wal overlay, [[stateMount]]) before
+  * the verb and, after a mutating verb, saves the mount's snapshot back
+  * as a new version, so consecutive CLI invocations see each other's
   * writes. Unset, each invocation starts from an empty root — enough
   * for -help and smoke use.
   */
@@ -61,39 +63,22 @@ object GraftShellMain {
       Files.exists(r.resolve("chunks"))).map(_.toString)
   }
 
-  def loadFs(spark: SparkSession, dir: String): GraftFs = {
-    val root = currentStateDir(dir).getOrElse(sys.error(
-      s"no complete persisted state under $dir"))
-    val baseCat = FsCatalog.load(spark, s"$root/catalog")
-    val baseChunks = spark.read.parquet(s"$root/chunks")
-    // WAL overlay fold (r17): the persisted format is ONE format —
-    // deltas other writers committed (SharedStateStore mutations, the
-    // facade's write-through of post-mount creates) must be visible to
-    // every loader, not only to overlay-aware readers. Bounded by the
-    // wal tail; superseded base rows filter out, upserts and payload
-    // files union in as their own leaves.
-    val (oInodes, oPayloads) =
-      new SharedStateStore(dir).overlaySnapshot()
-    if (oInodes.isEmpty && oPayloads.isEmpty) GraftFs(baseCat, baseChunks)
-    else {
-      import org.apache.spark.sql.functions.col
-      val affected = (oInodes.keys ++ oPayloads.keys).toSeq.distinct
-      val upserts = oInodes.collect { case (_, Some(n)) => n }.toSeq
-      val cat = FsCatalog(
-        baseCat.inodes.filter(!col("path").isin(affected: _*))
-          .unionByName(spark.createDataset(upserts)(FsCatalog.inodeEncoder)))
-      val payloadAffected = oPayloads.keys.toSeq
-      val payloadFiles = oPayloads.values.flatten
-        .map(_.toString).toSeq.distinct.sorted
-      val chunkCols = baseChunks.columns
-      val chunks = (baseChunks.filter(
-          if (payloadAffected.isEmpty) org.apache.spark.sql.functions.lit(true)
-          else !col("path").isin(payloadAffected: _*)) +:
-        payloadFiles.map(f => spark.read.parquet(f)
-          .select(chunkCols.map(col).toIndexedSeq: _*)))
-        .reduce(_ unionByName _)
-      GraftFs(cat, chunks)
-    }
+  /** A private mount of the state dir `dir` (empty when there is none
+    * or it holds no complete state): the mount's own session-free
+    * bootstrap — saved catalog plus the wal overlay — with write-through
+    * OFF, because the caller persists the namespace itself through
+    * [[saveFs]]. A fresh instance, never `FileSystem.get`: Hadoop's
+    * FileSystem cache could hand back (and let the shell write into)
+    * another mount of the same URI.
+    */
+  def stateMount(spark: SparkSession, dir: Option[String]): GraftFileSystem = {
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    dir.foreach(conf.set("graft.mount.state.dir", _))
+    conf.setBoolean("graft.mount.write.through", false)
+    val fs = new GraftFileSystem
+    fs.initialize(java.net.URI.create("graftfs://graft/"), conf)
+    fs
   }
 
   /** Verbs that change filesystem state — only these re-persist it
@@ -104,35 +89,55 @@ object GraftShellMain {
     "-put", "-copyFromLocal", "-moveFromLocal",
     "-mv", "-cp", "-rm", "-rmr", "-mkdir", "-touchz")
 
-  def saveFs(fs: GraftFs, dir: String): Unit = {
+  /** Atomically point `dir`'s CURRENT at `version` — the only visible
+    * commit point of a save. */
+  private def flip(dir: String, version: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    // normalized() flattens both planes to materialized LogicalRDD
-    // leaves AND rewrites chunk rows to CURRENT paths (the alias map is
-    // driver metadata — persisted state must be self-describing
-    // parquet), so the writes below never depend on the previous
-    // version's files (the loaded state's chunks frame still points at
-    // the old dir)
-    val flat = fs.normalized()
+    val tmp = Paths.get(dir, s".$CurrentPtr.tmp")
+    Files.write(tmp, version.getBytes("UTF-8"))
+    Files.move(tmp, Paths.get(dir, CurrentPtr),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The chunk plane of a saved version: range-partitioned + sorted on
+    * the (path, block_id) lookup key, so parquet row-group min/max
+    * statistics prune a one-block fetch (SavedState.readBlock, the
+    * mount's executor-side read path) to one row group of one file
+    * instead of a corpus scan — the same stats-anchoring FsCatalog.save
+    * applies to the catalog.
+    */
+  private[fs] def writeChunks(chunks: DataFrame, chunksDir: String): Unit =
+    chunks
+      .repartitionByRange(8, col("path"), col("block_id"))
+      .sortWithinPartitions("path", "block_id", "sub_id")
+      .write.mode("overwrite").parquet(chunksDir)
+
+  /** A complete version in the FRESH state dir `dir` holding `inodes`
+    * and an empty chunk plane (for [[writeChunks]] to fill later),
+    * written without a Spark job by the session-free
+    * [[SavedStateWriter]] — a metadata-only seed for a mount.
+    */
+  private[fs] def saveCatalogOnly(inodes: Seq[Inode], dir: String): Unit = {
+    val version = java.nio.file.Paths.get(dir, "v0")
+    java.nio.file.Files.createDirectories(version.resolve("catalog"))
+    java.nio.file.Files.createDirectories(version.resolve("chunks"))
+    SavedStateWriter.writeCatalogFile(
+      version.resolve("catalog/part-0.parquet").toString, inodes.sortBy(_.path))
+    flip(dir, "v0")
+  }
+
+  def saveFs(fs: GraftFs, dir: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    // both planes are written in full before the pointer flips and the
+    // previous version is pruned, so a snapshot that still reads the
+    // previous version's files (a mount of this dir) saves safely
     val base = Paths.get(dir)
     Files.createDirectories(base)
     val prev = currentStateDir(dir)
     val version = s"v${System.nanoTime()}"
-    flat.catalog.save(s"$dir/$version/catalog")
-    // range-partitioned + sorted on the (path, block_id) lookup key:
-    // parquet row-group min/max statistics then prune a one-block
-    // fetch (SavedState.readBlock, the mount's executor-side read
-    // path) to one row group of one file instead of a corpus scan —
-    // the same stats-anchoring FsCatalog.save applies to the catalog
-    flat.chunks
-      .repartitionByRange(8, org.apache.spark.sql.functions.col("path"),
-        org.apache.spark.sql.functions.col("block_id"))
-      .sortWithinPartitions("path", "block_id", "sub_id")
-      .write.mode("overwrite").parquet(s"$dir/$version/chunks")
-    // flip the pointer atomically — the only visible commit point
-    val tmp = base.resolve(s".$CurrentPtr.tmp")
-    Files.write(tmp, version.getBytes("UTF-8"))
-    Files.move(tmp, base.resolve(CurrentPtr),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    fs.catalog.save(s"$dir/$version/catalog")
+    writeChunks(fs.chunks, s"$dir/$version/chunks")
+    flip(dir, version)
     // best-effort prune: EVERY v* dir except the one CURRENT now names
     // (not just the immediately-previous version — a save that crashed
     // after writing its planes but before the pointer flip leaves an
@@ -179,7 +184,7 @@ object GraftShellMain {
     val mutating = MutatingVerbs.contains(argv(0))
     // CONCURRENT CLI invocations (r17 — supersedes the single-driver
     // documented contract for mutations): a mutating invocation
-    // brackets its whole load → verb → save cycle under the SHARED
+    // brackets its whole mount → verb → save cycle under the SHARED
     // namespace lock (SharedStateStore.NamespaceKey — the same key
     // every writer of this layout uses), so two processes can no
     // longer interleave their cycles and silently drop each other's
@@ -204,10 +209,15 @@ object GraftShellMain {
             throw new IllegalStateException("unreachable")
         }
       }
-    // wal deltas committed BEFORE this invocation's load are folded
-    // into the version this invocation saves (loadFs applies them), so
-    // a successful save prunes exactly those — never deltas a later
-    // writer might append (impossible while the lock is held anyway)
+    def releaseLock(): Unit = heldLock.foreach { case (root, tok) =>
+      graft.catalog.SharedFileLocks.release(root,
+        SharedStateStore.NamespaceKey, tok)
+    }
+    // wal deltas committed BEFORE this invocation's mount are folded
+    // into the version this invocation saves (the mount's bootstrap
+    // applies the overlay), so a successful save prunes exactly those —
+    // never deltas a later writer might append (impossible while the
+    // lock is held anyway)
     def walDeltas(d: String): Seq[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._
       val w = java.nio.file.Paths.get(d, "wal")
@@ -223,7 +233,7 @@ object GraftShellMain {
       if (mutating) stateDir.map(walDeltas).getOrElse(Seq.empty)
       else Seq.empty
     // Three distinguishable states, two of them safe:
-    //  * complete persisted state → load it;
+    //  * complete persisted state → mount it;
     //  * NO pointer (fresh dir, or the legacy flat layout's torn save
     //    — catalog alone with no chunks) → start empty: nothing
     //    committed has ever been visible here;
@@ -236,10 +246,9 @@ object GraftShellMain {
     //    Falling back to empty here would let the next mutating verb
     //    re-save and PERMANENTLY discard the committed filesystem
     //    with no error anywhere.
-    val initial = stateDir match {
-      case Some(d) if currentStateDir(d).isDefined => loadFs(spark, d)
-      case Some(d) if java.nio.file.Files.exists(
-            java.nio.file.Paths.get(d, CurrentPtr)) =>
+    stateDir.filter(d => currentStateDir(d).isEmpty &&
+        java.nio.file.Files.exists(java.nio.file.Paths.get(d, CurrentPtr)))
+      .foreach { d =>
         System.err.println(
           s"graftfs: state pointer $d/$CurrentPtr names a version " +
             "directory that is missing or incomplete — committed state " +
@@ -247,12 +256,13 @@ object GraftShellMain {
             "Refusing to start from an empty filesystem; restore the " +
             s"version directory or remove $d/$CurrentPtr to explicitly " +
             "reset.")
+        releaseLock()
         spark.stop()
         sys.exit(254)
-        throw new IllegalStateException("unreachable")
-      case _ => emptyFs(spark)
-    }
-    val shell = new GraftShell(initial,
+      }
+    // the shell runs on a mount of the state dir (or an empty one)
+    val mount = stateMount(spark, stateDir)
+    val shell = new GraftShell(mount,
       FsContext.initialize("graftfs://graft",
         Option(System.getProperty("user.name")).getOrElse("graft")))
     val code =
@@ -262,19 +272,16 @@ object GraftShellMain {
         res.err.foreach(System.err.println)
         if (res.code == 0 && mutating)
           stateDir.foreach { d =>
-            val snap = shell.fs
-            try saveFs(snap, d) finally shell.releaseSnapshot(snap)
-            // the saved version FOLDED the pre-load wal tail (loadFs
-            // overlay): prune exactly those deltas, after the flip
+            saveFs(mount.graftFs, d)
+            // the saved version FOLDED the pre-mount wal tail: prune
+            // exactly those deltas, after the flip
             foldedDeltas.foreach(graft.PlanHygiene.deleteRecursively)
           }
         res.code
       } finally {
         shell.close()
-        heldLock.foreach { case (root, tok) =>
-          graft.catalog.SharedFileLocks.release(root,
-            SharedStateStore.NamespaceKey, tok)
-        }
+        mount.close()
+        releaseLock()
       }
     spark.stop()
     sys.exit(if (code == 0) 0 else 255)

@@ -68,10 +68,9 @@ object SavedState {
     readInodes(catalogDir, None)
 
   /** Inodes of a catalog-layout dir matching an optional pushed-down
-    * parquet predicate — the POINT/RANGE form the shell's spilled
-    * namespace tier probes (FsCatalog.save sorts and range-partitions
-    * on `path`, so a path-keyed predicate prunes at row-group
-    * statistics before any decode).
+    * parquet predicate — the POINT/RANGE form (FsCatalog.save sorts and
+    * range-partitions on `path`, so a path-keyed predicate prunes at
+    * row-group statistics before any decode).
     */
   def readInodes(catalogDir: String,
                  filter: Option[org.apache.parquet.filter2.predicate

@@ -12,7 +12,7 @@ import graft.catalog.Inode
 /** SESSION-FREE writers of the persisted filesystem-state layout — the
   * mutation-side twin of [[SavedState]]'s readers: any JVM (no
   * SparkSession, no driver) can append a catalog or chunk parquet file
-  * that Spark (`GraftShellMain.loadFs`), the pruned [[SavedState]]
+  * that Spark (`spark.read.parquet`), the pruned [[SavedState]]
   * readers, and DuckDB all read back identically.
   *
   * Why this exists: the reference's store is DIRECTLY writable by any

@@ -30,7 +30,7 @@ import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps, SharedFileLocks}
   *  - [[compact]] folds base + wal into a fresh version and flips
   *    `CURRENT` with the same WRITE-NEW-THEN-FLIP discipline saveFs
   *    uses, leaving a standard complete layout any consumer
-  *    (`GraftShellMain.loadFs`, the scheme mount, DSv2) reads.
+  *    (the scheme mount and the shell on it, DSv2) reads.
   *
   * Scale posture (100 TB): a mutation writes O(mutation) bytes — one
   * inode row + that file's chunk rows — never O(namespace); a point
@@ -361,7 +361,7 @@ final class SharedStateStore(stateDir: String,
   /** Fold base + wal into a fresh complete version and flip CURRENT —
     * the LSM compaction verb. After it, the state dir is a standard
     * saveFs layout with an empty wal: every consumer of the persisted
-    * format (loadFs, the scheme mount, SavedState readers, DuckDB)
+    * format (the scheme mount, SavedState readers, DuckDB)
     * sees the full namespace with zero replay. Session-free and exact;
     * O(namespace) like every LSM fold — run off-peak, or distribute
     * the same fold as a Spark job over the identical parquet files

@@ -14,21 +14,21 @@ object ShellHelp {
     "-du" -> "-du <path>: per-child aggregate byte counts under a path (FsCatalog.du)",
     "-dus" -> "-dus <path>: single summary byte count for a subtree (FsCatalog.dus)",
     "-count" -> "-count [-q] <path>: directory, file and byte totals for a subtree; -q prefixes quota columns (unset: none/inf) (FsCatalog.countSummary)",
-    "-mv" -> ("-mv <src> <dst>: rename a file or subtree in one distributed prefix-rewrite (GraftFs.rename; cascades to data chunks). " +
+    "-mv" -> ("-mv <src> <dst>: rename a file or subtree by re-keying the mount's inode cache and payload index; no bytes move (GraftFileSystem.rename). " +
       "Note: with multiple sources the rename keeps the reference's RenameCommand quirk — a destination that already exists (even a directory) throws 'Destination already exists', so multi-source -mv always fails; use -cp + -rm to fan into a directory (RenameCommand.scala:81-84)."),
-    "-cp" -> "-cp <src> <dst>: copy a file or subtree on both catalog and data planes (GraftFs.copy)",
-    "-rm" -> "-rm <path>: delete a file; refuses non-empty directories (GraftFs.delete(recursive = false))",
-    "-rmr" -> "-rmr <path>: delete a subtree and its data chunks (GraftFs.delete(recursive = true))",
-    "-put" -> "-put <local> <path>: import local bytes as chunked subblock rows (DataPlane.put)",
-    "-copyFromLocal" -> "-copyFromLocal <local> <path>: alias of -put (DataPlane.put)",
-    "-moveFromLocal" -> "-moveFromLocal <local> <path>: -put, then unlink the local source once chunk rows are materialized (DataPlane.moveFromLocal)",
+    "-cp" -> "-cp <src> <dst>: copy a file or subtree — bytes read through the data plane, re-created through the mount (GraftFileSystem.create)",
+    "-rm" -> "-rm <path>: delete a file; refuses non-empty directories (GraftFileSystem.delete(recursive = false))",
+    "-rmr" -> "-rmr <path>: delete a subtree and its payload (GraftFileSystem.delete(recursive = true))",
+    "-put" -> "-put <local> <path>: import local bytes, streamed one subblock at a time (GraftFileSystem.create)",
+    "-copyFromLocal" -> "-copyFromLocal <local> <path>: alias of -put (GraftFileSystem.create)",
+    "-moveFromLocal" -> "-moveFromLocal <local> <path>: -put, then unlink the local source once the upload committed (GraftFileSystem.create)",
     "-get" -> "-get [-ignoreCrc] [-crc] <path> <local>: export a file's reassembled bytes to a local sink; crc flags are accepted no-ops (no CRC sidecars exist) (DataPlane.get)",
     "-copyToLocal" -> "-copyToLocal [-ignoreCrc] [-crc] <path> <local>: alias of -get (DataPlane.get)",
     "-getmerge" -> "-getmerge <dir> <local> [addnl]: concatenate every file under a prefix in path order; addnl=true appends a newline after each file (DataPlane.getmerge)",
     "-cat" -> "-cat <path>: print a file's bytes via ordered block reassembly (DataPlane.cat)",
     "-text" -> "-text <path>: like -cat but decodes by magic — gzip and PK-zip inflate, SequenceFiles render key\\tvalue per record; other payloads pass through as UTF-8 (DataPlane.text)",
-    "-mkdir" -> "-mkdir <path>: create a directory and its ancestors; fails on a file conflict (FsCatalog.mkdirs)",
-    "-touchz" -> "-touchz <path>: create a zero-length file (FsCatalog.touchz)",
+    "-mkdir" -> "-mkdir <path>: create a directory and its ancestors; fails on a file conflict (GraftFileSystem.mkdirs)",
+    "-touchz" -> "-touchz <path>: create a zero-length file (GraftFileSystem.create)",
     "-test" -> "-test -[ezd] <path>: existence / zero-length / is-directory probes (FsCatalog.testE/testZ/testD)",
     "-stat" -> "-stat <path>: file status — length, type, modification time (FsCatalog.getFileStatus)",
     "-tail" -> "-tail <path>: last 1 KB, reading only the subblocks that overlap it (DataPlane.tail)",

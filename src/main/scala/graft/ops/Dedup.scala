@@ -854,8 +854,14 @@ object Dedup {
     * pattern. At 100 TB the pair set is orders smaller than the corpus
     * (it only holds near-duplicates), so every join here is small-side.
     *
+    * Rounds count from the fused init: the label init IS propagation
+    * round 1, and loop iteration i (0-based) runs round i+2. So
+    * `maxIters` bounds the LOOP — at most `maxIters` + 1 propagation
+    * rounds, the init included, run before non-convergence fails.
+    *
     * `pointerJump` (default on) adds the doubling step after each
-    * propagation ONCE the graph has proven deep (round > `jumpAfter`):
+    * propagation ONCE the graph has proven deep: from loop iteration
+    * `jumpAfter` on, i.e. propagation round > `jumpAfter` + 1 —
     * labels shortcut through themselves (new label = label(label), one
     * self-join — sound because label(x) ≤ x is an invariant of
     * min-propagation, so chains only contract). Rounds drop from

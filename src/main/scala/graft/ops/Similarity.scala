@@ -235,19 +235,30 @@ object Similarity {
     * NEVER shrinks below k. Deterministic: first-K seed, no RNG.
     */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int,
-                      seeds: Option[DataFrame] = None): DataFrame = {
+                      seeds: Option[DataFrame] = None): DataFrame =
+    kmeansCentroidsCounted(corpus, k, iters, seeds)._1
+
+  /** [[kmeansCentroids]] plus, per Lloyd round, how many partials the
+    * driver collected (see [[lloydRoundSliced]]) — the spec's entry
+    * point for the driver bound, returned per call so concurrent
+    * trainings never see each other's counts.
+    */
+  private[ops] def kmeansCentroidsCounted(corpus: DataFrame, k: Int,
+      iters: Int, seeds: Option[DataFrame] = None): (DataFrame, Seq[Int]) = {
     val spark = corpus.sparkSession
     val seedDf = seeds.getOrElse(
       corpus.filter(col("vec_id") < k).select(col("vec_id"), col("embedding")))
     var cents = collectVecs(seedDf)
+    val collected = Seq.newBuilder[Int]
     if (cents.nonEmpty) {
       for (_ <- 0 until iters) {
-        val agg = lloydRoundSliced(corpus,
-          Array((0, Int.MaxValue)), Array(cents)).head
-        cents = meansOrPrev(cents, agg)
+        val (agg, n) = lloydRoundSliced(corpus,
+          Array((0, Int.MaxValue)), Array(cents))
+        collected += n
+        cents = meansOrPrev(cents, agg.head)
       }
     }
-    centroidFrame(spark, cents)
+    (centroidFrame(spark, cents), collected.result())
   }
 
   /** (vec_id, embedding) rows collected and sorted by id — the
@@ -299,7 +310,8 @@ object Similarity {
     * sub-vector, cents(p) its current centroids sorted by id. Returns,
     * per problem, (per-centroid per-dim sums, per-centroid per-dim
     * counts), reduced over partitions IN PARTITION ORDER so the double
-    * summation is deterministic. Assignment replicates graft_cosine
+    * summation is deterministic, together with the number of partials
+    * the driver collected for that fold. Assignment replicates graft_cosine
     * (dot over min length, norms over each side's full slice, 0.0 on a
     * zero norm) with ties to the lower centroid id. This is what lets
     * [[pqCodebooks]] train all m subspaces in iters+1 jobs instead of
@@ -318,7 +330,7 @@ object Similarity {
       corpus: DataFrame,
       slices: Array[(Int, Int)],
       cents: Array[Array[(Long, Array[Float])]])
-      : Array[(Array[Array[Double]], Array[Array[Long]])] = {
+      : (Array[(Array[Array[Double]], Array[Array[Long]])], Int) = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val centVecs = cents.map(_.map(_._2))
@@ -420,7 +432,6 @@ object Similarity {
           .collect()
           .sortBy(_._1)
       }
-    lastDriverPartials = collected.length
     val acc = cents.map(c =>
       (Array.fill(c.length)(new Array[Double](0)),
         Array.fill(c.length)(new Array[Long](0))))
@@ -428,16 +439,13 @@ object Similarity {
       mergePartials(acc, sums, cnts)
     }
     bc.destroy()
-    acc
+    (acc, collected.length)
   }
 
   /** The cap on per-Lloyd-round partials the DRIVER receives (see
-    * [[lloydRoundSliced]]); package-visible so the spec can pin it, and
-    * [[lastDriverPartials]] records what the last round actually
-    * collected (a test hook, not a control path).
+    * [[lloydRoundSliced]]); package-visible so the spec can pin it.
     */
   private[ops] val maxDriverPartials = 64
-  @volatile private[ops] var lastDriverPartials: Int = -1
 
   /** Element-wise (sums, cnts) merge of one partial into `acc`,
     * growing ragged per-centroid arrays as needed — the single shared
@@ -1037,7 +1045,7 @@ object Similarity {
     * probed bucket scan with zero extra shuffle and the partition
     * pruning is untouched. A periodic rebuild (saveIvfIndex over the
     * surviving corpus) absorbs the tombstones — the compaction
-    * amortization, exactly like the shell's spill tier. Search results
+    * amortization of an LSM tombstone set. Search results
     * are IDENTICAL to a rebuilt index with the same centroids
     * (assignment is per-row deterministic) — driver-gated by
     * ann_index_delete.
@@ -1087,7 +1095,7 @@ object Similarity {
     }
     if (seedRows.nonEmpty) {
       for (_ <- 0 until iters) {
-        val agg = lloydRoundSliced(corpus, slices, cents)
+        val (agg, _) = lloydRoundSliced(corpus, slices, cents)
         cents = Array.tabulate(m)(s => meansOrPrev(cents(s), agg(s)))
       }
     }

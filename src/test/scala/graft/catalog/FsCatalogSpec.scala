@@ -162,6 +162,25 @@ class FsCatalogSpec extends AnyFlatSpec with Matchers {
     after must be(before)
   }
 
+  it must "produce the identical catalog via the renameFrames distributed fallback" in {
+    val cat = CatalogBuilder.fromEntries(spark, Seq(
+      ("/", true, 0L),
+      ("/a", true, 0L),
+      ("/a/f1", false, 10L),
+      ("/a/sub", true, 0L),
+      ("/a/sub/f3", false, 30L),
+      ("/b", false, 5L)))
+    def canon(c: FsCatalog) = c.inodes.collect()
+      .map(n => (n.path, n.parentPath, n.isDir, n.length)).sortBy(_._1).toSeq
+    val viaDriver = canon(cat.renameFrames("/a", "/z"))
+    val viaFrames = canon(cat.renameFrames("/a", "/z", maxCollected = 2))
+    viaFrames must be(viaDriver)
+    viaFrames.map(_._1) must contain allOf ("/z", "/z/f1", "/z/sub", "/z/sub/f3")
+    // root-adjacent parent rewrite: the subtree root's parent is dst's
+    viaFrames.find(_._1 == "/z").get._2 must be("/")
+    viaFrames.find(_._1 == "/z/sub/f3").get._2 must be("/z/sub")
+  }
+
   behavior of "du/dus/count (D3-D5)"
 
   it must "aggregate per-child and total byte counts" in {

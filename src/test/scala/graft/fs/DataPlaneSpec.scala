@@ -87,30 +87,6 @@ class DataPlaneSpec extends AnyFlatSpec with Matchers {
     DataPlane.tail(chunks, 1024).collect()(0).getAs[Array[Byte]]("data") must be(payload)
   }
 
-  behavior of "put/get (D9/D10)"
-
-  it must "round-trip a local file through the chunked store" in {
-    val src = java.nio.file.Files.createTempFile("graft-put-", ".bin")
-    val dst = java.nio.file.Files.createTempFile("graft-get-", ".bin")
-    val payload = bytes(1234)
-    java.nio.file.Files.write(src, payload)
-    val chunks = DataPlane.put(spark, src.toString, "/fs/upload.bin", 100, 300)
-    chunks.count() must be(13L) // ceil(1234/100)
-    DataPlane.get(chunks, "/fs/upload.bin", dst.toString)
-    java.nio.file.Files.readAllBytes(dst) must be(payload)
-  }
-
-  it must "moveFromLocal: import, then unlink the local source" in {
-    val src = java.nio.file.Files.createTempFile("graft-mv-", ".bin")
-    val dst = java.nio.file.Files.createTempFile("graft-mvget-", ".bin")
-    val payload = bytes(555)
-    java.nio.file.Files.write(src, payload)
-    val chunks = DataPlane.moveFromLocal(spark, src.toString, "/fs/moved.bin", 100, 300)
-    java.nio.file.Files.exists(src) must be(false)
-    DataPlane.get(chunks, "/fs/moved.bin", dst.toString)
-    java.nio.file.Files.readAllBytes(dst) must be(payload)
-  }
-
   behavior of "readRange (C5/C6)"
 
   it must "serve an arbitrary byte range from overlapping subblocks only" in {

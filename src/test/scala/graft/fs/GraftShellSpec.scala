@@ -40,6 +40,13 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
       FsContext.initialize("graftfs://test"))
   }
 
+  /** `dir`'s namespace as a state-dir mount bootstraps it (saved
+    * version plus wal overlay); the caller closes the mount. */
+  private def mounted(dir: java.nio.file.Path): (GraftFileSystem, GraftFs) = {
+    val m = GraftShellMain.stateMount(spark, Some(dir.toString))
+    (m, m.graftFs)
+  }
+
   it must "arity-check verbs and reject unknown commands with usage text" in {
     val sh = newShell()
     val r1 = sh.run(Array("-mv", "/a/f1"))
@@ -326,9 +333,10 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
     try GraftShellMain.saveFs(snap, dir.toString)
     finally sh.releaseSnapshot(snap)
     sh.close()
-    val re = GraftShellMain.loadFs(spark, dir.toString)
+    val (m, re) = mounted(dir)
     re.catalog.retrieve("/persisted").exists(_.isDir) must be(true)
     re.catalog.retrieve("/persisted/marker").exists(!_.isDir) must be(true)
+    m.close()
     val w = Files.walk(dir)
     try w.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -353,8 +361,9 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
     val halfVersion = dir.resolve("v9999999999999999999")
     Files.createDirectories(halfVersion.resolve("catalog"))
     GraftShellMain.currentStateDir(dir.toString) must be(defined)
-    val re = GraftShellMain.loadFs(spark, dir.toString)
+    val (m, re) = mounted(dir)
     re.catalog.retrieve("/committed").isDefined must be(true)
+    m.close()
     // crash window 2: the legacy flat layout with catalog but no
     // chunks must read as "no state" (empty-fs fallback), not throw
     val flat = Files.createTempDirectory("graft-shell-flat")
@@ -394,9 +403,10 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
       } finally l.close()
     }
     versions.size must be(1) // superseded version pruned
-    val re = GraftShellMain.loadFs(spark, dir.toString)
+    val (m, re) = mounted(dir)
     re.catalog.retrieve("/a").isDefined must be(true)
     re.catalog.retrieve("/b").isDefined must be(true)
+    m.close()
     val w = Files.walk(dir)
     try w.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -669,26 +679,82 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
     // and the state survives the storm coherently
     sh.run(Array("-test", "-d", "/thr")).code must be(0)
   }
-  it must "fold the alias map into the plan past AliasFoldCap and keep answering" in {
-    // the alias-map growth bound: a session renaming forever must not
-    // accumulate one translation branch per rename — past the cap the
-    // read-boundary flush folds the map into the plan and empties it
-    val sh = newShell()
-    sh.run(Array("-mkdir", "/fold")).code must be(0)
-    (0 until 300).foreach { i =>
-      sh.run(Array("-touchz", s"/fold/t$i")).code must be(0)
-      sh.run(Array("-mv", s"/fold/t$i", s"/fold/m$i")).code must be(0)
+  behavior of "GraftShell on its mount"
+
+  it must "round-trip a local file through -put and -get" in {
+    // chunked at the session's spark.graft.* geometry: 100 B subblocks
+    spark.conf.set(GraftConfig.SubBlockSizeKey, "100")
+    spark.conf.set(GraftConfig.BlockSizeKey, "300")
+    try {
+      val sh = newShell()
+      val src = Files.createTempFile("graft-put-", ".bin")
+      val dst = Files.createTempFile("graft-get-", ".bin")
+      val payload = new Array[Byte](1234)
+      new scala.util.Random(42).nextBytes(payload)
+      Files.write(src, payload)
+      sh.run(Array("-put", src.toString, "/fs/upload.bin")).code must be(0)
+      val s = sh.fs
+      try s.chunks.filter(col("path") === "/fs/upload.bin").count() must
+        be(13L) // ceil(1234/100)
+      finally sh.releaseSnapshot(s)
+      sh.run(Array("-get", "/fs/upload.bin", dst.toString)).code must be(0)
+      Files.readAllBytes(dst) must be(payload)
+      sh.close()
+      Files.delete(src); Files.delete(dst)
+    } finally {
+      spark.conf.unset(GraftConfig.SubBlockSizeKey)
+      spark.conf.unset(GraftConfig.BlockSizeKey)
     }
-    val snap = sh.fs // read boundary: flush + fold
-    try snap.aliases.entries.size must be <= GraftShell.AliasFoldCap
-    finally sh.releaseSnapshot(snap)
-    // the folded state still answers — bytes survive a rename ACROSS
-    // the fold boundary
-    sh.run(Array("-cp", "/a/f1", "/fold/data")).code must be(0)
-    sh.run(Array("-mv", "/fold/data", "/fold/moved")).code must be(0)
-    val r = sh.run(Array("-cat", "/fold/moved"))
-    r.code must be(0)
-    r.out.head must be("0123456789")
-    sh.run(Array("-test", "-e", "/fold/m299")).code must be(0)
+  }
+
+  it must "-moveFromLocal: import, then unlink the local source" in {
+    val sh = newShell()
+    val src = Files.createTempFile("graft-mv-", ".bin")
+    val dst = Files.createTempFile("graft-mvget-", ".bin")
+    val payload = new Array[Byte](555)
+    new scala.util.Random(42).nextBytes(payload)
+    Files.write(src, payload)
+    sh.run(Array("-moveFromLocal", src.toString, "/fs/moved.bin")).code must be(0)
+    Files.exists(src) must be(false)
+    sh.run(Array("-get", "/fs/moved.bin", dst.toString)).code must be(0)
+    Files.readAllBytes(dst) must be(payload)
+    sh.close()
+    Files.delete(dst)
+  }
+
+  it must "run -mkdir/-touchz/-mv/-rm/-put as mount verbs with ZERO Spark jobs" in {
+    // the shell's mutations are the mount's pure-memory verbs: the
+    // job-count listener (SchemeMountSpec's proof) stays flat across a
+    // long session of mutating verbs, uploads included — no verb
+    // schedules work and no state cell checkpoints behind them
+    val sh = newShell()
+    val local = Files.createTempFile("graft-shell-nojobs", ".txt")
+    Files.write(local, "no jobs here".getBytes)
+    Thread.sleep(300) // let the seed's job events drain first
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      (0 until 30).foreach { i =>
+        sh.run(Array("-mkdir", s"/nj/d$i")).code must be(0)
+        sh.run(Array("-touchz", s"/nj/d$i/t")).code must be(0)
+        sh.run(Array("-mv", s"/nj/d$i/t", s"/nj/d$i/u")).code must be(0)
+        sh.run(Array("-put", local.toString, s"/nj/d$i/p")).code must be(0)
+        sh.run(Array("-rm", s"/nj/d$i/u")).code must be(0)
+      }
+      sh.run(Array("-rmr", "/nj")).code must be(0)
+      Thread.sleep(300) // let the listener bus drain
+      counter.n.get() must be(0)
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      sh.close()
+      Files.delete(local)
+    }
+  }
+
+  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      n.incrementAndGet()
   }
 }

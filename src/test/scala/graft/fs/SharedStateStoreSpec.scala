@@ -9,7 +9,7 @@ import org.scalatest.matchers.must.Matchers
   * mutations against ONE persisted namespace with no lost updates —
   * plus the in-process halves: cross-instance visibility, torn-commit
   * invisibility, and compaction folding to the standard layout that
-  * Spark (`GraftShellMain.loadFs`) reads back identically.
+  * a state-dir mount's Spark snapshot reads back identically.
   */
 class SharedStateStoreSpec extends AnyFlatSpec with Matchers {
 
@@ -91,15 +91,18 @@ class SharedStateStoreSpec extends AnyFlatSpec with Matchers {
     new String(s.retrieveSubBlock("/data/big", 28L, 8L)) must be(
       new String(payload.slice(28, 36)))
 
-    // INTEROP: Spark's loader reads the SAME namespace from the folded
-    // layout — the persisted format is one format, not two
-    val fs = GraftShellMain.loadFs(spark, dir)
+    // INTEROP: a state-dir mount's Spark snapshot reads the SAME
+    // namespace from the folded layout — the persisted format is one
+    // format, not two
+    val mount = GraftShellMain.stateMount(spark, Some(dir))
+    val fs = mount.graftFs
     val sparkPaths = fs.catalog.inodes.toDF.select("path")
       .collect().map(_.getString(0)).sorted.toSeq
     sparkPaths must be(("/" +: before.map(_._1)).sorted)
     val sparkBytes = DataPlane.cat(fs.chunks, "/data/big")
       .collect().head.getAs[Array[Byte]]("data")
     sparkBytes must be(payload)
+    mount.close()
   }
 
   behavior of "SharedStateStore (forked multi-driver interleaving)"

@@ -5,16 +5,15 @@ import org.scalatest.matchers.must.Matchers
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.catalog.{CatalogBuilder, FsCatalog}
+import graft.catalog.FsCatalog
 
-/** The r14 verdict's namespace-mirror guard, proven at scale: a shell
-  * seeded with 1,000,000 synthetic inodes must come up, answer verbs,
-  * and mutate subtrees without OOM — and the measured per-inode driver
-  * cost (printed by the first case, recorded in SURVEY §8) is what
-  * justifies the 10 M default of `spark.graft.shell.max.inodes`. The
-  * low-cap case pins the LOUD half of the contract (one shout, verbs
-  * keep working), and the rename case pins the bounded-collect /
-  * distributed-fallback equivalence in FsCatalog.renameFrames.
+/** The namespace-cache guard, proven at scale: a shell seeded with
+  * 1,000,000 synthetic inodes must come up, answer verbs, and mutate
+  * subtrees without OOM — and the measured per-inode driver cost of its
+  * mount's inode cache (printed by the first case, recorded in SURVEY
+  * §8) is what justifies the 10 M default of `graft.mount.max.inodes`.
+  * The low-cap case pins the LOUD half of the contract (one shout,
+  * verbs keep working).
   */
 class ShellScaleSpec extends AnyFlatSpec with Matchers {
   private lazy val spark = TestSpark.spark
@@ -63,17 +62,21 @@ class ShellScaleSpec extends AnyFlatSpec with Matchers {
   behavior of "GraftShell at 1M inodes"
 
   it must "seed, answer, and mutate a 1M-inode namespace without OOM" taggedAs graft.SlowTest in {
-    val cat = bigCatalog()
+    // the shell's seed is a saved state; the measured cost is the
+    // mount's inode cache (plus its child and payload indexes) over it
+    val dir = java.nio.file.Files.createTempDirectory("graft-scale-state")
+    GraftShellMain.saveFs(
+      GraftFs(bigCatalog(), GraftShellMain.emptyFs(spark).chunks), dir.toString)
     val before = usedMb()
-    val sh = new GraftShell(GraftFs(cat, GraftShellMain.emptyFs(spark).chunks),
-      FsContext.initialize("graftfs://scale"))
+    val mount = GraftShellMain.stateMount(spark, Some(dir.toString))
     val after = usedMb()
     val perInode = (after - before) * 1048576.0 / (NFiles + NDirs + 1)
-    info(f"mirror cost ≈ $perInode%.0f B/inode " +
+    info(f"mount cache cost ≈ $perInode%.0f B/inode " +
       f"(${after - before} MiB for ${NFiles + NDirs + 1} inodes)")
     perInode must be < 2048.0 // the SURVEY §8 ceiling argument
+    val sh = new GraftShell(mount, FsContext.initialize("graftfs://scale"))
 
-    // read verbs answer from the mirror-backed frame
+    // read verbs answer from the cache-backed frame
     sh.run(Array("-ls", "/d5")).out.head must be("Found 999 items")
     val lsRoot = sh.run(Array("-ls", "/"))
     lsRoot.out.head must be(s"Found $NDirs items")
@@ -91,185 +94,26 @@ class ShellScaleSpec extends AnyFlatSpec with Matchers {
     // aggregate over the full namespace still runs (distributed fold)
     sh.run(Array("-dus", "/")).code must be(0)
     // 1M inodes sit UNDER the 10M default: the cap must not have fired
-    sh.mirrorCapExceeded must be(false)
+    sh.inodeCapExceeded must be(false)
     sh.close()
+    mount.close()
+    graft.PlanHygiene.deleteRecursively(dir)
   }
 
   it must "shout once past the cap and keep working" taggedAs graft.SlowTest in {
-    spark.conf.set("spark.graft.shell.max.inodes", "10")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("graft.mount.max.inodes", "10")
     try {
       val sh = new GraftShell(GraftShellMain.emptyFs(spark),
         FsContext.initialize("graftfs://tiny"))
-      sh.mirrorCapExceeded must be(false)
+      sh.inodeCapExceeded must be(false)
       (1 to 12).foreach(i => sh.run(Array("-mkdir", s"/m$i")).code must be(0))
-      // growth is checked at the deferred-mutation flush (next read)
       sh.run(Array("-ls", "/")).out.head must be("Found 12 items")
-      sh.mirrorCapExceeded must be(true)
+      sh.inodeCapExceeded must be(true)
       // loud, not fatal: verbs keep answering past the cap
       sh.run(Array("-mkdir", "/m13")).code must be(0)
       sh.run(Array("-ls", "/")).out.head must be("Found 13 items")
       sh.close()
-    } finally spark.conf.unset("spark.graft.shell.max.inodes")
-  }
-
-  it must "spill cold inodes past the cap and answer every verb from the tier (2M inodes)" taggedAs graft.SlowTest in {
-    // The r15 verdict's stretch #9: past the cap the namespace no
-    // longer just shouts — cold entries move to the frame-backed
-    // parquet tier (FsCatalog.save layout, SavedState pruned probes)
-    // and EVERY verb keeps answering: point lookups and subtree walks
-    // probe the tier directly, read verbs union it into the catalog
-    // frame, mutations of spilled paths tombstone-and-promote. 2M
-    // seeded inodes against a 100k cap spill at construction (seeds
-    // are cold by definition), leaving the hot tier at cap/2.
-    val N2Dirs = 1000
-    val N2Files = 2000000
-    val ts = lit(new java.sql.Timestamp(1704067200000L))
-    val files = spark.range(N2Files.toLong).select(
-      concat(lit("/d"), col("id") % N2Dirs, lit("/f"), col("id")).as("path"),
-      concat(lit("/d"), col("id") % N2Dirs).as("parentPath"),
-      lit("graft").as("user"), lit("graft").as("group"),
-      lit(420).as("permission"), lit(false).as("isDir"), ts.as("mtime"),
-      array(struct(
-        concat(lit("b"), col("id")).as("id"),
-        lit(0L).as("offset"), lit(1L).as("length"),
-        array(struct(
-          concat(lit("s"), col("id")).as("id"),
-          lit(0L).as("offset"), lit(1L).as("length"))).as("subBlocks")))
-        .as("blocks"))
-    val dirs = spark.range(N2Dirs.toLong).select(
-      concat(lit("/d"), col("id")).as("path"),
-      lit("/").as("parentPath"),
-      lit("graft").as("user"), lit("graft").as("group"),
-      lit(493).as("permission"), lit(true).as("isDir"), ts.as("mtime"),
-      lit(null).cast(files.schema("blocks").dataType).as("blocks"))
-    val root = spark.createDataset(
-      Seq(FsCatalog.dirInode("/", "graft")))(FsCatalog.inodeEncoder)
-    val cat = FsCatalog(root.unionByName(
-      dirs.as(FsCatalog.inodeEncoder)).unionByName(
-      files.as(FsCatalog.inodeEncoder)))
-
-    spark.conf.set("spark.graft.shell.max.inodes", "100000")
-    try {
-      val sh = new GraftShell(
-        GraftFs(cat, GraftShellMain.emptyFs(spark).chunks),
-        FsContext.initialize("graftfs://spill"))
-      // construction spilled the cold bulk; the hot tier holds cap/2
-      sh.spilledGenerations must be >= 1
-      sh.residentInodes.toLong must be <= 100000L
-      info(s"resident after seed-spill: ${sh.residentInodes} inodes, " +
-        s"${sh.spilledGenerations} generation(s)")
-
-      // read verbs answer THROUGH the tier (catalog frame union)
-      sh.run(Array("-ls", "/d5")).out.head must be("Found 2000 items")
-      sh.run(Array("-ls", "/")).out.head must be(s"Found $N2Dirs items")
-      // point verbs probe the tier (pruned parquet lookups)
-      sh.run(Array("-test", "-e", "/d7/f7")).code must be(0)
-      sh.run(Array("-test", "-e", "/d7/nope")).code must be(1)
-      // mutate a SPILLED subtree: tombstone + promote, then verify
-      // both the promoted view and the tombstoned absence
-      sh.run(Array("-mv", "/d7", "/moved")).code must be(0)
-      sh.run(Array("-ls", "/moved")).out.head must be("Found 2000 items")
-      sh.run(Array("-test", "-e", "/d7")).code must be(1)
-      sh.run(Array("-test", "-e", "/moved/f7")).code must be(0)
-      // delete a spilled subtree — tombstones must hide its tier rows
-      sh.run(Array("-rmr", "/d8")).code must be(0)
-      sh.run(Array("-test", "-e", "/d8/f8")).code must be(1)
-      sh.run(Array("-ls", "/")).out.head must be(s"Found ${N2Dirs - 1} items")
-      // hot-tier growth still works beside the tier
-      sh.run(Array("-mkdir", "/extra")).code must be(0)
-      sh.run(Array("-touchz", "/extra/z")).code must be(0)
-      sh.run(Array("-ls", "/extra")).out.head must be("Found 1 items")
-      // full-namespace aggregate runs over the union frame
-      sh.run(Array("-dus", "/")).code must be(0)
-      // and the memory bound HELD through all of it
-      sh.residentInodes.toLong must be <= 100000L
-      sh.close()
-    } finally spark.conf.unset("spark.graft.shell.max.inodes")
-  }
-
-  it must "stay consistent when a spill dies mid-flight (crash injection)" taggedAs graft.SlowTest in {
-    // r17 (the r16 verdict's #7): the spill's commit point is the
-    // in-memory swap AFTER the new generation is fully written — a
-    // kill before it (either side of the write) must leave the
-    // namespace answering identically, and the next spill must
-    // succeed. Both injection points exercised.
-    val ts = lit(new java.sql.Timestamp(1704067200000L))
-    val files = spark.range(400L).select(
-      concat(lit("/c"), col("id") % 4, lit("/f"), col("id")).as("path"),
-      concat(lit("/c"), col("id") % 4).as("parentPath"),
-      lit("graft").as("user"), lit("graft").as("group"),
-      lit(420).as("permission"), lit(false).as("isDir"), ts.as("mtime"),
-      lit(null).cast(
-        graft.catalog.FsCatalog.inodeEncoder.schema("blocks").dataType)
-        .as("blocks"))
-    val dirs = spark.range(4L).select(
-      concat(lit("/c"), col("id")).as("path"), lit("/").as("parentPath"),
-      lit("graft").as("user"), lit("graft").as("group"),
-      lit(493).as("permission"), lit(true).as("isDir"), ts.as("mtime"),
-      lit(null).cast(files.schema("blocks").dataType).as("blocks"))
-    val root = spark.createDataset(
-      Seq(FsCatalog.dirInode("/", "graft")))(FsCatalog.inodeEncoder)
-    val cat = FsCatalog(root.unionByName(
-      dirs.as(FsCatalog.inodeEncoder)).unionByName(
-      files.as(FsCatalog.inodeEncoder)))
-
-    spark.conf.set("spark.graft.shell.max.inodes", "100")
-    try {
-      val sh = new GraftShell(
-        GraftFs(cat, GraftShellMain.emptyFs(spark).chunks),
-        FsContext.initialize("graftfs://spillcrash"))
-      sh.spilledGenerations must be >= 1 // seed spill happened
-      def namespaceView(): (String, Int, Int) = (
-        sh.run(Array("-ls", "/")).out.head,
-        sh.run(Array("-count", "/")).code,
-        sh.run(Array("-test", "-e", "/c2/f6")).code)
-      val before = namespaceView()
-
-      for (point <- Seq("before-write", "after-write")) {
-        sh.spillFaultPoint = Some(point)
-        // grow the hot tier past the cap so the next flush spills;
-        // the injected fault fires inside that spill
-        val crashed = intercept[RuntimeException] {
-          (1 to 120).foreach(i =>
-            sh.run(Array("-mkdir", s"/grow-$point-$i")))
-          sh.run(Array("-ls", "/")) // flush boundary forces the spill
-        }
-        crashed.getMessage must include(s"injected spill fault: $point")
-        sh.spillFaultPoint = None
-        // the PREVIOUS generation is still live: the spilled half of
-        // the namespace answers exactly as before the crash
-        sh.run(Array("-test", "-e", "/c2/f6")).code must be(before._3)
-        sh.run(Array("-count", "/")).code must be(before._2)
-        // and the interrupted spill retries cleanly at the next flush
-        sh.run(Array("-ls", "/c1")).out.head must be("Found 100 items")
-      }
-      // after both crash-and-recover rounds the full namespace is
-      // intact: every original file + every growth dir accounted for
-      sh.run(Array("-test", "-e", "/c0/f0")).code must be(0)
-      sh.run(Array("-test", "-e", "/grow-before-write-5")).code must be(0)
-      sh.run(Array("-test", "-e", "/grow-after-write-5")).code must be(0)
-      sh.close()
-    } finally spark.conf.unset("spark.graft.shell.max.inodes")
-  }
-
-  behavior of "FsCatalog.renameFrames past MaxCollectedRename"
-
-  it must "produce the identical catalog via the distributed fallback" taggedAs graft.SlowTest in {
-    val cat = CatalogBuilder.fromEntries(spark, Seq(
-      ("/", true, 0L),
-      ("/a", true, 0L),
-      ("/a/f1", false, 10L),
-      ("/a/sub", true, 0L),
-      ("/a/sub/f3", false, 30L),
-      ("/b", false, 5L)))
-    def canon(c: FsCatalog) = c.inodes.collect()
-      .map(n => (n.path, n.parentPath, n.isDir, n.length)).sortBy(_._1).toSeq
-    val viaDriver = canon(cat.renameFrames("/a", "/z"))
-    val viaFrames = canon(cat.renameFrames("/a", "/z", maxCollected = 2))
-    viaFrames must be(viaDriver)
-    viaFrames.map(_._1) must contain allOf ("/z", "/z/f1", "/z/sub", "/z/sub/f3")
-    // root-adjacent parent rewrite: the subtree root's parent is dst's
-    viaFrames.find(_._1 == "/z").get._2 must be("/")
-    viaFrames.find(_._1 == "/z/sub/f3").get._2 must be("/z/sub")
+    } finally hconf.unset("graft.mount.max.inodes")
   }
 }

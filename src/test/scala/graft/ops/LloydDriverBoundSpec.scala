@@ -18,32 +18,40 @@ import graft.{Tables, TestSpark}
 class LloydDriverBoundSpec extends AnyFlatSpec with Matchers {
   private lazy val spark = TestSpark.spark
 
-  private def centroidRows(parts: Int): Seq[(Long, Seq[Float])] = {
+  private def corpus(parts: Int) = {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .repartition(parts)
       .localCheckpoint(true)
-    Similarity.kmeansCentroids(emb, k = 8, iters = 2)
+    emb
+  }
+
+  private def centroidRows(parts: Int): Seq[(Long, Seq[Float])] =
+    Similarity.kmeansCentroids(corpus(parts), k = 8, iters = 2)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
       .sortBy(_._1)
       .toSeq
+
+  /** Partials the driver collected in the last Lloyd round. */
+  private def driverPartials(parts: Int): Int = {
+    val (cents, perRound) =
+      Similarity.kmeansCentroidsCounted(corpus(parts), k = 8, iters = 2)
+    cents.collect()
+    perRound.last
   }
 
   behavior of "Similarity.lloydRoundSliced driver bound"
 
   it must "receive at most maxDriverPartials partials regardless of partition count" in {
-    Similarity.lastDriverPartials = -1
-    centroidRows(200)
-    Similarity.lastDriverPartials must be > 0
-    Similarity.lastDriverPartials must be <= Similarity.maxDriverPartials
+    val n = driverPartials(200)
+    n must be > 0
+    n must be <= Similarity.maxDriverPartials
   }
 
   it must "keep the flat fold (one partial per partition) below the bound" in {
-    Similarity.lastDriverPartials = -1
-    centroidRows(8)
     // below the bound the collect is one partial per input partition —
     // the pre-r18 path, byte-identical fold order
-    Similarity.lastDriverPartials mustBe 8
+    driverPartials(8) mustBe 8
   }
 
   it must "train deterministically through the tree-merge path" in {
