@@ -8,14 +8,18 @@ import graft.functions.GraftFunctions
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
-  * Two paths, as a 100 TB pipeline needs both:
-  *  - `bruteTopK`: exact cosine top-k of a SMALL broadcast query set
-  *    against the full corpus — one scan, no shuffle of the corpus, the
-  *    correctness baseline.
-  *  - `ivfTopK`: IVF-style scale path — corpus bucketed by nearest of K
-  *    deterministic centroids (computed once, broadcast); queries probe
-  *    `nprobe` nearest buckets only, so the per-query work drops from
-  *    O(N) to O(N * nprobe / K). Same cosine primitive inside buckets.
+  * `bruteTopK` is the exact baseline: cosine top-k of a SMALL broadcast
+  * query set against the full corpus — one scan, no shuffle of the
+  * corpus. Each approximate family has ONE search path, over
+  * quantizers the caller trains once ([[kmeansCentroids]],
+  * [[pqCodebooks]]) and searches many times: IVF is `ivfTopKIndexed`
+  * over an `assignBuckets` index (per-query work O(N·nprobe/K)),
+  * sign-LSH `lshTopK`, SQ8 `sq8TopK`, PQ `pqTopK` (IVF-PQ with one
+  * coarse cell), IVF-PQ `ivfpqTopKWith` / `ivfpqTopKIndexed`. Each is
+  * candidates → exact rerank; [[recall]] gates any of them per query
+  * against the brute twin, and [[identical]] gates two searches that
+  * must agree exactly (persisted vs in-session, incremental vs
+  * rebuilt).
   */
 object Similarity {
 
@@ -132,19 +136,31 @@ object Similarity {
   def rangeRecall(queries: DataFrame, corpus: DataFrame, tau: Double,
                   numCentroids: Int, floor: Double,
                   nprobe: Int = 2, corpusProbe: Int = 1): DataFrame = {
-    val exact = rangeSearch(queries, corpus, tau)
-      .select(col("q_id"), col("neighbor_id"))
-    val pruned = ivfRangeSearch(queries, corpus, tau, numCentroids,
-        nprobe = nprobe, corpusProbe = corpusProbe)
-      .select(col("q_id"), col("neighbor_id"))
-    val hits = exact.join(pruned, Seq("q_id", "neighbor_id"), "left_semi")
+    val keys = Seq("q_id", "neighbor_id")
+    pairSetGate(
+      rangeSearch(queries, corpus, tau).select(keys.map(col): _*),
+      ivfRangeSearch(queries, corpus, tau, numCentroids,
+          nprobe = nprobe, corpusProbe = corpusProbe)
+        .select(keys.map(col): _*),
+      keys, floor)
+  }
+
+  /** The pair-set gate [[rangeRecall]] and [[nearDupRecall]] share:
+    * one (n_exact, recall_ok, precision_ok) row from an exact and an
+    * approximate membership set keyed by `keys`. Recall counts the
+    * exact pairs the approximate pass recovered (≥ `floor` of them);
+    * precision holds when every approximate pair is an exact one.
+    */
+  private def pairSetGate(exact: DataFrame, approx: DataFrame,
+                          keys: Seq[String], floor: Double): DataFrame = {
+    val hits = exact.join(approx, keys, "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(hits.agg(count(lit(1)).as("n_found")))
-      .crossJoin(pruned.agg(count(lit(1)).as("n_pruned")))
+      .crossJoin(approx.agg(count(lit(1)).as("n_approx")))
       .select(
         col("n_exact"),
         (col("n_found") >= col("n_exact") * floor).as("recall_ok"),
-        (col("n_found") === col("n_pruned")).as("precision_ok"))
+        (col("n_found") === col("n_approx")).as("precision_ok"))
   }
 
   /** MMR-diversified top-k — the retrieval RERANKER next to raw
@@ -234,9 +250,8 @@ object Similarity {
     * duplicate) keeps its previous centroid, so the centroid count
     * NEVER shrinks below k. Deterministic: first-K seed, no RNG.
     */
-  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int,
-                      seeds: Option[DataFrame] = None): DataFrame =
-    kmeansCentroidsCounted(corpus, k, iters, seeds)._1
+  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansCentroidsCounted(corpus, k, iters)._1
 
   /** [[kmeansCentroids]] plus, per Lloyd round, how many partials the
     * driver collected (see [[lloydRoundSliced]]) — the spec's entry
@@ -244,11 +259,10 @@ object Similarity {
     * trainings never see each other's counts.
     */
   private[ops] def kmeansCentroidsCounted(corpus: DataFrame, k: Int,
-      iters: Int, seeds: Option[DataFrame] = None): (DataFrame, Seq[Int]) = {
+      iters: Int): (DataFrame, Seq[Int]) = {
     val spark = corpus.sparkSession
-    val seedDf = seeds.getOrElse(
+    var cents = collectVecs(
       corpus.filter(col("vec_id") < k).select(col("vec_id"), col("embedding")))
-    var cents = collectVecs(seedDf)
     val collected = Seq.newBuilder[Int]
     if (cents.nonEmpty) {
       for (_ <- 0 until iters) {
@@ -533,75 +547,6 @@ object Similarity {
     pqCodebooks(sample, m, ksub, iters, dim)
   }
 
-  /** Deterministic k-means++-style seeding: a hash-ordered corpus
-    * sample (ONE TakeOrdered pass — `xxhash64(vec_id)` is a seedless
-    * pseudo-random order, ties broken by id), then a driver-local
-    * farthest-first traversal over the sample in cosine distance. A
-    * first-K seed puts all K start points wherever the id space begins —
-    * on a CLUSTERED corpus that is one region, and Lloyd rounds migrate
-    * co-located centroids out only slowly; farthest-first spreads the
-    * start points across the sample's hull, which is what k-means++
-    * buys, without RNG. The sample bounds driver work to `sampleSize`
-    * rows regardless of corpus scale; traversal is O(sampleSize × k)
-    * dot products. Seed ids are renumbered 0..k-1 in pick order so
-    * bucket ids stay dense and tie-breaks deterministic.
-    *
-    * Measured honestly (PLANS.md round-7): on the near-uniform synthetic
-    * embeddings the hull points this picks are OUTLIERS and tri-SF
-    * recall drops (per-query hits as low as 1/5 vs 3/5 for first-K);
-    * extra Lloyd rounds, not seeding, is what raises the floor there
-    * (iters=3 → min 4/5 tri-SF). So the IVF gate runs first-K + 3
-    * Lloyd rounds, and this seeder is the documented option for
-    * corpora that are actually clustered — use it when bucket-size
-    * skew (LshGuard drops on the `ivf` tag) says first-K landed inside
-    * one cluster.
-    */
-  def farthestPointSeeds(corpus: DataFrame, k: Int,
-                         sampleSize: Int = 1024): DataFrame = {
-    val spark = corpus.sparkSession
-    val sample = corpus
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(math.max(k, sampleSize))
-      .collect()
-      .map(r => r.getSeq[Float](1).toArray)
-    require(sample.nonEmpty, "farthestPointSeeds: empty corpus")
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    val picked = scala.collection.mutable.ArrayBuffer(0)
-    val minDist = Array.fill(sample.length)(Double.MaxValue)
-    while (picked.length < math.min(k, sample.length)) {
-      val last = sample(picked.last)
-      var best = -1; var bestD = -1.0
-      var i = 0
-      while (i < sample.length) {
-        val d = 1.0 - cos(sample(i), last)
-        if (d < minDist(i)) minDist(i) = d
-        // strict > keeps the earliest (hash-ordered) index on ties
-        if (!picked.contains(i) && minDist(i) > bestD) { best = i; bestD = minDist(i) }
-        i += 1
-      }
-      picked += best
-    }
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      picked.zipWithIndex.map { case (si, ci) =>
-        Row(ci.toLong, sample(si).toSeq)
-      }.toSeq: _*)
-    spark.createDataFrame(rows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, containsNull = false)))))
-  }
-
   /** Rank-bounded centroid assignments: every (vector, bucket) pair
     * where the bucket is one of the vector's `nprobe` nearest centroids
     * — the shared primitive behind single-probe bucketing, multi-probe
@@ -682,7 +627,7 @@ object Similarity {
 
   /** Recall gate for the IVF-bucketed near-dup path against the exact
     * all-pairs twin on a bounded slice — the dedup analog of
-    * `ivfRecall`: bucket assignment is centroid-dependent (not
+    * [[recall]]: bucket assignment is centroid-dependent (not
     * SQL-reproducible), but "the bucketed pass recovers >= floor of the
     * true pairs, and invents none" is deterministic and oracle-checkable.
     * Precision 1 is structural (bucketed pairs are exact-cosine
@@ -691,18 +636,12 @@ object Similarity {
   def nearDupRecall(corpus: DataFrame, numCentroids: Int,
                     threshold: Double, floor: Double,
                     nprobe: Int = 2): DataFrame = {
-    val exact = bruteNearDups(corpus, threshold).select(col("id_a"), col("id_b"))
-    val bucketed = embeddingNearDups(corpus, numCentroids, threshold,
-        nprobe = nprobe)
-      .select(col("id_a"), col("id_b"))
-    val hits = exact.join(bucketed, Seq("id_a", "id_b"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(hits.agg(count(lit(1)).as("n_found")))
-      .crossJoin(bucketed.agg(count(lit(1)).as("n_bucketed")))
-      .select(
-        col("n_exact"),
-        (col("n_found") >= col("n_exact") * floor).as("recall_ok"),
-        (col("n_found") === col("n_bucketed")).as("precision_ok"))
+    val keys = Seq("id_a", "id_b")
+    pairSetGate(
+      bruteNearDups(corpus, threshold).select(keys.map(col): _*),
+      embeddingNearDups(corpus, numCentroids, threshold, nprobe = nprobe)
+        .select(keys.map(col): _*),
+      keys, floor)
   }
 
   /** SemDeDup-style semantic deduplication — the keep/drop DECISION
@@ -769,27 +708,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("score"))
   }
 
-  /** Recall gate: per-query overlap of the IVF top-k with the exact
-    * brute-force top-k, thresholded at `floor` — turns the centroid-
-    * dependent (hence not SQL-reproducible) IVF result into a
-    * deterministic, oracle-checkable row set: every query must recover
-    * at least `floor` of its true top-k through the probed buckets.
-    * Both sides run the designed-for shapes (bucket probe vs broadcast
-    * scan); the brute side is itself oracle-checked by ann_brute_topk.
-    */
-  def ivfRecall(queries: DataFrame, corpus: DataFrame,
-                numCentroids: Int, nprobe: Int, k: Int,
-                floor: Int, kmeansIters: Int = 1): DataFrame =
-    recallGate(queries, corpus, k, floor,
-      ivfTopK(queries, corpus, numCentroids, nprobe, k, kmeansIters))
-
-  /** Per-dimension SQ8 quantization bounds (min/max over the corpus) as
-    * ONE single-row frame of (los, his) arrays — a posexplode into a
-    * map-side-combined (dim, lo, hi) aggregation, then folded to arrays
-    * so the bounds BROADCAST to the quantization scan instead of
-    * joining per row. At 100 TB this is one linear pass producing 2×dim
-    * floats.
-    */
   /** Deterministic random-hyperplane (sign-)LSH keys: for each of
     * `tables` hash tables, a `bits`-bit key whose b-th bit is
     * sign(v · h_tb) for a pseudo-random hyperplane h_tb derived from
@@ -880,16 +798,13 @@ object Similarity {
         col("qv"), col("vec").as("ev"))
   }
 
-  /** Recall gate for the LSH path — identical skeleton to [[ivfRecall]]:
-    * per query, at least `floor` of the exact brute top-k must be
-    * recovered, zero-hit queries surface as red rows.
+  /** Per-dimension SQ8 quantization bounds (min/max over the corpus) as
+    * ONE single-row frame of (los, his) arrays — a posexplode into a
+    * map-side-combined (dim, lo, hi) aggregation, then folded to arrays
+    * so the bounds BROADCAST to the quantization scan instead of
+    * joining per row. At 100 TB this is one linear pass producing 2×dim
+    * floats.
     */
-  def lshRecall(queries: DataFrame, corpus: DataFrame, k: Int, floor: Int,
-                tables: Int = 24, bits: Int = 4, dim: Int = 64,
-                seed: Long = 42L): DataFrame =
-    recallGate(queries, corpus, k, floor,
-      lshTopK(queries, corpus, k, tables, bits, dim, seed))
-
   private[ops] def sq8Bounds(corpus: DataFrame): DataFrame =
     corpus
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -951,34 +866,11 @@ object Similarity {
     rerankExact(topCandidates(scored, cand), queries, corpus, k)
   }
 
-  /** Recall gate for the SQ8 path against the exact brute twin — same
-    * deterministic, oracle-checkable contract as `ivfRecall`: every
-    * query must recover >= `floor` of its true top-k through the
-    * quantized candidate pass.
-    */
-  def sq8Recall(queries: DataFrame, corpus: DataFrame, k: Int, cand: Int,
-                floor: Int): DataFrame =
-    recallGate(queries, corpus, k, floor, sq8TopK(queries, corpus, k, cand))
-
-  /** IVF top-k: probe the query's `nprobe` nearest centroid buckets. */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame,
-              numCentroids: Int, nprobe: Int, k: Int,
-              kmeansIters: Int = 1): DataFrame =
-    ivfTopKWith(queries, corpus,
-      kmeansCentroids(corpus, numCentroids, kmeansIters), nprobe, k)
-
-  /** IVF top-k against caller-supplied centroids — lets a long-lived
-    * pipeline train centroids once and search many times (and lets the
-    * seeding/iteration policy be measured independently of the search).
-    */
-  def ivfTopKWith(queries: DataFrame, corpus: DataFrame,
-                  centroids: DataFrame, nprobe: Int, k: Int): DataFrame =
-    ivfTopKIndexed(queries, assignBuckets(corpus, centroids), centroids,
-      nprobe, k)
-
-  /** IVF search over a PREBUILT (vec_id, embedding, bucket) index — the
-    * production read path: the index table is whatever `assignBuckets`
-    * produced, whether computed this session, loaded from parquet
+  /** IVF search — probe each query's `nprobe` nearest of the caller's
+    * centroids — over a PREBUILT (vec_id, embedding, bucket) index: the
+    * IVF family's one search path. The index table is whatever
+    * `assignBuckets` produced, whether computed this session (train
+    * `kmeansCentroids` once, search many), loaded from parquet
     * ([[loadIvfIndex]]), or a persisted history UNION an incrementally
     * assigned new batch (assignment is per-row deterministic given the
     * centroids, so ingest-without-retrain gives bit-identical search
@@ -1124,72 +1016,30 @@ object Similarity {
     * — m table lookups per (row, query) instead of `dim` multiplies,
     * and a dim·32/(m·log₂ksub)-fold smaller index (64× here: 4-byte
     * codes vs 256-byte vectors) in the scan that touches EVERY corpus
-    * row. Encode and score run as per-partition kernels against the
-    * broadcast codebook (the lshKeys precedent — an m×ksub×dsub
-    * nested-HOF expression would re-slice computed arrays per centroid,
-    * the r5 154× trap). Exact rerank over `cand` ≫ k candidates
-    * absorbs quantization error; everything breaks ties by id, so the
-    * result is deterministic end to end.
+    * row. Flat PQ is IVF-PQ with a single coarse cell ([[singleCell]]),
+    * so it runs the composed index's encode → ADC → top-`cand` → exact
+    * rerank path ([[ivfpqTopKWith]]) with `nprobe = 1`: every vector
+    * and every query share the one bucket, so every (query, vector ≠
+    * query) pair is ADC-scored, exactly the flat scan. Encode and
+    * score run as per-partition kernels against the broadcast codebook
+    * (the lshKeys precedent — an m×ksub×dsub nested-HOF expression
+    * would re-slice computed arrays per centroid, the r5 154× trap).
+    * Exact rerank over `cand` ≫ k candidates absorbs quantization
+    * error; everything breaks ties by id, so the result is
+    * deterministic end to end.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, cand: Int,
              m: Int = 4, ksub: Int = 16, iters: Int = 1,
              dim: Int = 64): DataFrame =
-    rerankExact(pqCandidates(queries, corpus, cand, m, ksub, iters, dim),
-      queries, corpus, k)
+    ivfpqTopKWith(queries, corpus, singleCell(corpus.sparkSession),
+      pqCodebooks(corpus, m, ksub, iters, dim), nprobe = 1, k, cand)
 
-  /** The PQ path's candidate set — the top-`cand` (q_id, neighbor_id)
-    * rows by ADC score: the frame the exact rerank fetches float
-    * vectors for (and whose fraction of the corpus the clustered gates
-    * assert).
+  /** Flat PQ's coarse quantizer: ONE centroid, built on the driver (no
+    * training job). Its vector is empty and never matters — with one
+    * cell, the encode argmax and the query probe both pick bucket 0.
     */
-  private[ops] def pqCandidates(queries: DataFrame, corpus: DataFrame,
-                                cand: Int, m: Int, ksub: Int, iters: Int,
-                                dim: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val idx = trainPqIndex(corpus, m, ksub, iters, dim)
-    val qLut = pqLuts(queries, idx)
-
-    // encode+score in ONE corpus pass: every query's ADC score from its
-    // lut — emitted rows are slim (q_id, neighbor_id, ascore) straight
-    // into the bounded top-cand
-    val scored = corpus.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          val (codes, rn) = idx.encode(v)
-          qLut.iterator.filter(_._1 != id).map { case (qid, lut, qn) =>
-            (qid, id, idx.adc(lut, codes, qn, rn))
-          }
-        }
-      }
-      .toDF("q_id", "neighbor_id", "ascore")
-
-    topCandidates(scored, cand)
-  }
-
-  /** IVF-PQ: the composed 100 TB index — the coarse IVF quantizer
-    * prunes the scan to the query's `nprobe` buckets (nprobe/K of the
-    * corpus) and PQ codes shrink what that scan touches (m bytes per
-    * vector), multiplying the two paths' savings exactly as a
-    * production ANN index does (the Jégou et al. IVFADC layout). ONE
-    * index-build pass encodes codes AND the coarse bucket per vector
-    * (both argmax loops share the row); queries probe via the same
-    * zero-shuffle row-local selection as IVF, the probed pairs join the
-    * slim (bucket, codes) index, ADC-score in a kernel, and the exact
-    * float rerank over `cand` candidates absorbs quantization error.
-    * Coarse assignment ties break to the lower centroid id — the same
-    * rule as `probeAssignments` — and everything downstream ties by id,
-    * so the result is deterministic end to end.
-    */
-  def ivfpqTopK(queries: DataFrame, corpus: DataFrame, k: Int, cand: Int,
-                numCentroids: Int = 16, nprobe: Int = 4,
-                coarseIters: Int = 1, m: Int = 4, ksub: Int = 16,
-                iters: Int = 1, dim: Int = 64): DataFrame =
-    rerankExact(
-      topCandidates(ivfpqScored(queries, corpus, numCentroids, nprobe,
-        coarseIters, m, ksub, iters, dim), cand),
-      queries, corpus, k)
+  private def singleCell(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    centroidFrame(spark, Array((0L, Array.empty[Float])))
 
   /** The composed index's PROBED-and-ADC-scored pair frame — every
     * (query, corpus vector) the coarse quantizer let through: its
@@ -1197,15 +1047,11 @@ object Similarity {
     * (~nprobe/K by mass), which the clustered gate asserts from this
     * real frame rather than from parameters.
     */
-  private[ops] def ivfpqScored(queries: DataFrame, corpus: DataFrame,
-                               numCentroids: Int, nprobe: Int,
-                               coarseIters: Int, m: Int, ksub: Int,
-                               iters: Int, dim: Int): DataFrame = {
-    val idx = trainPqIndex(corpus, m, ksub, iters, dim)
-    val coarse = kmeansCentroids(corpus, numCentroids, coarseIters)
+  private def ivfpqScored(queries: DataFrame, corpus: DataFrame,
+                          coarse: DataFrame, idx: PqIndex,
+                          nprobe: Int): DataFrame =
     adcScoreIndexed(queries, encodeIvfPq(corpus, coarse, idx), coarse,
       idx, nprobe)
-  }
 
   /** ONE index-build pass over `corpus`: coarse bucket (argmax cosine
     * over the K centroids, ties to the lower id like probeAssignments)
@@ -1288,10 +1134,24 @@ object Similarity {
                       codebooks: DataFrame): DataFrame =
     encodeIvfPq(batch, coarse, pqIndexOf(codebooks))
 
-  /** IVF-PQ search with caller-supplied coarse centroids + codebooks —
-    * train once, search many (the `ivfTopKWith` analog for the
-    * composed index). Encodes the corpus in-session; for the persisted
-    * layout use [[ivfpqTopKIndexed]] over [[loadIvfPqIndex]].
+  /** IVF-PQ: the composed 100 TB index — the coarse IVF quantizer
+    * prunes the scan to the query's `nprobe` buckets (nprobe/K of the
+    * corpus) and PQ codes shrink what that scan touches (m bytes per
+    * vector), multiplying the two paths' savings exactly as a
+    * production ANN index does (the Jégou et al. IVFADC layout). ONE
+    * index-build pass encodes codes AND the coarse bucket per vector
+    * (both argmax loops share the row); queries probe via the same
+    * zero-shuffle row-local selection as IVF, the probed pairs join the
+    * slim (bucket, codes) index, ADC-score in a kernel, and the exact
+    * float rerank over `cand` candidates absorbs quantization error.
+    * Coarse assignment ties break to the lower centroid id — the same
+    * rule as `probeAssignments` — and everything downstream ties by id,
+    * so the result is deterministic end to end.
+    *
+    * The caller trains the coarse centroids ([[kmeansCentroids]]) and
+    * codebooks ([[pqCodebooks]]) once and searches many times. This
+    * entry encodes the corpus in-session; for the persisted layout use
+    * [[ivfpqTopKIndexed]] over [[loadIvfPqIndex]].
     */
   def ivfpqTopKWith(queries: DataFrame, corpus: DataFrame,
                     coarse: DataFrame, codebooks: DataFrame,
@@ -1397,10 +1257,6 @@ object Similarity {
     }
   }
 
-  private def trainPqIndex(corpus: DataFrame, m: Int, ksub: Int,
-                           iters: Int, dim: Int): PqIndex =
-    pqIndexOf(pqCodebooks(corpus, m, ksub, iters, dim))
-
   /** Driver-side codebook assembly from a (subspace, c_id, cv) frame —
     * freshly trained ([[pqCodebooks]]) or loaded from a persisted
     * layout ([[loadIvfPqIndex]]); m/ksub/dsub are recovered from the
@@ -1478,61 +1334,71 @@ object Similarity {
         .withColumn("score", cosine(corpus)),
       k)
 
-  /** Recall gate for the PQ path against the exact brute twin — the
-    * same deterministic, oracle-checkable contract as `ivfRecall` /
-    * `sq8Recall`: every query must recover ≥ `floor` of its true top-k
-    * through the coded candidate pass.
+  /** Recall gate: per query, the approximate result `approx` (any
+    * search here, passed in whole) must recover ≥ `floor` of the exact
+    * brute-force top-k. This turns a centroid- or hash-dependent (hence
+    * not SQL-reproducible) result into a deterministic,
+    * oracle-checkable (q_id, recall_ok) row set; the brute side is
+    * itself oracle-checked by ann_brute_topk. A query the approximate
+    * side misses — or that neither side returns — reads red instead of
+    * vanishing.
     */
-  def pqRecall(queries: DataFrame, corpus: DataFrame, k: Int, cand: Int,
-               floor: Int, m: Int = 4, ksub: Int = 16, iters: Int = 1,
-               dim: Int = 64): DataFrame =
-    recallGate(queries, corpus, k, floor,
-      pqTopK(queries, corpus, k, cand, m, ksub, iters, dim))
+  def recall(queries: DataFrame, corpus: DataFrame, k: Int, floor: Int,
+             approx: DataFrame): DataFrame =
+    perQuerySetGate(queries, bruteTopK(queries, corpus, k), approx,
+      "recall_ok")((brute, found) =>
+        size(array_intersect(brute, found)) >= floor)
 
-  /** Recall gate for the composed IVF-PQ path — same deterministic,
-    * oracle-checkable contract as every other gate here.
+  /** Exact-set-equality gate between two searches that must agree —
+    * persisted vs in-session index, incremental vs rebuilt: a
+    * (q_id, identical_ok) row per query, ordered by q_id, where
+    * identical_ok demands the two (q_id, neighbor_id) sets coincide AND
+    * carry exactly `k` rows — set equality at exactly k rows is
+    * |A| = |B| = |A ∩ B| = k. A pair in exactly one side shrinks the
+    * intersection below k, a short or missing result fails its own
+    * size check; nothing reads vacuously equal.
     */
-  def ivfpqRecall(queries: DataFrame, corpus: DataFrame, k: Int,
-                  cand: Int, floor: Int, numCentroids: Int = 16,
-                  nprobe: Int = 4, coarseIters: Int = 1, m: Int = 4,
-                  ksub: Int = 16, iters: Int = 1,
-                  dim: Int = 64): DataFrame =
-    recallGate(queries, corpus, k, floor,
-      ivfpqTopK(queries, corpus, k, cand, numCentroids, nprobe,
-        coarseIters, m, ksub, iters, dim))
+  def identical(queries: DataFrame, a: DataFrame, b: DataFrame,
+                k: Int): DataFrame =
+    perQuerySetGate(queries, a, b, "identical_ok")((sa, sb) =>
+      size(sa) === k && size(sb) === k &&
+        size(array_intersect(sa, sb)) === k)
+      .orderBy(col("q_id"))
 
-  /** Shared hit-count gate: every query must recover ≥ `floor` of its
-    * true top-k through the approximate path; zero-hit queries surface
-    * as red rows instead of vanishing.
+  /** The fold both per-query gates share: the two (q_id, neighbor_id)
+    * frames union with a side tag and fold per q_id into their two
+    * neighbor sets (collect_set skips the null the other side's `when`
+    * emits), `pred` judges the pair of sets, and every query of
+    * `queries` gets a row — coalesced to false when neither side
+    * returned it.
     *
     * ONE keyed aggregation pass (r18, guide §2.4 — replace a join
-    * cascade with one keyed pass): both k-sets union with a side tag
-    * and fold per q_id; hits = |approx ∩ brute| via array_intersect of
-    * the two collected sets (collect_set skips the null the other
-    * side's `when` emits). The previous shape — semi-join the two
-    * result frames on (q_id, neighbor_id), re-aggregate by q_id, then
-    * outer-join queries — paid two SortMergeJoins and three Exchanges
-    * of 25-row frames, each an AQE stage-job. Both inputs are top-k
-    * outputs (unique (q_id, neighbor_id) by construction), so set
-    * intersection counts exactly what the semi-join counted. The
-    * per-query aggregate is ≤ |queries| rows by construction — it
-    * BROADCASTS onto the queries frame.
+    * cascade with one keyed pass). The previous shape — semi- or
+    * full-outer-join the two result frames on (q_id, neighbor_id),
+    * re-aggregate by q_id, then outer-join queries — paid two
+    * SortMergeJoins and three Exchanges of 25-row frames, each an AQE
+    * stage-job. Both inputs are top-k outputs (unique (q_id,
+    * neighbor_id) by construction), so the set algebra counts exactly
+    * what the joins counted. The per-query aggregate is ≤ |queries|
+    * rows, but |queries| has no bound here, so the join strategy is
+    * left to AQE's runtime size check rather than a broadcast hint.
     */
-  private def recallGate(queries: DataFrame, corpus: DataFrame, k: Int,
-                         floor: Int, approx: DataFrame): DataFrame = {
-    val tagged = approx.select(col("q_id"), col("neighbor_id"),
-        lit(false).as("is_brute"))
-      .unionByName(bruteTopK(queries, corpus, k)
-        .select(col("q_id"), col("neighbor_id"), lit(true).as("is_brute")))
-    val hits = tagged.groupBy(col("q_id"))
-      .agg(size(array_intersect(
-        collect_set(when(col("is_brute"), col("neighbor_id"))),
-        collect_set(when(!col("is_brute"), col("neighbor_id")))))
-        .cast("long").as("n_hits"))
+  private def perQuerySetGate(queries: DataFrame, a: DataFrame,
+                              b: DataFrame, outCol: String)(
+      pred: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column): DataFrame = {
+    val tagged = a.select(col("q_id"), col("neighbor_id"),
+        lit(true).as("in_a"))
+      .unionByName(b.select(col("q_id"), col("neighbor_id"),
+        lit(false).as("in_a")))
+    val perQ = tagged.groupBy(col("q_id"))
+      .agg(
+        collect_set(when(col("in_a"), col("neighbor_id"))).as("sa"),
+        collect_set(when(!col("in_a"), col("neighbor_id"))).as("sb"))
+      .select(col("q_id"), pred(col("sa"), col("sb")).as("ok"))
     queries.select(col("vec_id").as("q_id"))
-      .join(broadcast(hits), Seq("q_id"), "left_outer")
-      .select(col("q_id"),
-        (coalesce(col("n_hits"), lit(0L)) >= floor).as("recall_ok"))
+      .join(perQ, Seq("q_id"), "left_outer")
+      .select(col("q_id"), coalesce(col("ok"), lit(false)).as(outCol))
   }
 
   /** Per-query candidate-fraction gate: the share of the corpus an
@@ -1595,7 +1461,7 @@ object Similarity {
                             seed: Long = 42L): DataFrame = {
     val cands = lshCandidates(queries, corpus, tables, bits, dim, seed)
     val approx = topKPerQuery(cands.withColumn("score", cosine(corpus)), k)
-    recallGate(queries, corpus, k, floor, approx)
+    recall(queries, corpus, k, floor, approx)
       .join(fractionGate(queries, corpus, maxFrac,
         cands.select(col("q_id"), col("neighbor_id"))), Seq("q_id"))
   }
@@ -1608,9 +1474,10 @@ object Similarity {
                            cand: Int, floor: Int, maxFrac: Double,
                            m: Int = 8, ksub: Int = 16, iters: Int = 1,
                            dim: Int = 64): DataFrame = {
-    val cands = pqCandidates(queries, corpus, cand, m, ksub, iters, dim)
-    recallGate(queries, corpus, k, floor,
-      rerankExact(cands, queries, corpus, k))
+    val idx = pqIndexOf(pqCodebooks(corpus, m, ksub, iters, dim))
+    val cands = topCandidates(ivfpqScored(queries, corpus,
+      singleCell(corpus.sparkSession), idx, nprobe = 1), cand)
+    recall(queries, corpus, k, floor, rerankExact(cands, queries, corpus, k))
       .join(fractionGate(queries, corpus, maxFrac, cands), Seq("q_id"))
   }
 
@@ -1629,19 +1496,6 @@ object Similarity {
     * a candidate cap silently widening — turns its own column FALSE
     * instead of hiding inside a still-green recall.
     */
-  /** Recall gate for a search through a PREBUILT IVF-PQ index
-    * ([[loadIvfPqIndex]]) — lets the bench measure SEARCH cost as its
-    * own claim, separate from the per-rep train+build the composed
-    * channels pay; same deterministic contract as every gate here.
-    */
-  def ivfpqRecallIndexed(queries: DataFrame, codes: DataFrame,
-                         coarse: DataFrame, codebooks: DataFrame,
-                         corpus: DataFrame, nprobe: Int, k: Int,
-                         cand: Int, floor: Int): DataFrame =
-    recallGate(queries, corpus, k, floor,
-      ivfpqTopKIndexed(queries, codes, coarse, codebooks, corpus,
-        nprobe, k, cand))
-
   def ivfpqRecallWithFraction(queries: DataFrame, corpus: DataFrame,
                               k: Int, cand: Int, floor: Int,
                               maxCoarseFrac: Double, maxCandFrac: Double,
@@ -1649,11 +1503,11 @@ object Similarity {
                               coarseIters: Int = 1, m: Int = 8,
                               ksub: Int = 16, iters: Int = 1,
                               dim: Int = 64): DataFrame = {
-    val scored = ivfpqScored(queries, corpus, numCentroids, nprobe,
-      coarseIters, m, ksub, iters, dim)
+    val idx = pqIndexOf(pqCodebooks(corpus, m, ksub, iters, dim))
+    val scored = ivfpqScored(queries, corpus,
+      kmeansCentroids(corpus, numCentroids, coarseIters), idx, nprobe)
     val cands = topCandidates(scored, cand)
-    recallGate(queries, corpus, k, floor,
-      rerankExact(cands, queries, corpus, k))
+    recall(queries, corpus, k, floor, rerankExact(cands, queries, corpus, k))
       .join(fractionGate(queries, corpus, maxCoarseFrac,
         scored.select(col("q_id"), col("neighbor_id")),
         outCol = "coarse_frac_ok"), Seq("q_id"))
@@ -1701,7 +1555,6 @@ object Similarity {
     val projQueries = proj.join(
       queries.select(col("vec_id").as("qid")),
       col("vec_id") === col("qid"), "left_semi")
-    recallGate(queries, corpus, k, floor,
-      bruteTopK(projQueries, proj, k))
+    recall(queries, corpus, k, floor, bruteTopK(projQueries, proj, k))
   }
 }

@@ -19,50 +19,6 @@ import graft.ops.{Curation, Decontaminate, Dedup, LshGuard, Multimodal, Similari
   */
 object PipelineQueries {
 
-  /** Per-query exact-set-equality gate between two search results: a
-    * (q_id, identical_ok) row per query where identical_ok demands the
-    * two (q_id, neighbor_id) sets coincide AND carry exactly `k` rows —
-    * a missing query or a short result reads as red, never as
-    * vacuously equal.
-    */
-  private def searchEqualityGate(queries: org.apache.spark.sql.DataFrame,
-                                 a: org.apache.spark.sql.DataFrame,
-                                 b: org.apache.spark.sql.DataFrame,
-                                 k: Int): org.apache.spark.sql.DataFrame = {
-    // ONE keyed aggregation pass (r18, guide §2.4 — replace a join
-    // cascade with one keyed pass): the two k-sets union with a side
-    // tag and fold per q_id; set equality at exactly k rows is
-    // |A| = |B| = |A ∩ B| = k (collect_set skips the null the other
-    // side's `when` emits). The previous shape — full_outer join the
-    // two result frames on (q_id, neighbor_id), re-aggregate by q_id,
-    // then outer-join queries — paid two SortMergeJoins and three
-    // Exchanges of 25-row frames, each an AQE stage-job. Both inputs
-    // are top-k outputs (unique (q_id, neighbor_id) by construction),
-    // so the set algebra counts exactly what the join counted: a pair
-    // in exactly one side shrinks the intersection below k, a short or
-    // missing result fails its own size check. The per-query aggregate
-    // is ≤ |queries| rows by construction — it BROADCASTS onto the
-    // queries frame; a q_id absent from both searches reads red via
-    // the coalesce, never vacuously equal.
-    val tagged = a.select(col("q_id"), col("neighbor_id"),
-        lit(true).as("in_a"))
-      .unionByName(b.select(col("q_id"), col("neighbor_id"),
-        lit(false).as("in_a")))
-    val perQ = tagged.groupBy(col("q_id"))
-      .agg(
-        collect_set(when(col("in_a"), col("neighbor_id"))).as("sa"),
-        collect_set(when(!col("in_a"), col("neighbor_id"))).as("sb"))
-      .select(col("q_id"),
-        (size(col("sa")) === k && size(col("sb")) === k &&
-          size(array_intersect(col("sa"), col("sb"))) === k)
-          .as("both_ok"))
-    queries.select(col("vec_id").as("q_id"))
-      .join(broadcast(perQ), Seq("q_id"), "left_outer")
-      .select(col("q_id"),
-        coalesce(col("both_ok"), lit(false)).as("identical_ok"))
-      .orderBy(col("q_id"))
-  }
-
   /** Build-once memo for the persisted IVF-PQ index the search-only
     * channel reads (ann_ivfpq_search_indexed): a production pipeline
     * builds the index once and searches it many times, so the search
@@ -2409,15 +2365,18 @@ object PipelineQueries {
     // oracle-checkable. iters=3 Lloyd rounds raise the tri-SF per-query
     // minimum from 3 to 4 (measured, PLANS.md round-7: iters=1 min is
     // sf0.01 q2 at 3/5; iters 3/4/6 all converge to min 4; farthest-
-    // point seeding measured WORSE on this near-uniform corpus and is
-    // kept as the documented clustered-corpus option), so floor=4 — a
-    // probe/centroid regression drives a row to FALSE and the gate red.
+    // point seeding measured WORSE on this near-uniform corpus and was
+    // removed), so floor=4 — a probe/centroid regression drives a row
+    // to FALSE and the gate red.
     QueryDef(
       "ann_ivf_recall",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.ivfRecall(emb.filter(col("vec_id") < 5), emb,
-            numCentroids = 16, nprobe = 4, k = 5, floor = 4, kmeansIters = 3)
+        val qs = emb.filter(col("vec_id") < 5)
+        val cents = Similarity.kmeansCentroids(emb, 16, 3)
+        Similarity.recall(qs, emb, k = 5, floor = 4,
+            Similarity.ivfTopKIndexed(qs, Similarity.assignBuckets(emb, cents),
+              cents, nprobe = 4, k = 5))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2473,8 +2432,9 @@ object PipelineQueries {
         try {
           Similarity.saveIvfIndex(emb, cents, dir.toString)
           val (lc, lidx) = Similarity.loadIvfIndex(s, dir.toString)
-          searchEqualityGate(qs,
-            Similarity.ivfTopKWith(qs, emb, cents, nprobe = 4, k = 5),
+          Similarity.identical(qs,
+            Similarity.ivfTopKIndexed(qs, Similarity.assignBuckets(emb, cents),
+              cents, nprobe = 4, k = 5),
             Similarity.ivfTopKIndexed(qs, lidx, lc, nprobe = 4, k = 5),
             k = 5)
             .localCheckpoint(true) // materialize before the dir dies
@@ -2505,7 +2465,7 @@ object PipelineQueries {
           Similarity.appendIndexTombstones(dir.toString,
             emb.filter(col("vec_id") % 10 === 7))
           val (lc, lidx) = Similarity.loadIvfIndexTombstoned(s, dir.toString)
-          searchEqualityGate(qs,
+          Similarity.identical(qs,
             Similarity.ivfTopKIndexed(qs, lidx, lc, nprobe = 4, k = 5),
             Similarity.ivfTopKIndexed(qs,
               Similarity.assignBuckets(
@@ -2538,7 +2498,7 @@ object PipelineQueries {
         val cents = Similarity.kmeansCentroids(hist, 16, 3)
         val merged = Similarity.assignBuckets(hist, cents)
           .unionByName(Similarity.assignBuckets(inc, cents))
-        searchEqualityGate(qs,
+        Similarity.identical(qs,
           Similarity.ivfTopKIndexed(qs, merged, cents, nprobe = 4, k = 5),
           Similarity.ivfTopKIndexed(qs,
             Similarity.assignBuckets(emb, cents), cents, nprobe = 4, k = 5),
@@ -2562,8 +2522,9 @@ object PipelineQueries {
         // case (neighbors at wide angles), so the operating point is
         // coarse buckets × many tables; a clustered real corpus
         // supports more bits (smaller buckets) at the same recall.
-        Similarity.lshRecall(emb.filter(col("vec_id") < 5), emb,
-            k = 5, floor = 4, tables = 24, bits = 4)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 4,
+            Similarity.lshTopK(qs, emb, k = 5, tables = 24, bits = 4))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2581,8 +2542,9 @@ object PipelineQueries {
       "ann_sq8_recall",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.sq8Recall(emb.filter(col("vec_id") < 5), emb,
-            k = 5, cand = 50, floor = 5)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 5,
+            Similarity.sq8TopK(qs, emb, k = 5, cand = 50))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2619,8 +2581,10 @@ object PipelineQueries {
       "ann_pq_recall",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.pqRecall(emb.filter(col("vec_id") < 5), emb,
-            k = 5, cand = 300, floor = 4, m = 8, ksub = 32, iters = 1)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 4,
+            Similarity.pqTopK(qs, emb, k = 5, cand = 300, m = 8, ksub = 32,
+              iters = 1))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2638,9 +2602,13 @@ object PipelineQueries {
       "ann_ivfpq_recall",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        Similarity.ivfpqRecall(emb.filter(col("vec_id") < 5), emb,
-            k = 5, cand = 300, floor = 4, numCentroids = 16, nprobe = 6,
-            coarseIters = 3, m = 8, ksub = 32, iters = 1)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 4,
+            Similarity.ivfpqTopKWith(qs, emb,
+              Similarity.kmeansCentroids(emb, 16, 3),
+              Similarity.pqCodebooks(emb, m = 8, ksub = 32, iters = 1,
+                dim = 64),
+              nprobe = 6, k = 5, cand = 300))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2754,7 +2722,7 @@ object PipelineQueries {
         try {
           Similarity.saveIvfPqIndex(emb, coarse, cbs, dir.toString)
           val (lc, lcb, lcodes) = Similarity.loadIvfPqIndex(s, dir.toString)
-          searchEqualityGate(qs,
+          Similarity.identical(qs,
             Similarity.ivfpqTopKWith(qs, emb, coarse, cbs,
               nprobe = 6, k = 5, cand = 50),
             Similarity.ivfpqTopKIndexed(qs, lcodes, lc, lcb, emb,
@@ -2791,7 +2759,7 @@ object PipelineQueries {
         val merged = Similarity.ivfpqEncodeWith(hist, coarse, cbs)
           .unionByName(Similarity.ivfpqEncodeWith(inc, coarse, cbs))
         val full = Similarity.ivfpqEncodeWith(emb, coarse, cbs)
-        searchEqualityGate(qs,
+        Similarity.identical(qs,
           Similarity.ivfpqTopKIndexed(qs, merged, coarse, cbs, emb,
             nprobe = 6, k = 5, cand = 50),
           Similarity.ivfpqTopKIndexed(qs, full, coarse, cbs, emb,
@@ -2823,9 +2791,10 @@ object PipelineQueries {
         val cand = math.max(5, math.ceil(0.04 * emb.count()).toInt)
         val dir = ivfpqIndexDir(s, d, emb)
         val (lc, lcb, lcodes) = Similarity.loadIvfPqIndex(s, dir)
-        Similarity.ivfpqRecallIndexed(emb.filter(col("vec_id") < 5),
-            lcodes, lc, lcb, emb, nprobe = 2, k = 5, cand = cand,
-            floor = 5)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 5,
+            Similarity.ivfpqTopKIndexed(qs, lcodes, lc, lcb, emb,
+              nprobe = 2, k = 5, cand = cand))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -2858,9 +2827,10 @@ object PipelineQueries {
         val cbs = Similarity.pqCodebooksSampled(emb, m = 8, ksub = 16,
           iters = 1, dim = 64)
         val codes = Similarity.ivfpqEncodeWith(emb, coarse, cbs)
-        Similarity.ivfpqRecallIndexed(emb.filter(col("vec_id") < 5),
-            codes, coarse, cbs, emb, nprobe = 2, k = 5, cand = cand,
-            floor = 5)
+        val qs = emb.filter(col("vec_id") < 5)
+        Similarity.recall(qs, emb, k = 5, floor = 5,
+            Similarity.ivfpqTopKIndexed(qs, codes, coarse, cbs, emb,
+              nprobe = 2, k = 5, cand = cand))
           .orderBy(col("q_id"))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS recall_ok
@@ -4807,7 +4777,7 @@ object PipelineQueries {
         // deterministic training makes the two centroid sets identical
         val cents = Similarity.kmeansCentroids(hist, 16, 3)
         val merged = graft.streaming.EventsStream.annIngestAvailableNow(s, d)
-        searchEqualityGate(qs,
+        Similarity.identical(qs,
           Similarity.ivfTopKIndexed(qs, merged, cents, nprobe = 4, k = 5),
           Similarity.ivfTopKIndexed(qs,
             Similarity.assignBuckets(emb, cents), cents, nprobe = 4, k = 5),

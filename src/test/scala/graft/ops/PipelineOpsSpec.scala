@@ -741,14 +741,43 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
     val queries = df.filter(col("vec_id") < 4)
     val brute = Similarity.bruteTopK(queries, df, k = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ivf = Similarity.ivfTopK(queries, df, numCentroids = 4, nprobe = 2, k = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cents = Similarity.kmeansCentroids(df, 4, 1)
+    val ivfTop = Similarity.ivfTopKIndexed(queries,
+      Similarity.assignBuckets(df, cents), cents, nprobe = 2, k = 1)
+    val ivf = ivfTop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     ivf must be(brute)
     // the recall gate agrees: every query recovers its full top-1
-    val recall = Similarity.ivfRecall(queries, df,
-        numCentroids = 4, nprobe = 2, k = 1, floor = 1).collect()
+    val recall = Similarity.recall(queries, df, k = 1, floor = 1, ivfTop)
+      .collect()
     recall.length must be(4)
     recall.forall(_.getBoolean(1)) must be(true)
+  }
+
+  behavior of "Similarity.recall / Similarity.identical (per-query gates)"
+
+  it must "read red for a missed, short, differing or absent query" in {
+    val s = spark
+    import s.implicits._
+    // corpus = vector 3 alone: queries 0-2 have brute top-1 = {3},
+    // query 3 has no neighbor but itself, so brute never returns it
+    val queries = embDf((0L until 4L).map(i => i -> Seq(1f, i.toFloat)))
+    val corpus = queries.filter(col("vec_id") === 3L)
+    // approx hits q0 and q2, misses q1, and (like brute) never has q3
+    val approx = Seq((0L, 3L), (2L, 3L)).toDF("q_id", "neighbor_id")
+    val recall = Similarity.recall(queries, corpus, k = 1, floor = 1, approx)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    recall must be(Map(0L -> true, 1L -> false, 2L -> true, 3L -> false))
+
+    // k = 2: q0 agrees, q1 is one row short (k-1), q2 differs in one
+    // neighbor, q3 is in neither result
+    val a = Seq((0L, 1L), (0L, 2L), (1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L))
+      .toDF("q_id", "neighbor_id")
+    val b = Seq((0L, 1L), (0L, 2L), (1L, 1L), (2L, 1L), (2L, 3L))
+      .toDF("q_id", "neighbor_id")
+    val same = Similarity.identical(queries, a, b, k = 2).collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1))
+    same.toSeq must be(
+      Seq(0L -> true, 1L -> false, 2L -> false, 3L -> false))
   }
 
   behavior of "Similarity PQ (pqCodebooks / pqTopK / pqRecall)"
@@ -787,8 +816,10 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
     again.map(r => (r.getLong(0), r.getLong(1))) must be(
       top.map(r => (r.getLong(0), r.getLong(1))))
     // and the gate sees it: floor=1 (the planted dup) passes
-    val recall = Similarity.pqRecall(df.filter(col("vec_id") < 1), df,
-        k = 3, cand = 16, floor = 1, m = 2, ksub = 8, iters = 1, dim = 8)
+    val recall = Similarity.recall(df.filter(col("vec_id") < 1), df,
+        k = 3, floor = 1,
+        Similarity.pqTopK(df.filter(col("vec_id") < 1), df,
+          k = 3, cand = 16, m = 2, ksub = 8, iters = 1, dim = 8))
       .collect()
     recall.length must be(1)
     recall(0).getBoolean(1) must be(true)
@@ -808,14 +839,14 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
     val queries = df.filter(col("vec_id") < 4)
     val brute = Similarity.bruteTopK(queries, df, k = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ivfpq = Similarity.ivfpqTopK(queries, df, k = 1, cand = 8,
-        numCentroids = 4, nprobe = 2, coarseIters = 1, m = 2, ksub = 8,
-        iters = 1, dim = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ivfpqTop = Similarity.ivfpqTopKWith(queries, df,
+      Similarity.kmeansCentroids(df, 4, 1),
+      Similarity.pqCodebooks(df, m = 2, ksub = 8, iters = 1, dim = 8),
+      nprobe = 2, k = 1, cand = 8)
+    val ivfpq = ivfpqTop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     ivfpq must be(brute)
-    val recall = Similarity.ivfpqRecall(queries, df, k = 1, cand = 8,
-        floor = 1, numCentroids = 4, nprobe = 2, coarseIters = 1, m = 2,
-        ksub = 8, iters = 1, dim = 8).collect()
+    val recall = Similarity.recall(queries, df, k = 1, floor = 1, ivfpqTop)
+      .collect()
     recall.length must be(4)
     recall.forall(_.getBoolean(1)) must be(true)
   }
@@ -855,11 +886,12 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
     val queries = df.filter(col("vec_id") < 4)
     val brute = Similarity.bruteTopK(queries, df, k = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lsh = Similarity.lshTopK(queries, df, k = 1, tables = 8, bits = 4,
-        dim = 8).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lshTop = Similarity.lshTopK(queries, df, k = 1, tables = 8, bits = 4,
+        dim = 8)
+    val lsh = lshTop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     lsh must be(brute)
-    val recall = Similarity.lshRecall(queries, df, k = 1, floor = 1,
-      tables = 8, bits = 4, dim = 8).collect()
+    val recall = Similarity.recall(queries, df, k = 1, floor = 1, lshTop)
+      .collect()
     recall.length must be(4)
     recall.forall(_.getBoolean(1)) must be(true)
   }
@@ -895,28 +927,6 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
       v.zipWithIndex.filter(_._2 != cid.toInt % 4).map(_._1.toDouble)
         .foreach(x => x must be < 0.06)
     }
-  }
-
-  it must "spread farthest-point seeds across clusters first-K seeding misses" in {
-    // two tight orthogonal clusters, ids 0-31 all on axis 0, 32-63 all
-    // on axis 1: first-K seeding (k=2) lands BOTH seeds in cluster A by
-    // id order; farthest-first must pick one representative per cluster
-    val rnd = new scala.util.Random(13)
-    val vecs = (0L until 64L).map { i =>
-      val axis = if (i < 32) 0 else 1
-      val v = Array.fill(8)(rnd.nextFloat() * 0.05f)
-      v(axis) = 1f
-      i -> v.toSeq
-    }
-    val df = embDf(vecs)
-    val seeds = Similarity.farthestPointSeeds(df, k = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).sortBy(_._1)
-    seeds.map(_._1).toSeq must be(Seq(0L, 1L)) // renumbered dense ids
-    seeds.map { case (_, v) => v.indexOf(v.max) }.toSet must be(Set(0, 1))
-    // deterministic: no RNG anywhere, a second derivation is identical
-    val again = Similarity.farthestPointSeeds(df, k = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).sortBy(_._1)
-    again.toSeq must be(seeds.toSeq)
   }
 
   behavior of "SkewJoin"
@@ -2335,7 +2345,8 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
       }
       parts.nonEmpty must be(true)
       val (lc, lidx) = Similarity.loadIvfIndex(spark, dir.toString)
-      val direct = Similarity.ivfTopKWith(qs, vecs, cents, nprobe = 2, k = 3)
+      val direct = Similarity.ivfTopKIndexed(qs,
+          Similarity.assignBuckets(vecs, cents), cents, nprobe = 2, k = 3)
         .select(col("q_id"), col("neighbor_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted
       val loaded = Similarity.ivfTopKIndexed(qs, lidx, lc, nprobe = 2, k = 3)
