@@ -162,7 +162,8 @@ final case class FsCatalog(inodes: Dataset[Inode]) {
       System.err.println(
         s"graftfs: rename $src -> $dst moves more than $maxCollected " +
           "inodes; taking the distributed prefix-rewrite path")
-      val cut = src.length + 1 // substring is 1-based: drop(src.length)
+      // substring is 1-based and counts code points: drop(src.length)
+      val cut = src.codePointCount(0, src.length) + 1
       val rewritten = inodes.filter(inSubtree).select(
         concat(lit(dst), expr(s"substring(path, $cut)")).as("path"),
         when(col("path") === src, lit(PathOps.parent(dst)).cast("string"))
@@ -286,7 +287,8 @@ final case class FsCatalog(inodes: Dataset[Inode]) {
   // ── D3: du — per-shallow-child subtree byte totals, one shuffle ───────
   def du(path: String): DataFrame = {
     val pre = prefixOf(path)
-    val rel = expr(s"split_part(substring(path, ${pre.length + 1}), '/', 1)")
+    val rel = expr(
+      s"split_part(substring(path, ${pre.codePointCount(0, pre.length) + 1}), '/', 1)")
     inodes
       .filter(col("path").startsWith(pre))
       .groupBy(concat(lit(pre), rel).as("path"))

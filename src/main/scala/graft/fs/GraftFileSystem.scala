@@ -125,23 +125,24 @@ class GraftFileSystem extends FileSystem {
     }
   }
 
-  /** The subtree rooted at `p`, walked through [[childIndex]] —
-    * O(subtree), never O(cache). Fully materialized before any caller
-    * mutates (rename/remove iterate the result, not the live sets). */
-  private def subtreePaths(p: String): Seq[String] = {
+  /** The subtree rooted at `p` down to `depth` levels below it, walked
+    * through [[childIndex]] — O(subtree), never O(cache). Fully
+    * materialized before any caller mutates (rename/remove iterate the
+    * result, not the live sets). */
+  private def subtreePaths(p: String, depth: Int = Int.MaxValue): Seq[String] = {
     // Explicit-stack iteration: a pathologically deep chain (mkdirs
     // with tens of thousands of components) must not blow the JVM
     // stack while holding mutLock.
     val out = Seq.newBuilder[String]
-    val stack = new java.util.ArrayDeque[String]()
-    stack.push(p)
+    val stack = new java.util.ArrayDeque[(String, Int)]()
+    stack.push((p, 0))
     while (!stack.isEmpty) {
-      val q = stack.pop()
+      val (q, level) = stack.pop()
       out += q
       val kids = childIndex.get(q)
-      if (kids != null) {
+      if (kids != null && level < depth) {
         val it = kids.iterator()
-        while (it.hasNext) stack.push(it.next())
+        while (it.hasNext) stack.push((it.next(), level + 1))
       }
     }
     out.result()
@@ -297,18 +298,13 @@ class GraftFileSystem extends FileSystem {
     }
   }
 
-  // ── WRITE-THROUGH of post-mount writes (r17, the §8 facade notch):
-  //    a state-dir mount used to serve executors only the bytes saved
-  //    BEFORE the mount; anything a driver wrote after it lived solely
-  //    in driver memory. Now a closed create stream (and the rename/
-  //    delete mirrors that keep committer flows coherent) also commits
-  //    the payload as a SharedStateStore wal delta in the mounted state
-  //    dir — cross-process-locked, atomically-renamed, session-free —
-  //    so ANY mount of the same state (executor-mode JVMs live via
-  //    per-access refresh; fresh mounts via init-time overlay
-  //    application) serves the post-mount bytes with zero driver
-  //    involvement. Residue, loud and documented: a file whose rows
-  //    folded (> FoldBytes) before close skips write-through. ──────────
+  // ── WRITE-THROUGH of post-mount writes: a closed create stream (and
+  //    the rename/delete mirrors that keep committer flows coherent)
+  //    commits its payload as a SharedStateStore wal delta in the
+  //    mounted state dir, so ANY mount of the same state (executor-mode
+  //    JVMs via per-access refresh, fresh mounts via init-time overlay
+  //    application) serves post-mount bytes without the driver. Residue:
+  //    a file whose rows folded (> FoldBytes) before close skips it. ──
   private var mountParent: String = _
   private var writeThroughEnabled = true
   private var mountStoreCache: SharedStateStore = _
@@ -513,9 +509,6 @@ class GraftFileSystem extends FileSystem {
   private def subtreePrefix(p: String): String =
     if (p == "/") "/" else p + "/"
 
-  private def cacheRemoveSubtree(p: String): Unit =
-    subtreePaths(p).foreach(cacheDrop)
-
   private def cacheRename(src: String, dst: String): Unit = {
     val paths = subtreePaths(src)
     val moved = paths.flatMap(k => cached(k).map { n =>
@@ -671,6 +664,14 @@ class GraftFileSystem extends FileSystem {
     inodeCache.forEach((k, v) => b += k -> v)
     b.result()
   }
+
+  // ── Inode-level reads for the shell's namespace verbs: the cache under
+  //    mutLock (see getFileStatus), paths verbatim, results unordered;
+  //    `subtree` is `p` (if present) and descendants to `depth` levels ──
+  private[fs] def inode(p: String): Option[Inode] = withMutLock(cached(p))
+  private[fs] def children(p: String): Seq[Inode] = withMutLock(cacheChildren(p))
+  private[fs] def subtree(p: String, depth: Int = Int.MaxValue): Seq[Inode] =
+    withMutLock(subtreePaths(p, depth).flatMap(cached))
 
   override def getUri: URI = ctx.uri
 
@@ -1095,7 +1096,7 @@ class GraftFileSystem extends FileSystem {
         case Some(_) if !recursive =>
           throw new IOException("Directory is not empty")
         case Some(_) =>
-          cacheRemoveSubtree(p)
+          subtreePaths(p).foreach(cacheDrop)
           dropSubtree()
           true
       }
@@ -1187,18 +1188,13 @@ class GraftFileSystem extends FileSystem {
     * snapshot reads the mount's segment files, which close() deletes:
     * it must not outlive its mount.
     */
-  def graftFs: GraftFs = snapshot(withChunks = true)
-
-  /** The catalog half of [[graftFs]] alone: no chunks frame is built. */
-  def graftCatalog: FsCatalog = snapshot(withChunks = false).catalog
-
-  private def snapshot(withChunks: Boolean): GraftFs = {
+  def graftFs: GraftFs = {
     val s = session.getOrElse(throw new IllegalStateException(
       "GraftFileSystem.graftFs needs an active SparkSession"))
     val (inodes, mem, bySource) = withMutLock {
       val cur = new java.util.IdentityHashMap[Payload, String]()
       val bySource = scala.collection.mutable.TreeMap.empty[String, ArrayBuffer[Row]]
-      if (withChunks) payloads.forEach { (p, owner) =>
+      payloads.forEach { (p, owner) =>
         cur.put(owner, p)
         owner.sources.foreach(src =>
           bySource.getOrElseUpdate(src, ArrayBuffer.empty) += Row(owner.key, p))
@@ -1217,7 +1213,6 @@ class GraftFileSystem extends FileSystem {
       (values.result(), mem, bySource.toSeq)
     }
     val catalog = FsCatalog(s.createDataset(inodes)(FsCatalog.inodeEncoder))
-    if (!withChunks) return GraftFs(catalog, null)
     val fromSources = bySource.map { case (src, keys) =>
       val keyMap = s.createDataFrame(
         java.util.Arrays.asList(keys.toSeq: _*), keyMapSchema)

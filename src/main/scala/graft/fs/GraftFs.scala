@@ -48,9 +48,9 @@ final case class GraftFs(catalog: FsCatalog, chunks: DataFrame) {
     else (GraftFs(cat2, chunks.filter(!inSubtree(path))), true)
   }
 
-  /** Chunk paths under `src` re-rooted at `dst`. */
-  private def reRooted(src: String, dst: String) =
-    concat(lit(dst), expr(s"substring(path, ${src.length + 1})"))
+  /** Chunk paths under `src` re-rooted at `dst` (substring counts code points). */
+  private def reRooted(src: String, dst: String) = concat(lit(dst),
+    expr(s"substring(path, ${src.codePointCount(0, src.length) + 1})"))
 
   /** A8/D6: rename — the catalog relocates the moved subtree's inode
     * rows (FsCatalog.renameFrames), the chunk plane gains ONE

@@ -2,11 +2,14 @@ package graft.fs
 
 import java.io.{FileNotFoundException, IOException}
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.catalog.{FsCatalog, PathOps}
+import graft.catalog.{Inode, PathOps}
 
 /** One shell invocation's outcome: exit code + stdout/stderr lines —
   * returned, not printed, so the dispatcher is testable and a `main`
@@ -31,9 +34,10 @@ final case class ShellResult(code: Int, out: Seq[String], err: Seq[String])
   *  - mutations and uploads (-mkdir, -touchz, -mv, -rm/-rmr, -put and
   *    its aliases, the write half of -cp) are mount verbs — pure
   *    memory, no Spark job;
-  *  - catalog verbs (-ls/-lsr/-du/-dus/-count/-stat/-test, glob
-  *    expansion) query a catalog frame of the mount's inode cache,
-  *    rebuilt only after a mutating verb;
+  *  - namespace reads (-ls/-lsr/-du/-dus/-count/-stat/-test, the glob
+  *    expansion of every verb) answer from the mount's inode cache in
+  *    driver memory — no Spark job — with FsCatalog's formulas, error
+  *    strings and row order;
   *  - byte reads (-cat/-text/-tail/-get/-getmerge, the read half of
   *    -cp) run the data plane over the mount's chunk snapshot — never
   *    the mount's `open()`, so they read any chunk geometry.
@@ -91,41 +95,18 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(seedDir))
   }
 
-  /** Catalog frame of the mount's inode cache, built at the first
-    * catalog verb after a mutation (null = stale). */
-  private var catalogFrame: FsCatalog = _
-
-  private def catalog: FsCatalog = {
-    if (catalogFrame == null) catalogFrame = mount.graftCatalog
-    catalogFrame
-  }
-
-  /** Catalog plus chunks, for the byte-reading verbs. */
-  private def snapshot: GraftFs = GraftFs(catalog, fs.chunks)
-
-  private def stat(p: String): Option[FileStatus] =
-    try Some(mount.getFileStatus(new Path(p)))
-    catch { case _: FileNotFoundException => None }
-
-  /** `p` and everything under it, parents before children. */
-  private def subtree(p: String): Seq[FileStatus] =
-    stat(p).toSeq.flatMap { st =>
-      st +: (if (st.isDirectory) mount.listStatus(new Path(p)).toSeq
-        .flatMap(c => subtree(c.getPath.toUri.getPath)) else Nil)
-    }
-
   /** -mv's and -cp's shared precondition matrix (FsCatalog.rename's
     * error strings, RenameCommand.scala:61-107 semantics). */
   private def checkMove(src: String, dst: String): Unit = {
-    if (stat(src).isEmpty)
+    if (mount.inode(src).isEmpty)
       throw new IOException(s"No such file or directory.$src")
-    if (stat(dst).isDefined)
+    if (mount.inode(dst).isDefined)
       throw new IOException("Destination already exists")
     val dp = PathOps.parent(dst)
     if (dp != null) {
-      val pn = stat(dp).getOrElse(throw new IOException(
+      val pn = mount.inode(dp).getOrElse(throw new IOException(
         s"Destination $dp directory does not exist."))
-      if (!pn.isDirectory)
+      if (pn.isFile)
         throw new IOException("A file exists with parent of destination.")
     }
   }
@@ -147,35 +128,85 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     if (src == dst) return
     checkMove(src, dst)
     val under = col("path") === src || col("path").startsWith(dirPrefix(src))
-    val bytes = DataPlane.reassemble(snapshot.chunks.filter(under)).collect()
+    val bytes = DataPlane.reassemble(fs.chunks.filter(under)).collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    subtree(src).foreach { st =>
-      val p = st.getPath.toUri.getPath
+    // the walk lists every dir before its children
+    mount.subtree(src).foreach { n =>
+      val p = n.path
       val np = dst + p.drop(src.length)
-      if (st.isDirectory) mount.mkdirs(new Path(np))
+      if (n.isDir) mount.mkdirs(new Path(np))
       else upload(new java.io.ByteArrayInputStream(
         bytes.getOrElse(p, Array.emptyByteArray)), np)
     }
   }
 
-  /** FsCatalog.deleteGlob's matrix on the mount's namespace — the SAME
-    * literal prefix + anchored regex + root rule as globPredicate,
-    * evaluated driver-side.
+  /** The inodes the absolute glob `pattern` matches: FsCatalog
+    * .globPredicate's literal prefix, anchored regex and root rule,
+    * evaluated on the mount's cache. Only the subtree under the literal
+    * prefix is walked, and without `[` or `{` (the only forms that can
+    * match a '/') only as deep as the pattern's components reach.
     */
-  private def deleteGlob(pattern: String, recursive: Boolean): Boolean = {
-    val re = java.util.regex.Pattern.compile(PathOps.globToRegex(pattern))
+  private def glob(pattern: String): Seq[Inode] = {
     val pre = PathOps.globLiteralPrefix(pattern)
-    val roots = mount.metadataSnapshot.keys
-      .filter(p => p.startsWith(pre) && re.matcher(p).find() &&
-        (pattern == "/" || p != "/"))
-      .toSeq.sorted
+    val re = java.util.regex.Pattern.compile(PathOps.globToRegex(pattern))
+    val cut = pre.lastIndexOf('/')
+    val anchor = if (cut <= 0) "/" else pre.substring(0, cut)
+    val depth =
+      if (pattern.exists(c => c == '[' || c == '{')) Int.MaxValue
+      else pattern.count(_ == '/') - (if (anchor == "/") 1 else anchor.count(_ == '/') + 1)
+    (mount.inode(anchor).toSeq ++ mount.children(anchor)
+      .filter(_.path.startsWith(pre)).flatMap(c => mount.subtree(c.path, depth)))
+      .filter(n => n.path.startsWith(pre) && re.matcher(n.path).find() &&
+        (pattern == "/" || n.path != "/"))
+  }
+
+  /** FsCatalog.deleteGlob's error matrix on the mount's namespace. */
+  private def deleteGlob(pattern: String, recursive: Boolean): Boolean = {
+    val roots = glob(pattern).sortBy(_.path)
     if (roots.isEmpty) return false
-    if (!recursive && roots.exists(r => stat(r).exists(_.isDirectory) &&
-        mount.listStatus(new Path(r)).nonEmpty))
+    if (!recursive && roots.exists(r => r.isDir && mount.children(r.path).nonEmpty))
       throw new IOException(
         s"Non-empty directory matched by $pattern; use -rmr")
-    roots.foreach(r => mount.delete(new Path(r), true))
+    roots.foreach(r => mount.delete(new Path(r.path), true))
     true
+  }
+
+  /** Total length of `p`'s subtree (FsCatalog's Σ inodeLen). */
+  private def bytesUnder(p: String): Long = mount.subtree(p).map(_.length).sum
+
+  private def existing(p: String): Inode =
+    mount.inode(p).getOrElse(throw new FileNotFoundException(p))
+
+  /** `arg`'s glob matches; none → the globStatus FileNotFoundException. */
+  private def globArg(arg: String): Seq[Inode] = {
+    val matched = glob(abs(arg))
+    if (matched.isEmpty) throw new FileNotFoundException(
+      s"Cannot access $arg: No such file or directory.")
+    matched
+  }
+
+  /** Spark's string order (UTF-8 bytes), the order FsCatalog's rows
+    * come in. */
+  private val sparkOrder: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
+
+  /** FsCatalog.statFormatted's specifiers on one inode: %y formatted in
+    * the session time zone by date_format's formatter, %Y the
+    * `cast(cast(mtime as double) * 1000 as long)` of the frame. */
+  private def statLine(n: Inode, fmt: String): String = {
+    val micros = DateTimeUtils.fromJavaTimestamp(n.mtime)
+    "%[bnorFyY]|[^%]+|%".r.findAllIn(fmt).map {
+      case "%b" => n.length.toString
+      case "%n" => n.path.substring(n.path.lastIndexOf('/') + 1)
+      case "%o" => Option(n.blocks).flatMap(_.headOption).fold(0L)(_.length).toString
+      case "%r" => "3"
+      case "%F" => if (n.isDir) "directory" else "regular file"
+      case "%y" => TimestampFormatter("yyyy-MM-dd HH:mm:ss",
+        DateTimeUtils.getZoneId(SQLConf.get.sessionLocalTimeZone),
+        LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false).format(micros)
+      case "%Y" => (micros / 1e6 * 1000).toLong.toString
+      case other => other
+    }.mkString
   }
 
   private val minArgs: Map[String, Int] = Map(
@@ -206,9 +237,6 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
         ShellResult(-1, Nil, Seq(s"$cmd: ${e.getMessage}"))
       case e: UnsupportedOperationException =>
         ShellResult(-1, Nil, Seq(s"$cmd: ${e.getMessage}"))
-    } finally {
-      // a mutating verb (even a failed one) may have changed the mount
-      if (GraftShellMain.MutatingVerbs(cmd)) catalogFrame = null
     }
   }
 
@@ -219,9 +247,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     */
   private def fileArg(arg: String): String = {
     val p = abs(arg)
-    val node = catalog.retrieve(p)
-      .getOrElse(throw new FileNotFoundException(p))
-    if (node.isDir) throw new IOException(s"$p is a directory")
+    if (existing(p).isDir) throw new IOException(s"$p is a directory")
     p
   }
 
@@ -236,16 +262,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     * passes through untouched so the verb's own error matrix applies.
     */
   private def expandSrc(arg: String): Seq[String] = {
-    val p = abs(arg)
-    if (!PathOps.isGlob(arg)) Seq(p)
-    else {
-      val matched = catalog.globStatus(p)
-        .select("path").collect().map(_.getString(0)).toSeq.sorted
-      if (matched.isEmpty)
-        throw new FileNotFoundException(
-          s"Cannot access $arg: No such file or directory.")
-      matched
-    }
+    if (PathOps.isGlob(arg)) globArg(arg).map(_.path).sorted else Seq(abs(arg))
   }
 
   /** The reference's `doall` loop: run `f` per argument, print each
@@ -265,11 +282,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     ShellResult(code, out.result(), err.result())
   }
 
-  private def statusLines(rows: Array[Row]): Seq[String] =
-    rows.map { r =>
-      val kind = if (r.getAs[Boolean]("is_dir")) "d" else "-"
-      f"$kind${r.getAs[Int]("permission")}%4d ${r.getAs[Long]("len")}%10d ${r.getAs[String]("path")}"
-    }.toSeq
+  private def sizeLine(path: String, len: Long): String = f"$len%12d  $path"
 
   private def dispatch(cmd: String, args: Seq[String]): ShellResult = cmd match {
     case "-help" =>
@@ -280,15 +293,18 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
 
     case "-ls" | "-lsr" =>
       // the reference errors when the GLOB matches nothing (not when a
-      // matched dir happens to be empty — that prints "Found 0 items")
+      // matched dir happens to be empty — that prints "Found 0 items");
+      // each matched file lists itself, each matched dir its children
+      // (-lsr: its subtree, which for "/" holds the root itself — the
+      // prefix rule of FsCatalog.listGlob)
       forEachSrc(cmd, args) { arg =>
-        val pat = abs(arg)
-        if (catalog.globStatus(pat).limit(1).count() == 0)
-          throw new FileNotFoundException(
-            s"Cannot access $arg: No such file or directory.")
-        val rows = catalog.listGlob(pat, recursive = cmd == "-lsr").collect()
+        val rows = globArg(arg).flatMap { m =>
+          if (m.isFile) Seq(m)
+          else if (cmd == "-ls") mount.children(m.path)
+          else mount.subtree(m.path).filter(n => n.path != m.path || n.path == "/")
+        }.distinctBy(_.path).sortBy(_.path)(sparkOrder)
         (if (cmd == "-ls") Seq(s"Found ${rows.length} items") else Nil) ++
-          statusLines(rows)
+          rows.map(n => f"${if (n.isDir) "d" else "-"}${n.permission}%4d ${n.length}%10d ${n.path}")
       }
 
     case "-du" =>
@@ -297,23 +313,22 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       // glob or literal alike (SnackFSShell doall → inherited du)
       forEachSrc(cmd, args) { arg =>
         val p = abs(arg)
-        if (PathOps.isGlob(arg)) {
-          if (catalog.globStatus(p).limit(1).count() == 0)
-            throw new FileNotFoundException(
-              s"Cannot access $arg: No such file or directory.")
-        } else if (!catalog.exists(p)) throw new FileNotFoundException(p)
         val rows =
-          if (PathOps.isGlob(arg)) catalog.duGlob(p).collect()
-          else catalog.du(p).collect()
-        rows.map(r => f"${r.getLong(1)}%12d  ${r.getString(0)}").toSeq
+          if (PathOps.isGlob(arg)) globArg(arg).map(m => m.path -> bytesUnder(m.path))
+          else {
+            // FsCatalog.du groups what lies under `p/` by its first component:
+            // p's children (none for a file), and for "/" the root itself
+            val node = existing(p)
+            (if (p == "/") Seq(p -> node.length) else Nil) ++
+              mount.children(p).map(c => c.path -> bytesUnder(c.path))
+          }
+        rows.sortBy(_._1)(sparkOrder).map { case (r, len) => sizeLine(r, len) }
       }
 
     case "-dus" =>
       forEachSrc(cmd, args) { arg =>
-        val p = abs(arg)
-        if (!catalog.exists(p)) throw new FileNotFoundException(p)
-        val r = catalog.dus(p).collect()(0)
-        Seq(f"${r.getLong(1)}%12d  ${r.getString(0)}")
+        val p = existing(abs(arg)).path
+        Seq(sizeLine(p, bytesUnder(p)))
       }
 
     case "-count" =>
@@ -324,12 +339,12 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       if (qOption && args.length < 2)
         return ShellResult(-1, Nil, ShellHelp.help(cmd).toSeq)
       val pArg = if (qOption) args(1) else args.head
-      val p = abs(pArg)
-      if (!catalog.exists(p)) throw new FileNotFoundException(p)
-      val r = catalog.countSummary(p).collect()(0)
+      val p = existing(abs(pArg)).path
+      val nodes = mount.subtree(p)
+      val dirs = nodes.count(_.isDir)
       val quota = if (qOption) f"${"none"}%12s ${"inf"}%12s ${"none"}%12s ${"inf"}%12s " else ""
-      ShellResult(0,
-        Seq(f"$quota${r.getLong(1)}%8d ${r.getLong(2)}%8d ${r.getLong(3)}%12d ${r.getString(0)}"), Nil)
+      ShellResult(0, Seq(f"$quota$dirs%8d ${nodes.length - dirs}%8d " +
+        f"${nodes.map(_.length).sum}%12d $p"), Nil)
 
     case "-mkdir" =>
       forEachSrc(cmd, args) { arg =>
@@ -343,10 +358,10 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     case "-touchz" =>
       forEachSrc(cmd, args) { arg =>
         val p = abs(arg)
-        stat(p) match {
-          case Some(st) if st.isDirectory =>
+        mount.inode(p) match {
+          case Some(n) if n.isDir =>
             throw new IOException(s"$p is a directory")
-          case Some(st) if st.getLen > 0 =>
+          case Some(n) if n.length > 0 =>
             throw new IOException(s"$p must be a zero-length file")
           case Some(_) => () // existing zero-length file: no-op
           case None => mount.create(new Path(p), false).close()
@@ -355,10 +370,11 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       }
 
     case "-test" =>
+      val node = mount.inode(abs(args(1)))
       val ok = args.head match {
-        case "-e" => catalog.testE(abs(args(1)))
-        case "-z" => catalog.testZ(abs(args(1)))
-        case "-d" => catalog.testD(abs(args(1)))
+        case "-e" => node.isDefined
+        case "-z" => node.exists(n => n.isFile && n.length == 0L)
+        case "-d" => node.exists(_.isDir)
         case other => return ShellResult(-1, Nil, Seq(s"-test: unknown flag $other"))
       }
       ShellResult(if (ok) 0 else 1, Nil, Nil)
@@ -366,8 +382,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     case "-stat" =>
       val (fmt, p) =
         if (args.length >= 2) (args.head, args(1)) else ("%y", args.head)
-      val r = catalog.statFormatted(abs(p), fmt).collect()(0)
-      ShellResult(0, Seq(r.getString(1)), Nil)
+      ShellResult(0, Seq(statLine(existing(abs(p)), fmt)), Nil)
 
     case "-mv" | "-cp" =>
       // multiple sources (args or glob matches) need a directory
@@ -380,7 +395,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       val verb = if (cmd == "-mv") "moving" else "copying"
       val dst = abs(args.last)
       val sources = args.dropRight(1)
-      val dstIsDir = stat(dst).exists(_.isDirectory)
+      val dstIsDir = mount.inode(dst).exists(_.isDir)
       if (sources.length > 1 && !dstIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When $verb multiple files, destination ${args.last} should be a directory."))
@@ -415,7 +430,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       // reference cats each match and keeps going on failures
       forEachSrc(cmd, args) { arg =>
         expandSrc(arg).map { p =>
-          val bytes = snapshot.cat(p).collect()
+          val bytes = fs.cat(p).collect()
           val payload = if (bytes.isEmpty) Array.emptyByteArray
             else bytes(0).getAs[Array[Byte]]("data")
           new String(payload, java.nio.charset.StandardCharsets.UTF_8)
@@ -426,14 +441,14 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       forEachSrc(cmd, args) { arg =>
         expandSrc(arg).map { m =>
           val p = fileArg(m)
-          val rows = DataPlane.text(snapshot.rowsForFile(p)).collect()
+          val rows = DataPlane.text(fs.rowsForFile(p)).collect()
           rows.map(_.getString(1)).mkString("\n")
         }
       }
 
     case "-tail" =>
       val p = fileArg(args.head)
-      val rows = DataPlane.tail(snapshot.rowsForFile(p), 1024).collect()
+      val rows = DataPlane.tail(fs.rowsForFile(p), 1024).collect()
       val payload = if (rows.isEmpty) Array.emptyByteArray
         else rows(0).getAs[Array[Byte]]("data")
       ShellResult(0, Seq(new String(payload, java.nio.charset.StandardCharsets.UTF_8)), Nil)
@@ -445,7 +460,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       // fresh path. Each source runs in the doall loop.
       val rawDst = abs(args.last)
       val sources = args.dropRight(1)
-      val dstIsDir = stat(rawDst).exists(_.isDirectory)
+      val dstIsDir = mount.inode(rawDst).exists(_.isDir)
       if (sources.length > 1 && !dstIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When copying multiple files, destination ${args.last} should be a directory."))
@@ -454,7 +469,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
         // an existing file at the target errors (no silent overwrite)
         val base = java.nio.file.Paths.get(local).getFileName.toString
         val dst = if (dstIsDir) s"${dirPrefix(rawDst)}$base" else rawDst
-        if (stat(dst).isDefined)
+        if (mount.inode(dst).isDefined)
           throw new IOException(s"Target $dst already exists")
         // streams through the mount's create (parents made, geometry
         // from the mount's conf); the local source is unlinked only
@@ -480,10 +495,11 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       if (matched.length > 1 && !localIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When copying multiple files, destination $local should be a directory."))
+      val snap = fs
       matched.foreach { m =>
         val p = fileArg(m)
         val target = if (localIsDir) s"$local/${basename(p)}" else local
-        DataPlane.get(snapshot.rowsForFile(p), p, target)
+        DataPlane.get(snap.rowsForFile(p), p, target)
       }
       ShellResult(0, Nil, Nil)
 
@@ -496,9 +512,9 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       val src = abs(args.head)
       // the reference path errors on a missing source (FileUtil
       // .copyMerge's getFileStatus) — never silently write an empty file
-      if (!catalog.exists(src)) throw new FileNotFoundException(src)
+      existing(src)
       // dir-scoped prefix: "/data" must not bleed onto "/databak"
-      DataPlane.getmergeTo(snapshot.chunks, dirPrefix(src), args(1), addnl)
+      DataPlane.getmergeTo(fs.chunks, dirPrefix(src), args(1), addnl)
       ShellResult(0, Nil, Nil)
 
     case other =>

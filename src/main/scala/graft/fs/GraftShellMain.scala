@@ -90,10 +90,10 @@ object GraftShellMain {
     "-mv", "-cp", "-rm", "-rmr", "-mkdir", "-touchz")
 
   /** Atomically point `dir`'s CURRENT at `version` — the only visible
-    * commit point of a save. */
-  private def flip(dir: String, version: String): Unit = {
+    * commit point of a save or compaction; the tmp name is per call. */
+  private[fs] def flip(dir: String, version: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(dir, s".$CurrentPtr.tmp")
+    val tmp = Paths.get(dir, s".$CurrentPtr.tmp${java.util.UUID.randomUUID()}")
     Files.write(tmp, version.getBytes("UTF-8"))
     Files.move(tmp, Paths.get(dir, CurrentPtr),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)

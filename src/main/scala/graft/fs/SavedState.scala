@@ -19,17 +19,13 @@ import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
   * a versioned dir named by `CURRENT`) — the executor-side read path
   * of the scheme mount.
   *
-  * Why this exists: the reference serves ANY client — every SnackFS
-  * consumer talks straight to the store with no driver in the loop
-  * (reference README.md:7, FileSystemInputStream.scala reads blocks
-  * through the store connection it holds). The Spark-native analog of
-  * "the store is directly addressable" is that a saved state IS plain
-  * parquet: an executor (or any session-less JVM) can read an inode
-  * table and fetch one file's block rows with the stock parquet-hadoop
-  * reader — no SparkSession, no driver job, no nested action. The
-  * facade's `blockAt` routes every block miss here: saved payloads,
-  * wal deltas and the mount's own folded segments are all this one
-  * layout, so no payload read needs the driver's engine.
+  * Why this exists: the reference serves ANY client straight from the
+  * store, no driver in the loop (README.md:7, FileSystemInputStream).
+  * Here a saved state IS plain parquet: any session-less JVM reads an
+  * inode table or one file's block rows with the stock parquet-hadoop
+  * reader — no SparkSession, no job. The facade's `blockAt` routes every
+  * block miss here: saved payloads, wal deltas and the mount's folded
+  * segments share this one layout.
   *
   * Pruning shape: [[readBlock]] pushes `path = X AND block_id = N`
   * into the parquet reader (row-group statistics + dictionary +

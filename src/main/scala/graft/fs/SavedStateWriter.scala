@@ -5,6 +5,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 import graft.catalog.Inode
@@ -16,14 +17,11 @@ import graft.catalog.Inode
   * readers, and DuckDB all read back identically.
   *
   * Why this exists: the reference's store is DIRECTLY writable by any
-  * client — every SnackFS consumer runs its own mutations as Cassandra
-  * batch mutates with no coordinator process (reference
-  * ThriftStore.scala:281-385). The Spark-native analog for the
-  * persisted state is that the layout is PLAIN PARQUET with a fixed
-  * schema: writing one inode row or one file's chunk rows needs the
-  * stock parquet-hadoop writer, nothing else. [[SharedStateStore]]
-  * composes these writers with the cross-process create-lock protocol
-  * to give N independent driver JVMs a single live namespace.
+  * client, with no coordinator (ThriftStore.scala:281-385); here the
+  * layout is PLAIN PARQUET with a fixed schema, so one inode row or one
+  * file's chunk rows needs the stock parquet writer and nothing else.
+  * [[SharedStateStore]] composes these writers with the cross-process
+  * create-lock protocol into one live namespace for N driver JVMs.
   *
   * Schema parity: the message types below mirror what Spark's parquet
   * writer emits for the `Inode` dataset (3-level LIST groups named
@@ -80,18 +78,27 @@ object SavedStateWriter {
       |  optional int64 length;
       |}""".stripMargin)
 
+  /** A writer of one new local file, through java.nio: Hadoop's local
+    * FileSystem forks a `chmod` per file and per `.crc` sibling when the
+    * native Hadoop library is absent (most of a wal commit's time). */
   private def writer(file: String, schema: MessageType) = {
     val conf = new Configuration(false)
     org.apache.parquet.hadoop.example.GroupWriteSupport
       .setSchema(schema, conf)
     ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file), conf))
+        new LocalOutputFile(java.nio.file.Paths.get(file)))
       .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
   }
+
+  /** An inode as [[SavedState.readCatalog]] reads it back from
+    * [[writeCatalogFile]]: mtime in millis (null: epoch), subBlocks non-null. */
+  def asRead(n: Inode): Inode = n.copy(
+    mtime = new java.sql.Timestamp(Option(n.mtime).fold(0L)(_.getTime)),
+    blocks = Option(n.blocks).map(_.map(b =>
+      if (b.subBlocks == null) b.copy(subBlocks = Seq.empty) else b)).orNull)
 
   /** Write inodes (caller-sorted by path) as ONE parquet file. */
   def writeCatalogFile(file: String, inodes: Seq[Inode]): Unit = {

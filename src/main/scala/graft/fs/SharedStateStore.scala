@@ -32,15 +32,13 @@ import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps, SharedFileLocks}
   *    uses, leaving a standard complete layout any consumer
   *    (the scheme mount and the shell on it, DSv2) reads.
   *
-  * Scale posture (100 TB): a mutation writes O(mutation) bytes — one
-  * inode row + that file's chunk rows — never O(namespace); a point
-  * read touches one row group of one base file plus the wal tail;
-  * the wal tail is kept short by compaction, whose O(namespace) cost
-  * is the inherent LSM amortization (the reference pays the same in
-  * Cassandra's own compaction). The layout is plain sorted parquet,
-  * so a corpus-scale fold can run as a distributed Spark job over the
-  * identical files; this binding's [[compact]] is the session-free
-  * operator verb for metadata-scale states.
+  * Scale posture (100 TB): a mutation writes O(mutation) bytes, never
+  * O(namespace); a point read touches one row group of one base file
+  * plus the wal tail, which compaction keeps short (the inherent LSM
+  * amortization, as in Cassandra's own compaction). The layout is plain
+  * sorted parquet, so a corpus-scale fold can run as a Spark job over
+  * the same files; [[compact]] is the session-free verb for
+  * metadata-scale states.
   *
   * Concurrency contract: mutations are serialized by the namespace
   * lock; lock-free readers see a consistent committed prefix of the
@@ -87,13 +85,13 @@ final class SharedStateStore(stateDir: String,
     */
   def atomically[T](f: => T): T = { live(); withNamespace(f) }
 
-  private def live(): Unit =
-    require(GraftShellMain.currentStateDir(stateDir).isDefined,
-      "createKeyspace() first")
-
-  private def baseDir: String =
-    GraftShellMain.currentStateDir(stateDir).getOrElse(
-      sys.error("no complete persisted state — createKeyspace() first"))
+  /** The current version dir (one `CURRENT` read); fails before
+    * [[createKeyspace]]. */
+  private def live(): String = {
+    val base = GraftShellMain.currentStateDir(stateDir)
+    require(base.isDefined, "createKeyspace() first")
+    base.get
+  }
 
   // ── delta plane ───────────────────────────────────────────────────
   private case class Delta(seq: Long, dir: Path, op: String, path: String)
@@ -159,6 +157,7 @@ final class SharedStateStore(stateDir: String,
                           inode: Option[Inode],
                           chunks: Option[Seq[SavedStateWriter.ChunkRow]])
       : Unit = {
+    live()
     Files.createDirectories(walDir)
     val seq = listDeltas().lastOption.map(_.seq + 1).getOrElse(0L)
     val tmp = Files.createTempDirectory(walDir, ".tmp")
@@ -177,6 +176,9 @@ final class SharedStateStore(stateDir: String,
     }
     val commit = walDir.resolve(f"d$seq%010d_${UUID.randomUUID().toString.take(8)}")
     Files.move(tmp, commit, StandardCopyOption.ATOMIC_MOVE)
+    SharedStateStore.opCache.put(commit.toString, (op, path))
+    inode.foreach(n => SharedStateStore.inodeCache.put(commit.toString,
+      SavedStateWriter.asRead(n)))
   }
 
   /** Public wal-overlay snapshot for facade consumers (the scheme
@@ -201,16 +203,8 @@ final class SharedStateStore(stateDir: String,
         Seq(FsCatalog.dirInode("/", "graft")))
       SavedStateWriter.writeChunksFile(
         base.resolve("chunks").resolve("part-0.parquet").toString, Seq.empty)
-      flipCurrent(version)
+      GraftShellMain.flip(stateDir, version)
     }
-  }
-
-  /** WRITE-NEW-THEN-FLIP (saveFs's commit discipline verbatim). */
-  private def flipCurrent(version: String): Unit = {
-    val tmp = Paths.get(stateDir, s".CURRENT.tmp${UUID.randomUUID()}")
-    Files.write(tmp, version.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(stateDir, "CURRENT"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** No-op BY DESIGN (not unimplemented): the reference's init builds a
@@ -220,26 +214,25 @@ final class SharedStateStore(stateDir: String,
   override def init(): Unit = ()
 
   override def storeINode(inode: Inode): Unit = withNamespace {
-    live()
     commitDelta("storeINode", inode.path, Some(inode), None)
   }
 
-  override def retrieveINode(path: String): Option[Inode] = {
-    live()
-    val (inodes, _) = replay()
+  override def retrieveINode(path: String): Option[Inode] =
+    inodeIn(live(), replay()._1, path)
+
+  private def inodeIn(base: String, inodes: Map[String, Option[Inode]],
+                      path: String): Option[Inode] =
     inodes.get(path) match {
       case Some(resolved) => resolved
       case None =>
-        SavedState.readInodes(s"$baseDir/catalog",
+        SavedState.readInodes(s"$base/catalog",
           Some(SavedState.pathEq(path))).headOption
     }
-  }
 
   override def storeFileData(path: String, data: Array[Byte],
                              user: String,
                              mtime: java.sql.Timestamp): Unit =
     withNamespace {
-      live()
       val inode = Inode(path, PathOps.parent(path), user, user, 420,
         isDir = false, mtime,
         BlockMeta.forLength(path, data.length.toLong,
@@ -249,43 +242,36 @@ final class SharedStateStore(stateDir: String,
           subBlockSize, blockSize)))
     }
 
-  /** The chunks source holding a path's payload — its latest wal delta
-    * file, or the base version's chunks dir — or None once deleted.
-    * Both are read by the same block-pruned [[SavedState.readBlock]].
+  /** A path's payload source — its latest wal delta file, or the base
+    * version's chunks dir, both read by the same block-pruned
+    * [[SavedState.readBlock]] — with its block map, resolved from ONE
+    * `CURRENT` read and ONE wal replay; None once deleted.
     */
-  private def payloadSource(path: String): Option[String] = {
-    val (_, payloads) = replay()
-    payloads.get(path) match {
+  private def payloadOf(path: String): Option[(String, Seq[BlockMeta])] = {
+    val base = live()
+    val (inodes, payloads) = replay()
+    val src = payloads.get(path) match {
       case Some(delta) => delta.map(_.toString)
-      case None => Some(s"$baseDir/chunks")
+      case None => Some(s"$base/chunks")
     }
+    src.map(_ -> inodeIn(base, inodes, path).flatMap(n => Option(n.blocks))
+      .getOrElse(Seq.empty))
   }
 
-  private def blocksOf(path: String): Seq[BlockMeta] =
-    retrieveINode(path).flatMap(n => Option(n.blocks)).getOrElse(Seq.empty)
-
-  override def retrieveBlock(path: String): Array[Byte] = {
-    live()
-    payloadSource(path) match {
-      case None => Array.emptyByteArray
-      case Some(src) =>
-        blocksOf(path).indices.toArray
-          .flatMap(b => SavedState.readBlock(src, path, b.toLong))
-    }
-  }
+  override def retrieveBlock(path: String): Array[Byte] =
+    retrieveSubBlock(path, 0L, Long.MaxValue)
 
   override def retrieveSubBlock(path: String, byteRangeStart: Long,
                                 len: Long): Array[Byte] = {
-    live()
-    if (len <= 0 || byteRangeStart < 0) return Array.emptyByteArray
-    payloadSource(path) match {
+    if (len <= 0 || byteRangeStart < 0) { live(); return Array.emptyByteArray }
+    payloadOf(path) match {
       case None => Array.emptyByteArray
-      case Some(src) =>
+      case Some((src, blocks)) =>
         val end = byteRangeStart + len
         // only the blocks OVERLAPPING the range are fetched, each one a
         // row-group-pruned read
         val buf = new java.io.ByteArrayOutputStream()
-        blocksOf(path).zipWithIndex.foreach { case (b, i) =>
+        blocks.zipWithIndex.foreach { case (b, i) =>
           if (b.offset < end && b.offset + b.length > byteRangeStart) {
             val data = SavedState.readBlock(src, path, i.toLong)
             val from = math.max(0L, byteRangeStart - b.offset).toInt
@@ -298,18 +284,16 @@ final class SharedStateStore(stateDir: String,
   }
 
   override def deleteINode(path: String): Unit = withNamespace {
-    live()
     commitDelta("deleteINode", path, None, None)
   }
 
   override def deleteBlocks(path: String): Unit = withNamespace {
-    live()
     commitDelta("deleteBlocks", path, None, None)
   }
 
   override def fetchSubPaths(path: String,
                              isDeepFetch: Boolean): Seq[String] = {
-    live()
+    val baseDir = live()
     val (inodes, _) = replay()
     val prefix = if (path == "/") "/" else path + "/"
     val base = SavedState.readInodes(s"$baseDir/catalog",
@@ -326,7 +310,6 @@ final class SharedStateStore(stateDir: String,
   }
 
   override def getBlockLocations(path: String): Map[String, Seq[String]] = {
-    live()
     // the ring formula of FsCatalog.blockLocations (B11 parity)
     retrieveINode(path).flatMap(n => Option(n.blocks))
       .getOrElse(Seq.empty).map { b =>
@@ -368,14 +351,15 @@ final class SharedStateStore(stateDir: String,
     * when the state outgrows one process.
     */
   def compact(): Unit = withNamespace {
-    live()
+    val oldBase = live()
     val (inodes, payloads) = replay()
-    if (inodes.nonEmpty || payloads.nonEmpty) compactLocked(inodes, payloads)
+    if (inodes.nonEmpty || payloads.nonEmpty)
+      compactLocked(oldBase, inodes, payloads)
   }
 
-  private def compactLocked(inodes: Map[String, Option[Inode]],
+  private def compactLocked(oldBase: String,
+                            inodes: Map[String, Option[Inode]],
                             payloads: Map[String, Option[Path]]): Unit = {
-    val oldBase = baseDir
     // fold the catalog: base rows minus tombstones, overlay upserts win
     val base = SavedState.readCatalog(s"$oldBase/catalog")
       .map(n => n.path -> n).toMap
@@ -405,7 +389,7 @@ final class SharedStateStore(stateDir: String,
     SavedStateWriter.writeChunksFile(
       out.resolve("chunks").resolve("part-0.parquet").toString,
       rows.result())
-    flipCurrent(version)
+    GraftShellMain.flip(stateDir, version)
     // prune folded deltas and superseded versions (the commit point —
     // the flip — has already passed; a crash here only leaves garbage
     // a later compact re-prunes)
@@ -430,8 +414,9 @@ object SharedStateStore {
   val NamespaceKey = "/__graft_namespace__"
 
   /** Committed delta dirs are immutable — their parsed OP lines and
-    * inode rows cache process-wide (stale entries for compacted-away
-    * dirs are harmless; they are never listed again).
+    * inode rows cache process-wide, seeded by the committing process
+    * so a replay never reads back its own commits (stale entries for
+    * compacted-away dirs are harmless; they are never listed again).
     */
   private val opCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()

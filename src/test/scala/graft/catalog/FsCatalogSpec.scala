@@ -181,6 +181,17 @@ class FsCatalogSpec extends AnyFlatSpec with Matchers {
     viaFrames.find(_._1 == "/z/sub/f3").get._2 must be("/z/sub")
   }
 
+  it must "count a non-BMP character as one in du's and the fallback rename's substrings" in {
+    val d = "/\uD83D\uDE00"
+    val cat = CatalogBuilder.fromEntries(spark, Seq(
+      ("/", true, 0L), (d, true, 0L), (s"$d/f1", false, 10L)))
+    cat.du(d).collect().map(r => r.getString(0) -> r.getLong(1)).toSeq must
+      be(Seq(s"$d/f1" -> 10L))
+    cat.renameFrames(d, "/z", maxCollected = 0).inodes.collect()
+      .map(n => (n.path, n.parentPath)).sortBy(_._1).toSeq must
+      be(Seq(("/", null), ("/z", "/"), ("/z/f1", "/z")))
+  }
+
   behavior of "du/dus/count (D3-D5)"
 
   it must "aggregate per-child and total byte counts" in {

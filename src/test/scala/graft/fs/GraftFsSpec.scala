@@ -62,6 +62,19 @@ class GraftFsSpec extends AnyFlatSpec with Matchers {
     fs2.chunkSummary("/d/").collect()(0).getAs[Long]("n_chunks") must be(0L)
   }
 
+  it must "re-root chunk paths under a non-BMP source whole" in {
+    val s = spark
+    import s.implicits._
+    val d = "/\uD83D\uDE00"
+    val cat = CatalogBuilder.fromEntries(spark, Seq(
+      ("/", true, 0L), (d, true, 0L), (s"$d/a", false, 3L)))
+    val fs = GraftFs(cat, DataPlane.chunk(
+      Seq((s"$d/a", Array[Byte](1, 2, 3))).toDF("path", "data"), 10, 30))
+    val (fs2, _) = fs.rename(d, "/m")
+    fs2.cat("/m/a").collect()(0).getAs[Array[Byte]]("data") must
+      be(Array[Byte](1, 2, 3))
+  }
+
   it must "treat self-rename as a no-op success — agreeing with the facade" in {
     // the mounted facade answers true for rename(p, p); the frame path
     // must agree (r11 ADVICE flagged a suspected divergence here), and

@@ -723,10 +723,11 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
   }
 
   it must "run -mkdir/-touchz/-mv/-rm/-put as mount verbs with ZERO Spark jobs" in {
-    // the shell's mutations are the mount's pure-memory verbs: the
-    // job-count listener (SchemeMountSpec's proof) stays flat across a
-    // long session of mutating verbs, uploads included — no verb
-    // schedules work and no state cell checkpoints behind them
+    // the shell's mutations are the mount's pure-memory verbs and its
+    // namespace reads (glob expansion included) answer from the mount's
+    // inode cache: the job-count listener (SchemeMountSpec's proof)
+    // stays flat across a long session of both, uploads included — no
+    // verb schedules work and no state cell checkpoints behind them
     val sh = newShell()
     val local = Files.createTempFile("graft-shell-nojobs", ".txt")
     Files.write(local, "no jobs here".getBytes)
@@ -740,6 +741,18 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
         sh.run(Array("-mv", s"/nj/d$i/t", s"/nj/d$i/u")).code must be(0)
         sh.run(Array("-put", local.toString, s"/nj/d$i/p")).code must be(0)
         sh.run(Array("-rm", s"/nj/d$i/u")).code must be(0)
+        sh.run(Array("-touchz", s"/nj/d$i/g")).code must be(0)
+        sh.run(Array("-rm", s"/nj/d$i/g*")).code must be(0)
+        sh.run(Array("-ls", s"/nj/d$i", "/nj/d*/p")).code must be(0)
+        sh.run(Array("-lsr", "/nj")).code must be(0)
+        sh.run(Array("-du", s"/nj/d$i", s"/nj/d$i/p", "/nj/d?")).code must be(0)
+        sh.run(Array("-dus", "/nj")).code must be(0)
+        sh.run(Array("-count", "/nj")).code must be(0)
+        sh.run(Array("-count", "-q", s"/nj/d$i")).code must be(0)
+        sh.run(Array("-stat", "%b %n %o %r %F %y %Y", s"/nj/d$i/p")).code must be(0)
+        sh.run(Array("-test", "-d", s"/nj/d$i")).code must be(0)
+        sh.run(Array("-test", "-z", s"/nj/d$i/p")).code must be(1)
+        sh.run(Array("-test", "-e", s"/nj/d$i/u")).code must be(1)
       }
       sh.run(Array("-rmr", "/nj")).code must be(0)
       Thread.sleep(300) // let the listener bus drain

@@ -1,5 +1,7 @@
 package graft.fs
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.must.Matchers
 
@@ -42,6 +44,29 @@ class SharedStateStoreSpec extends AnyFlatSpec with Matchers {
     // deletes propagate too
     b.deleteINode("/d/f1")
     a.fetchSubPaths("/d", isDeepFetch = false) must be(Seq("/d/f2"))
+  }
+
+  it must "serve its own commits from memory exactly as a reader of the files sees them" in {
+    import graft.catalog.{BlockMeta, FsCatalog, Inode}
+    val dir = newDir()
+    val a = new SharedStateStore(dir, 8, 32)
+    a.createKeyspace()
+    val t = java.sql.Timestamp.valueOf("2024-05-01 10:00:00.123456789")
+    val file = Inode("/f", "/", "u", "g", 420, isDir = false, t,
+      Seq(BlockMeta("b0", 0L, 5L, null)))
+    val nodes = Seq(FsCatalog.dirInode("/d", "u"), file,
+      file.copy(path = "/g", mtime = null))
+    nodes.foreach(a.storeINode)
+    // what another process, with nothing cached, reads from each delta
+    val fromFiles = nodes.map { n =>
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "wal"))
+      val hit = try l.iterator().asScala.toSeq.filter(d =>
+        new String(java.nio.file.Files.readAllBytes(d.resolve("OP")), "UTF-8")
+          .split("\n")(1) == n.path).head finally l.close()
+      SavedState.readCatalog(hit.resolve("inode").toString).head
+    }
+    nodes.map(n => a.retrieveINode(n.path).get) must be(fromFiles)
+    nodes.map(SavedStateWriter.asRead) must be(fromFiles)
   }
 
   it must "ignore a torn commit (temp delta dir) — rename is the commit point" in {

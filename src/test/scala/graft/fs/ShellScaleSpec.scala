@@ -76,7 +76,7 @@ class ShellScaleSpec extends AnyFlatSpec with Matchers {
     perInode must be < 2048.0 // the SURVEY §8 ceiling argument
     val sh = new GraftShell(mount, FsContext.initialize("graftfs://scale"))
 
-    // read verbs answer from the cache-backed frame
+    // read verbs answer from the mount's inode cache
     sh.run(Array("-ls", "/d5")).out.head must be("Found 999 items")
     val lsRoot = sh.run(Array("-ls", "/"))
     lsRoot.out.head must be(s"Found $NDirs items")
@@ -91,7 +91,7 @@ class ShellScaleSpec extends AnyFlatSpec with Matchers {
     sh.run(Array("-touchz", "/extra/z")).code must be(0)
     sh.run(Array("-ls", "/extra")).out.head must be("Found 1 items")
 
-    // aggregate over the full namespace still runs (distributed fold)
+    // aggregate over the full namespace still runs (a whole-cache walk)
     sh.run(Array("-dus", "/")).code must be(0)
     // 1M inodes sit UNDER the 10M default: the cap must not have fired
     sh.inodeCapExceeded must be(false)
