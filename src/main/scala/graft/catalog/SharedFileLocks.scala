@@ -147,17 +147,28 @@ object SharedFileLocks {
   }
 
   /** Forkable contender (the multi-process spec's subject): argv =
-    * (root, path) → try one acquire; print `WON <token>` and hold for
-    * 300 ms before releasing (so concurrent contenders observe a held
-    * lock), or print `LOST`. Exit 0 either way — losing is a protocol
-    * outcome, not an error.
+    * (root, path, markerDir, contenders) → try one acquire, then drop a
+    * marker file in `markerDir`; print `WON <token>` or `LOST`. The
+    * winner holds the lock until `contenders` markers exist (every
+    * contender has tried; capped at 30 s), so the outcome does not
+    * depend on how far apart the JVMs start. Exit 0 either way — losing
+    * is a protocol outcome, not an error.
     */
   def main(args: Array[String]): Unit = {
-    val Array(root, path) = args.take(2)
-    acquire(root, path) match {
+    val Array(root, path, markerDir, contenders) = args.take(4)
+    val markers = Paths.get(markerDir)
+    def markerCount(): Long = {
+      val l = Files.list(markers)
+      try l.count() finally l.close()
+    }
+    val won = acquire(root, path)
+    Files.createFile(markers.resolve(UUID.randomUUID().toString))
+    won match {
       case Some(token) =>
         println(s"WON $token")
-        Thread.sleep(300)
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (markerCount() < contenders.toLong && System.nanoTime() < deadline)
+          Thread.sleep(20)
         release(root, path, token)
         println("RELEASED")
       case None => println("LOST")

@@ -235,7 +235,7 @@ object DataPlane {
     */
   private def sequenceFileText(bytes: Array[Byte]): Array[Byte] = {
     import org.apache.hadoop.io.SequenceFile
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = ParquetFiles.conf
     val reader = new SequenceFile.Reader(conf,
       SequenceFile.Reader.stream(
         new org.apache.hadoop.fs.FSDataInputStream(new SeekableBytes(bytes))),

@@ -211,6 +211,21 @@ class GraftFileSystem extends FileSystem {
   private var segmentDir: java.nio.file.Path = _
   private var segmentSeq = 0L
 
+  /** The mounted state's saved chunks dir, resolved part by part: its
+    * footer bounds load at the first block miss there (initialize
+    * reads no chunk file). Null for a mount without a saved state. */
+  @volatile private var savedChunks: SavedState.ChunkParts = _
+
+  /** `owner`'s rows of block `blockId` in one payload source. A saved
+    * file's rows are looked up by its stored key, so a renamed saved
+    * file resolves to the parts that hold it. */
+  private def sourceRows(src: String, key: String,
+                         blockId: Long): Seq[(Int, Array[Byte])] = {
+    val saved = savedChunks
+    if (saved != null && src == saved.dir) saved.blockRows(key, blockId)
+    else SavedState.blockRows(src, key, blockId)
+  }
+
   /** Drop `p`'s payload entry (delete, wal tombstone). Caller holds
     * [[mutLock]]; memory rows of dead entries go at the next
     * [[dropDeadRows]]. */
@@ -608,11 +623,11 @@ class GraftFileSystem extends FileSystem {
     // saved-state bootstrap is SESSION-FREE (plain parquet readers):
     // metadata seeds the cache, every saved file's payload source is
     // the saved chunks dir
+    savedChunks = stateDir.map(root => new SavedState.ChunkParts(s"$root/chunks")).orNull
     stateDir.foreach { root =>
-      val chunksDir = s"$root/chunks"
       SavedState.readCatalog(s"$root/catalog").foreach { n =>
         cachePut(n)
-        if (n.isFile) payloads.put(n.path, new Payload(n.path, List(chunksDir)))
+        if (n.isFile) payloads.put(n.path, new Payload(n.path, List(savedChunks.dir)))
       }
     }
     // wal-overlay application (write-through scaladoc): post-mount
@@ -992,7 +1007,7 @@ class GraftFileSystem extends FileSystem {
           else (memRows(owner, id.toInt), owner.key, owner.sources)
         }
         cached = SavedState.assemble(
-          mem ++ sources.flatMap(SavedState.blockRows(_, key, id)))
+          mem ++ sources.flatMap(sourceRows(_, key, id)))
         cachedId = id
       }
       if (cached.length < needUpTo)

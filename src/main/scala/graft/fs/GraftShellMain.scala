@@ -100,11 +100,11 @@ object GraftShellMain {
   }
 
   /** The chunk plane of a saved version: range-partitioned + sorted on
-    * the (path, block_id) lookup key, so parquet row-group min/max
-    * statistics prune a one-block fetch (SavedState.readBlock, the
-    * mount's executor-side read path) to one row group of one file
-    * instead of a corpus scan — the same stats-anchoring FsCatalog.save
-    * applies to the catalog.
+    * the (path, block_id) lookup key, so a mount's one-block fetch
+    * (SavedState.ChunkParts) opens only the part whose footer `path`
+    * bounds cover the key, and its row-group min/max statistics prune
+    * the rest of that file — not a corpus scan. The same
+    * stats-anchoring FsCatalog.save applies to the catalog.
     */
   private[fs] def writeChunks(chunks: DataFrame, chunksDir: String): Unit =
     chunks

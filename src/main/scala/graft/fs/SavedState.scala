@@ -4,12 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
 
 import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
@@ -27,14 +24,19 @@ import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
   * block miss here: saved payloads, wal deltas and the mount's folded
   * segments share this one layout.
   *
-  * Pruning shape: [[readBlock]] pushes `path = X AND block_id = N`
-  * into the parquet reader (row-group statistics + dictionary +
-  * record-level filtering), and `saveFs` range-partitions + sorts the
-  * chunk table by (path, block_id), so at scale a one-block fetch
-  * touches one row group of one file, not the corpus. A 100 TB
-  * deployment points `graft.mount.state.dir` at shared storage and
-  * every executor reads its own splits directly — the same no-driver
-  * shape as the DSv2 connector, for the byte-stream API.
+  * Pruning shape: `saveFs` range-partitions + sorts the chunk table by
+  * (path, block_id). [[readBlock]] opens every part file of a source
+  * and pushes `path = X AND block_id = N` into each reader (row-group
+  * statistics + dictionary + record-level filtering). A mount resolves
+  * its saved chunks dir through [[ChunkParts]] instead: each part's
+  * footer `path` bounds are read once, so a one-block fetch opens only
+  * the part (two, when the file's blocks straddle a boundary) whose
+  * range covers the key, and decodes only the row groups whose
+  * statistics admit it. A 100 TB deployment points
+  * `graft.mount.state.dir` at shared storage and every executor reads
+  * its own splits directly — the same no-driver shape as the DSv2
+  * connector, for the byte-stream API. Every reader builds over the
+  * JVM's one loaded [[ParquetFiles.conf]].
   */
 object SavedState {
 
@@ -53,7 +55,9 @@ object SavedState {
     finally l.close()
   }
 
-  private def hconf(): Configuration = new Configuration(false)
+  /** A local file as a `file:` path: these readers never resolve a path
+    * through the conf's default filesystem. */
+  private def local(f: String): Path = new Path(Paths.get(f).toUri)
 
   /** All inodes of a saved catalog dir — the executor-mode mount's
     * metadata bootstrap. Handles both parquet timestamp encodings
@@ -73,11 +77,7 @@ object SavedState {
                    .FilterPredicate]): Seq[Inode] = {
     val out = Seq.newBuilder[Inode]
     parquetFiles(catalogDir).foreach { f =>
-      val b = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
-        .withConf(hconf())
-      filter.foreach(p => b.withFilter(FilterCompat.get(p)))
-      val reader = b.build()
+      val reader = ParquetFiles.groupReader(local(f), filter)
       try {
         var g = reader.read()
         while (g != null) {
@@ -194,19 +194,19 @@ object SavedState {
   /** [[readBlock]]'s unassembled form: the block's (sub_id, bytes) rows
     * in one source, for callers merging several sources. */
   def blockRows(source: String, savedPath: String,
-                blockId: Long): Seq[(Int, Array[Byte])] = {
+                blockId: Long): Seq[(Int, Array[Byte])] =
+    rowsIn(parquetFiles(source), savedPath, blockId)
+
+  private def rowsIn(files: Seq[String], savedPath: String,
+                     blockId: Long): Seq[(Int, Array[Byte])] = {
     val pred = FilterApi.and(
       FilterApi.eq(FilterApi.binaryColumn("path"),
         Binary.fromString(savedPath)),
       FilterApi.eq(FilterApi.intColumn("block_id"),
         java.lang.Integer.valueOf(blockId.toInt)))
     val rows = Seq.newBuilder[(Int, Array[Byte])]
-    parquetFiles(source).foreach { f =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
-        .withConf(hconf())
-        .withFilter(FilterCompat.get(pred))
-        .build()
+    files.foreach { f =>
+      val reader = ParquetFiles.groupReader(local(f), Some(pred))
       try {
         var g = reader.read()
         while (g != null) {
@@ -217,6 +217,38 @@ object SavedState {
       } finally reader.close()
     }
     rows.result()
+  }
+
+  /** A range-partitioned chunks dir (the `saveFs` layout) as a block
+    * lookup for the mount that reads it. The first lookup reads each
+    * part file's footer `path` (min, max) once; every lookup then opens
+    * only the parts whose bounds cover the key — two when a file's
+    * blocks straddle a part boundary — plus any part without bounds.
+    * Bounds compare in unsigned UTF-8 byte order, parquet's statistics
+    * order. A saved version dir is immutable, so the bounds never go
+    * stale; nothing is read until the first lookup.
+    */
+  final class ChunkParts(val dir: String) {
+    private lazy val parts: Seq[(String, Option[(Array[Byte], Array[Byte])])] =
+      parquetFiles(dir).flatMap { f =>
+        val footer = ParquetFiles.footer(local(f))
+        if (footer.getBlocks.isEmpty) None // a zero-row part holds nothing
+        else Some(f -> ParquetFiles.pathBounds(footer))
+      }
+
+    /** The part files that can hold rows keyed `savedPath`. */
+    def holding(savedPath: String): Seq[String] = {
+      val k = ParquetFiles.u8(savedPath)
+      parts.collect {
+        case (f, b) if b.forall { case (lo, hi) =>
+          ParquetFiles.cmp(lo, k) <= 0 && ParquetFiles.cmp(k, hi) <= 0
+        } => f
+      }
+    }
+
+    /** [[blockRows]] over only the parts [[holding]] the key. */
+    def blockRows(savedPath: String, blockId: Long): Seq[(Int, Array[Byte])] =
+      rowsIn(holding(savedPath), savedPath, blockId)
   }
 
   /** Concatenate (sub_id, bytes) rows in subblock order. */

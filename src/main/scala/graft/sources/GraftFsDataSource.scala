@@ -7,11 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{GroupType, MessageType, Type, Types}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -21,6 +17,8 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.fs.ParquetFiles
 
 /** DataSourceV2 connector that MOUNTS a saved FsCatalog snapshot — the
   * reference's "point Spark at live filesystem state and read it"
@@ -54,6 +52,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    API with a pruned projection (path, parentPath, isDir,
   *    blocks.element.length only) — sub-block metadata, the bulk of the
   *    snapshot bytes, is never materialized.
+  *  - Planning and every partition reader share the JVM's one loaded
+  *    Hadoop conf (`graft.fs.ParquetFiles.conf`, defaults plus any
+  *    core-site.xml, since the snapshot dir may be non-local); a reader
+  *    sets its projection on a copy, never on the shared conf. The
+  *    footer min/max logic is `ParquetFiles.pathBounds`, the same one
+  *    the mount uses to open only the chunk parts that hold a block.
   *
   * Usage:
   *   catalog.save(dir)
@@ -150,9 +154,8 @@ class GraftFsScan(snapshotDir: String, pushed: Array[Filter])
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     val dir = new Path(snapshotDir)
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(ParquetFiles.conf)
     val files = fs.listStatus(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
@@ -161,48 +164,28 @@ class GraftFsScan(snapshotDir: String, pushed: Array[Filter])
 
     var projection: String = null
     files.flatMap { st =>
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
-      try {
-        val footer = rd.getFooter
-        if (projection == null)
-          projection = GraftFsScan.projectionOf(footer.getFileMetaData.getSchema).toString
-        val groups = footer.getBlocks.asScala
-        if (groups.isEmpty) None // zero-row file: nothing to read
-        else {
-          // min/max of `path` across the file's row groups; any row group
-          // missing stats collapses the whole file to None ⇒ kept
-          val perGroup = groups.map { bg =>
-            bg.getColumns.asScala.find(_.getPath.toDotString == "path")
-              .map(_.getStatistics)
-              .filter(s => s != null && s.hasNonNullValue)
-              .map { s =>
-                (s.genericGetMin.asInstanceOf[Binary].getBytes,
-                  s.genericGetMax.asInstanceOf[Binary].getBytes)
-              }
-          }
-          val stats =
-            if (perGroup.exists(_.isEmpty)) None
-            else perGroup.flatten.reduceOption[(Array[Byte], Array[Byte])] {
-              case ((alo, ahi), (lo, hi)) =>
-                (if (GraftFsScan.cmp(lo, alo) < 0) lo else alo,
-                  if (GraftFsScan.cmp(hi, ahi) > 0) hi else ahi)
-            }
-          val survives = stats.forall { case (min, max) =>
-            intervals.forall { iv =>
-              GraftFsScan.cmp(max, iv.lo) >= 0 && iv.hi.forall { h =>
-                val c = GraftFsScan.cmp(min, h)
-                if (iv.hiInclusive) c <= 0 else c < 0
-              }
+      val footer = ParquetFiles.footer(st.getPath)
+      if (projection == null)
+        projection = GraftFsScan.projectionOf(footer.getFileMetaData.getSchema).toString
+      if (footer.getBlocks.isEmpty) None // zero-row file: nothing to read
+      else {
+        // missing stats in any row group ⇒ None ⇒ the file is kept
+        val stats = ParquetFiles.pathBounds(footer)
+        val survives = stats.forall { case (min, max) =>
+          intervals.forall { iv =>
+            GraftFsScan.cmp(max, iv.lo) >= 0 && iv.hi.forall { h =>
+              val c = GraftFsScan.cmp(min, h)
+              if (iv.hiInclusive) c <= 0 else c < 0
             }
           }
-          if (survives)
-            Some(GraftSnapshotPartition(st.getPath.toString, projection,
-              GraftFsScan.replicas(stats
-                .map(b => new String(b._1, java.nio.charset.StandardCharsets.UTF_8))
-                .getOrElse(st.getPath.getName))))
-          else None
         }
-      } finally rd.close()
+        if (survives)
+          Some(GraftSnapshotPartition(st.getPath.toString, projection,
+            GraftFsScan.replicas(stats
+              .map(b => new String(b._1, java.nio.charset.StandardCharsets.UTF_8))
+              .getOrElse(st.getPath.getName))))
+        else None
+      }
     }
   }
 
@@ -215,20 +198,10 @@ object GraftFsScan {
   final case class PathInterval(lo: Array[Byte], hi: Option[Array[Byte]],
                                 hiInclusive: Boolean)
 
-  def u8(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  def u8(s: String): Array[Byte] = ParquetFiles.u8(s)
 
   /** Unsigned lexicographic byte compare — parquet's UTF8 stats order. */
-  def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
+  def cmp(a: Array[Byte], b: Array[Byte]): Int = ParquetFiles.cmp(a, b)
 
   /** Smallest byte string strictly greater than every string with prefix
     * `p`: increment the last non-0xFF byte, dropping the tail after it;
@@ -292,10 +265,9 @@ class GraftSnapshotReaderFactory extends PartitionReaderFactory {
     val gp = p.asInstanceOf[GraftSnapshotPartition]
     new PartitionReader[InternalRow] {
       private val reader = {
-        val conf = new Configuration()
+        val conf = new Configuration(ParquetFiles.conf)
         conf.set(ReadSupport.PARQUET_READ_SCHEMA, gp.projection)
-        ParquetReader.builder(new GroupReadSupport(), new Path(gp.file))
-          .withConf(conf).build()
+        ParquetFiles.groupReader(new Path(gp.file), conf = conf)
       }
       private var current: Group = _
 

@@ -104,9 +104,13 @@ class SharedFileLocksSpec extends AnyFlatSpec with Matchers {
       .getCodeSource.getLocation.getPath
     val cp = s"$classes:/opt/spark/jars/*"
     val javaBin = System.getProperty("java.home") + "/bin/java"
+    // each contender drops a marker after its try; the winner holds
+    // until all four are there, however far apart the JVMs start
+    val markers = java.nio.file.Files.createTempDirectory("graft-lock-markers")
     val procs = (1 to 4).map { _ =>
       new ProcessBuilder(javaBin, "-cp", cp,
-        "graft.catalog.SharedFileLocks", root, "/contended")
+        "graft.catalog.SharedFileLocks", root, "/contended",
+        markers.toString, "4")
         .redirectErrorStream(true).start()
     }
     val outputs = procs.map { p =>
@@ -116,7 +120,8 @@ class SharedFileLocksSpec extends AnyFlatSpec with Matchers {
     withClue(s"contender outputs: ${outputs.mkString(" | ")}: ") {
       outputs.count(_.contains("WON")) must be(1)
       outputs.count(_.contains("LOST")) must be(3)
-      // the winner held 300 ms then released — the lock is free now
+      // the winner held until every contender had tried, then released
+      // — the lock is free now
       outputs.find(_.contains("WON")).get must include("RELEASED")
     }
     SharedFileLocks.isLocked(root, "/contended") must be(false)

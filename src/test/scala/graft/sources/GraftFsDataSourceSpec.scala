@@ -124,4 +124,17 @@ class GraftFsDataSourceSpec extends AnyFlatSpec with Matchers with BeforeAndAfte
       locs.toSet.size must be(3) // all three replicas, owner first
     }
   }
+
+  it must "leave the shared Hadoop conf unmutated by a projected scan and a saved read" in {
+    import scala.jdk.CollectionConverters._
+    val shared = graft.fs.ParquetFiles.conf
+    def props() = shared.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val before = props()
+    // the partition readers set their projection as the read schema
+    mounted().filter(col("path").startsWith("/t/d1")).select("path", "len")
+      .collect().length must be(5)
+    graft.fs.SavedState.readCatalog(dir.toString).size must be(entries.size)
+    shared.get(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA) must be(null)
+    props() must be(before)
+  }
 }
