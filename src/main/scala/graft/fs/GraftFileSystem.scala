@@ -21,12 +21,20 @@ import graft.catalog.{BlockMeta, FsCatalog, Inode, PathOps}
   * this facade closes that last fidelity gap: a stock Hadoop/Spark job
   * can mount the engine unchanged. Metadata answers from a driver-JVM
   * inode cache; payload lives in memory (pending subblocks) or in
-  * immutable parquet files (the saved state, wal deltas, and the
-  * mount's own folded segments), all read by one session-free reader
-  * ([[SavedState.readBlock]]) — like the reference, where every client
-  * reads blocks straight from the store with no coordinator in the
-  * path. No verb runs a Spark job; only the [[graftFs]] snapshot builds
-  * (lazy) frames.
+  * immutable parquet files (the saved state's base chunks and `data/`
+  * files, or a non-committing mount's private segments), all read by
+  * one session-free reader ([[SavedState]]) — like the reference, where
+  * every client reads blocks straight from the store with no
+  * coordinator in the path. No verb runs a Spark job; only the
+  * [[graftFs]] snapshot builds (lazy) frames.
+  *
+  * A mount of a state dir (`graft.mount.state.dir`) with write-through
+  * on (the default) is COMMITTING: like the reference, where every
+  * mutation is a durable store write, each mutating verb — close,
+  * mkdirs, rename, delete — commits one wal delta of the state before
+  * it returns, and a failed commit fails the verb with an IOException
+  * (see the commit path below). Any other mount keeps its verbs in
+  * memory.
   *
   * Both byte paths stream with the reference's own cadence: writes
   * buffer one subblock at a time with per-block inode commits
@@ -55,8 +63,8 @@ class GraftFileSystem extends FileSystem {
     * equals the collected catalog row for row); a mount starts empty
     * (root only) or from a saved state at initialize — the facade's
     * lifecycle is mount-scoped, like the reference's in-memory client
-    * view (persistence across mounts is the CLI/FsCatalog.save and
-    * write-through surface).
+    * view (persistence across mounts is the commit path and
+    * FsCatalog.save).
     */
   private val inodeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Inode]()
@@ -160,22 +168,26 @@ class GraftFileSystem extends FileSystem {
       b.result()
     }
 
-  /** One file incarnation's payload: an IMMUTABLE row key plus the
-    * parquet sources holding its folded rows, oldest first. Saved and
-    * wal-overlay files keep their stored path as key (source: the saved
-    * chunks dir or the wal delta file); a `create` mints a fresh key
-    * that can never be a Hadoop path (NUL never appears in one), so a
-    * re-created path never aliases a renamed file's rows. `live` turns
-    * false when delete/overwrite drops the entry: rows still in flight
-    * to a segment then publish nowhere.
+  /** One file incarnation's payload at its current `path`: an IMMUTABLE
+    * row key plus the parquet sources holding its folded rows, oldest
+    * first. Saved files keep their stored path as key (source: the saved
+    * chunks dir); wal references carry their committed key and sources;
+    * a `create` mints a fresh key that can never be a Hadoop path (NUL
+    * never appears in one), so a re-created path never aliases a renamed
+    * file's rows. `live` turns false when delete/overwrite drops the
+    * entry: rows still in flight to a fold file then publish nowhere.
+    * `open` holds from create until close commits the file: until then
+    * its rows are not all in its sources, so no delta names it.
     */
-  private final class Payload(val key: String, var sources: List[String]) {
+  private final class Payload(val key: String, var path: String,
+                              var sources: List[String]) {
     var live = true
+    var open = false
   }
 
   /** One subblock row held in memory, tagged with its owning payload.
     * `partial` marks a flush()-persisted subblock its stream may still
-    * extend — it never folds, so no segment cell is ever superseded.
+    * extend — it never folds, so no fold cell is ever superseded.
     */
   private final class MemRow(val owner: Payload,
                              val row: SavedStateWriter.ChunkRow,
@@ -196,9 +208,9 @@ class GraftFileSystem extends FileSystem {
   private val pending = ArrayBuffer.empty[MemRow]
   private var pendingBytes = 0L
 
-  /** Batches a fold has taken out of `pending` whose segment file is
-    * still being written: readers keep serving them from memory until
-    * the fold publishes the file.
+  /** Batches a fold has taken out of `pending` whose file is still being
+    * written: readers keep serving them from memory until the fold
+    * publishes the file.
     */
   private var sealedBatches: List[Vector[MemRow]] = Nil
 
@@ -206,10 +218,15 @@ class GraftFileSystem extends FileSystem {
   // at test-sized payloads; production default 64 MB
   private var FoldBytes = 64L << 20
 
-  /** Mount-private dir of immutable segment files (created at the first
-    * fold, deleted by close()). */
+  /** A non-committing mount's private dir of immutable segment files
+    * (created at the first fold, deleted by close()). */
   private var segmentDir: java.nio.file.Path = _
   private var segmentSeq = 0L
+
+  /** A committing mount's fold files in `data/` that no commit has named
+    * yet (rows of files deleted before close, a failed commit or write):
+    * close() deletes what is left. */
+  private val unnamed = scala.collection.mutable.Set.empty[String]
 
   /** The mounted state's saved chunks dir, resolved part by part: its
     * footer bounds load at the first block miss there (initialize
@@ -246,20 +263,8 @@ class GraftFileSystem extends FileSystem {
   }
 
   /** Payload entries at `p` and under it, via one sorted-range walk. */
-  private def payloadSubtree(p: String): Seq[(String, Payload)] = {
-    val out = Seq.newBuilder[(String, Payload)]
-    val self = payloads.get(p)
-    if (self != null) out += (p -> self)
-    val pre = subtreePrefix(p)
-    val it = payloads.tailMap(pre).entrySet().iterator()
-    var go = true
-    while (go && it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(pre)) out += (e.getKey -> e.getValue)
-      else go = false
-    }
-    out.result()
-  }
+  private def payloadSubtree(p: String): Seq[(String, Payload)] =
+    SharedStateStore.subtreeKeys(payloads, p).map(k => k -> payloads.get(k))
 
   /** `owner`'s in-memory (sub_id, bytes) rows of block `blockId` —
     * pending and sealed alike. Caller holds [[mutLock]]. */
@@ -268,31 +273,35 @@ class GraftFileSystem extends FileSystem {
       .filter(m => (m.owner eq owner) && m.row.blockId == blockId)
       .map(m => (m.row.subId, m.row.data)).toSeq
 
-  /** Fold: SEAL the complete pending rows under [[mutLock]] (readers
-    * keep serving them from memory), WRITE them as one immutable
-    * segment file with the lock released, then PUBLISH the file to the
-    * entries still live. Every lock hold stays pure memory; the parquet
-    * write runs on the verb thread that crossed [[FoldBytes]]. A failed
-    * write returns the rows to pending and surfaces as the verb's
-    * IOException.
+  /** Fold: SEAL the complete pending rows `take` selects under
+    * [[mutLock]] (readers keep serving them from memory), WRITE them as
+    * one immutable file with the lock released, then PUBLISH the file to
+    * the entries still live. Given an `owner`, it first waits out the
+    * in-flight folds holding that owner's rows, so the owner's sources
+    * then hold every row it has. A committing mount writes the file into
+    * the state's `data/` — the one write of those payload bytes — and
+    * any other mount into its private segment dir. A failed write
+    * returns the rows to pending and surfaces as the verb's IOException.
     */
-  private def fold(): Unit = {
+  private def fold(take: MemRow => Boolean, owner: Payload = null): Unit = {
     val sealedBatch = withMutLock {
-      val (done, open) = pending.partition(!_.partial)
+      if (owner != null)
+        while (sealedBatches.exists(_.exists(_.owner eq owner))) awaitFold()
+      val (done, open) = pending.partition(m => !m.partial && take(m))
       if (done.isEmpty) None
       else {
         pending.clear(); pending ++= open
-        pendingBytes = 0L
+        pendingBytes -= done.iterator.map(_.row.data.length.toLong).sum
         val batch = done.toVector
         sealedBatches ::= batch
-        if (segmentDir == null)
-          segmentDir = java.nio.file.Files.createTempDirectory("graftfs-segments")
-        segmentSeq += 1
-        Some((batch, segmentDir.resolve(f"seg-$segmentSeq%08d.parquet").toString))
+        Some((batch, foldFile()))
       }
     }
     sealedBatch.foreach { case (batch, file) =>
-      def unseal(): Unit = sealedBatches = sealedBatches.filterNot(_ eq batch)
+      def unseal(): Unit = {
+        sealedBatches = sealedBatches.filterNot(_ eq batch)
+        foldDone.signalAll()
+      }
       try SavedStateWriter.writeChunksFile(file,
         batch.map(_.row).sortBy(r => (r.path, r.blockId, r.subId)))
       catch {
@@ -313,175 +322,130 @@ class GraftFileSystem extends FileSystem {
     }
   }
 
-  // ── WRITE-THROUGH of post-mount writes: a closed create stream (and
-  //    the rename/delete mirrors that keep committer flows coherent)
-  //    commits its payload as a SharedStateStore wal delta in the
-  //    mounted state dir, so ANY mount of the same state (executor-mode
-  //    JVMs via per-access refresh, fresh mounts via init-time overlay
-  //    application) serves post-mount bytes without the driver. Residue:
-  //    a file whose rows folded (> FoldBytes) before close skips it. ──
-  private var mountParent: String = _
+  /** A fresh fold file name. Caller holds [[mutLock]]. */
+  private def foldFile(): String =
+    if (committing) { val f = store.newDataFile(); unnamed += f; f }
+    else {
+      if (segmentDir == null)
+        segmentDir = java.nio.file.Files.createTempDirectory("graftfs-segments")
+      segmentSeq += 1
+      segmentDir.resolve(f"seg-$segmentSeq%08d.parquet").toString
+    }
+
+  // ── THE COMMIT PATH. A committing mount — a state dir, write-through
+  //    on (`graft.mount.write.through`, default true), not executor
+  //    mode — commits every mutating verb (close, mkdirs, rename,
+  //    delete) as ONE wal delta of the mounted state (SharedStateStore),
+  //    built from the inode cache and payload index under [[mutLock]]
+  //    BEFORE the verb changes them: a failed commit fails the verb with
+  //    nothing applied. A delta is metadata only — payload bytes reach
+  //    `data/` once, through [[fold]] — so a rename re-points references
+  //    and copies no byte. A file reaches the state when its close
+  //    commits it, at its path then; until then no delta names it. Any
+  //    mount of the state (fresh mounts at initialize, executor-mode
+  //    mounts per access) replays the deltas into its own cache and
+  //    index. Every other mount keeps its verbs in memory. ──
+  private var stateDir: String = _
+  private var store: SharedStateStore = _
   private var writeThroughEnabled = true
-  private var mountStoreCache: SharedStateStore = _
-  private def mountStore: SharedStateStore = synchronized {
-    if (mountStoreCache == null)
-      mountStoreCache =
-        new SharedStateStore(mountParent, subBlockSize, blockSize)
-    mountStoreCache
-  }
+  /** The base version dir this mount's cache was built from, and the
+    * last wal sequence applied on top of it. */
+  private var mountedBase: String = _
+  private var appliedSeq = -1L
 
-  /** Apply the wal overlay to the metadata cache (missing ancestors
-    * synthesized — mkdirs is driver-local and not mirrored) and to the
-    * payload index: an overlay payload's source is its wal delta file.
-    * Caller holds [[mutLock]] or is single-threaded initialize.
+  private def committing: Boolean =
+    store != null && writeThroughEnabled && !executorMode
+
+  /** Commit one verb's delta on a committing mount (a no-op on any
+    * other). Upserts carry their cached ancestors, so the committed
+    * namespace never holds an orphan. Caller holds [[mutLock]]. */
+  private def commit(verb: String, path: String, upserts: Seq[Inode],
+                     tombstones: Seq[String],
+                     refs: Seq[(String, Payload)]): Unit =
+    if (committing) {
+      val have = upserts.iterator.map(_.path).toSet
+      val ancestors = upserts.iterator
+        .flatMap(n => PathOps.ancestors(Option(n.parentPath).getOrElse("/")))
+        .filter(a => a != "/" && !have(a)).distinct.flatMap(cached).toSeq
+      store.commit(verb, path, upserts ++ ancestors, tombstones, refs.map {
+        case (p, o) => SharedStateStore.Ref(p, o.key, o.sources.map(store.refName))
+      })
+    }
+
+  /** (Re)build the cache and payload index from the mounted state: the
+    * saved catalog (every saved file's source is the saved chunks dir),
+    * then the wal. Caller holds [[mutLock]] or is single-threaded
+    * initialize.
     */
-  private def applyOverlay(
-      inodes: Map[String, Option[Inode]],
-      files: Map[String, Option[java.nio.file.Path]]): Unit = {
-    inodes.toSeq.sortBy(_._1).foreach {
-      case (_, Some(n)) =>
-        PathOps.ancestors(Option(n.parentPath).getOrElse("/"))
-          .reverse.foreach { a =>
-            if (inodeCache.get(a) == null)
-              cachePut(FsCatalog.dirInode(a, "graft"))
-          }
+  private def bootstrap(): Unit = {
+    inodeCache.clear()
+    childIndex.clear()
+    payloads.clear()
+    appliedSeq = -1L
+    mountedBase = Option(stateDir).flatMap(GraftShellMain.currentStateDir).orNull
+    savedChunks = Option(mountedBase)
+      .map(root => new SavedState.ChunkParts(s"$root/chunks")).orNull
+    Option(mountedBase).foreach { root =>
+      SavedState.readCatalog(s"$root/catalog").foreach { n =>
         cachePut(n)
-      case (p, None) =>
-        cacheDrop(p)
-        dropPayload(p)
+        if (n.isFile)
+          payloads.put(n.path, new Payload(n.path, n.path, List(savedChunks.dir)))
+      }
+      applyDeltas(store.deltaDirs())
     }
-    files.toSeq.sortBy(_._1).foreach {
-      case (p, Some(f)) =>
-        dropPayload(p)
-        payloads.put(p, new Payload(p, List(f.toString)))
-      case (p, None) => dropPayload(p)
-    }
+    if (inodeCache.get("/") == null)
+      cachePut(FsCatalog.dirInode("/", ctx.cwd.split("/").last))
   }
 
-  /** Executor-mode freshness: before a stat/open/listing answers, fold
-    * the CURRENT wal overlay into the cache — this is what lets a
-    * long-lived executor JVM see files the driver wrote
-    * (write-through) AFTER the executor's mount initialized. The WHOLE
-    * overlay applies (bounded by the wal tail, OP parses cached), not
-    * just one path, so listings of directories that gained children
-    * post-mount stay consistent with stats. Driver mounts skip it
-    * (their own cache and payload index are authoritative).
+  /** Replay the committed deltas past [[appliedSeq]] in sequence order:
+    * tombstones, then upserts (missing ancestors synthesized), then
+    * payload references. Caller holds [[mutLock]] or is initialize.
+    */
+  private def applyDeltas(deltas: Seq[(Long, java.nio.file.Path)]): Unit =
+    deltas.foreach { case (seq, dir) =>
+      if (seq > appliedSeq) {
+        val d = store.delta(dir)
+        d.tombstones.foreach { p =>
+          subtreePaths(p).foreach(cacheDrop)
+          payloadSubtree(p).foreach(e => dropPayload(e._1))
+        }
+        d.upserts.foreach { n =>
+          PathOps.ancestors(Option(n.parentPath).getOrElse("/")).reverse
+            .foreach { a =>
+              if (inodeCache.get(a) == null)
+                cachePut(FsCatalog.dirInode(a, "graft"))
+            }
+          cachePut(n)
+        }
+        d.refs.foreach { r =>
+          dropPayload(r.path)
+          payloads.put(r.path,
+            new Payload(r.key, r.path, r.files.map(store.source).toList))
+        }
+        appliedSeq = seq
+      }
+    }
+
+  /** Executor-mode freshness: before a stat/open/listing answers, apply
+    * the deltas committed since the last look — this is what lets a
+    * long-lived executor JVM see files a driver committed AFTER the
+    * executor's mount initialized; a compaction since then (a new base
+    * version) rebuilds the cache. Driver mounts skip it (their own cache
+    * and payload index are authoritative).
     */
   private def executorRefresh(): Unit =
-    if (executorMode && mountParent != null)
-      try {
-        val (inodes, files) = mountStore.overlaySnapshot()
-        withMutLock(applyOverlay(inodes, files))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[graftfs] wal overlay refresh " +
-            s"failed: ${e.getMessage} — serving the mounted snapshot")
-      }
-
-  /** Driver-side write-through of a freshly-closed create stream: the
-    * file's rows (all still in memory for ≤ FoldBytes files) commit as
-    * one storeFileData wal delta so executor mounts serve them
-    * session-free. Runs OUTSIDE [[mutLock]] (cross-process lock +
-    * parquet I/O must not block verb threads).
-    */
-  private def writeThroughOnClose(p: String, owner: Payload,
-                                  written: Long): Unit =
-    if (!executorMode && mountParent != null && writeThroughEnabled) {
-      val bytes = withMutLock {
-        val rows = (pending.iterator ++ sealedBatches.iterator.flatten)
-          .filter(_.owner eq owner).map(_.row).toSeq
-          .sortBy(r => (r.blockId, r.subId))
-        val total = rows.iterator.map(_.data.length.toLong).sum
-        if (total == written && owner.sources.isEmpty) {
-          val out = new Array[Byte](total.toInt)
-          var at = 0
-          rows.foreach { r =>
-            System.arraycopy(r.data, 0, out, at, r.data.length)
-            at += r.data.length
-          }
-          Some(out)
-        } else None
-      }
-      bytes match {
-        case Some(b) =>
-          try mountStore.storeFileData(p, b, ctx.cwd.split("/").last,
-            new Timestamp(1704067200000L))
-          catch {
-            case e: Throwable => System.err.println(
-              s"[graftfs] write-through of $p failed: ${e.getMessage} — " +
-                "executor-side reads of this file need the driver")
-          }
-        case None => System.err.println(
-          s"[graftfs] $p folded past the pending buffer before close — " +
-            "write-through skipped; executor-side reads of this file " +
-            "need the driver")
-      }
+    if (executorMode && store != null) {
+      val base = GraftShellMain.currentStateDir(stateDir).orNull
+      val deltas = store.deltaDirs()
+      withMutLock(if (base != mountedBase) bootstrap() else applyDeltas(deltas))
     }
-
-  /** Mirror a successful rename into the wal for every OVERLAY entry
-    * under `src` (post-mount writes only — saved base rows are
-    * immutable, the documented §8 residue): payloads re-commit under
-    * the destination, sources tombstone, all under ONE namespace lock.
-    * The committer's temp-dir rename is the designed-for case — after
-    * it, executor mounts see the FINAL paths, and a later compaction
-    * folds no phantom temp files.
-    */
-  private def mirrorRename(src: String, dst: String): Unit =
-    if (!executorMode && mountParent != null && writeThroughEnabled)
-      try {
-        val (inodes, _) = mountStore.overlaySnapshot()
-        val pre = src + "/"
-        val moved = inodes.collect {
-          case (p, Some(n)) if p == src || p.startsWith(pre) => (p, n)
-        }.toSeq.sortBy(_._1)
-        if (moved.nonEmpty) mountStore.atomically {
-          moved.foreach { case (p, n) =>
-            val np = dst + p.stripPrefix(src)
-            if (n.isFile)
-              mountStore.storeFileData(np, mountStore.retrieveBlock(p),
-                n.user, n.mtime)
-            else
-              mountStore.storeINode(n.copy(path = np,
-                parentPath = PathOps.parent(np)))
-            mountStore.deleteBlocks(p)
-            mountStore.deleteINode(p)
-          }
-        }
-      } catch {
-        case e: Throwable => System.err.println(
-          s"[graftfs] wal rename mirror $src -> $dst failed: " +
-            s"${e.getMessage} — executor views of these files are stale")
-      }
-
-  /** Mirror a successful delete into the wal for every overlay entry
-    * under `p` (see [[mirrorRename]]).
-    */
-  private def mirrorDelete(p: String): Unit =
-    if (!executorMode && mountParent != null && writeThroughEnabled)
-      try {
-        val (inodes, _) = mountStore.overlaySnapshot()
-        val pre = p + "/"
-        val doomed = inodes.collect {
-          case (q, Some(_)) if q == p || q.startsWith(pre) => q
-        }.toSeq.sorted
-        if (doomed.nonEmpty) mountStore.atomically {
-          doomed.foreach { q =>
-            mountStore.deleteBlocks(q)
-            mountStore.deleteINode(q)
-          }
-        }
-      } catch {
-        case e: Throwable => System.err.println(
-          s"[graftfs] wal delete mirror of $p failed: ${e.getMessage} — " +
-            "executor views of these files are stale")
-      }
 
   /** READ-ONLY executor mode: no SparkSession in this JVM (or forced
     * via `graft.mount.executor.mode`) — metadata answers from the
-    * saved catalog plus the live wal overlay, payload reads go through
+    * saved catalog plus the live wal, payload reads go through
     * [[SavedState]], and every mutation fails loudly. A REMOTE executor
-    * can open() and read saved and written-through payloads with zero
-    * driver involvement.
+    * can open() and read saved and committed payloads with zero driver
+    * involvement.
     */
   private var executorMode = false
 
@@ -521,19 +485,6 @@ class GraftFileSystem extends FileSystem {
     kids != null && !kids.isEmpty
   }
 
-  private def subtreePrefix(p: String): String =
-    if (p == "/") "/" else p + "/"
-
-  private def cacheRename(src: String, dst: String): Unit = {
-    val paths = subtreePaths(src)
-    val moved = paths.flatMap(k => cached(k).map { n =>
-      val np = dst + k.substring(src.length)
-      n.copy(path = np, parentPath = PathOps.parent(np))
-    })
-    paths.foreach(cacheDrop)
-    moved.foreach(cachePut)
-  }
-
   /** Serializes each verb's read-modify-write state transition.
     * Hadoop's FileSystem cache hands EVERY thread in the JVM this one
     * instance — under a drop-in mount (`fs.graftfs.impl` +
@@ -541,11 +492,26 @@ class GraftFileSystem extends FileSystem {
     * tasks and the output committer call create/mkdirs/rename
     * concurrently, and two interleaved read → transform → write
     * sequences would silently lose one task's update. Every hold is
-    * pure memory (parquet I/O always runs with the lock released).
-    * Cross-JVM coordination stays the documented single-driver
-    * narrowing (SURVEY §1.3).
+    * pure memory except a committing mount's commit — one small
+    * metadata delta, written under the hold so commits land in the
+    * order the verbs applied; payload I/O always runs with the lock
+    * released. Across JVMs, commits serialize on the state's namespace
+    * lock (SharedStateStore).
     */
   private val mutLock = new java.util.concurrent.locks.ReentrantLock()
+
+  /** Signalled whenever a fold publishes or returns a sealed batch. */
+  private val foldDone = mutLock.newCondition()
+
+  /** Wait for [[foldDone]]; caller holds [[mutLock]]. */
+  private def awaitFold(): Unit =
+    try foldDone.await()
+    catch {
+      case _: InterruptedException =>
+        Thread.currentThread().interrupt()
+        throw new java.io.InterruptedIOException(
+          "graftfs mount: interrupted while waiting for a fold")
+    }
 
   /** Mutation-lock acquisition timeout (ms), settable via the Hadoop
     * conf key `graft.mount.lock.timeout.ms`. */
@@ -584,7 +550,7 @@ class GraftFileSystem extends FileSystem {
 
   /** SnackFS.initialize:51-72 — derive scheme://authority, seat cwd at
     * /user/<user>, bootstrap the namespace (root inode, or a saved
-    * state plus its wal overlay), read the block geometry from the
+    * state plus its wal), read the block geometry from the
     * Configuration (SnackFSConfiguration.scala:41-42 analog).
     */
   override def initialize(uri: URI, conf: Configuration): Unit = {
@@ -610,41 +576,20 @@ class GraftFileSystem extends FileSystem {
     // remote-executor situation the §8 narrowing documents
     executorForced = conf.getBoolean("graft.mount.executor.mode", false)
     executorMode = executorForced || session.isEmpty
-    val stateDir = Option(conf.get("graft.mount.state.dir"))
-      .flatMap(GraftShellMain.currentStateDir)
-    if (executorMode && stateDir.isEmpty)
+    stateDir = conf.get("graft.mount.state.dir")
+    val saved = Option(stateDir).flatMap(GraftShellMain.currentStateDir)
+    if (executorMode && saved.isEmpty)
       throw new IOException(
         "graftfs executor-mode mount (no SparkSession in this JVM) needs " +
           "graft.mount.state.dir pointing at a persisted state — an empty " +
           "mount has nothing an executor could read without the driver")
-    inodeCache.clear()
-    childIndex.clear()
-    payloads.clear()
-    // saved-state bootstrap is SESSION-FREE (plain parquet readers):
-    // metadata seeds the cache, every saved file's payload source is
-    // the saved chunks dir
-    savedChunks = stateDir.map(root => new SavedState.ChunkParts(s"$root/chunks")).orNull
-    stateDir.foreach { root =>
-      SavedState.readCatalog(s"$root/catalog").foreach { n =>
-        cachePut(n)
-        if (n.isFile) payloads.put(n.path, new Payload(n.path, List(savedChunks.dir)))
-      }
-    }
-    // wal-overlay application (write-through scaladoc): post-mount
-    // writes committed by ANY driver of this state — earlier sessions,
-    // concurrent drivers — fold into the metadata snapshot and the
-    // payload index, so a fresh mount sees the complete namespace, not
-    // only the last compaction
-    mountParent = Option(conf.get("graft.mount.state.dir"))
-      .filter(_ => stateDir.isDefined).orNull
     writeThroughEnabled = conf.getBoolean("graft.mount.write.through", true)
-    mountStoreCache = null
-    if (mountParent != null) {
-      val (inodes, files) = mountStore.overlaySnapshot()
-      applyOverlay(inodes, files)
-    }
-    if (inodeCache.get("/") == null)
-      cachePut(FsCatalog.dirInode("/", ctx.cwd.split("/").last))
+    // saved-state bootstrap is SESSION-FREE (plain parquet readers): the
+    // saved catalog plus every delta committed by ANY writer of this
+    // state — earlier sessions, concurrent drivers, the CLI — so a fresh
+    // mount sees the complete namespace, not only the last compaction
+    store = saved.map(_ => new SharedStateStore(stateDir)).orNull
+    bootstrap()
   }
 
   /** Loud single-sided failure for mutations on a read-only
@@ -749,7 +694,14 @@ class GraftFileSystem extends FileSystem {
   // ── A5: mkdirs — ancestor AND-fold; exists-as-file → false, answered
   //    against the cache alone — action-free. ───────────────────────────
   override def mkdirs(path: Path, permission: FsPermission): Boolean =
-    withMutLock { mutGuard(); cachedMkdirs(abs(path)) }
+    withMutLock {
+      mutGuard()
+      val p = abs(path)
+      val made = PathOps.ancestors(p).filter(l => cached(l).isEmpty)
+      if (made.nonEmpty)
+        commit("mkdirs", p, made.map(FsCatalog.dirInode(_, "graft")), Nil, Nil)
+      cachedMkdirs(p)
+    }
 
   /** The mkdirs ancestor AND-fold against the cache (FsCatalog
     * .mkdirsWith documents the shared semantics: exists-as-file → false
@@ -805,10 +757,11 @@ class GraftFileSystem extends FileSystem {
     cachePut(inodeFor(p, parent, 0L))
     noteInodeGrowth()
     keySeq += 1
-    val owner = new Payload(s"$p\u0000$keySeq", Nil)
+    val owner = new Payload(s"$p\u0000$keySeq", p, Nil)
+    owner.open = true
     val replaced = payloads.put(p, owner)
     if (replaced != null) { replaced.live = false; dropDeadRows() }
-    new FSDataOutputStream(new SubBlockStream(p, parent, owner), statistics, 0L)
+    new FSDataOutputStream(new SubBlockStream(owner), statistics, 0L)
   }
 
   private def inodeFor(p: String, parent: String, len: Long): Inode =
@@ -825,9 +778,7 @@ class GraftFileSystem extends FileSystem {
     * (FileSystemOutputStream.scala:55-143: close is isClosed-guarded, a
     * second close is a no-op; writes after close throw "Stream closed").
     */
-  private final class SubBlockStream(p: String, parent: String,
-                                     owner: Payload)
-    extends OutputStream {
+  private final class SubBlockStream(owner: Payload) extends OutputStream {
     // grows on demand up to one subblock, so an empty or small file
     // (-touchz, a committer marker) never allocates a whole subblock
     private var buf = new Array[Byte](math.min(subBlockSize, 4096))
@@ -893,7 +844,7 @@ class GraftFileSystem extends FileSystem {
         }
         pendingBytes >= FoldBytes
       }
-      if (due) fold()
+      if (due) fold(_ => true)
     }
 
     private def endSubBlock(): Unit = {
@@ -908,9 +859,12 @@ class GraftFileSystem extends FileSystem {
       if (written % blockSize == 0) commitInode()
     }
 
-    // metadata is the cache, so an inode commit is a pure map write
+    // metadata is the cache, so an inode commit is a pure map write, at
+    // the file's current path; a file deleted or replaced under the
+    // stream stays gone
     private def commitInode(): Unit = withMutLock {
-      cachePut(inodeFor(p, parent, written + used))
+      if (owner.live) cachePut(
+        inodeFor(owner.path, PathOps.parent(owner.path), written + used))
     }
 
     /** Flush persists the buffered partial subblock so flushed bytes
@@ -935,14 +889,27 @@ class GraftFileSystem extends FileSystem {
       commitInode()
     }
 
+    /** On a committing mount, close also commits the file at its
+      * current path (a rename may have moved it meanwhile): its
+      * still-pending rows fold into one more data file (written outside
+      * the lock and then served from there), and one delta holds the
+      * inode plus references to every file holding its rows. */
     override def close(): Unit = {
       if (isClosed) return
       endSubBlock()
       commitInode()
       isClosed = true
-      // post-mount bytes become executor-servable the moment the
-      // stream commits (write-through scaladoc); outside mutLock
-      writeThroughOnClose(p, owner, written)
+      if (committing) {
+        fold(_.owner eq owner, owner)
+        withMutLock {
+          if (owner.live) {
+            val p = owner.path
+            commit("close", p, cached(p).toSeq, Nil, Seq(p -> owner))
+            owner.sources.foreach(unnamed -= _)
+          }
+          owner.open = false
+        }
+      }
     }
   }
 
@@ -1080,56 +1047,33 @@ class GraftFileSystem extends FileSystem {
   }
 
   // ── A7: delete — cascades to the payload index; the error matrix is
-  //    settled against the cache — action-free. The wal mirror (outside
-  //    the lock) keeps executor views of write-through'd files
-  //    coherent. ──────────────────────────────────────────────────────────
-  override def delete(path: Path, recursive: Boolean): Boolean = {
-    val ok = deleteLocked(path, recursive)
-    if (ok) mirrorDelete(abs(path))
-    ok
-  }
-
-  private def deleteLocked(path: Path, recursive: Boolean): Boolean =
+  //    settled against the cache — action-free. A committing mount
+  //    commits one tombstone for the whole subtree. ────────────────────
+  override def delete(path: Path, recursive: Boolean): Boolean =
     withMutLock {
       mutGuard()
       val p = abs(path)
-      def dropSubtree(): Unit = {
-        val doomed = payloadSubtree(p)
-        doomed.foreach { case (c, _) => dropPayload(c) }
-        if (doomed.nonEmpty) dropDeadRows()
-      }
       cached(p) match {
         case None => false
-        case Some(node) if node.isFile =>
-          cacheDrop(p)
-          dropSubtree()
-          true
-        case Some(_) if !cacheHasChildren(p) =>
-          cacheDrop(p)
-          dropSubtree()
-          true
-        case Some(_) if !recursive =>
-          throw new IOException("Directory is not empty")
-        case Some(_) =>
+        case Some(node) =>
+          if (node.isDir && cacheHasChildren(p) && !recursive)
+            throw new IOException("Directory is not empty")
+          commit("delete", p, Nil, Seq(p), Nil)
           subtreePaths(p).foreach(cacheDrop)
-          dropSubtree()
+          val doomed = payloadSubtree(p)
+          doomed.foreach { case (c, _) => dropPayload(c) }
+          if (doomed.nonEmpty) dropDeadRows()
           true
       }
     }
 
   // ── A8: rename — preconditions from the cache, then pure map
   //    re-keying of the cache and the payload index (the committer's
-  //    commit dance runs this from task threads) — action-free. The wal
-  //    mirror (outside the lock) moves write-through'd payloads to their
-  //    final names, so a committer's temp→final dance stays
-  //    executor-visible. ──────────────────────────────────────────────────
-  override def rename(src: Path, dst: Path): Boolean = {
-    val ok = renameLocked(src, dst)
-    if (ok) mirrorRename(abs(src), abs(dst))
-    ok
-  }
-
-  private def renameLocked(src: Path, dst: Path): Boolean =
+  //    commit dance runs this from task threads) — action-free. A
+  //    committing mount commits the move as one delta: a tombstone for
+  //    the source subtree, the moved inodes, and the moved files'
+  //    payload references, re-pointed — no byte is copied. ─────────────
+  override def rename(src: Path, dst: Path): Boolean =
     withMutLock {
       mutGuard()
       val s = abs(src)
@@ -1147,11 +1091,24 @@ class GraftFileSystem extends FileSystem {
           if (parentNode.isFile)
             throw new IOException("A file exists with parent of destination.")
         }
-        cacheRename(s, d)
-        // rows carry immutable keys, so the move is entry re-keying only
-        payloadSubtree(s).foreach { case (c, owner) =>
+        def moved(k: String) = d + k.substring(s.length)
+        val paths = subtreePaths(s)
+        val inodes = paths.flatMap(k => cached(k).map { n =>
+          n.copy(path = moved(k), parentPath = PathOps.parent(moved(k)))
+        })
+        // rows carry immutable keys, so the move is entry re-keying only;
+        // a file not yet committed by its close stays out of the delta
+        val files = payloadSubtree(s)
+        val (open, done) = files.partition(_._2.open)
+        val unsettled = open.map(e => moved(e._1)).toSet
+        commit("rename", s, inodes.filterNot(n => unsettled(n.path)), Seq(s),
+          done.map { case (c, owner) => moved(c) -> owner })
+        paths.foreach(cacheDrop)
+        inodes.foreach(cachePut)
+        files.foreach { case (c, owner) =>
           payloads.remove(c)
-          payloads.put(d + c.substring(s.length), owner)
+          owner.path = moved(c)
+          payloads.put(owner.path, owner)
         }
         true
       }
@@ -1200,8 +1157,9 @@ class GraftFileSystem extends FileSystem {
     * rows plus one parquet scan per payload source, joined to the
     * (key → current path) pairs of the entries it serves — lazy, no
     * checkpoint, plan depth bounded by the number of sources. The
-    * snapshot reads the mount's segment files, which close() deletes:
-    * it must not outlive its mount.
+    * snapshot may read the mount's segment files, or the fold files of
+    * files not yet committed, which close() deletes: it must not outlive
+    * its mount.
     */
   def graftFs: GraftFs = {
     val s = session.getOrElse(throw new IllegalStateException(
@@ -1247,10 +1205,17 @@ class GraftFileSystem extends FileSystem {
   def releaseSnapshot(snapshot: GraftFs): Unit = ()
 
   override def close(): Unit = {
-    // segments are mount-private: they go with the mount (snapshots
-    // reading them must not outlive it — graftFs scaladoc)
-    val dir = withMutLock { val d = segmentDir; segmentDir = null; d }
+    // a non-committing mount's segments are private: they go with the
+    // mount (snapshots reading them must not outlive it — graftFs
+    // scaladoc); a committing mount's fold files are the state's, except
+    // those no commit named
+    val (dir, garbage) = withMutLock {
+      val d = segmentDir; segmentDir = null
+      val g = unnamed.toList; unnamed.clear()
+      (d, g)
+    }
     if (dir != null) graft.PlanHygiene.deleteRecursively(dir)
+    garbage.foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
     super.close()
   }
 }

@@ -526,9 +526,15 @@ object GraftShell {
   private def seededMount(initial: GraftFs): GraftFileSystem = {
     val dir = java.nio.file.Files.createTempDirectory("graft-shell-seed")
     try {
-      GraftShellMain.saveCatalogOnly(
-        initial.catalog.inodes.collect().toSeq, dir.toString)
-      GraftShellMain.stateMount(initial.chunks.sparkSession, Some(dir.toString))
+      // a metadata-only seed; `fs` writes its chunk plane on demand
+      GraftShellMain.writeVersion(dir.toString, "v0",
+        initial.catalog.inodes.collect().toSeq.sortBy(_.path), Nil)
+      // write-through off: the seed dir is the shell's scratch, not a
+      // state anyone shares, so its verbs stay in memory
+      val conf = new org.apache.hadoop.conf.Configuration(
+        initial.chunks.sparkSession.sparkContext.hadoopConfiguration)
+      conf.setBoolean("graft.mount.write.through", false)
+      GraftShellMain.mountOf(conf, Some(dir.toString))
     } catch {
       case e: Throwable => graft.PlanHygiene.deleteRecursively(dir); throw e
     }

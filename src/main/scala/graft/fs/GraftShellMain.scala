@@ -1,5 +1,9 @@
 package graft.fs
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
@@ -17,10 +21,10 @@ import graft.catalog.{FsCatalog, Inode}
   *
   * State across invocations: the reference shell is ephemeral per
   * process because Cassandra holds the filesystem; here the persisted
-  * catalog + chunk parquet tables play that role. `GRAFT_FS_STATE=dir`
-  * mounts `dir` (saved version plus wal overlay, [[stateMount]]) before
-  * the verb and, after a mutating verb, saves the mount's snapshot back
-  * as a new version, so consecutive CLI invocations see each other's
+  * state dir plays that role. `GRAFT_FS_STATE=dir` runs the verb on a
+  * committing mount of `dir` ([[stateMount]]: saved version plus wal),
+  * so a mutating verb commits one wal delta — O(verb), never
+  * O(namespace) — and consecutive CLI invocations see each other's
   * writes. Unset, each invocation starts from an empty root — enough
   * for -help and smoke use.
   */
@@ -52,7 +56,6 @@ object GraftShellMain {
     * catalog/ + chunks/, or None when no complete state exists.
     */
   def currentStateDir(dir: String): Option[String] = {
-    import java.nio.file.{Files, Paths}
     val ptr = Paths.get(dir, CurrentPtr)
     val root =
       if (Files.exists(ptr))
@@ -65,25 +68,25 @@ object GraftShellMain {
 
   /** A private mount of the state dir `dir` (empty when there is none
     * or it holds no complete state): the mount's own session-free
-    * bootstrap — saved catalog plus the wal overlay — with write-through
-    * OFF, because the caller persists the namespace itself through
-    * [[saveFs]]. A fresh instance, never `FileSystem.get`: Hadoop's
-    * FileSystem cache could hand back (and let the shell write into)
-    * another mount of the same URI.
+    * bootstrap — saved catalog plus the wal — that commits each
+    * mutating verb as a wal delta of `dir`. A fresh instance, never
+    * `FileSystem.get`: Hadoop's FileSystem cache could hand back (and
+    * let the shell write into) another mount of the same URI.
     */
-  def stateMount(spark: SparkSession, dir: Option[String]): GraftFileSystem = {
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
+  def stateMount(spark: SparkSession, dir: Option[String]): GraftFileSystem =
+    mountOf(new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration), dir)
+
+  private[fs] def mountOf(conf: org.apache.hadoop.conf.Configuration,
+                          dir: Option[String]): GraftFileSystem = {
     dir.foreach(conf.set("graft.mount.state.dir", _))
-    conf.setBoolean("graft.mount.write.through", false)
     val fs = new GraftFileSystem
     fs.initialize(java.net.URI.create("graftfs://graft/"), conf)
     fs
   }
 
-  /** Verbs that change filesystem state — only these re-persist it
-    * (a read verb's plan still READS from the state parquet; writing
-    * the same path it scans is an overwrite-while-reading error).
+  /** Verbs that change filesystem state — only these take the
+    * namespace lock (read verbs see the committed prefix lock-free).
     */
   val MutatingVerbs: Set[String] = Set(
     "-put", "-copyFromLocal", "-moveFromLocal",
@@ -92,7 +95,6 @@ object GraftShellMain {
   /** Atomically point `dir`'s CURRENT at `version` — the only visible
     * commit point of a save or compaction; the tmp name is per call. */
   private[fs] def flip(dir: String, version: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val tmp = Paths.get(dir, s".$CurrentPtr.tmp${java.util.UUID.randomUUID()}")
     Files.write(tmp, version.getBytes("UTF-8"))
     Files.move(tmp, Paths.get(dir, CurrentPtr),
@@ -112,22 +114,32 @@ object GraftShellMain {
       .sortWithinPartitions("path", "block_id", "sub_id")
       .write.mode("overwrite").parquet(chunksDir)
 
-  /** A complete version in the FRESH state dir `dir` holding `inodes`
-    * and an empty chunk plane (for [[writeChunks]] to fill later),
-    * written without a Spark job by the session-free
-    * [[SavedStateWriter]] — a metadata-only seed for a mount.
-    */
-  private[fs] def saveCatalogOnly(inodes: Seq[Inode], dir: String): Unit = {
-    val version = java.nio.file.Paths.get(dir, "v0")
-    java.nio.file.Files.createDirectories(version.resolve("catalog"))
-    java.nio.file.Files.createDirectories(version.resolve("chunks"))
-    SavedStateWriter.writeCatalogFile(
-      version.resolve("catalog/part-0.parquet").toString, inodes.sortBy(_.path))
-    flip(dir, "v0")
+  /** Write the complete version `version` of `dir` — `inodes` (sorted
+    * by path) and chunk `rows`, one parquet file each, by the
+    * session-free [[SavedStateWriter]], no Spark job — and flip
+    * `CURRENT` to it. */
+  private[fs] def writeVersion(dir: String, version: String, inodes: Seq[Inode],
+                               rows: Seq[SavedStateWriter.ChunkRow]): Unit = {
+    val v = Paths.get(dir, version)
+    Seq("catalog", "chunks").foreach(d => Files.createDirectories(v.resolve(d)))
+    SavedStateWriter.writeCatalogFile(v.resolve("catalog/part-0.parquet").toString, inodes)
+    SavedStateWriter.writeChunksFile(v.resolve("chunks/part-0.parquet").toString, rows)
+    flip(dir, version)
+  }
+
+  /** Delete every version dir of `dir` but `keep` — not just the
+    * previous one: a save that crashed before its flip leaves an orphan
+    * no pointer names, and repeated torn saves must not grow the state
+    * dir unboundedly. */
+  private[fs] def pruneVersions(dir: String, keep: String): Unit = {
+    val l = Files.list(Paths.get(dir))
+    try l.iterator().asScala.filter(p => p.getFileName.toString.startsWith("v") &&
+      Files.isDirectory(p) && p.getFileName.toString != keep)
+      .foreach(graft.PlanHygiene.deleteRecursively)
+    finally l.close()
   }
 
   def saveFs(fs: GraftFs, dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     // both planes are written in full before the pointer flips and the
     // previous version is pruned, so a snapshot that still reads the
     // previous version's files (a mount of this dir) saves safely
@@ -138,21 +150,9 @@ object GraftShellMain {
     fs.catalog.save(s"$dir/$version/catalog")
     writeChunks(fs.chunks, s"$dir/$version/chunks")
     flip(dir, version)
-    // best-effort prune: EVERY v* dir except the one CURRENT now names
-    // (not just the immediately-previous version — a save that crashed
-    // after writing its planes but before the pointer flip leaves an
-    // orphan dir no pointer ever names, and repeated torn saves must
-    // not grow the state dir unboundedly) plus the legacy flat layout's
-    // planes when superseded
-    val keep = Paths.get(dir, version)
-    val l = Files.list(base)
-    try {
-      import scala.jdk.CollectionConverters._
-      l.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("v") &&
-          Files.isDirectory(p) && p != keep)
-        .foreach(graft.PlanHygiene.deleteRecursively)
-    } finally l.close()
+    // best-effort prune of the other versions, and of the legacy flat
+    // layout's planes when superseded
+    pruneVersions(dir, version)
     prev.map(Paths.get(_)).filter(_ == base).foreach { flat =>
       graft.PlanHygiene.deleteRecursively(flat.resolve("catalog"))
       graft.PlanHygiene.deleteRecursively(flat.resolve("chunks"))
@@ -182,73 +182,23 @@ object GraftShellMain {
     spark.sparkContext.setLogLevel("ERROR")
     val stateDir = sys.env.get("GRAFT_FS_STATE")
     val mutating = MutatingVerbs.contains(argv(0))
-    // CONCURRENT CLI invocations (r17 — supersedes the single-driver
-    // documented contract for mutations): a mutating invocation
-    // brackets its whole mount → verb → save cycle under the SHARED
-    // namespace lock (SharedStateStore.NamespaceKey — the same key
-    // every writer of this layout uses), so two processes can no
-    // longer interleave their cycles and silently drop each other's
-    // committed state. Read verbs stay lock-free: they see the
-    // committed prefix (version flips and wal-delta renames are both
-    // atomic). A crashed holder is operator-recovered with
-    // SharedFileLocks.breakStale.
-    val heldLock: Option[(String, java.util.UUID)] =
-      stateDir.filter(_ => mutating).map { d =>
-        val root = s"$d/locks"
-        graft.catalog.SharedFileLocks.acquireBlocking(root,
-            SharedStateStore.NamespaceKey, timeoutMs = 120000) match {
-          case Some(tok) => (root, tok)
-          case None =>
-            System.err.println(
-              "graftfs: timed out acquiring the shared state lock " +
-                s"under $root — another invocation holds it, or a " +
-                "crashed one leaked it (SharedFileLocks.breakStale " +
-                "is the operator recovery verb)")
-            spark.stop()
-            sys.exit(253)
-            throw new IllegalStateException("unreachable")
-        }
-      }
-    def releaseLock(): Unit = heldLock.foreach { case (root, tok) =>
-      graft.catalog.SharedFileLocks.release(root,
-        SharedStateStore.NamespaceKey, tok)
-    }
-    // wal deltas committed BEFORE this invocation's mount are folded
-    // into the version this invocation saves (the mount's bootstrap
-    // applies the overlay), so a successful save prunes exactly those —
-    // never deltas a later writer might append (impossible while the
-    // lock is held anyway)
-    def walDeltas(d: String): Seq[java.nio.file.Path] = {
-      import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Paths.get(d, "wal")
-      if (!java.nio.file.Files.isDirectory(w)) Seq.empty
-      else {
-        val l = java.nio.file.Files.list(w)
-        try l.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("d")).toSeq
-        finally l.close()
-      }
-    }
-    val foldedDeltas: Seq[java.nio.file.Path] =
-      if (mutating) stateDir.map(walDeltas).getOrElse(Seq.empty)
-      else Seq.empty
     // Three distinguishable states, two of them safe:
     //  * complete persisted state → mount it;
     //  * NO pointer (fresh dir, or the legacy flat layout's torn save
     //    — catalog alone with no chunks) → start empty: nothing
-    //    committed has ever been visible here;
+    //    committed has ever been visible here (a mutating verb first
+    //    creates the keyspace, so its commit has a state to land in);
     //  * a CURRENT pointer naming a MISSING/incomplete version dir →
     //    die LOUDLY. A pointer only ever appears after a committed
     //    save, so this state means committed data vanished (disk
-    //    damage, manual deletion, or a pre-r17 unlocked writer racing
-    //    — mutating invocations now serialize under the namespace
-    //    lock, so concurrent CLIs no longer prune each other).
-    //    Falling back to empty here would let the next mutating verb
-    //    re-save and PERMANENTLY discard the committed filesystem
-    //    with no error anywhere.
-    stateDir.filter(d => currentStateDir(d).isEmpty &&
+    //    damage, manual deletion). Falling back to empty here would
+    //    let the next mutating verb start a new keyspace and
+    //    PERMANENTLY discard the committed filesystem with no error
+    //    anywhere.
+    def runVerb(): Int = {
+      val damaged = stateDir.filter(d => currentStateDir(d).isEmpty &&
         java.nio.file.Files.exists(java.nio.file.Paths.get(d, CurrentPtr)))
-      .foreach { d =>
+      damaged.foreach { d =>
         System.err.println(
           s"graftfs: state pointer $d/$CurrentPtr names a version " +
             "directory that is missing or incomplete — committed state " +
@@ -256,34 +206,45 @@ object GraftShellMain {
             "Refusing to start from an empty filesystem; restore the " +
             s"version directory or remove $d/$CurrentPtr to explicitly " +
             "reset.")
-        releaseLock()
-        spark.stop()
-        sys.exit(254)
       }
-    // the shell runs on a mount of the state dir (or an empty one)
-    val mount = stateMount(spark, stateDir)
-    val shell = new GraftShell(mount,
-      FsContext.initialize("graftfs://graft",
-        Option(System.getProperty("user.name")).getOrElse("graft")))
-    val code =
-      try {
-        val res = shell.run(argv)
-        res.out.foreach(println)
-        res.err.foreach(System.err.println)
-        if (res.code == 0 && mutating)
-          stateDir.foreach { d =>
-            saveFs(mount.graftFs, d)
-            // the saved version FOLDED the pre-mount wal tail: prune
-            // exactly those deltas, after the flip
-            foldedDeltas.foreach(graft.PlanHygiene.deleteRecursively)
+      if (damaged.isDefined) return 254
+      val store = stateDir.map(new SharedStateStore(_))
+      if (mutating) store.foreach(_.createKeyspace())
+      // the shell runs on a committing mount of the state dir (or an
+      // empty one): each mutation commits as it runs
+      val mount = stateMount(spark, stateDir)
+      val shell = new GraftShell(mount,
+        FsContext.initialize("graftfs://graft",
+          Option(System.getProperty("user.name")).getOrElse("graft")))
+      val res =
+        try shell.run(argv)
+        finally { shell.close(); mount.close() }
+      res.out.foreach(println)
+      res.err.foreach(System.err.println)
+      if (mutating) store.foreach(_.compactIfDue())
+      if (res.code == 0) 0 else 255
+    }
+    // CONCURRENT CLI invocations: a mutating invocation brackets its
+    // whole mount → verb cycle under the SHARED namespace lock
+    // (SharedStateStore.NamespaceKey — the key every writer of this
+    // layout uses); the mount's commits join that hold. Read verbs stay
+    // lock-free: they see the committed prefix (version flips and
+    // wal-delta renames are both atomic). A crashed holder is
+    // operator-recovered with SharedFileLocks.breakStale.
+    val code = stateDir.filter(_ => mutating) match {
+      case Some(d) =>
+        SharedStateStore.holdingNamespace(d, timeoutMs = 120000)(runVerb())
+          .getOrElse {
+            System.err.println(
+              "graftfs: timed out acquiring the shared state lock under " +
+                s"$d/locks — another invocation holds it, or a crashed " +
+                "one leaked it (SharedFileLocks.breakStale is the " +
+                "operator recovery verb)")
+            253
           }
-        res.code
-      } finally {
-        shell.close()
-        mount.close()
-        releaseLock()
-      }
+      case None => runVerb()
+    }
     spark.stop()
-    sys.exit(if (code == 0) 0 else 255)
+    sys.exit(code)
   }
 }

@@ -11,21 +11,22 @@ import org.apache.parquet.io.api.Binary
 
 import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
 
-/** SESSION-FREE readers of a persisted filesystem state (the
-  * `GraftShellMain.saveFs` layout: `catalog/` + `chunks/` parquet under
-  * a versioned dir named by `CURRENT`) — the executor-side read path
-  * of the scheme mount.
+/** SESSION-FREE readers of a persisted filesystem state (a state dir:
+  * `catalog/` + `chunks/` parquet under the versioned dir `CURRENT`
+  * names, immutable chunk files in `data/`, and the wal deltas that
+  * reference them — [[SharedStateStore]]) — the read path of the scheme
+  * mount and of the store.
   *
   * Why this exists: the reference serves ANY client straight from the
   * store, no driver in the loop (README.md:7, FileSystemInputStream).
   * Here a saved state IS plain parquet: any session-less JVM reads an
   * inode table or one file's block rows with the stock parquet-hadoop
   * reader — no SparkSession, no job. The facade's `blockAt` routes every
-  * block miss here: saved payloads, wal deltas and the mount's folded
-  * segments share this one layout.
+  * block miss here: the base chunks, the `data/` files and a
+  * non-committing mount's private segments share this one layout.
   *
-  * Pruning shape: `saveFs` range-partitions + sorts the chunk table by
-  * (path, block_id). [[readBlock]] opens every part file of a source
+  * Pruning shape: `saveFs` and compaction sort the chunk table by
+  * (path, block_id). [[blockRows]] opens every part file of a source
   * and pushes `path = X AND block_id = N` into each reader (row-group
   * statistics + dictionary + record-level filtering). A mount resolves
   * its saved chunks dir through [[ChunkParts]] instead: each part's
@@ -41,8 +42,8 @@ import graft.catalog.{BlockMeta, Inode, SubBlockMeta}
 object SavedState {
 
   /** The parquet files of a chunks/catalog source: a dir's part files,
-    * or the source itself when it is one file (a wal delta's
-    * `chunks.parquet`, a mount segment). */
+    * or the source itself when it is one file (a `data/` file, a mount
+    * segment). */
   private def parquetFiles(dir: String): Seq[String] = {
     val p = Paths.get(dir)
     if (Files.isRegularFile(p)) return Seq(dir)
@@ -82,6 +83,32 @@ object SavedState {
         var g = reader.read()
         while (g != null) {
           out += inodeOf(g)
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    out.result()
+  }
+
+  /** Rows of a catalog/chunks source, from its footers alone. */
+  def rowCount(dir: String): Long =
+    parquetFiles(dir).iterator.map(f =>
+      ParquetFiles.footer(local(f)).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** Every row of a chunks source whose key is in `keys`, in one scan
+    * per file — the compaction read. */
+  def chunkRows(source: String, keys: Set[String]): Seq[SavedStateWriter.ChunkRow] = {
+    val out = Seq.newBuilder[SavedStateWriter.ChunkRow]
+    parquetFiles(source).foreach { f =>
+      val reader = ParquetFiles.groupReader(local(f))
+      try {
+        var g = reader.read()
+        while (g != null) {
+          val key = g.getString("path", 0)
+          if (keys.contains(key))
+            out += SavedStateWriter.ChunkRow(key, g.getInteger("block_id", 0),
+              g.getInteger("sub_id", 0), g.getLong("block_offset", 0),
+              g.getLong("offset", 0), g.getBinary("data", 0).getBytes)
           g = reader.read()
         }
       } finally reader.close()
@@ -180,19 +207,12 @@ object SavedState {
       blocks)
   }
 
-  /** One file's ONE block, reassembled in subblock order, from a
-    * chunks source (a dir or a single file), fetched with
+  /** One file's ONE block as (sub_id, bytes) rows, from a chunks
+    * source (a dir or a single file), fetched with
     * `path = savedPath AND block_id = blockId` pushed into the reader —
     * row groups whose (path, block_id) statistics exclude the key are
     * skipped without decoding (the save layout sorts on exactly these
-    * columns). Returns empty when the block has no rows.
-    */
-  def readBlock(source: String, savedPath: String,
-                blockId: Long): Array[Byte] =
-    assemble(blockRows(source, savedPath, blockId))
-
-  /** [[readBlock]]'s unassembled form: the block's (sub_id, bytes) rows
-    * in one source, for callers merging several sources. */
+    * columns). [[assemble]] merges the rows of several sources. */
   def blockRows(source: String, savedPath: String,
                 blockId: Long): Seq[(Int, Array[Byte])] =
     rowsIn(parquetFiles(source), savedPath, blockId)

@@ -603,4 +603,184 @@ class GraftFileSystemSpec extends AnyFlatSpec with Matchers {
     fs.listStatus(new Path("/churn")).length must be(300 - 100)
     fs.close()
   }
+
+  behavior of "GraftFileSystem (committing mount of a state dir)"
+
+  private val Sub = 512
+  private val Block = 1024
+
+  private def bytesOf(n: Int, seed: Int): Array[Byte] = {
+    val b = new Array[Byte](n); new scala.util.Random(seed).nextBytes(b); b
+  }
+
+  /** A saved state holding /docs/a.bin (3 blocks) and /docs/b.bin, with
+    * an empty wal. */
+  private def savedState(): (String, Map[String, Array[Byte]]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit-state")
+      .toString
+    val files = Map("/docs/a.bin" -> bytesOf(3000, 1),
+      "/docs/b.bin" -> bytesOf(700, 2))
+    val store = new SharedStateStore(dir, Sub, Block)
+    store.createKeyspace()
+    store.storeINode(graft.catalog.FsCatalog.dirInode("/docs", "graft"))
+    files.foreach { case (p, b) => store.storeFileData(p, b, "graft") }
+    store.compact()
+    (dir, files)
+  }
+
+  private def mountState(dir: String, foldBytes: Long = 64L << 20,
+                         executor: Boolean = false): GraftFileSystem = {
+    TestSpark.spark
+    val conf = new Configuration(false)
+    conf.setInt("graft.subblock.size", Sub)
+    conf.setInt("graft.block.size", Block)
+    conf.setLong("graft.mount.fold.bytes", foldBytes)
+    conf.set("graft.mount.state.dir", dir)
+    conf.setBoolean("graft.mount.executor.mode", executor)
+    val fs = new GraftFileSystem
+    fs.initialize(URI.create("graftfs://commit/"), conf)
+    fs
+  }
+
+  /** The namespace as listStatus walks it: path → length (-1: dir). */
+  private def listing(fs: GraftFileSystem): Map[String, Long] = {
+    val out = Map.newBuilder[String, Long]
+    def walk(d: String): Unit = {
+      out += d -> -1L
+      fs.listStatus(new Path(d)).foreach { st =>
+        val p = st.getPath.toUri.getPath
+        if (st.isDirectory) walk(p) else out += p -> st.getLen
+      }
+    }
+    walk("/")
+    out.result()
+  }
+
+  private def readAll(fs: GraftFileSystem, p: String): Array[Byte] = {
+    val in = fs.open(new Path(p))
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def entries(dir: String, sub: String): Int = {
+    val d = java.nio.file.Paths.get(dir, sub)
+    if (!java.nio.file.Files.isDirectory(d)) 0
+    else { val l = java.nio.file.Files.list(d); try l.count().toInt finally l.close() }
+  }
+
+  it must "fail close, rename, delete and mkdirs with an IOException when the commit fails" in {
+    val (dir, files) = savedState()
+    val fs = mountState(dir)
+    val before = listing(fs)
+    val out = fs.create(new Path("/docs/new.bin"))
+    out.write(bytesOf(100, 3))
+    // block the wal with a regular file where its dir goes (permission
+    // bits would not stop a root writer)
+    val wal = java.nio.file.Paths.get(dir, "wal")
+    graft.PlanHygiene.deleteRecursively(wal)
+    java.nio.file.Files.write(wal, Array.emptyByteArray)
+    intercept[IOException](out.close())
+    intercept[IOException](
+      fs.rename(new Path("/docs/a.bin"), new Path("/docs/a2.bin")))
+    intercept[IOException](fs.delete(new Path("/docs/b.bin"), false))
+    intercept[IOException](fs.mkdirs(new Path("/made")))
+    // a verb whose commit failed changed nothing in the mount either
+    fs.getFileStatus(new Path("/docs/a.bin")).getLen must be(3000L)
+    fs.exists(new Path("/docs/b.bin")) must be(true)
+    fs.exists(new Path("/made")) must be(false)
+    fs.close()
+    java.nio.file.Files.delete(wal)
+    val fresh = mountState(dir)
+    try {
+      listing(fresh) must be(before)
+      files.foreach { case (p, b) => readAll(fresh, p) must be(b) }
+    } finally fresh.close()
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  it must "commit every verb: a fresh and an executor-mode mount read the namespace back exactly" in {
+    val (dir, files) = savedState()
+    val fs = mountState(dir, foldBytes = 1024)
+    val big = bytesOf(5000, 4)
+    val out = fs.create(new Path("/w/big.bin"))
+    out.write(big)
+    entries(dir, "data") must be > 0 // folded into the state before close
+    out.close()
+    fs.mkdirs(new Path("/made/here")) must be(true)
+    // each rename is one wal delta and writes no payload
+    def renamed(src: String, dst: String): Unit = {
+      val (w, d) = (entries(dir, "wal"), entries(dir, "data"))
+      fs.rename(new Path(src), new Path(dst)) must be(true)
+      (entries(dir, "wal"), entries(dir, "data")) must be((w + 1, d))
+    }
+    renamed("/docs/a.bin", "/docs/a-moved.bin")
+    fs.delete(new Path("/docs/b.bin"), false) must be(true)
+    renamed("/w/big.bin", "/w/big2.bin")
+    renamed("/w/big2.bin", "/made/big.bin")
+    val expected = Map("/" -> -1L, "/docs" -> -1L, "/w" -> -1L,
+      "/made" -> -1L, "/made/here" -> -1L,
+      "/docs/a-moved.bin" -> 3000L, "/made/big.bin" -> 5000L)
+    listing(fs) must be(expected)
+    fs.close()
+    val bytes = Map("/docs/a-moved.bin" -> files("/docs/a.bin"),
+      "/made/big.bin" -> big)
+    Seq(mountState(dir), mountState(dir, executor = true)).foreach { m =>
+      try {
+        listing(m) must be(expected)
+        bytes.foreach { case (p, b) => readAll(m, p) must be(b) }
+      } finally m.close()
+    }
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  it must "fail a commit that names a base version compaction pruned, keeping the committed bytes" in {
+    val (dir, files) = savedState()
+    val fs = mountState(dir)
+    fs.rename(new Path("/docs/a.bin"), new Path("/docs/x.bin")) must be(true)
+    // another writer of the state folds the wal into a new version
+    new SharedStateStore(dir, Sub, Block).compact()
+    // the mount's reference names the pruned version: a loud failure,
+    // never a reference resolved against the new version's keys
+    intercept[IOException](
+      fs.rename(new Path("/docs/x.bin"), new Path("/docs/y.bin")))
+    fs.close()
+    val fresh = mountState(dir)
+    try {
+      fresh.exists(new Path("/docs/y.bin")) must be(false)
+      readAll(fresh, "/docs/x.bin") must be(files("/docs/a.bin"))
+    } finally fresh.close()
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  it must "commit a file renamed while open at its new path when it closes" in {
+    val (dir, _) = savedState()
+    val fs = mountState(dir, foldBytes = 1024)
+    val bytes = bytesOf(3000, 5)
+    val out = fs.create(new Path("/docs/open.bin"))
+    out.write(bytes, 0, 2000) // folds part of it into data/
+    fs.rename(new Path("/docs"), new Path("/moved")) must be(true)
+    out.write(bytes, 2000, 1000)
+    out.close()
+    fs.exists(new Path("/docs/open.bin")) must be(false)
+    readAll(fs, "/moved/open.bin") must be(bytes)
+    fs.close()
+    val fresh = mountState(dir)
+    try {
+      fresh.exists(new Path("/docs")) must be(false)
+      readAll(fresh, "/moved/open.bin") must be(bytes)
+    } finally fresh.close()
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  it must "delete at unmount the data files no commit named" in {
+    val (dir, _) = savedState()
+    val fs = mountState(dir, foldBytes = 1024)
+    val out = fs.create(new Path("/docs/tmp.bin"))
+    out.write(bytesOf(3000, 6)) // folds into data/ before close
+    entries(dir, "data") must be > 0
+    fs.delete(new Path("/docs/tmp.bin"), false) must be(true)
+    out.close()
+    fs.close()
+    entries(dir, "data") must be(0)
+    graft.PlanHygiene.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
 }

@@ -475,6 +475,61 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
     } finally graft.PlanHygiene.deleteRecursively(state)
   }
 
+  it must "commit a CLI -mkdir as one wal delta, whatever the namespace size" in {
+    // a mutating invocation commits O(verb) into the state dir: one wal
+    // delta, no new version — never a rewrite of the namespace
+    val repo = new java.io.File(sys.props.getOrElse("user.dir", "."))
+    val script = new java.io.File(repo, "bin/graftfs")
+    assume(script.canExecute, "bin/graftfs missing or not executable")
+    val state = Files.createTempDirectory("graft-cli-o1")
+    def names(sub: String, prefix: String): Set[String] = {
+      val d = state.resolve(sub)
+      if (!Files.isDirectory(d)) Set.empty
+      else {
+        val l = Files.list(d)
+        try {
+          import scala.jdk.CollectionConverters._
+          l.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith(prefix)).toSet
+        } finally l.close()
+      }
+    }
+    try {
+      // a saved state of 120 files with an empty wal
+      val store = new SharedStateStore(state.toString)
+      store.createKeyspace()
+      store.storeINode(graft.catalog.FsCatalog.dirInode("/n", "graft"))
+      (0 until 120).foreach(i =>
+        store.storeFileData(s"/n/f$i", s"payload-$i".getBytes("UTF-8"), "graft"))
+      store.compact()
+      names("wal", "d") must be(empty)
+      val versions = names("", "v")
+      versions.size must be(1)
+      def run(args: String*): (Int, String) = {
+        val outFile = Files.createTempFile("graft-cli-out", ".txt")
+        val pb = new ProcessBuilder((script.getAbsolutePath +: args): _*)
+        pb.environment().put("GRAFT_FS_STATE", state.toString)
+        pb.environment().put("GRAFT_MASTER", "local[2]")
+        pb.redirectErrorStream(true)
+        pb.redirectOutput(outFile.toFile)
+        val p = pb.start()
+        val done = p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+        if (!done) p.destroyForcibly()
+        done must be(true)
+        val out = new String(Files.readAllBytes(outFile), "UTF-8")
+        Files.deleteIfExists(outFile)
+        (p.exitValue(), out)
+      }
+      run("-mkdir", "/made")._1 must be(0)
+      names("wal", "d").size must be(1)
+      names("", "v") must be(versions)
+      val (code, out) = run("-ls", "/")
+      code must be(0)
+      out must include("/made")
+      out must include("/n")
+    } finally graft.PlanHygiene.deleteRecursively(state)
+  }
+
   it must "serialize CONCURRENT mutating CLI invocations without losing updates" in {
     // r17 (supersedes the single-driver documented contract): the
     // reference's CLI is multi-client by nature — any number of

@@ -6,11 +6,10 @@ import org.scalatest.matchers.must.Matchers
 import graft.TestSpark
 import graft.catalog.FsCatalog
 
-/** The [[GraftStore]] seam driven END TO END through the trait type,
-  * against the binding the scheme mount really writes through to:
-  * [[SharedStateStore]] over a fresh persisted state dir. The contract
-  * (reference FileSystemStore.scala:29-56) is what a `CassandraStore`
-  * would have to pass, method for method.
+/** The store contract driven END TO END against [[SharedStateStore]],
+  * the store every mount commits through, over a fresh persisted state
+  * dir. The contract (reference FileSystemStore.scala:29-56) is what a
+  * `CassandraStore` would have to pass, method for method.
   */
 class GraftStoreSpec extends AnyFlatSpec with Matchers {
   private lazy val spark = TestSpark.spark
@@ -19,13 +18,13 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
     java.nio.file.Files.createTempDirectory("graft-shared-store").toString,
     subBlockSize = 8, blockSize = 32)
 
-  private def bindings(): Seq[(String, () => GraftStore)] = Seq(
+  private def bindings(): Seq[(String, () => SharedStateStore)] = Seq(
     "SharedStateStore" -> (() => newStore()))
 
   for ((label, mk) <- bindings()) {
 
     it must s"round-trip inodes and payload through the contract [$label]" in {
-      val store: GraftStore = mk()
+      val store: SharedStateStore = mk()
       store.createKeyspace()
       store.init()
 
@@ -86,7 +85,7 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
     }
 
     it must s"overwrite payload on re-store (upsert, both planes) [$label]" in {
-      val store: GraftStore = mk()
+      val store: SharedStateStore = mk()
       store.createKeyspace()
       store.storeFileData("/a", "first".getBytes, "u")
       store.storeFileData("/a", "second!".getBytes, "u")
@@ -97,7 +96,7 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
     it must s"persist the caller-owned mtime, never a constant [$label]" in {
       // the r15 ADVICE gap: the binding invented Timestamp(0) — the
       // reference's storeINode persists the CALLER's iNode metadata
-      val store: GraftStore = mk()
+      val store: SharedStateStore = mk()
       store.createKeyspace()
       val t = new java.sql.Timestamp(1723800000000L)
       store.storeFileData("/m", "data".getBytes, "u", t)
@@ -118,8 +117,8 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
     // SharedFileLocksSpec's forked-JVM case; this pins the seam routing)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-store-locks").toString
-    val a: GraftStore = new SharedStateStore(dir, 8, 32)
-    val b: GraftStore = new SharedStateStore(dir, 8, 32)
+    val a: SharedStateStore = new SharedStateStore(dir, 8, 32)
+    val b: SharedStateStore = new SharedStateStore(dir, 8, 32)
     a.createKeyspace(); b.createKeyspace()
     val tok = a.acquireFileLock("/shared/f")
     tok.isDefined must be(true)
@@ -135,7 +134,7 @@ class GraftStoreSpec extends AnyFlatSpec with Matchers {
     // block id's first char mod 3, RF=3 successor walk): the store must
     // place blocks exactly as the catalog op the DSv2 connector and the
     // fs_block_locations channel use, or locality-aware consumers break
-    val store: GraftStore = newStore()
+    val store: SharedStateStore = newStore()
     store.createKeyspace()
     store.storeFileData("/ring/f", ("x" * 70).getBytes, "u")
     val catalog = FsCatalog(spark.createDataset(

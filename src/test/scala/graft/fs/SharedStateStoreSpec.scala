@@ -63,7 +63,7 @@ class SharedStateStoreSpec extends AnyFlatSpec with Matchers {
       val hit = try l.iterator().asScala.toSeq.filter(d =>
         new String(java.nio.file.Files.readAllBytes(d.resolve("OP")), "UTF-8")
           .split("\n")(1) == n.path).head finally l.close()
-      SavedState.readCatalog(hit.resolve("inode").toString).head
+      SharedStateStore.Delta.read(hit).upserts.head
     }
     nodes.map(n => a.retrieveINode(n.path).get) must be(fromFiles)
     nodes.map(SavedStateWriter.asRead) must be(fromFiles)
