@@ -34,22 +34,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    var na = 0.0
-    i = 0
-    while (i < x.numElements()) { val v = x.getFloat(i).toDouble; na += v * v; i += 1 }
-    var nb = 0.0
-    i = 0
-    while (i < y.numElements()) { val v = y.getFloat(i).toDouble; nb += v * v; i += 1 }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -79,6 +65,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** graft_cosine's arithmetic outside an expression — the interpreted
+    * path and the driver-side and per-partition kernels that must score
+    * bit-identically to the codegen'd one (Similarity's IVF-PQ search).
+    */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    var na = 0.0
+    i = 0
+    while (i < x.numElements()) { val v = x.getFloat(i).toDouble; na += v * v; i += 1 }
+    var nb = 0.0
+    i = 0
+    while (i < y.numElements()) { val v = y.getFloat(i).toDouble; nb += v * v; i += 1 }
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }
 
 /** Native codegen'd integer dot product over two `ARRAY<INT>` columns —

@@ -20,9 +20,10 @@ import org.apache.spark.sql.types._
   * fixed-width entries instead of every scored row. Compare the window
   * (`row_number().over(partitionBy(q).orderBy(...))`) formulation, which
   * shuffles the ENTIRE scored input onto `|groups|` reducer tasks — the
-  * 100×-scale straggler this aggregate exists to remove.
+  * 100×-scale straggler this aggregate exists to remove. Serializable,
+  * so a kernel's per-partition heaps can tree-merge as task results.
   */
-final class TopKBuffer(val k: Int) {
+final class TopKBuffer(val k: Int) extends Serializable {
   var size: Int = 0
   val scores: Array[Double] = new Array[Double](k)
   val ids: Array[Long] = new Array[Long](k)

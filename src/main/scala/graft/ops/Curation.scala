@@ -1094,14 +1094,17 @@ object Curation {
                            seed: Long = 42L,
                            failAfter: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
+    // through the work dir's own FileSystem: a `file:` or `graftfs:`
+    // URI is no local java.nio path
+    val root = new org.apache.hadoop.fs.Path(workDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def persistStage(name: String, df: () => DataFrame): DataFrame = {
-      val dir = java.nio.file.Paths.get(workDir, name)
-      val okMarker = java.nio.file.Paths.get(workDir, s"$name.ok")
-      if (!java.nio.file.Files.exists(okMarker)) {
+      val dir = new org.apache.hadoop.fs.Path(root, name)
+      val okMarker = new org.apache.hadoop.fs.Path(root, s"$name.ok")
+      if (!fs.exists(okMarker)) {
         df().write.mode("overwrite").parquet(dir.toString)
-        java.nio.file.Files.createDirectories(okMarker.getParent)
-        java.nio.file.Files.write(okMarker,
-          "committed\n".getBytes("UTF-8"))
+        val out = fs.create(okMarker, true)
+        try out.write("committed\n".getBytes("UTF-8")) finally out.close()
         if (failAfter.contains(name))
           sys.error(s"injected failure after stage $name")
       }

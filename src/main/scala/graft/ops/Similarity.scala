@@ -1,9 +1,15 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
-import graft.functions.GraftFunctions
+import graft.functions.{CosineSimilarity, GraftFunctions, TopKBuffer}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -20,6 +26,13 @@ import graft.functions.GraftFunctions
   * against the brute twin, and [[identical]] gates two searches that
   * must agree exactly (persisted vs in-session, incremental vs
   * rebuilt).
+  *
+  * Every search returns a lazy frame except IVF-PQ's, which is EAGER:
+  * its jobs run when it is called ([[ivfpqSearch]]). The queries are
+  * probed on the driver, the codes are cut to the probed buckets by a
+  * static partition filter, and the ADC scan and the exact rerank run
+  * as two per-partition kernels whose per-query heaps tree-merge to
+  * the driver, which returns the ranked rows as a local frame.
   */
 object Similarity {
 
@@ -275,12 +288,16 @@ object Similarity {
     (centroidFrame(spark, cents), collected.result())
   }
 
-  /** (vec_id, embedding) rows collected and sorted by id — the
-    * driver-held centroid shape every Lloyd round re-broadcasts. */
-  private def collectVecs(df: DataFrame): Array[(Long, Array[Float])] =
-    df.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
+  /** (vec_id, embedding) rows of a small frame collected and sorted by
+    * id — the driver-held centroid shape every Lloyd round
+    * re-broadcasts, and the IVF-PQ search's coarse centroids and
+    * queries. */
+  private def collectVecs(df: DataFrame): Array[(Long, Array[Float])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+  }
 
   private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
                             cents: Array[(Long, Array[Float])]): DataFrame = {
@@ -551,7 +568,8 @@ object Similarity {
     * where the bucket is one of the vector's `nprobe` nearest centroids
     * — the shared primitive behind single-probe bucketing, multi-probe
     * candidate generation, and query-side probing (one tie-break rule,
-    * score desc then c_id, everywhere).
+    * score desc then c_id, everywhere). The IVF-PQ search probes on the
+    * driver instead, through its twin [[probedBuckets]].
     */
   private def probeAssignments(corpus: DataFrame, centroids: DataFrame,
                                nprobe: Int): DataFrame = {
@@ -1070,8 +1088,8 @@ object Similarity {
   private def ivfpqScored(queries: DataFrame, corpus: DataFrame,
                           coarse: DataFrame, idx: PqIndex,
                           nprobe: Int): DataFrame =
-    adcScoreIndexed(queries, encodeIvfPq(corpus, coarse, idx), coarse,
-      idx, nprobe)
+    adcScoreIndexed(queries, encodeIvfPq(corpus, collectVecs(coarse), idx),
+      coarse, idx, nprobe)
 
   /** ONE index-build pass over `corpus`: coarse bucket (argmax cosine
     * over the K centroids, ties to the lower id like probeAssignments)
@@ -1080,13 +1098,13 @@ object Similarity {
     * persisted layout, incremental ingest) shares. Per-row
     * deterministic given (coarse, idx), which is what makes
     * ingest-without-retrain bit-identical to a full re-encode.
+    * `coarseArr` is the coarse frame as [[collectVecs]] collects it.
     */
-  private def encodeIvfPq(corpus: DataFrame, coarse: DataFrame,
+  private def encodeIvfPq(corpus: DataFrame,
+                          coarseArr: Array[(Long, Array[Float])],
                           idx: PqIndex): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val coarseArr = coarse.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
     val coarseNorm = coarseArr.map { case (_, cv) =>
       math.sqrt(cv.map(x => x.toDouble * x).sum)
     }
@@ -1113,18 +1131,20 @@ object Similarity {
       .toDF("vec_id", "bucket", "codes", "rnorm")
   }
 
-  /** ADC scoring of a prebuilt codes table: query-side probing (the
-    * same zero-shuffle row-local selection as IVF), probed pairs join
-    * the SLIM (bucket, codes, rnorm) index — nprobe/K of the corpus by
-    * mass, m bytes per vector instead of dim floats — and score in a
-    * kernel against the closure-broadcast codebooks.
+  /** ADC scoring of a prebuilt codes table as a full scored frame —
+    * what the `*RecallWithFraction` gates count: query-side probing
+    * (the same zero-shuffle row-local selection as IVF), probed pairs
+    * join the SLIM (bucket, codes, rnorm) index — nprobe/K of the
+    * corpus by mass, m bytes per vector instead of dim floats — and
+    * score in a kernel against the closure-broadcast codebooks.
     */
   private def adcScoreIndexed(queries: DataFrame, codes: DataFrame,
                               coarse: DataFrame, idx: PqIndex,
                               nprobe: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
-    val lutById = pqLuts(queries, idx).map(t => t._1 -> (t._2, t._3)).toMap
+    val lutById = pqLuts(collectVecs(queries), idx)
+      .map(t => t._1 -> (t._2, t._3)).toMap
     val queryBuckets = probeAssignments(
         queries.select(col("vec_id"), col("embedding")), coarse, nprobe)
       .select(col("vec_id").as("q_id"), col("bucket"))
@@ -1155,7 +1175,8 @@ object Similarity {
     */
   def ivfpqEncodeWith(batch: DataFrame, coarse: DataFrame,
                       codebooks: DataFrame): DataFrame =
-    clusteredByBucket(encodeIvfPq(batch, coarse, pqIndexOf(codebooks)))
+    clusteredByBucket(
+      encodeIvfPq(batch, collectVecs(coarse), pqIndexOf(codebooks)))
 
   /** IVF-PQ: the composed 100 TB index — the coarse IVF quantizer
     * prunes the scan to the query's `nprobe` buckets (nprobe/K of the
@@ -1163,60 +1184,202 @@ object Similarity {
     * vector), multiplying the two paths' savings exactly as a
     * production ANN index does (the Jégou et al. IVFADC layout). ONE
     * index-build pass encodes codes AND the coarse bucket per vector
-    * (both argmax loops share the row); queries probe via the same
-    * zero-shuffle row-local selection as IVF, the probed pairs join the
-    * slim (bucket, codes) index, ADC-score in a kernel, and the exact
-    * float rerank over `cand` candidates absorbs quantization error.
-    * Coarse assignment ties break to the lower centroid id — the same
-    * rule as `probeAssignments` — and everything downstream ties by id,
-    * so the result is deterministic end to end.
+    * (both argmax loops share the row). The search is [[ivfpqSearch]]:
+    * eager (its jobs run when this is called), queries probed on the
+    * driver, one kernel ADC-scoring the probed codes and one reranking
+    * `cand` candidates per query in exact float cosine, which absorbs
+    * quantization error. Coarse assignment ties break to the lower
+    * centroid id — the same rule as `probeAssignments` — and
+    * everything downstream ties by id, so the result is deterministic
+    * end to end.
     *
     * The caller trains the coarse centroids ([[kmeansCentroids]]) and
     * codebooks ([[pqCodebooks]]) once and searches many times. This
-    * entry encodes the corpus in-session; for the persisted layout use
-    * [[ivfpqTopKIndexed]] over [[loadIvfPqIndex]].
+    * entry encodes the corpus in-session, inside the ADC kernel's
+    * scan, so it reads `corpus` twice (encode, rerank); for the
+    * persisted layout use [[ivfpqTopKIndexed]] over [[loadIvfPqIndex]].
     */
   def ivfpqTopKWith(queries: DataFrame, corpus: DataFrame,
                     coarse: DataFrame, codebooks: DataFrame,
                     nprobe: Int, k: Int, cand: Int): DataFrame = {
     val idx = pqIndexOf(codebooks)
-    rerankExact(
-      topCandidates(adcScoreIndexed(queries,
-        encodeIvfPq(corpus, coarse, idx), coarse, idx, nprobe), cand),
-      queries, corpus, k)
+    val cents = collectVecs(coarse)
+    ivfpqSearch(queries, encodeIvfPq(corpus, cents, idx), cents, idx,
+      corpus, nprobe, k, cand)
   }
 
   /** IVF-PQ search over a PREBUILT (vec_id, bucket, codes, rnorm)
-    * codes table — the production read path for the persisted index:
-    * probed buckets prune the bucket-partitioned parquet at the FILE
-    * level (dynamic partition pruning, same plan shape the IVF DPP
-    * spec pins; it fires only when `queries` is itself a filtered file
-    * scan), the ADC scan touches only m-byte codes, and the exact
-    * float rerank scores `cand` candidates per query against `corpus`
-    * (the only place float embeddings are read). That rerank is a
-    * SCAN of `corpus`: the ≤ |queries|·cand candidate ids are the
-    * broadcast side of the join, and every corpus row streams through
-    * it, so one search reads the probed codes plus the whole float
-    * corpus. Fetching the candidates' vectors by key from the probed
-    * buckets is ROADMAP direction 3's open item.
+    * codes table — the production read path for the persisted index
+    * ([[loadIvfPqIndex]]), run by [[ivfpqSearch]]. It is eager: its
+    * five jobs (codebooks, centroids, queries, ADC scan, rerank scan)
+    * run when it is called. Pruning is static: the queries are probed
+    * on the driver, so the codes scan carries a plain partition filter
+    * on `bucket` and reads only the probed buckets' files, whatever
+    * `queries` is (an in-memory frame prunes as a file scan does). The
+    * ADC kernel reads only m-byte codes; the rerank kernel scores
+    * `cand` candidates per query against `corpus`, the only place float
+    * embeddings are read.
+    *
+    * What a search still reads in full is `corpus`: the rerank kernel
+    * streams every corpus row to score the candidate ids among them.
+    * Fetching the candidates' vectors by key needs float vectors in the
+    * index, a layout change this path does not make.
     */
   def ivfpqTopKIndexed(queries: DataFrame, codes: DataFrame,
                        coarse: DataFrame, codebooks: DataFrame,
                        corpus: DataFrame, nprobe: Int, k: Int,
                        cand: Int): DataFrame = {
     val idx = pqIndexOf(codebooks)
-    rerankExact(
-      topCandidates(adcScoreIndexed(queries, codes, coarse, idx, nprobe),
-        cand),
-      queries, corpus, k)
+    ivfpqSearch(queries, codes, collectVecs(coarse), idx, corpus, nprobe,
+      k, cand)
+  }
+
+  /** The one IVF-PQ search, planned on the driver. Given the codebooks
+    * and the coarse centroids its callers collected (a job each), it
+    * runs three jobs and shuffles no scored row:
+    *  1. collect the queries (broadcast-small, as in every path here);
+    *  2. on the driver, each query's `nprobe` buckets
+    *     ([[probedBuckets]], bit for bit `probeAssignments`' choice)
+    *     and its ADC lookup tables ([[pqLuts]]);
+    *  3. scan `codes` filtered to the probed buckets (a static partition
+    *     filter on the persisted layout) in a kernel that scores each
+    *     code row against only the queries probing its bucket, skipping
+    *     q_id = vec_id, into one `cand`-deep heap per query
+    *     ([[heapsPerQuery]]);
+    *  4. scan `corpus` in a kernel that computes graft_cosine for the
+    *     candidate ids only (a driver-built id → queries map rides in
+    *     the closure) into one `k`-deep heap per query;
+    *  5. return the ranked (q_id, neighbor_id, rank, score) rows as a
+    *     local frame, ordered by q_id, then rank.
+    * The heaps order by (score DESC, id ASC), graft_topk's order, so
+    * the rows are those the scored-frame formulation the gates keep
+    * (probe join → [[topCandidates]] → [[rerankExact]]) ranks, score
+    * included. The candidate ids never enter a plan: a literal `isin`
+    * of |queries|·cand ids costs more to plan than the scan does.
+    */
+  private def ivfpqSearch(queries: DataFrame, codes: DataFrame,
+                          cents: Array[(Long, Array[Float])], idx: PqIndex,
+                          corpus: DataFrame, nprobe: Int, k: Int,
+                          cand: Int): DataFrame = {
+    require(k >= 1 && cand >= 1 && nprobe >= 0,
+      s"need k >= 1, cand >= 1, nprobe >= 0, got k=$k cand=$cand " +
+        s"nprobe=$nprobe")
+    val qs = collectVecs(queries)
+    val luts = pqLuts(qs, idx)
+    val centData = cents.map { case (id, v) => (id, unsafe(v)) }
+    // probed bucket → the queries probing it
+    val probers: Map[Long, Array[Int]] = qs.indices
+      .flatMap(q =>
+        probedBuckets(unsafe(qs(q)._2), centData, nprobe).map(_ -> q))
+      .groupBy(_._1).map { case (b, bq) => b -> bq.map(_._2).toArray }
+
+    val probed = codes
+      .filter(col("bucket").isin(probers.keys.toSeq.sorted: _*))
+      .select(col("vec_id").cast(LongType), col("bucket").cast(LongType),
+        col("codes"), col("rnorm"))
+    val cands = heapsPerQuery(probed, "ivfpq adc scan", qs.length, cand) {
+      (rows, heaps) =>
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1))
+            probers.get(r.getLong(1)).foreach { qIdx =>
+              val id = r.getLong(0)
+              val code = r.getArray(2).toIntArray()
+              val rn = r.getDouble(3)
+              qIdx.foreach { q =>
+                val (qId, lut, qn) = luts(q)
+                if (qId != id) heaps(q).insert(idx.adc(lut, code, qn, rn), id)
+              }
+            }
+        }
+    }
+
+    // candidate id → the queries holding it, once per heap entry
+    val holders: Map[Long, Array[Int]] = cands.indices
+      .flatMap(q => cands(q).ids.take(cands(q).size).map(_ -> q))
+      .groupBy(_._1).map { case (id, iq) => id -> iq.map(_._2).toArray }
+    val qvs = qs.map(_._2)
+    val top = heapsPerQuery(
+        corpus.select(col("vec_id").cast(LongType), col("embedding")),
+        "ivfpq rerank scan", qs.length, k) { (rows, heaps) =>
+      val qa = qvs.map(unsafe)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1))
+          holders.get(r.getLong(0)).foreach { qIdx =>
+            val ev = r.getArray(1)
+            qIdx.foreach(q => heaps(q).insert(
+              CosineSimilarity.cosine(qa(q), ev), r.getLong(0)))
+          }
+      }
+    }
+
+    val ranked = qs.indices.flatMap { q =>
+      top(q).sorted.iterator.zipWithIndex.map { case ((score, id), i) =>
+        Row(qs(q)._1, id, i + 1, score)
+      }
+    }
+    queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ranked: _*),
+      StructType(Seq(
+        StructField("q_id", LongType, nullable = false),
+        StructField("neighbor_id", LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false),
+        StructField("score", DoubleType, nullable = false))))
+  }
+
+  private def unsafe(v: Array[Float]): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(v)
+
+  /** A query's `nprobe` buckets, on the driver — bit for bit the
+    * buckets `probeAssignments` gives it: graft_cosine's arithmetic,
+    * ordered by (−score, c_id) as its array_sort orders them, under
+    * Spark's double ordering (NaN last, −0.0 equal to 0.0), so an
+    * exact tie goes to the lower centroid id.
+    */
+  private def probedBuckets(qv: ArrayData, cents: Array[(Long, ArrayData)],
+                            nprobe: Int): Array[Long] =
+    cents.map { case (id, cv) => (-CosineSimilarity.cosine(qv, cv), id) }
+      .sortWith { case ((a, i), (b, j)) =>
+        val c = if (a == b) 0 else java.lang.Double.compare(a, b)
+        c < 0 || (c == 0 && i < j)
+      }
+      .take(nprobe).map(_._2)
+
+  /** One bounded (score DESC, id ASC) heap per query, `cap` deep, over
+    * the rows of `scan`: `fold` folds one partition's rows into that
+    * partition's `nq` heaps, and the per-partition heaps tree-merge
+    * (`treeReduce`) into one heap per query on the driver. No scored
+    * row leaves its task, and the driver merges a bounded number of
+    * heap arrays whatever the partition count. The scan runs as one
+    * named SQL execution, so its plan and scan metrics reach query
+    * execution listeners as an action's do.
+    */
+  private def heapsPerQuery(scan: DataFrame, name: String, nq: Int,
+                            cap: Int)(
+      fold: (Iterator[InternalRow], Array[TopKBuffer]) => Unit)
+      : Array[TopKBuffer] = {
+    val qe = scan.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rows = qe.toRdd
+      if (rows.getNumPartitions == 0) Array.fill(nq)(new TopKBuffer(cap))
+      else rows.mapPartitions { it =>
+        val heaps = Array.fill(nq)(new TopKBuffer(cap))
+        fold(it, heaps)
+        Iterator.single(heaps)
+      }.treeReduce { (a, b) =>
+        var q = 0
+        while (q < a.length) { a(q).mergeFrom(b(q)); q += 1 }
+        a
+      }
+    }
   }
 
   /** Persist the composed IVF-PQ index — the deployment artifact at
     * 100 TB: `dir/centroids` (K coarse rows) and `dir/codebooks`
     * (m·ksub sub-centroids), one file each, and `dir/codes` — the
-    * (vec_id, codes, rnorm) table PARTITIONED BY bucket, so a probed
-    * search prunes non-probed buckets at the file level exactly like
-    * [[saveIvfIndex]]'s layout, one file per bucket
+    * (vec_id, codes, rnorm) table PARTITIONED BY bucket, so a search
+    * ([[ivfpqTopKIndexed]]) reads only the probed buckets' files: it
+    * probes its queries on the driver and filters the codes on
+    * `bucket` with a static partition filter. One file per bucket
     * ([[ivfpqEncodeWith]] clusters its rows: a file costs the same
     * fixed write and open overhead whatever it holds), while each file
     * holds m-byte codes instead of float vectors (the
@@ -1325,20 +1488,16 @@ object Similarity {
   }
 
   /** Queries are broadcast-small by contract (as in every path here):
-    * collect once, precompute each query's lut[s][c] and norm.
+    * collected once ([[collectVecs]]), each query's lut[s][c] and norm
+    * precomputed on the driver.
     */
-  private def pqLuts(queries: DataFrame, idx: PqIndex)
-      : Array[(Long, Array[Array[Double]], Double)] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) =>
-        val lut = Array.tabulate(idx.m, idx.ksub)((s, c) =>
-          idx.subDot(qv, s, idx.cb(s)(c)))
-        (qid, lut, math.sqrt(qv.map(x => x.toDouble * x).sum))
-      }
-  }
+  private def pqLuts(qs: Array[(Long, Array[Float])], idx: PqIndex)
+      : Array[(Long, Array[Array[Double]], Double)] =
+    qs.map { case (qid, qv) =>
+      val lut = Array.tabulate(idx.m, idx.ksub)((s, c) =>
+        idx.subDot(qv, s, idx.cb(s)(c)))
+      (qid, lut, math.sqrt(qv.map(x => x.toDouble * x).sum))
+    }
 
   /** Bounded map-side top-`cand` of an ADC-scored frame. */
   private def topCandidates(scored: DataFrame, cand: Int): DataFrame = {

@@ -86,6 +86,35 @@ class FunnelRecoverySpec extends AnyFlatSpec with Matchers {
       java.nio.file.Paths.get(freshDir))
   }
 
+  it must "commit markers beside the stages of a file: URI work dir and resume from them" in {
+    // a URI work dir is no java.nio path: the markers must land at
+    // <dir>/<stage>.ok, not under the process's working directory
+    val local = java.nio.file.Files.createTempDirectory("graft-funnel-uri")
+    val work = local.toUri.toString // file:/tmp/graft-funnel-uri…/
+    val budget = (docs.count() * 3L / 4L).toInt
+    val label = graft.queries.PipelineQueries.nbLabel
+    intercept[RuntimeException] {
+      Curation.e2eTrainSetResumable(docs, label, budget, work,
+        failAfter = Some("kept")).collect()
+    }.getMessage must include("injected failure after stage kept")
+    Seq("extracted", "kept").foreach { s =>
+      java.nio.file.Files.isRegularFile(local.resolve(s"$s.ok")) must be(true)
+      java.nio.file.Files.isDirectory(local.resolve(s)) must be(true)
+    }
+    java.nio.file.Files.exists(local.resolve("clean.ok")) must be(false)
+
+    // the resume reads the committed stages instead of recomputing them
+    def mtime(n: String) =
+      java.nio.file.Files.getLastModifiedTime(local.resolve(s"$n.ok"))
+    val before = Seq("extracted", "kept").map(mtime)
+    val resumed = rows(Curation.e2eTrainSetResumable(docs, label, budget,
+      work))
+    Seq("extracted", "kept").map(mtime) must be(before)
+    java.nio.file.Files.isRegularFile(local.resolve("clean.ok")) must be(true)
+    resumed must be(rows(Curation.e2eTrainSet(docs, label, budget)))
+    graft.PlanHygiene.deleteRecursively(local)
+  }
+
   it must "overwrite a torn (uncommitted) stage dir on retry" in {
     val work = java.nio.file.Files
       .createTempDirectory("graft-funnel-torn").toString

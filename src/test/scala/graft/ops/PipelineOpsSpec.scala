@@ -2642,11 +2642,12 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
 
   it must "file-prune non-probed buckets in the persisted IVF-PQ codes layout" in {
     // the PQ twin of the IVF DPP spec: the probed search over the
-    // bucket-partitioned CODES table must carry a DynamicPruning
-    // expression and read fewer partition dirs than exist on disk —
-    // the multiplied claim (file pruning × m-byte codes) needs the
-    // file-pruning half proven on THIS layout, not inherited from IVF
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    // bucket-partitioned CODES table must carry a static partition
+    // filter on bucket (the queries are probed on the driver) and read
+    // fewer partition dirs than exist on disk — the multiplied claim
+    // (file pruning × m-byte codes) needs the file-pruning half proven
+    // on THIS layout, not inherited from IVF
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
@@ -2680,15 +2681,32 @@ class PipelineOpsSpec extends AnyFlatSpec with Matchers {
       }
       partDirs must be >= 3 // the fixture must genuinely spread
       val (lc, lcb, lcodes) = Similarity.loadIvfPqIndex(spark, dir.toString)
-      val res = Similarity.ivfpqTopKIndexed(qs, lcodes, lc, lcb, vecs,
-        nprobe = 1, k = 3, cand = 10)
-      res.collect() // execute so AQE finalizes and scan metrics fill
-      val codeScans = scans(res.queryExecution.executedPlan)
-        .filter(_.relation.location.rootPaths.exists(
-          _.toString.contains("codes")))
+      // the search is eager: its codes scan runs as an SQL execution of
+      // its own inside the call, which a query execution listener sees
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add(qe)
+        override def onFailure(f: String, qe: QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val codeScans = try {
+        Similarity.ivfpqTopKIndexed(qs, lcodes, lc, lcb, vecs,
+          nprobe = 1, k = 3, cand = 10).collect()
+        import scala.jdk.CollectionConverters._
+        def found = seen.asScala.toSeq.flatMap(qe => scans(qe.executedPlan))
+          .filter(_.relation.location.rootPaths.exists(
+            _.toString.contains("codes")))
+        val deadline = System.nanoTime() + 10000000000L
+        while (found.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        found
+      } finally spark.listenerManager.unregister(listener)
       codeScans.nonEmpty must be(true)
       val scan = codeScans.head
-      scan.partitionFilters.mkString.toLowerCase must include("dynamicpruning")
+      val filters = scan.partitionFilters.mkString.toLowerCase
+      filters must include("bucket")
+      filters must not include ("dynamicpruning")
       val read = scan.metrics.get("numPartitions").map(_.value)
       read.isDefined must be(true)
       read.get must be < partDirs.toLong
