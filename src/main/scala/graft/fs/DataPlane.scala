@@ -52,10 +52,9 @@ object DataPlane {
   private val absOff = col("block_offset") + col("offset")
 
   /** Ordered subblock→block reassembly — one row per (path, block), each
-    * cell bounded by blockSize (128 MB default), never by file size. This
-    * is the scale-safe unit: block rows stream through `toLocalIterator`
-    * in `get`/`getmergeTo` so a multi-TB file never materializes in one
-    * JVM array (the reference streams too, BlockInputStream.scala:42-122).
+    * cell bounded by blockSize (128 MB default), never by file size: the
+    * first fold of [[reassemble]], so no aggregation buffer outgrows a
+    * block before the per-file concat.
     */
   def reassembleBlocks(chunks: DataFrame): DataFrame =
     chunks
@@ -72,8 +71,8 @@ object DataPlane {
     * so no aggregation buffer ever exceeds one block until the final
     * per-file concat). The OUTPUT cell still holds the whole file — that
     * is this API's contract (a payload column), right for files that fit
-    * a row; for arbitrarily large files use the streaming `get` /
-    * `getmergeTo`, which never build the single cell.
+    * a row; an arbitrarily large file streams through a mount's
+    * `open()` (GraftFileSystem), one block resident at a time.
     */
   def reassemble(chunks: DataFrame): DataFrame =
     reassembleBlocks(chunks)
@@ -135,28 +134,11 @@ object DataPlane {
         expr(s"substring(joined, CAST($start - first_off + 1 AS INT), ${len.toInt})")
           .as("data"))
 
-  /** D10: -get / -copyToLocal — stream one path's BLOCKS, in offset
-    * order, to a local file. Only one ≤128 MB block is ever resident on
-    * the driver (`toLocalIterator` fetches one partition at a time), so
-    * there is no whole-file ceiling — the 2 GB JVM-array cap applies per
-    * block, never per file.
-    */
-  def get(chunks: DataFrame, fsPath: String, localPath: String): Unit = {
-    val blocks = reassembleBlocks(chunks.filter(col("path") === fsPath))
-      .orderBy(col("block_offset"))
-      .select(col("data"))
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(localPath))
-    try blocks.toLocalIterator().forEachRemaining { r =>
-      out.write(r.getAs[Array[Byte]]("data"))
-    } finally out.close()
-  }
-
   /** D11: getmerge — ordered concat of all files under a prefix into one
     * payload CELL; ordering = path order (SURVEY §7.5: filename order, the
     * documented choice for the reference's ambiguous "merge and sort").
-    * Digest-check convenience for merges that fit a row — the unbounded
-    * path is `getmergeTo`.
+    * Digest-check convenience for merges that fit a row — the shell's
+    * -getmerge streams through the mount instead.
     */
   def getmerge(chunks: DataFrame, prefix: String,
                addnl: Boolean = false): DataFrame = {
@@ -208,7 +190,10 @@ object DataPlane {
       .toDF("path", "text")
   }
 
-  private def decodeText(bytes: Array[Byte]): Array[Byte] = {
+  /** One payload decoded the way [[text]] decodes it; a payload the sniffed
+    * codec cannot read throws its IOException. The shell's -text runs
+    * this on the driver. */
+  private[fs] def decodeText(bytes: Array[Byte]): Array[Byte] = {
     def magic(i: Int): Int = if (i < bytes.length) bytes(i) & 0xFF else -1
     if (magic(0) == 0x1F && magic(1) == 0x8B) {
       val in = new java.util.zip.GZIPInputStream(
@@ -284,28 +269,5 @@ object DataPlane {
         throw new java.io.IOException("readFully past EOF")
     override def readFully(position: Long, buffer: Array[Byte]): Unit =
       readFully(position, buffer, 0, buffer.length)
-  }
-
-  /** D11 at scale: stream the merged prefix to a local sink block by
-    * block — (path, block_offset) order, one bounded block on the driver
-    * at a time, no single-reducer global concat anywhere.
-    */
-  def getmergeTo(chunks: DataFrame, prefix: String, localPath: String,
-                 addnl: Boolean = false): Unit = {
-    val blocks = reassembleBlocks(chunks.filter(col("path").startsWith(prefix)))
-      .orderBy(col("path"), col("block_offset"))
-      .select(col("path"), col("data"))
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(localPath))
-    var last: String = null
-    try {
-      blocks.toLocalIterator().forEachRemaining { r =>
-        val p = r.getString(0)
-        if (addnl && last != null && p != last) out.write('\n')
-        out.write(r.getAs[Array[Byte]]("data"))
-        last = p
-      }
-      if (addnl && last != null) out.write('\n')
-    } finally out.close()
   }
 }

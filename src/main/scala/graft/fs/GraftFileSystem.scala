@@ -644,6 +644,9 @@ class GraftFileSystem extends FileSystem {
 
   override def getDefaultBlockSize: Long = blockSize.toLong
 
+  /** (subblock, block) sizes this mount chunks and reads at. */
+  private[fs] def geometry: (Int, Int) = (subBlockSize, blockSize)
+
   private def abs(p: Path): String = ctx.makeAbsolute(stripScheme(p))
 
   private def stripScheme(p: Path): String = {

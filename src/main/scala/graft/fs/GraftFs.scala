@@ -37,10 +37,6 @@ final case class GraftFs(catalog: FsCatalog, chunks: DataFrame) {
   private def inSubtree(path: String) =
     col("path") === path || col("path").startsWith(prefixOf(path))
 
-  /** File `p`'s chunk rows (one exact-match filter; parquet/path-range
-    * pruning applies). */
-  def rowsForFile(p: String): DataFrame = chunks.filter(col("path") === p)
-
   /** A7/D8 + B9: delete cascades to chunk rows — no orphaned data. */
   def delete(path: String, recursive: Boolean): (GraftFs, Boolean) = {
     val (cat2, ok) = catalog.delete(path, recursive)
@@ -80,7 +76,7 @@ final case class GraftFs(catalog: FsCatalog, chunks: DataFrame) {
     val node = catalog.retrieve(path).getOrElse(
       throw new FileNotFoundException(path))
     if (node.isDir) throw new IOException(s"$path is a directory")
-    DataPlane.cat(rowsForFile(path), path)
+    DataPlane.cat(chunks, path)
   }
 
   /** Data-plane accounting for consistency checks: chunk rows + bytes

@@ -1,11 +1,11 @@
 package graft.fs
 
 import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,8 +39,9 @@ final case class ShellResult(code: Int, out: Seq[String], err: Seq[String])
   *    driver memory — no Spark job — with FsCatalog's formulas, error
   *    strings and row order;
   *  - byte reads (-cat/-text/-tail/-get/-getmerge, the read half of
-  *    -cp) run the data plane over the mount's chunk snapshot — never
-  *    the mount's `open()`, so they read any chunk geometry.
+  *    -cp) stream through the mount's `open()`, one block resident at
+  *    a time — no Spark job; -tail seeks to the last 1 KB, -text
+  *    decodes on the driver ([[DataPlane.decodeText]]).
   *
   * The primary constructor runs on a caller-owned mount (the CLI's
   * shape, [[GraftShellMain]]). The [[GraftFs]] constructor seeds a
@@ -51,7 +52,7 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
   /** A shell over a private mount seeded from `initial`: its catalog is
     * saved into a temp state dir that the mount bootstraps from
     * (write-through off), and its chunk rows join that state at the
-    * shell's first chunk read; [[close]] deletes the dir.
+    * shell's first byte verb or [[fs]] call; [[close]] deletes the dir.
     */
   def this(initial: GraftFs, context: FsContext) = {
     this(GraftShell.seededMount(initial), context)
@@ -68,15 +69,31 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
 
   private def seedDir: String = mount.getConf.get("graft.mount.state.dir")
 
-  /** The mount's current (catalog, chunks) snapshot; a seeded shell
-    * writes its deferred chunk rows first. */
-  def fs: GraftFs = {
-    seedChunks.foreach { c =>
-      GraftShellMain.writeChunks(c,
-        s"${GraftShellMain.currentStateDir(seedDir).get}/chunks")
-      seedChunks = None
-    }
-    mount.graftFs
+  /** Write a seeded shell's deferred chunk rows into its seed state,
+    * re-chunked at the mount's geometry: the seed may carry another,
+    * and the mount reads block `pos / blockSize`. */
+  private def writeSeed(): Unit = seedChunks.foreach { c =>
+    val (sub, block) = mount.geometry
+    GraftShellMain.writeChunks(DataPlane.chunk(DataPlane.reassemble(c), sub, block),
+      s"${GraftShellMain.currentStateDir(seedDir).get}/chunks")
+    seedChunks = None
+  }
+
+  /** The mount's current (catalog, chunks) snapshot. */
+  def fs: GraftFs = { writeSeed(); mount.graftFs }
+
+  /** `f` over file `p` opened through the mount's `open()`, which keeps
+    * one block resident at a time. */
+  private def reading[T](p: String)(f: FSDataInputStream => T): T = {
+    writeSeed()
+    val in = mount.open(new Path(p))
+    try f(in) finally in.close()
+  }
+
+  /** Run `f` on a fresh (or truncated) local file `local`. */
+  private def toLocal(local: String)(f: java.io.OutputStream => Unit): Unit = {
+    val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(local))
+    try f(out) finally out.close()
   }
 
   /** Counterpart of [[fs]] (a mount snapshot holds nothing to release). */
@@ -121,22 +138,17 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
     }
   }
 
-  /** FsCatalog.copy's precondition matrix, then the subtree's bytes
-    * read through the data plane (one job) and re-created through the
-    * mount — the reference's client-streamed copy (FileUtil.copy). */
+  /** FsCatalog.copy's precondition matrix, then each file of the
+    * subtree streamed from the mount's `open()` into its `create` — the
+    * reference's client-streamed copy (FileUtil.copy). */
   private def copy(src: String, dst: String): Unit = {
     if (src == dst) return
     checkMove(src, dst)
-    val under = col("path") === src || col("path").startsWith(dirPrefix(src))
-    val bytes = DataPlane.reassemble(fs.chunks.filter(under)).collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
     // the walk lists every dir before its children
     mount.subtree(src).foreach { n =>
-      val p = n.path
-      val np = dst + p.drop(src.length)
+      val np = dst + n.path.drop(src.length)
       if (n.isDir) mount.mkdirs(new Path(np))
-      else upload(new java.io.ByteArrayInputStream(
-        bytes.getOrElse(p, Array.emptyByteArray)), np)
+      else reading(n.path)(upload(_, np))
     }
   }
 
@@ -280,6 +292,21 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       }
     }
     ShellResult(code, out.result(), err.result())
+  }
+
+  /** [[forEachSrc]] over every glob match of every argument: a failed
+    * match prints and the next one still runs (the reference's
+    * DelayedExceptionThrowing, which its -cat and -text run). */
+  private def forEachMatch(cmd: String, args: Seq[String])
+                          (f: String => String): ShellResult = {
+    val each = args.map { a =>
+      try forEachSrc(cmd, expandSrc(a))(m => Seq(f(m)))
+      catch {
+        case e: IOException => ShellResult(-1, Nil, Seq(s"$cmd: ${e.getMessage}"))
+      }
+    }
+    ShellResult(if (each.exists(_.code != 0)) -1 else 0,
+      each.flatMap(_.out), each.flatMap(_.err))
   }
 
   private def sizeLine(path: String, len: Long): String = f"$len%12d  $path"
@@ -426,32 +453,20 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       }
 
     case "-cat" =>
-      // every source argument, glob-expanded, in the doall loop — the
-      // reference cats each match and keeps going on failures
-      forEachSrc(cmd, args) { arg =>
-        expandSrc(arg).map { p =>
-          val bytes = fs.cat(p).collect()
-          val payload = if (bytes.isEmpty) Array.emptyByteArray
-            else bytes(0).getAs[Array[Byte]]("data")
-          new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-        }
-      }
+      forEachMatch(cmd, args)(m => new String(reading(fileArg(m))(_.readAllBytes()), UTF_8))
 
     case "-text" =>
-      forEachSrc(cmd, args) { arg =>
-        expandSrc(arg).map { m =>
-          val p = fileArg(m)
-          val rows = DataPlane.text(fs.rowsForFile(p)).collect()
-          rows.map(_.getString(1)).mkString("\n")
-        }
+      forEachMatch(cmd, args) { m =>
+        new String(DataPlane.decodeText(reading(fileArg(m))(_.readAllBytes())), UTF_8)
       }
 
     case "-tail" =>
+      // the reference's seek(len - 1024) (SnackFSShell.scala:508-534)
       val p = fileArg(args.head)
-      val rows = DataPlane.tail(fs.rowsForFile(p), 1024).collect()
-      val payload = if (rows.isEmpty) Array.emptyByteArray
-        else rows(0).getAs[Array[Byte]]("data")
-      ShellResult(0, Seq(new String(payload, java.nio.charset.StandardCharsets.UTF_8)), Nil)
+      val tail = reading(p) { in =>
+        in.seek(math.max(0L, existing(p).length - 1024)); in.readAllBytes()
+      }
+      ShellResult(0, Seq(new String(tail, UTF_8)), Nil)
 
     case "-put" | "-copyFromLocal" | "-moveFromLocal" =>
       // multiple LOCAL sources upload into a directory destination
@@ -495,11 +510,11 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       if (matched.length > 1 && !localIsDir)
         return ShellResult(-1, Nil, Seq(
           s"$cmd: When copying multiple files, destination $local should be a directory."))
-      val snap = fs
       matched.foreach { m =>
         val p = fileArg(m)
-        val target = if (localIsDir) s"$local/${basename(p)}" else local
-        DataPlane.get(snap.rowsForFile(p), p, target)
+        toLocal(if (localIsDir) s"$local/${basename(p)}" else local) { out =>
+          reading(p)(_.transferTo(out))
+        }
       }
       ShellResult(0, Nil, Nil)
 
@@ -513,8 +528,15 @@ final class GraftShell(mount: GraftFileSystem, context: FsContext) {
       // the reference path errors on a missing source (FileUtil
       // .copyMerge's getFileStatus) — never silently write an empty file
       existing(src)
-      // dir-scoped prefix: "/data" must not bleed onto "/databak"
-      DataPlane.getmergeTo(fs.chunks, dirPrefix(src), args(1), addnl)
+      // every file under the dir-scoped prefix ("/data" must not bleed
+      // onto "/databak"), in Spark's string order; a zero-length file
+      // holds no chunk rows, so it adds no addnl newline either
+      val files = mount.subtree(src)
+        .filter(n => n.isFile && n.length > 0 && n.path.startsWith(dirPrefix(src)))
+        .sortBy(_.path)(sparkOrder)
+      toLocal(args(1)) { out =>
+        files.foreach { n => reading(n.path)(_.transferTo(out)); if (addnl) out.write('\n') }
+      }
       ShellResult(0, Nil, Nil)
 
     case other =>

@@ -106,14 +106,25 @@ class DataPlaneSpec extends AnyFlatSpec with Matchers {
     merged must be(a ++ b ++ c)
   }
 
-  it must "stream the same merged bytes block-by-block via getmergeTo" in {
+  it must "stream the same merged bytes block-by-block via the shell's -getmerge" in {
     val a = bytes(70); val b = bytes(35); val c = bytes(90)
-    // 10/30 config → every file spans multiple blocks
-    val chunks = DataPlane.chunk(
-      filesDf(Seq(("/m/1", a), ("/m/2", b), ("/m/3", c), ("/other", bytes(9)))), 10, 30)
-    val dst = java.nio.file.Files.createTempFile("graft-merge-", ".bin")
-    DataPlane.getmergeTo(chunks, "/m/", dst.toString)
-    java.nio.file.Files.readAllBytes(dst) must be(a ++ b ++ c)
+    // a mount at the 10/30 config → every file spans multiple blocks,
+    // and -getmerge streams them through its open() one block at a time
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.setInt("graft.subblock.size", 10)
+    conf.setInt("graft.block.size", 30)
+    val mount = GraftShellMain.mountOf(conf, None)
+    try {
+      Seq(("/m/1", a), ("/m/2", b), ("/m/3", c), ("/other", bytes(9))).foreach { case (p, d) =>
+        val out = mount.create(new org.apache.hadoop.fs.Path(p), false)
+        out.write(d); out.close()
+      }
+      val dst = java.nio.file.Files.createTempFile("graft-merge-", ".bin")
+      new GraftShell(mount, FsContext.initialize("graftfs://merge"))
+        .run(Array("-getmerge", "/m", dst.toString)).code must be(0)
+      java.nio.file.Files.readAllBytes(dst) must be(a ++ b ++ c)
+      java.nio.file.Files.delete(dst)
+    } finally mount.close()
   }
 
   behavior of "text (D13)"

@@ -819,6 +819,71 @@ class GraftShellSpec extends AnyFlatSpec with Matchers {
     }
   }
 
+  it must "run every byte verb on a caller-owned mount with ZERO Spark jobs" in {
+    // the CLI's shape: a committing state-dir mount the caller owns. The
+    // byte verbs stream through the mount's open() — session-free
+    // parquet reads of the committed payload — so none schedules a job
+    val dir = Files.createTempDirectory("graft-shell-bytejobs")
+    val out = Files.createTempDirectory("graft-shell-bytejobs-out")
+    val local = out.resolve("src.txt")
+    Files.write(local, "no jobs for bytes".getBytes)
+    new SharedStateStore(dir.toString).createKeyspace()
+    val m = GraftShellMain.stateMount(spark, Some(dir.toString))
+    val sh = new GraftShell(m, FsContext.initialize("graftfs://test"))
+    try {
+      sh.run(Array("-put", local.toString, "/b/f")).code must be(0)
+      sh.run(Array("-touchz", "/b/z")).code must be(0)
+      sh.run(Array("-mkdir", "/b/e")).code must be(0)
+      Thread.sleep(300) // let earlier suites' job events drain first
+      val counter = new JobCounter
+      spark.sparkContext.addSparkListener(counter)
+      try {
+        sh.run(Array("-cat", "/b/f")).out must be(Seq("no jobs for bytes"))
+        sh.run(Array("-text", "/b/f", "/b/z")).out must be(Seq("no jobs for bytes", ""))
+        sh.run(Array("-tail", "/b/f")).out must be(Seq("no jobs for bytes"))
+        Seq("-get", "-copyToLocal").foreach { v =>
+          sh.run(Array(v, "/b/f", out.resolve(v).toString)).code must be(0)
+          new String(Files.readAllBytes(out.resolve(v))) must be("no jobs for bytes")
+        }
+        sh.run(Array("-getmerge", "/b", out.resolve("m").toString)).code must be(0)
+        new String(Files.readAllBytes(out.resolve("m"))) must be("no jobs for bytes")
+        sh.run(Array("-getmerge", "/b", out.resolve("nl").toString, "true")).code must be(0)
+        new String(Files.readAllBytes(out.resolve("nl"))) must be("no jobs for bytes\n")
+        sh.run(Array("-cp", "/b", "/c")).code must be(0)
+        sh.run(Array("-cat", "/c/f")).out must be(Seq("no jobs for bytes"))
+        Thread.sleep(300) // let the listener bus drain
+        counter.n.get() must be(0)
+      } finally spark.sparkContext.removeSparkListener(counter)
+    } finally {
+      m.close()
+      Seq(dir, out).foreach(graft.PlanHygiene.deleteRecursively)
+    }
+  }
+
+  it must "print a -text decode error and go on to the next glob match" in {
+    // payloads that sniff as gzip or as a SequenceFile but are not one:
+    // the decode fails with an IOException, which the doall loop prints
+    // as `-text: message` before the next match and argument run
+    val sh = newShell()
+    val dir = Files.createTempDirectory("graft-shell-baddecode")
+    val payloads = Seq("a.gz" -> Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3),
+      "b.seq" -> "SEQ-not-a-sequence-file".getBytes, "c.txt" -> "plain".getBytes)
+    try {
+      payloads.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
+      sh.run(Array("-mkdir", "/t")).code must be(0)
+      sh.run(Array("-put") ++ payloads.map(p => dir.resolve(p._1).toString) :+ "/t")
+        .code must be(0)
+      val r = sh.run(Array("-text", "/t/*", "/b.txt"))
+      r.code must be(-1)
+      r.out must be(Seq("plain", "hello"))
+      r.err.length must be(2)
+      all(r.err) must startWith("-text: ")
+    } finally {
+      sh.close()
+      graft.PlanHygiene.deleteRecursively(dir)
+    }
+  }
+
   private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     override def onJobStart(
